@@ -36,8 +36,6 @@ TABLES = (
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 FIXED_DIM_TABLES = frozenset({"region", "nation"})
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 # On-disk cap for the size-gated broadcast hint. Spark's own planner
 # stat for a parquet scan is the file footprint (fileCompressionFactor
 # defaults to 1.0), so gating the HINT at the same number the session
@@ -48,10 +46,6 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 BROADCAST_CAP_BYTES = 64 << 20
 
 _disk_bytes_cache: dict[str, int] = {}
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -233,13 +227,3 @@ def load_parallel(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             # sortBeforeRepartition, but stays correct).
             df = df.repartition(target)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works too."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

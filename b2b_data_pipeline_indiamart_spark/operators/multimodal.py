@@ -4,36 +4,26 @@ Media is carried as an opaque ``binary`` payload column plus typed
 metadata — the layout a 100 TB training-data pipeline uses so parquet
 scans can prune metadata-only queries without touching payload bytes.
 
-Decoding is two-tier:
+:func:`extract_media_features` walks one tier tuple (``_TIERS``) per
+row; the first tier that recognizes the payload names the ``decoder``
+output column:
 
-- **Real header decode** (:func:`parse_image_header`,
-  :func:`parse_wav_header`): pure-Python (stdlib-only) parsers for the
-  container formats whose metadata lives in a fixed header — PNG IHDR,
-  GIF logical-screen descriptor, BMP info header, JPEG SOF scan, WAV
-  RIFF/fmt/data chunks. These run inside the ``mapInPandas`` batch
-  loop and return real width/height (images) and duration (WAV audio).
-- **Real pixel/sample/frame decode** (``decode_png_pixels`` /
-  ``decode_gif_pixels`` / ``decode_bmp_pixels`` /
-  ``decode_pnm_pixels`` / ``decode_jpeg_pixels`` /
-  ``decode_wav_samples`` / ``decode_gif_frames``): stdlib+numpy
-  codecs producing genuine statistics — PNG (zlib + unfilter), GIF
-  (hand-rolled LZW; multi-frame canvases for animations), BMP/PNM
-  (slice-and-reshape), JPEG both baseline AND progressive
-  (hand-rolled Huffman + spectral selection / successive
-  approximation + dequant + IDCT + YCbCr), WAV samples across PCM,
-  IEEE float32, G.711 µ-law/A-law (segment-formula expand tables) and
-  IMA ADPCM (block-structured 4-bit differential).
-- **Stub fallback** (``_decode_stub``): payloads the pixel/header
-  parsers don't recognize (arithmetic-coded/hierarchical JPEG,
-  MP3/AAC-class audio, ffmpeg-class video codecs; ``decode_real``
-  documents the intended call) get deterministic fake properties
-  derived from the payload hash. The ``decoder`` output column says
-  which path produced each row.
+- **Pixel / sample decode** (``pixels:*``, ``samples:wav``):
+  stdlib+numpy decoders of the baseline form of each container —
+  PNG (zlib + unfilter), GIF first frame (hand-rolled LZW), BMP
+  (slice-and-reshape), 8-bit sequential JPEG (Huffman + dequant +
+  IDCT + YCbCr), uncompressed WAV (PCM 8/16-bit, IEEE float32).
+- **Header decode** (``header:*``, :func:`parse_image_header`,
+  :func:`parse_wav_header`): fixed-offset container headers — PNG
+  IHDR, GIF logical screen, BMP info header, any JPEG SOFn, WAV
+  RIFF/fmt/data — give real width/height or duration. Every other
+  variant of a recognized container (progressive, lossless or 12-bit
+  JPEG, interlaced GIF/PNG, compressed WAV codes) lands here.
+- **Stub** (``_decode_stub``): video rows and unrecognized payloads
+  get deterministic properties derived from the payload hash.
 
-Everything Spark-side — schemas, ``mapInPandas`` signatures, Arrow
-batch iteration, one-in/many-out frame explosion — is real and tested;
-swapping the video stub for ffmpeg is a one-function change that does
-not touch any plan.
+Everything runs inside one ``mapInPandas`` batch loop; adding a codec
+is one more entry in ``_TIERS`` and touches no plan.
 """
 
 from __future__ import annotations
@@ -50,15 +40,6 @@ from pyspark.sql import types as T
 
 KINDS = ("image", "audio", "video")
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
 FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -73,14 +54,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("px_mean", T.DoubleType()),
         T.StructField("px_std", T.DoubleType()),
         T.StructField("decoder", T.StringType()),
-    ]
-)
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
     ]
 )
 
@@ -233,8 +206,8 @@ def parse_wav_header(payload: bytes | None) -> float | None:
 
 def _wav_chunks(b: bytes) -> "tuple[bytes | None, bytes | None]":
     """(fmt chunk bytes, data chunk bytes) from a RIFF/WAVE container,
-    or (None, None) — the chunk walk shared by header and sample
-    decode (word-aligned chunk sizes)."""
+    or (None, None) — the sample decoder's chunk walk (word-aligned
+    chunk sizes)."""
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         return None, None
     fmt = data = None
@@ -250,107 +223,13 @@ def _wav_chunks(b: bytes) -> "tuple[bytes | None, bytes | None]":
     return fmt, data
 
 
-def _g711_mulaw_table(np):
-    """µ-law byte → 16-bit-range linear sample (G.711 expand)."""
-    out = np.zeros(256, dtype=np.int32)
-    for byte in range(256):
-        u = ~byte & 0xFF
-        sign, exp, mant = u & 0x80, (u >> 4) & 7, u & 0x0F
-        x = (((mant << 3) + 0x84) << exp) - 0x84
-        out[byte] = -x if sign else x
-    return out
-
-
-def _g711_alaw_table(np):
-    """A-law byte → 16-bit-range linear sample (G.711 expand)."""
-    out = np.zeros(256, dtype=np.int32)
-    for byte in range(256):
-        a = byte ^ 0x55
-        exp, mant = (a >> 4) & 7, a & 0x0F
-        if exp == 0:
-            x = (mant << 4) + 8
-        else:
-            x = ((mant << 4) + 0x108) << (exp - 1)
-        out[byte] = x if a & 0x80 else -x
-    return out
-
-
-#: IMA ADPCM step-size table (89 entries) and index adjustments —
-#: the public tables from the IMA Digital Audio Pack specification
-_IMA_STEPS = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
-    37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143,
-    157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494,
-    544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552,
-    1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428,
-    4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487,
-    12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
-    29794, 32767,
-]
-_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8]
-
-
-def _ima_step(pred: int, index: int, code: int) -> "tuple[int, int]":
-    """One IMA ADPCM decode step: (new predictor, new step index)."""
-    step = _IMA_STEPS[index]
-    delta = step >> 3
-    if code & 1:
-        delta += step >> 2
-    if code & 2:
-        delta += step >> 1
-    if code & 4:
-        delta += step
-    pred = pred - delta if code & 8 else pred + delta
-    pred = max(-32768, min(32767, pred))
-    index = max(0, min(88, index + _IMA_INDEX[code & 7]))
-    return pred, index
-
-
-def _decode_ima_adpcm(np, data: bytes, nch: int, block_align: int):
-    """IMA ADPCM WAV data → (frames, nch) int samples. Blocks carry a
-    4-byte per-channel header (predictor i16, step index, reserved)
-    then channel-interleaved 4-byte nibble groups."""
-    if block_align < 4 * nch or block_align % 4:
-        return None
-    chans: "list[list[int]]" = [[] for _ in range(nch)]
-    for b0 in range(0, len(data) - block_align + 1, block_align):
-        preds, idxs = [], []
-        for c in range(nch):
-            p, ix = struct.unpack_from("<hB", data, b0 + 4 * c)
-            if ix > 88:
-                return None
-            preds.append(p)
-            idxs.append(ix)
-            chans[c].append(p)  # header predictor IS the first sample
-        body = data[b0 + 4 * nch : b0 + block_align]
-        # nibble payload: per channel 4 bytes (8 samples) round-robin
-        for g0 in range(0, len(body) - 4 * nch + 1, 4 * nch):
-            for c in range(nch):
-                for byte in body[g0 + 4 * c : g0 + 4 * c + 4]:
-                    for code in (byte & 0x0F, byte >> 4):
-                        preds[c], idxs[c] = _ima_step(
-                            preds[c], idxs[c], code
-                        )
-                        chans[c].append(preds[c])
-    n = min(len(ch) for ch in chans)
-    if n == 0:
-        return None
-    return np.stack(
-        [np.array(ch[:n], dtype=np.int32) for ch in chans], axis=1
-    )
-
-
 def decode_wav_samples(payload: bytes | None):
     """REAL WAV sample decode (stdlib + numpy): RIFF chunk walk →
-    (n_frames, channels) float64 in [-1, 1]. Covers the byte-plain
+    (n_frames, channels) float64 in [-1, 1] for the uncompressed
     encodings (PCM 8-bit unsigned / 16-bit signed, IEEE float32 — a
-    frombuffer+reshape+scale, no entropy stage) AND the classic
-    compressed telephony/consumer encodings: G.711 µ-law and A-law
-    (256-entry expand tables built from the segment formulas) and IMA
-    ADPCM (block-structured 4-bit differential, the public step/index
-    tables). Returns None for anything else (MP3/AAC-class codecs) —
-    callers fall back to the header tier, exactly like the image
-    decoders.
+    frombuffer+reshape+scale, no entropy stage). Returns None for any
+    other format code (G.711, ADPCM, MP3-in-WAV, ...) — callers fall
+    back to the header tier, exactly like the image decoders.
     """
     import numpy as np
 
@@ -359,7 +238,7 @@ def decode_wav_samples(payload: bytes | None):
     fmt, data = _wav_chunks(bytes(payload))
     if fmt is None or data is None or len(fmt) < 16:
         return None
-    audio_fmt, nch, _rate, _brate, balign, bits = struct.unpack(
+    audio_fmt, nch, _rate, _brate, _balign, bits = struct.unpack(
         "<HHIIHH", fmt[:16]
     )
     if nch < 1:
@@ -375,159 +254,12 @@ def decode_wav_samples(payload: bytes | None):
         raw = np.frombuffer(data[: len(data) - (len(data) % 4)],
                             dtype="<f4")
         samples = raw.astype(np.float64)
-    elif audio_fmt == 7 and bits == 8:  # G.711 µ-law
-        table = _g711_mulaw_table(np)
-        samples = table[np.frombuffer(data, dtype=np.uint8)] / 32768.0
-    elif audio_fmt == 6 and bits == 8:  # G.711 A-law
-        table = _g711_alaw_table(np)
-        samples = table[np.frombuffer(data, dtype=np.uint8)] / 32768.0
-    elif audio_fmt == 0x11 and bits == 4:  # IMA ADPCM
-        frames = _decode_ima_adpcm(np, data, nch, balign)
-        if frames is None:
-            return None
-        return frames.astype(np.float64) / 32768.0
     else:
         return None
     n = (len(samples) // nch) * nch
     if n == 0:
         return None
     return samples[:n].reshape(-1, nch)
-
-
-def _g711_mulaw_encode(x: int) -> int:
-    """16-bit linear → µ-law byte (G.711 compress)."""
-    sign = 0
-    if x < 0:
-        x, sign = -x, 0x80
-    x = min(x, 32635) + 0x84
-    exp = x.bit_length() - 8
-    mant = (x >> (exp + 3)) & 0x0F
-    return ~(sign | (exp << 4) | mant) & 0xFF
-
-
-def _g711_alaw_encode(x: int) -> int:
-    """16-bit linear → A-law byte (G.711 compress)."""
-    sign = 0x80 if x >= 0 else 0
-    x = min(abs(x), 32767)
-    if x >= 256:
-        exp = x.bit_length() - 9
-        mant = (x >> (exp + 4)) & 0x0F
-        aval = ((exp + 1) << 4) | mant
-    else:
-        aval = x >> 4
-    return (sign | aval) ^ 0x55
-
-
-def _ima_quantize(diff: int, step: int) -> int:
-    code = 0
-    if diff < 0:
-        code, diff = 8, -diff
-    if diff >= step:
-        code |= 4
-        diff -= step
-    if diff >= step >> 1:
-        code |= 2
-        diff -= step >> 1
-    if diff >= step >> 2:
-        code |= 1
-    return code
-
-
-def encode_wav(
-    samples, sample_rate: int = 8000, bits: int = 16, codec: str = "pcm"
-) -> bytes:
-    """Minimal valid WAV writer (stdlib + numpy) — the demo/test
-    producer for :func:`decode_wav_samples` and
-    :func:`parse_wav_header`. Input: (n,) or (n, channels) float in
-    [-1, 1]. ``codec``: ``pcm`` (``bits`` 8 unsigned / 16 signed LE),
-    ``mulaw`` / ``alaw`` (G.711 segment compress, 8-bit), or ``ima``
-    (IMA ADPCM 4-bit, 65-samples-per-channel blocks)."""
-    import numpy as np
-
-    a = np.asarray(samples, dtype=np.float64)
-    if a.ndim == 1:
-        a = a[:, None]
-    nch = a.shape[1]
-    clipped = np.clip(a, -1.0, 1.0)
-    ints = np.round(clipped * 32767.0).astype(np.int64)
-    if codec == "pcm":
-        if bits == 8:
-            body = (np.round(clipped * 127.0) + 128).astype(np.uint8).tobytes()
-        elif bits == 16:
-            body = ints.astype("<i2").tobytes()
-        else:
-            raise ValueError(f"encode_wav pcm supports 8 or 16 bits, got {bits}")
-        audio_fmt, bits_out = 1, bits
-        block_align = nch * bits // 8
-        fmt = struct.pack(
-            "<HHIIHH", audio_fmt, nch, sample_rate,
-            sample_rate * block_align, block_align, bits_out,
-        )
-    elif codec in ("mulaw", "alaw"):
-        enc = _g711_mulaw_encode if codec == "mulaw" else _g711_alaw_encode
-        body = bytes(enc(int(v)) for v in ints.reshape(-1))
-        audio_fmt = 7 if codec == "mulaw" else 6
-        fmt = struct.pack(
-            "<HHIIHH", audio_fmt, nch, sample_rate, sample_rate * nch,
-            nch, 8,
-        )
-    elif codec == "ima":
-        groups = 8  # 4-byte nibble groups per channel per block
-        spb = 1 + 8 * groups  # samples per channel per block
-        block_align = 4 * nch * (1 + groups)
-        n = a.shape[0]
-        nblocks = -(-n // spb)
-        pad = nblocks * spb - n
-        chan = np.concatenate(
-            [ints, np.repeat(ints[-1:], pad, axis=0)], axis=0
-        ) if pad else ints
-        out = bytearray()
-        # initial step index per channel: smallest step covering the
-        # first-sample delta, so the decoder doesn't spend the first
-        # ~8 samples ramping the step table up (the index travels in
-        # the block headers, so any start value is valid)
-        idxs = []
-        for c in range(nch):
-            d0 = int(abs(chan[1, c] - chan[0, c])) if len(chan) > 1 else 0
-            ix0 = next(
-                (i for i, st in enumerate(_IMA_STEPS) if st >= d0), 88
-            )
-            idxs.append(ix0)
-        for blk in range(nblocks):
-            seg = chan[blk * spb : (blk + 1) * spb]
-            codes_per_ch = []
-            for c in range(nch):
-                pred = int(seg[0, c])
-                out_hdr = struct.pack("<hBB", pred, idxs[c], 0)
-                out += out_hdr
-                codes = []
-                ix = idxs[c]
-                for s in seg[1:, c]:
-                    step = _IMA_STEPS[ix]
-                    code = _ima_quantize(int(s) - pred, step)
-                    pred, ix = _ima_step(pred, ix, code)
-                    codes.append(code)
-                idxs[c] = ix
-                codes_per_ch.append(codes)
-            for g in range(groups):
-                for c in range(nch):
-                    for k in range(0, 8, 2):
-                        lo = codes_per_ch[c][g * 8 + k]
-                        hi = codes_per_ch[c][g * 8 + k + 1]
-                        out.append(lo | (hi << 4))
-        body = bytes(out)
-        fmt = struct.pack(
-            "<HHIIHHHH", 0x11, nch, sample_rate,
-            sample_rate * block_align // spb, block_align, 4, 2, spb,
-        )
-    else:
-        raise ValueError(f"unknown codec {codec!r}")
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(body)) + body
-        + (b"\x00" if len(body) & 1 else b"")
-    )
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -623,34 +355,6 @@ def decode_png_pixels(payload: bytes | None):
     return arr
 
 
-def encode_png(arr) -> bytes:
-    """Minimal valid PNG writer (8-bit gray/GA/RGB/RGBA, filter 0,
-    stdlib zlib) — the demo/test producer for :func:`decode_png_pixels`
-    and the binaryFile ingestion path."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, nch = a.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[nch]
-    raw = b"".join(b"\x00" + a[r].tobytes() for r in range(h))
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
 
 
 def _gif_lzw_decode(data: bytes, min_code_size: int, max_pixels: int):
@@ -773,227 +477,6 @@ def decode_gif_pixels(payload: bytes | None):
     return None
 
 
-def decode_gif_frames(payload: bytes | None, max_frames: int = 64):
-    """REAL multi-frame GIF decode (stdlib + numpy): every image
-    descriptor LZW-decodes and composes onto the logical-screen canvas
-    at its (left, top) offset — so an ANIMATED GIF yields its actual
-    frame sequence, the one "video" container whose frames need no
-    codec library. Returns (frames, duration_s) where frames is a
-    list of (H, W, 3) uint8 canvases (draw-over disposal; bounded by
-    ``max_frames``) and duration sums the graphic-control delays, or
-    None for non-GIF bytes / unsupported variants (interlace, missing
-    palette) — callers fall back to the stub tier.
-
-    :func:`decode_gif_pixels` (the single-IMAGE tier) stays separate
-    on purpose: it returns the FIRST descriptor at its own size, the
-    thumbnail-statistics contract; this walker returns composed
-    logical-screen canvases, the frame-sampling contract.
-    """
-    import numpy as np
-
-    b = bytes(payload or b"")
-    if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
-        return None
-    lsw, lsh = struct.unpack("<HH", b[6:10])
-    packed, bg = b[10], b[11]
-    if lsw == 0 or lsh == 0:
-        return None
-    pos, gct = 13, None
-    if packed & 0x80:
-        n = 2 ** ((packed & 0x07) + 1)
-        if pos + 3 * n > len(b):
-            return None
-        gct = np.frombuffer(b[pos : pos + 3 * n], dtype=np.uint8).reshape(-1, 3)
-        pos += 3 * n
-    canvas = np.zeros((lsh, lsw, 3), dtype=np.uint8)
-    if gct is not None and bg < len(gct):
-        canvas[:] = gct[bg]
-    frames: list = []
-    total_cs = delay_cs = 0
-    while pos < len(b):
-        blk = b[pos]
-        if blk == 0x21:  # extension
-            label = b[pos + 1] if pos + 1 < len(b) else 0
-            pos += 2
-            if label == 0xF9 and pos + 4 < len(b) and b[pos] == 4:
-                delay_cs = struct.unpack("<H", b[pos + 2 : pos + 4])[0]
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            pos += 1
-        elif blk == 0x2C:  # image descriptor
-            if pos + 10 > len(b):
-                return None
-            left, top, w, h = struct.unpack("<HHHH", b[pos + 1 : pos + 9])
-            ipacked = b[pos + 9]
-            pos += 10
-            ct = gct
-            if ipacked & 0x80:
-                n = 2 ** ((ipacked & 0x07) + 1)
-                if pos + 3 * n > len(b):
-                    return None
-                ct = np.frombuffer(
-                    b[pos : pos + 3 * n], dtype=np.uint8
-                ).reshape(-1, 3)
-                pos += 3 * n
-            if ipacked & 0x40 or ct is None or w == 0 or h == 0:
-                return None
-            if top + h > lsh or left + w > lsw:
-                return None
-            mcs = b[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(b) and b[pos] != 0:
-                ln = b[pos]
-                data += b[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1  # consume the sub-block terminator
-            idx_bytes = _gif_lzw_decode(bytes(data), mcs, w * h)
-            if idx_bytes is None or len(idx_bytes) < w * h:
-                return None
-            idx = np.frombuffer(idx_bytes[: w * h], dtype=np.uint8).reshape(h, w)
-            if int(idx.max()) >= len(ct):
-                return None
-            canvas[top : top + h, left : left + w] = ct[idx.astype(np.int32)]
-            frames.append(canvas.copy())
-            total_cs += delay_cs
-            if len(frames) >= max_frames:
-                break
-        elif blk == 0x3B:
-            break
-        else:
-            return None
-    if not frames:
-        return None
-    return frames, round(total_cs / 100.0, 3)
-
-
-def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """GIF-variant LZW encode of color-index bytes (the test/demo
-    producer for :func:`_gif_lzw_decode`): real dictionary growth with
-    code-size bookkeeping MIRRORING the decoder's timing, clear-and-
-    reset at the 12-bit ceiling."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int, size: int):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    code_size = min_code_size + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    emit(clear, code_size)
-    s = b""
-    for px in indices:
-        c = bytes([px])
-        if s + c in table:
-            s += c
-            continue
-        emit(table[s], code_size)
-        table[s + c] = next_code
-        next_code += 1
-        # decoder grows its table one entry behind the emitted code and
-        # widens when the table fills the current width — mirror that
-        if next_code - 1 == (1 << code_size) and code_size < 12:
-            code_size += 1
-        elif next_code - 1 == 4096:
-            emit(clear, code_size)
-            code_size = min_code_size + 1
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-        s = c
-    if s:
-        emit(table[s], code_size)
-    emit(eoi, code_size)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def encode_gif(arr) -> bytes:
-    """Minimal valid single-frame GIF89a writer (≤256-color RGB, real
-    LZW compression, stdlib-only) — the demo/test producer for
-    :func:`decode_gif_pixels` and the binaryFile ingestion path."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:  # grayscale → replicate to RGB
-        a = np.stack([a, a, a], axis=-1)
-    h, w, _ = a.shape
-    flat = a.reshape(-1, 3)
-    palette, idx = np.unique(flat, axis=0, return_inverse=True)
-    if len(palette) > 256:
-        raise ValueError("encode_gif supports at most 256 distinct colors")
-    bits = max(2, (len(palette) - 1).bit_length())  # GIF minimum 2
-    pal = np.zeros((1 << bits, 3), dtype=np.uint8)
-    pal[: len(palette)] = palette
-    data = _gif_lzw_encode(idx.astype(np.uint8).tobytes(), bits)
-    blocks = bytearray()
-    for i in range(0, len(data), 255):
-        part = data[i : i + 255]
-        blocks.append(len(part))
-        blocks += part
-    blocks.append(0)
-    return (
-        b"GIF89a"
-        + struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
-        + pal.tobytes()
-        + b"\x2c"
-        + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        + bytes([bits])
-        + bytes(blocks)
-        + b"\x3b"
-    )
-
-
-def encode_gif_animation(frames, delay_cs: int = 10) -> bytes:
-    """Minimal valid ANIMATED GIF89a writer (same-size frames, shared
-    ≤256-color global palette, real LZW, draw-over disposal) — the
-    demo/test producer for :func:`decode_gif_frames` and the
-    frame-sampling path."""
-    import numpy as np
-
-    arrs = [np.asarray(f, dtype=np.uint8) for f in frames]
-    arrs = [np.stack([a, a, a], axis=-1) if a.ndim == 2 else a for a in arrs]
-    if not arrs:
-        raise ValueError("encode_gif_animation needs at least one frame")
-    h, w, _ = arrs[0].shape
-    if any(a.shape != (h, w, 3) for a in arrs):
-        raise ValueError("all frames must share one (H, W, 3) shape")
-    allpx = np.concatenate([a.reshape(-1, 3) for a in arrs])
-    palette, inv = np.unique(allpx, axis=0, return_inverse=True)
-    if len(palette) > 256:
-        raise ValueError("encode_gif_animation supports at most 256 colors")
-    bits = max(2, (len(palette) - 1).bit_length())
-    pal = np.zeros((1 << bits, 3), dtype=np.uint8)
-    pal[: len(palette)] = palette
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
-    out += pal.tobytes()
-    off = 0
-    for a in arrs:
-        n = h * w
-        idx = inv[off : off + n].astype(np.uint8)
-        off += n
-        # graphic control: draw-over disposal, delay, no transparency
-        out += b"\x21\xf9\x04\x04" + struct.pack("<H", delay_cs) + b"\x00\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        data = _gif_lzw_encode(idx.tobytes(), bits)
-        out += bytes([bits])
-        for i in range(0, len(data), 255):
-            part = data[i : i + 255]
-            out += bytes([len(part)]) + part
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
 
 def decode_bmp_pixels(payload: bytes | None):
     """REAL BMP pixel decode (stdlib-only): BITMAPINFOHEADER walk →
@@ -1039,107 +522,14 @@ def decode_bmp_pixels(payload: bytes | None):
     return np.ascontiguousarray(rgb)
 
 
-def encode_bmp(arr) -> bytes:
-    """Minimal valid 24-bit bottom-up BMP writer (stdlib-only) — the
-    demo/test producer for :func:`decode_bmp_pixels`."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        a = np.stack([a, a, a], axis=-1)
-    h, w, _ = a.shape
-    stride = (w * 3 + 3) & ~3
-    body = bytearray()
-    for row in a[::-1]:  # bottom-up
-        line = row[:, [2, 1, 0]].tobytes()  # RGB → BGR
-        body += line + b"\x00" * (stride - len(line))
-    header = b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return header + info + bytes(body)
-
-
-def decode_pnm_pixels(payload: bytes | None):
-    """REAL netpbm pixel decode (stdlib-only): binary PGM (``P5``,
-    grayscale) and PPM (``P6``, RGB) → (H, W, C) uint8 array. The
-    header is whitespace-separated ASCII tokens (``#`` comments legal
-    anywhere between tokens) followed by exactly ONE whitespace byte,
-    then raw samples — like BMP there is no entropy stage, so the
-    body is a frombuffer+reshape. Returns None for non-PNM bytes,
-    ASCII variants (P1–P3), bitmaps (P4) and maxval > 255 (16-bit
-    samples) — callers fall back to the header/stub tiers.
-    """
-    import numpy as np
-
-    if not payload:
-        return None
-    b = bytes(payload)
-    if len(b) < 10 or b[:1] != b"P" or b[1:2] not in (b"5", b"6"):
-        return None
-    ch = 1 if b[1:2] == b"5" else 3
-    # tokenize the header: skip whitespace and #-to-EOL comments
-    pos, tokens = 2, []
-    while len(tokens) < 3 and pos < len(b):
-        c = b[pos : pos + 1]
-        if c in b" \t\r\n":
-            pos += 1
-        elif c == b"#":
-            nl = b.find(b"\n", pos)
-            if nl < 0:
-                return None
-            pos = nl + 1
-        else:
-            end = pos
-            while end < len(b) and b[end : end + 1] not in b" \t\r\n#":
-                end += 1
-            tokens.append(b[pos:end])
-            pos = end
-    if len(tokens) < 3:
-        return None
-    try:
-        w, h, maxval = (int(t) for t in tokens)
-    except ValueError:
-        return None
-    if w <= 0 or h <= 0 or not (0 < maxval <= 255):
-        return None
-    pos += 1  # exactly one whitespace byte after maxval
-    need = w * h * ch
-    if len(b) < pos + need:
-        return None
-    arr = np.frombuffer(b, dtype=np.uint8, count=need, offset=pos)
-    return np.ascontiguousarray(arr.reshape(h, w, ch))
-
-
-def encode_pnm(arr) -> bytes:
-    """Minimal binary PGM/PPM writer (stdlib-only) — the demo/test
-    producer for :func:`decode_pnm_pixels`. 2-D input → P5, 3-channel
-    → P6."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, ch = a.shape
-    if ch == 1:
-        magic = b"P5"
-    elif ch == 3:
-        magic = b"P6"
-    else:
-        raise ValueError(f"PNM supports 1 or 3 channels, got {ch}")
-    return magic + f"\n{w} {h}\n255\n".encode() + a.tobytes()
-
-
 # --------------------------------------------------------------- JPEG
 #
-# Baseline sequential JPEG, pure stdlib + numpy — the same two-function
-# encode/decode pair pattern as PNG/GIF/BMP/PNM above. The decoder
-# covers the common baseline profile (SOF0/SOF1, 8-bit, Huffman,
-# interleaved MCUs, 4:4:4 / 4:2:2 / 4:2:0 subsampling, restart
-# markers); progressive (SOF2) and arithmetic coding return None and
-# fall back to the header tier. Like the PNG Paeth path, the Huffman
-# loop is per-bit Python — fine for thumbnails/test assets; a
-# production path would swap in a codec library. The POINT is that
-# JPEG pixel statistics are genuinely computed from genuinely decoded
-# samples with zero non-stdlib dependencies.
+# 8-bit sequential JPEG (SOF0/SOF1, Huffman, interleaved MCUs, 4:4:4 /
+# 4:2:2 / 4:2:0 subsampling, restart markers), pure stdlib + numpy.
+# Every other frame type (progressive, lossless, 12-bit, arithmetic,
+# hierarchical) returns None and falls back to the header tier. Like
+# the PNG Paeth path, the Huffman loop is per-bit Python — fine for
+# thumbnails; a production path would swap in a codec library.
 
 
 def _jpeg_zigzag() -> "list[int]":
@@ -1212,20 +602,15 @@ def _receive_extend(bits_arr, pos: int, s: int) -> "tuple[int, int]":
 
 
 def decode_jpeg_pixels(payload: bytes | None):
-    """REAL JPEG pixel decode using only the stdlib + numpy — BOTH
-    baseline/extended sequential at 8- AND 12-bit precision
-    (SOF0/SOF1, 8- or 16-bit quant tables), progressive (SOF2, spectral
-    selection + successive approximation per T.81 G.2) and LOSSLESS
-    (SOF3, Annex H predictors — bit-exact): segment walk
-    (DQT/SOF/DHT/DRI/SOS) → entropy-coded segment split at restart
-    markers with 0xFF00 unstuffing → Huffman decode (baseline: per-MCU
-    DC predictor + AC run-length, F.12 EXTEND; progressive: per-scan
-    coefficient accumulation with EOB runs and refinement correction
-    bits) → dequantize → IDCT (orthonormal basis gemm) → chroma
-    upsample → YCbCr→RGB → (H, W, C) uint8. Returns None for non-JPEG
-    bytes or unsupported variants (arithmetic coding, hierarchical,
-    fractional sampling ratios) — callers fall back to header-only
-    decode, exactly like the PNG/GIF unsupported tiers.
+    """REAL 8-bit sequential JPEG pixel decode using only the stdlib +
+    numpy: segment walk (DQT/SOF/DHT/DRI/SOS) → entropy-coded segment
+    split at restart markers with 0xFF00 unstuffing → Huffman decode
+    (per-MCU DC predictor + AC run-length, F.12 EXTEND) → dequantize →
+    IDCT (orthonormal basis gemm) → chroma upsample → YCbCr→RGB →
+    (H, W, C) uint8. Returns None for non-JPEG bytes and every other
+    frame type (progressive, lossless, 12-bit, arithmetic,
+    hierarchical, fractional sampling ratios) — callers fall back to
+    header-only decode, exactly like the PNG/GIF unsupported tiers.
     """
     import numpy as np
 
@@ -1238,10 +623,9 @@ def decode_jpeg_pixels(payload: bytes | None):
         return None
 
 
-def _jpeg_scan_bounds(b: bytes, start: int) -> "tuple[list[bytes], int]":
+def _jpeg_scan_bounds(b: bytes, start: int) -> "list[bytes]":
     """Entropy-coded data from ``start``: 0xFF00-unstuffed byte runs
-    split at RSTn markers, plus the index of the terminating marker's
-    0xFF — shared by the baseline and progressive scan loops."""
+    split at RSTn markers, up to the terminating marker."""
     segs, cur, j = [], bytearray(), start
     while j < len(b):
         c = b[j]
@@ -1260,7 +644,7 @@ def _jpeg_scan_bounds(b: bytes, start: int) -> "tuple[list[bytes], int]":
         cur.append(c)
         j += 1
     segs.append(bytes(cur))
-    return segs, j
+    return segs
 
 
 def _decode_jpeg(np, b: bytes):
@@ -1271,9 +655,6 @@ def _decode_jpeg(np, b: bytes):
     i = 2
     scan_at = None
     scomp = None
-    progressive = False
-    lossless = False
-    sos_params = None
     while i + 4 <= len(b):
         if b[i] != 0xFF:
             raise _JpegError("marker sync lost")
@@ -1285,56 +666,34 @@ def _decode_jpeg(np, b: bytes):
             continue
         seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
         data = b[i + 4 : i + 2 + seg_len]
-        if marker == 0xDB:  # DQT: one or more 65/129-byte tables
+        if marker == 0xDB:  # DQT: one or more 65-byte 8-bit tables
             p = 0
             while p < len(data):
-                pq, tq = data[p] >> 4, data[p] & 15
-                if pq == 0:  # 8-bit values
-                    qtabs[tq] = list(data[p + 1 : p + 65])
-                    p += 65
-                else:  # 16-bit big-endian values (12-bit profile)
-                    qtabs[tq] = list(
-                        struct.unpack(">64H", data[p + 1 : p + 129])
-                    )
-                    p += 129
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3):  # seq / prog / lossless
+                if data[p] >> 4:
+                    return None  # 16-bit table: the 12-bit profile
+                qtabs[data[p] & 15] = list(data[p + 1 : p + 65])
+                p += 65
+        elif marker in (0xC0, 0xC1):  # baseline / extended sequential
             prec, h, w, nc = data[0], *struct.unpack(">HH", data[1:5]), data[5]
-            lossless = marker == 0xC3
-            if nc not in (1, 3):
-                return None
-            if (prec not in (8, 12)) if not lossless else not (2 <= prec <= 16):
+            if nc not in (1, 3) or prec != 8:
                 return None
             if w == 0 or h == 0 or w * h > (1 << 26):
                 return None  # declared-dims bomb guard: a tiny payload
                 # claiming 65535x65535 would allocate 34 GB of planes
             if w * h > max(1 << 22, len(b) * 512):
                 return None  # payload-relative bomb guard: a genuine
-                # image carries >= w*h/512 payload bytes for luma
-                # alone, so a few-KB stream claiming ~64M px would
-                # otherwise allocate multi-GB float planes and spin the
-                # per-bit Huffman loop inside mapInPandas. The bound is
-                # TIGHT for every profile, including progressive
-                # (ADVICE r11 suggested relaxing SOF2 to 32768:1
-                # because AC EOBn runs span up to 32767 zero blocks in
-                # ~15 bits — but T.81 G.1.1.1.1 mandates every block's
-                # DC coefficient be coded in a DC scan, which is
-                # per-block Huffman with no run coding, BEFORE any AC
-                # scan reaches it, so even an all-uniform complete SOF2
-                # stream costs >= 1 bit per 8x8 block = w*h/512 bytes
-                # for luma; headers only add to that. No complete legit
-                # file sits under this guard, and relaxing it would
-                # open a real window: a crafted few-KB SOF2 header
-                # claiming the full 1<<26-px cap would pass the ratio
-                # check and allocate ~GB-scale coefficient planes).
+                # image codes >= 1 Huffman bit per 8x8 luma block, so
+                # it carries >= w*h/512 payload bytes; a few-KB stream
+                # claiming ~64M px would otherwise allocate multi-GB
+                # float planes and spin the per-bit Huffman loop
+                # inside mapInPandas
             comps = []
             for ci in range(nc):
                 cid, hv, tq = data[6 + 3 * ci : 9 + 3 * ci]
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
-            sof = (w, h, comps, prec)
-            progressive = marker == 0xC2
-        elif marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            return None  # hierarchical / arithmetic
+            sof = (w, h, comps)
+        elif 0xC2 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            return None  # progressive / lossless / arithmetic / hierarchical
         elif marker == 0xC4:  # DHT: one or more tables
             p = 0
             while p < len(data):
@@ -1348,27 +707,15 @@ def _decode_jpeg(np, b: bytes):
         elif marker == 0xDA:  # SOS
             ns = data[0]
             scomp = {}
-            scan_order = []
             for ci in range(ns):
                 cid, tabs = data[1 + 2 * ci], data[2 + 2 * ci]
                 scomp[cid] = (tabs >> 4, tabs & 15)
-                scan_order.append(cid)
-            ss, se, ahal = data[1 + 2 * ns : 4 + 2 * ns]
-            sos_params = (scan_order, ss, se, ahal >> 4, ahal & 15)
             scan_at = i + 2 + seg_len
             break
         i += 2 + seg_len
     if sof is None or scan_at is None:
         return None
-    w, h, comps, prec = sof
-    # 12-bit samples level-shift by 2048 and scale down to the uint8
-    # output contract; 8-bit is shift 128, scale 1
-    shift, down = (2048.0, 16.0) if prec == 12 else (128.0, 1.0)
-    if lossless:
-        return _decode_jpeg_lossless(
-            np, b, w, h, comps, qtabs, htabs, restart,
-            scomp, sos_params, scan_at, prec,
-        )
+    w, h, comps = sof
     if len(comps) == 1:
         comps[0]["h"] = comps[0]["v"] = 1  # single-component scan: 1 MCU = 1 block
     hmax = max(c["h"] for c in comps)
@@ -1376,15 +723,10 @@ def _decode_jpeg(np, b: bytes):
     if any(c["h"] < 1 or c["v"] < 1 or hmax % c["h"] or vmax % c["v"]
            for c in comps):
         return None
-    if progressive:
-        return _decode_jpeg_progressive(
-            np, b, w, h, comps, hmax, vmax, qtabs, htabs, restart,
-            scomp, sos_params, scan_at, shift, down,
-        )
     if len(scomp) != len(comps):
         return None
     # entropy-coded data: unstuff 0xFF00, split at RSTn
-    segs, _ = _jpeg_scan_bounds(b, scan_at)
+    segs = _jpeg_scan_bounds(b, scan_at)
 
     basis = _dct_basis()
     mcux = -(-w // (8 * hmax))
@@ -1439,18 +781,11 @@ def _decode_jpeg(np, b: bytes):
                         v, pos = _receive_extend(bits_arr, pos, s)
                         coef[_JPEG_ZZ[k]] = v * q[k]
                         k += 1
-                    block = (
-                        basis.T @ coef.reshape(8, 8) @ basis + shift
-                    ) / down
+                    block = basis.T @ coef.reshape(8, 8) @ basis + 128.0
                     y0 = (my * c["v"] + by) * 8
                     x0 = (mx * c["h"] + bx) * 8
                     planes[ci][y0 : y0 + 8, x0 : x0 + 8] = block
-    return _jpeg_planes_to_pixels(np, planes, comps, hmax, vmax, w, h)
-
-
-def _jpeg_planes_to_pixels(np, planes, comps, hmax, vmax, w, h):
-    """Chroma upsample + crop + YCbCr→RGB — the reconstruction tail
-    shared by the baseline and progressive decode paths."""
+    # chroma upsample + crop + YCbCr→RGB
     full = []
     for ci, c in enumerate(comps):
         p = planes[ci]
@@ -1469,859 +804,6 @@ def _jpeg_planes_to_pixels(np, planes, comps, hmax, vmax, w, h):
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
-def _decode_jpeg_progressive(
-    np, b, w, h, comps, hmax, vmax, qtabs, htabs, restart,
-    scomp0, sos0, scan_at0, shift=128.0, down=1.0,
-):
-    """Progressive JPEG (SOF2) decode per T.81 G.2: every scan
-    deposits coefficient bits into per-component zigzag-order buffers
-    (DC first/refinement; AC spectral-selection bands with EOB runs;
-    AC successive-approximation refinement with correction bits), and
-    the assembled coefficients dequantize + IDCT once at the end.
-    DHT/DQT/DRI segments may appear between scans and update state.
-    """
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # zigzag-order int coefficient buffer per component, MCU-grid sized
-    coefs = [
-        np.zeros((mcuy * c["v"], mcux * c["h"], 64), dtype=np.int32)
-        for c in comps
-    ]
-    by_id = {c["id"]: ci for ci, c in enumerate(comps)}
-    # non-interleaved grids: the component's OWN ceil(size/8) dims
-    # (MCU-pad blocks are coded only by interleaved scans)
-    nb = []
-    for c in comps:
-        cw = -(-w * c["h"] // hmax)
-        ch = -(-h * c["v"] // vmax)
-        nb.append((-(-ch // 8), -(-cw // 8)))
-
-    scomp, sos, scan_at = scomp0, sos0, scan_at0
-    i = None
-    while True:
-        _prog_decode_scan(
-            np, b, scan_at, comps, by_id, nb, coefs, htabs, restart,
-            scomp, sos, mcux, mcuy,
-        )
-        _, i = _jpeg_scan_bounds(b, scan_at)
-        # parse inter-scan segments until the next SOS or EOI
-        scomp = sos = scan_at = None
-        while i + 2 <= len(b):
-            if b[i] != 0xFF:
-                raise _JpegError("marker sync lost between scans")
-            marker = b[i + 1]
-            if marker == 0xD9:
-                break
-            if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if i + 4 > len(b):
-                raise _JpegError("truncated between scans")
-            seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-            data = b[i + 4 : i + 2 + seg_len]
-            if marker == 0xC4:
-                p = 0
-                while p < len(data):
-                    tc, th = data[p] >> 4, data[p] & 15
-                    bits = data[p + 1 : p + 17]
-                    nv = sum(bits)
-                    htabs[(tc, th)] = _huff_table(
-                        bits, data[p + 17 : p + 17 + nv]
-                    )
-                    p += 17 + nv
-            elif marker == 0xDB:
-                p = 0
-                while p < len(data):
-                    if data[p] >> 4 == 0:
-                        qtabs[data[p] & 15] = list(data[p + 1 : p + 65])
-                        p += 65
-                    else:
-                        qtabs[data[p] & 15] = list(
-                            struct.unpack(">64H", data[p + 1 : p + 129])
-                        )
-                        p += 129
-            elif marker == 0xDD:
-                restart = struct.unpack(">H", data[:2])[0]
-            elif marker == 0xDA:
-                ns = data[0]
-                scomp = {}
-                order = []
-                for ci in range(ns):
-                    cid, tabs = data[1 + 2 * ci], data[2 + 2 * ci]
-                    scomp[cid] = (tabs >> 4, tabs & 15)
-                    order.append(cid)
-                ss, se, ahal = data[1 + 2 * ns : 4 + 2 * ns]
-                sos = (order, ss, se, ahal >> 4, ahal & 15)
-                scan_at = i + 2 + seg_len
-                break
-            i += 2 + seg_len
-        if scan_at is None:
-            break
-
-    # dequantize + IDCT every block
-    basis = _dct_basis()
-    zz = np.array(_JPEG_ZZ, dtype=np.int64)
-    planes = [
-        np.zeros((mcuy * c["v"] * 8, mcux * c["h"] * 8), dtype=np.float64)
-        for c in comps
-    ]
-    for ci, c in enumerate(comps):
-        if c["tq"] not in qtabs:
-            raise _JpegError("missing quant table")
-        q = np.array(qtabs[c["tq"]], dtype=np.float64)
-        nby, nbx = coefs[ci].shape[:2]
-        for byy in range(nby):
-            for bxx in range(nbx):
-                nat = np.zeros(64, dtype=np.float64)
-                nat[zz] = coefs[ci][byy, bxx] * q
-                block = (basis.T @ nat.reshape(8, 8) @ basis + shift) / down
-                planes[ci][byy * 8 : byy * 8 + 8, bxx * 8 : bxx * 8 + 8] = block
-    return _jpeg_planes_to_pixels(np, planes, comps, hmax, vmax, w, h)
-
-
-def _prog_decode_scan(
-    np, b, scan_at, comps, by_id, nb, coefs, htabs, restart,
-    scomp, sos, mcux, mcuy,
-):
-    """Decode ONE progressive scan into the coefficient buffers."""
-    order, ss, se, ah, al = sos
-    segs, _ = _jpeg_scan_bounds(b, scan_at)
-    state = {
-        "bits": np.unpackbits(np.frombuffer(segs[0], dtype=np.uint8)),
-        "pos": 0,
-        "seg": 0,
-        "eobrun": 0,
-        "preds": {cid: 0 for cid in order},
-    }
-
-    def next_segment():
-        state["seg"] += 1
-        if state["seg"] >= len(segs):
-            raise _JpegError("missing restart segment")
-        state["bits"] = np.unpackbits(
-            np.frombuffer(segs[state["seg"]], dtype=np.uint8)
-        )
-        state["pos"] = 0
-        state["eobrun"] = 0
-        state["preds"] = {cid: 0 for cid in order}
-
-    def huff(tab):
-        sym, state["pos"] = _huff_read(state["bits"], state["pos"], tab)
-        return sym
-
-    def receive(n):
-        bits, pos = state["bits"], state["pos"]
-        if n == 0:
-            return 0
-        if pos + n > len(bits):
-            raise _JpegError("bitstream exhausted")
-        v = 0
-        for k in range(n):
-            v = (v << 1) | int(bits[pos + k])
-        state["pos"] = pos + n
-        return v
-
-    def extend(v, s):
-        if s and v < (1 << (s - 1)):
-            v -= (1 << s) - 1
-        return v
-
-    p1 = 1 << al
-
-    def dc_block(cid, blk):
-        if ah == 0:
-            dc_t = htabs.get((0, scomp[cid][0]))
-            if dc_t is None:
-                raise _JpegError("missing DC table")
-            s = huff(dc_t)
-            diff = extend(receive(s), s)
-            state["preds"][cid] += diff
-            blk[0] = state["preds"][cid] << al
-        else:  # DC refinement: one raw bit per block
-            if receive(1):
-                blk[0] |= p1
-
-    def ac_first(ac_t, blk):
-        if state["eobrun"]:
-            state["eobrun"] -= 1
-            return
-        k = ss
-        while k <= se:
-            rs = huff(ac_t)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                state["eobrun"] = (1 << r) - 1
-                if r:
-                    state["eobrun"] += receive(r)
-                return
-            k += r
-            if k > se:
-                raise _JpegError("AC index out of band")
-            blk[k] = extend(receive(s), s) << al
-            k += 1
-
-    def refine_nonzero(blk, k):
-        c = int(blk[k])
-        if receive(1) and (abs(c) & p1) == 0:
-            blk[k] = c + (p1 if c > 0 else -p1)
-
-    def ac_refine(ac_t, blk):
-        k = ss
-        if state["eobrun"] == 0:
-            while k <= se:
-                rs = huff(ac_t)
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r < 15:
-                        state["eobrun"] = 1 << r
-                        if r:
-                            state["eobrun"] += receive(r)
-                        break
-                    val = 0  # ZRL: skip 16 zero-history positions
-                else:
-                    if s != 1:
-                        raise _JpegError("invalid refinement symbol")
-                    val = p1 if receive(1) else -p1
-                while k <= se:
-                    if blk[k] != 0:
-                        refine_nonzero(blk, k)
-                    else:
-                        if r == 0:
-                            if val:
-                                blk[k] = val
-                            k += 1
-                            break
-                        r -= 1
-                    k += 1
-        if state["eobrun"] > 0:
-            while k <= se:
-                if blk[k] != 0:
-                    refine_nonzero(blk, k)
-                k += 1
-            state["eobrun"] -= 1
-
-    interleaved = len(order) > 1
-    if ss == 0 and se == 0:  # DC scan
-        if interleaved:
-            units = mcux * mcuy
-            for m in range(units):
-                if restart and m and m % restart == 0:
-                    next_segment()
-                my, mx = divmod(m, mcux)
-                for cid in order:
-                    ci = by_id[cid]
-                    c = comps[ci]
-                    for byy in range(c["v"]):
-                        for bxx in range(c["h"]):
-                            dc_block(
-                                cid,
-                                coefs[ci][my * c["v"] + byy,
-                                          mx * c["h"] + bxx],
-                            )
-        else:
-            cid = order[0]
-            ci = by_id[cid]
-            nby, nbx = nb[ci]
-            for m in range(nby * nbx):
-                if restart and m and m % restart == 0:
-                    next_segment()
-                byy, bxx = divmod(m, nbx)
-                dc_block(cid, coefs[ci][byy, bxx])
-    else:  # AC scan: single component only (T.81 B.2.3)
-        if interleaved or ss == 0:
-            raise _JpegError("invalid progressive AC scan")
-        cid = order[0]
-        ci = by_id[cid]
-        ac_t = htabs.get((1, scomp[cid][1]))
-        if ac_t is None:  # both first and refinement scans read codes
-            raise _JpegError("missing AC table")
-        nby, nbx = nb[ci]
-        body = ac_first if ah == 0 else ac_refine
-        for m in range(nby * nbx):
-            if restart and m and m % restart == 0:
-                next_segment()
-            byy, bxx = divmod(m, nbx)
-            body(ac_t, coefs[ci][byy, bxx])
-
-
-def _decode_jpeg_lossless(np, b, w, h, comps, qtabs, htabs, restart,
-                          scomp, sos, scan_at, prec):
-    """Lossless JPEG (SOF3) decode per T.81 Annex H: no DCT — each
-    sample is a Huffman-coded difference from one of the seven spatial
-    predictors (SOS.Ss selects; Al is the point transform). 1×1
-    sampling only; 3-component images are stored as-is (this codec
-    pair uses direct RGB — the standard defines no color transform
-    for lossless, which is what makes the round trip EXACT). Restart
-    markers are not supported in this profile (None → header tier)."""
-    order, predictor, _se, _ah, pt = sos
-    if restart or not (1 <= predictor <= 7):
-        return None
-    if any(c["h"] != 1 or c["v"] != 1 for c in comps):
-        return None
-    if len(order) != len(comps):
-        return None
-    tabs = []
-    for c in comps:
-        t = htabs.get((0, scomp[c["id"]][0]))
-        if t is None:
-            return None
-        tabs.append(t)
-    segs, _ = _jpeg_scan_bounds(b, scan_at)
-    bits_arr = np.unpackbits(np.frombuffer(segs[0], dtype=np.uint8))
-    pos = 0
-    planes = [np.zeros((h, w), dtype=np.int64) for _ in comps]
-    default = 1 << (prec - pt - 1)
-    for y in range(h):
-        for x in range(w):
-            for ci, pl in enumerate(planes):
-                s, pos = _huff_read(bits_arr, pos, tabs[ci])
-                if s == 16:
-                    diff = 32768
-                else:
-                    diff, pos = _receive_extend(bits_arr, pos, s)
-                if y == 0 and x == 0:
-                    pred = default
-                elif y == 0:
-                    pred = int(pl[y, x - 1])
-                elif x == 0:
-                    pred = int(pl[y - 1, x])
-                else:
-                    ra = int(pl[y, x - 1])
-                    rb = int(pl[y - 1, x])
-                    rc = int(pl[y - 1, x - 1])
-                    pred = (
-                        ra if predictor == 1 else
-                        rb if predictor == 2 else
-                        rc if predictor == 3 else
-                        ra + rb - rc if predictor == 4 else
-                        ra + ((rb - rc) >> 1) if predictor == 5 else
-                        rb + ((ra - rc) >> 1) if predictor == 6 else
-                        (ra + rb) >> 1
-                    )
-                pl[y, x] = (pred + diff) & 0xFFFF
-    out = []
-    for pl in planes:
-        v = pl << pt
-        if prec > 8:
-            v = v >> (prec - 8)
-        out.append(np.clip(v, 0, 255).astype(np.uint8))
-    return np.stack(out, axis=-1)
-
-
-def encode_jpeg_lossless(
-    arr, predictor: int = 4, point_transform: int = 0
-) -> bytes:
-    """Minimal valid LOSSLESS JPEG writer (SOF3, 8-bit, direct RGB or
-    grayscale) — the test/demo producer for the lossless half of
-    :func:`decode_jpeg_pixels`. With ``point_transform=0`` the round
-    trip is bit-exact by construction (prediction residuals are coded
-    losslessly; no DCT, no quantization, no color transform)."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.int64)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, ncomp = a.shape
-    if ncomp not in (1, 3):
-        raise ValueError("lossless writer supports 1 or 3 components")
-    if not (1 <= predictor <= 7):
-        raise ValueError("predictor must be 1..7")
-    pt = point_transform
-    planes = [a[:, :, c] >> pt for c in range(ncomp)]
-
-    # DC-style table with the lossless category range 0..16 at 5 bits
-    dc_vals = bytes(range(17))
-    dc_bits = bytearray(16)
-    dc_bits[4] = 17
-    dc_codes = {v: (i, 5) for i, v in enumerate(dc_vals)}
-
-    bw = _JpegBitWriter()
-    default = 1 << (8 - pt - 1)
-    for y in range(h):
-        for x in range(w):
-            for pl in planes:
-                val = int(pl[y, x])
-                if y == 0 and x == 0:
-                    pred = default
-                elif y == 0:
-                    pred = int(pl[y, x - 1])
-                elif x == 0:
-                    pred = int(pl[y - 1, x])
-                else:
-                    ra = int(pl[y, x - 1])
-                    rb = int(pl[y - 1, x])
-                    rc = int(pl[y - 1, x - 1])
-                    pred = (
-                        ra if predictor == 1 else
-                        rb if predictor == 2 else
-                        rc if predictor == 3 else
-                        ra + rb - rc if predictor == 4 else
-                        ra + ((rb - rc) >> 1) if predictor == 5 else
-                        rb + ((ra - rc) >> 1) if predictor == 6 else
-                        (ra + rb) >> 1
-                    )
-                diff = val - pred
-                s = int(abs(diff)).bit_length()
-                code, ln = dc_codes[s]
-                bw.write(code, ln)
-                if s:
-                    bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    bw.flush()
-
-    def seg(marker: int, data: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += seg(0xC3, sof)
-    out += seg(0xC4, b"\x00" + bytes(dc_bits) + dc_vals)
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([predictor, 0, pt])  # Ss=predictor, Se=0, Ah<<4|Al
-    out += seg(0xDA, sos)
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-class _JpegBitWriter:
-    """MSB-first bit accumulator with JPEG 0xFF byte stuffing."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.nbits -= 8
-            self.acc &= (1 << self.nbits) - 1
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-
-    def flush(self) -> None:
-        if self.nbits:  # pad the final byte with 1-bits (F.1.2.3)
-            self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
-
-
-def _jpeg_enc_tables(precision: int = 8) -> "tuple[dict, dict, bytes, bytes]":
-    """Deterministic single-length Huffman tables for the encoder —
-    valid canonical tables (DHT carries them; nothing requires the
-    Annex K defaults). 8-bit: 12 DC categories at 4 bits, the 162
-    possible AC symbols at 8 bits. 12-bit: 16 DC categories at 5
-    bits, AC sizes reach 14 → 226 symbols at 8 bits. The all-ones
-    code stays unused in every table. Returns ({sym: (code, len)}
-    for DC and AC, DHT payloads)."""
-    n_dc = 12 if precision == 8 else 16
-    dc_len = 4 if precision == 8 else 5
-    max_s = 10 if precision == 8 else 14
-    dc_vals = bytes(range(n_dc))
-    dc_bits = bytearray(16)
-    dc_bits[dc_len - 1] = n_dc
-    ac_syms = [r << 4 | s for r in range(16) for s in range(1, max_s + 1)]
-    ac_syms += [0x00, 0xF0]
-    ac_vals = bytes(sorted(ac_syms))
-    ac_bits = bytes([0] * 7 + [len(ac_vals)] + [0] * 8)
-    dc = {v: (i, dc_len) for i, v in enumerate(dc_vals)}
-    ac = {v: (i, 8) for i, v in enumerate(ac_vals)}
-    return dc, ac, bytes(dc_bits) + dc_vals, ac_bits + ac_vals
-
-
-def encode_jpeg(
-    arr,
-    quality: int = 95,
-    subsampling: "tuple[int, int]" = (1, 1),
-    restart_interval: int = 0,
-    precision: int = 8,
-) -> bytes:
-    """Minimal valid baseline JPEG writer (stdlib + numpy) — the
-    demo/test producer for :func:`decode_jpeg_pixels`. 2-D input →
-    grayscale, (H, W, 3) → YCbCr with luma sampling ``subsampling``
-    ((1, 1) = 4:4:4, (2, 2) = 4:2:0, (2, 1) = 4:2:2; chroma is
-    averaged over the sampling box). A uniform quantization table is
-    scaled by ``quality`` (IJG formula; quality=100 → all-ones, so the
-    round trip is exact up to DCT float rounding). Optional restart
-    markers every ``restart_interval`` MCUs exercise the decoder's
-    resync path. ``precision=12`` emits the extended sequential
-    profile (SOF1, samples = input << 4, level shift 2048, 16-bit
-    DQT) — the decoder maps 12-bit samples back to the uint8
-    contract."""
-    import numpy as np
-
-    if precision not in (8, 12):
-        raise ValueError(f"precision must be 8 or 12, got {precision}")
-    a = np.asarray(arr, dtype=np.float64)
-    shift = 128.0 if precision == 8 else 2048.0
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    sh, sv = subsampling[0], subsampling[1]
-    if gray:
-        planes = [a]
-        samp = [(1, 1)]
-    else:
-        r, g, bl = a[..., 0], a[..., 1], a[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * bl
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * bl
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * bl
-        planes = [y, cb, cr]
-        samp = [(sh, sv), (1, 1), (1, 1)]
-    if precision == 12:
-        # uint8 input -> 12-bit sample domain AFTER the color
-        # transform so the chroma center scales to 2048 with it
-        planes = [p * 16.0 for p in planes]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # quality → uniform quant table (IJG scaling of a flat base 16)
-    q = max(1, min(100, int(quality)))
-    scale = 5000 // q if q < 50 else 200 - 2 * q
-    qval = max(1, min(255, (16 * scale + 50) // 100))
-    qtab = np.full((8, 8), float(qval))
-
-    basis = _dct_basis()
-    dc_codes, ac_codes, dht_dc, dht_ac = _jpeg_enc_tables(precision)
-
-    padded = []
-    for pl, (ch, cv) in zip(planes, samp):
-        ph, pw = mcuy * vmax * 8, mcux * hmax * 8
-        p = np.pad(pl, ((0, ph - h), (0, pw - w)), mode="edge")
-        if (ch, cv) != (hmax, vmax):  # box-average downsample
-            fy, fx = vmax // cv, hmax // ch
-            p = p.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        padded.append(p)
-
-    def category(v: int) -> int:
-        return int(abs(v)).bit_length()
-
-    bw = _JpegBitWriter()
-    body = bytearray()
-    preds = [0] * len(planes)
-    for m in range(mcux * mcuy):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.flush()
-            body += bw.out
-            body += bytes([0xFF, 0xD0 + ((m // restart_interval - 1) % 8)])
-            bw = _JpegBitWriter()
-            preds = [0] * len(planes)
-        my, mx = divmod(m, mcux)
-        for ci, (pl, (ch, cv)) in enumerate(zip(padded, samp)):
-            for by in range(cv):
-                for bx in range(ch):
-                    y0 = (my * cv + by) * 8
-                    x0 = (mx * ch + bx) * 8
-                    blk = pl[y0 : y0 + 8, x0 : x0 + 8] - shift
-                    coefs = np.round((basis @ blk @ basis.T) / qtab).astype(int)
-                    diff = int(coefs[0, 0]) - preds[ci]
-                    preds[ci] = int(coefs[0, 0])
-                    s = category(diff)
-                    code, ln = dc_codes[s]
-                    bw.write(code, ln)
-                    if s:
-                        bw.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-                    zz = [int(coefs.flat[_JPEG_ZZ[k]]) for k in range(1, 64)]
-                    run = 0
-                    for v in zz:
-                        if v == 0:
-                            run += 1
-                            continue
-                        while run > 15:
-                            code, ln = ac_codes[0xF0]
-                            bw.write(code, ln)
-                            run -= 16
-                        s = category(v)
-                        code, ln = ac_codes[run << 4 | s]
-                        bw.write(code, ln)
-                        bw.write(v if v > 0 else v + (1 << s) - 1, s)
-                        run = 0
-                    if run:
-                        code, ln = ac_codes[0x00]
-                        bw.write(code, ln)
-    bw.flush()
-    body += bw.out
-
-    def seg(marker: int, data: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-    out = bytearray(b"\xff\xd8")
-    if precision == 8:
-        zig_q = bytes(int(qtab.flat[_JPEG_ZZ[k]]) for k in range(64))
-        out += seg(0xDB, b"\x00" + zig_q)
-    else:  # 16-bit big-endian table (pq=1), SOF1 extended sequential
-        zig_q = b"".join(
-            struct.pack(">H", int(qtab.flat[_JPEG_ZZ[k]])) for k in range(64)
-        )
-        out += seg(0xDB, b"\x10" + zig_q)
-    ncomp = len(planes)
-    sof = struct.pack(">BHHB", precision, h, w, ncomp)
-    for ci, (ch, cv) in enumerate(samp):
-        sof += bytes([ci + 1, ch << 4 | cv, 0])
-    out += seg(0xC0 if precision == 8 else 0xC1, sof)
-    out += seg(0xC4, b"\x00" + dht_dc)
-    out += seg(0xC4, b"\x10" + dht_ac)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += b"\x00\x3f\x00"
-    out += seg(0xDA, sos)
-    out += body
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_progressive(
-    arr,
-    quality: int = 95,
-    bands: "tuple[tuple[int, int], ...]" = ((1, 5), (6, 63)),
-    dc_al: int = 1,
-    subsampling: "tuple[int, int]" = (1, 1),
-) -> bytes:
-    """Minimal valid PROGRESSIVE JPEG writer (SOF2; grayscale or
-    color at 4:4:4 / 4:2:2 / 4:2:0 via ``subsampling``) — the
-    test/demo producer for the progressive half of
-    :func:`decode_jpeg_pixels`. Scan script: one interleaved DC first
-    scan at ``Al=dc_al``, ``dc_al`` DC refinement scans, then per
-    component per spectral band an AC first scan at Al=1 and its
-    Ah=1→Al=0 refinement — together exercising every decoder path
-    (EOB runs, ZRL, newly-nonzero insertion, correction bits, and —
-    when subsampled — the non-interleaved per-component ceil(size/8)
-    grids whose MCU-pad blocks stay DC-only). Compression ratio is a
-    non-goal (single-length Huffman tables, per-block EOBs, no
-    restart markers)."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.float64)
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    sh, sv = subsampling
-    if gray:
-        planes = [a]
-        samp = [(1, 1)]
-    else:
-        r, g, bl = a[..., 0], a[..., 1], a[..., 2]
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * bl,
-            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * bl,
-            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * bl,
-        ]
-        samp = [(sh, sv), (1, 1), (1, 1)]
-    ncomp = len(planes)
-    hmax = max(s_[0] for s_ in samp)
-    vmax = max(s_[1] for s_ in samp)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    q = max(1, min(100, int(quality)))
-    scale = 5000 // q if q < 50 else 200 - 2 * q
-    qval = max(1, min(255, (16 * scale + 50) // 100))
-    qtab = np.full((8, 8), float(qval))
-    basis = _dct_basis()
-    zz = np.array(_JPEG_ZZ, dtype=np.int64)
-
-    # quantized coefficients in ZIGZAG order, per comp on its OWN
-    # (possibly downsampled) MCU-grid-padded plane; nb = the
-    # non-interleaved ceil(size/8) sub-grid AC scans cover
-    coefz, nb = [], []
-    for pl, (ch, cv) in zip(planes, samp):
-        ph, pw = mcuy * vmax * 8, mcux * hmax * 8
-        p = np.pad(pl, ((0, ph - h), (0, pw - w)), mode="edge")
-        if (ch, cv) != (hmax, vmax):
-            fy, fx = vmax // cv, hmax // ch
-            p = p.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        gby, gbx = mcuy * cv, mcux * ch
-        cz = np.zeros((gby, gbx, 64), dtype=np.int64)
-        for byy in range(gby):
-            for bxx in range(gbx):
-                blk = p[byy * 8 : byy * 8 + 8, bxx * 8 : bxx * 8 + 8] - 128.0
-                nat = np.round((basis @ blk @ basis.T) / qtab).astype(np.int64)
-                cz[byy, bxx] = nat.reshape(64)[zz]
-        coefz.append(cz)
-        comp_h = -(-h * cv // vmax)
-        comp_w = -(-w * ch // hmax)
-        nb.append((-(-comp_h // 8), -(-comp_w // 8)))
-
-    dc_codes, ac_codes, dht_dc, dht_ac = _jpeg_enc_tables()
-
-    def category(v: int) -> int:
-        return int(abs(v)).bit_length()
-
-    def write_mag(bw, v: int, s: int) -> None:
-        if s:
-            bw.write(v if v > 0 else v + (1 << s) - 1, s)
-
-    def sos_header(comp_ids, ss, se, ah, al) -> bytes:
-        body = bytes([len(comp_ids)])
-        for cid in comp_ids:
-            body += bytes([cid, 0x00])  # DC table 0, AC table 0
-        body += bytes([ss, se, (ah << 4) | al])
-        return (bytes([0xFF, 0xDA])
-                + struct.pack(">H", len(body) + 2) + body)
-
-    def mcu_blocks():
-        """(ci, by, bx) in interleaved MCU traversal order."""
-        for m in range(mcux * mcuy):
-            my, mx = divmod(m, mcux)
-            for ci, (ch, cv) in enumerate(samp):
-                for byy in range(cv):
-                    for bxx in range(ch):
-                        yield ci, my * cv + byy, mx * ch + bxx
-
-    scans: "list[bytes]" = []
-
-    # --- DC first scan (interleaved over all comps), Al = dc_al
-    bw = _JpegBitWriter()
-    preds = [0] * ncomp
-    for ci, byy, bxx in mcu_blocks():
-        v = int(coefz[ci][byy, bxx, 0]) >> dc_al  # arithmetic shift
-        diff = v - preds[ci]
-        preds[ci] = v
-        s = category(diff)
-        code, ln = dc_codes[s]
-        bw.write(code, ln)
-        write_mag(bw, diff, s)
-    bw.flush()
-    scans.append(
-        sos_header(list(range(1, ncomp + 1)), 0, 0, 0, dc_al) + bytes(bw.out)
-    )
-
-    # --- DC refinement scans: Ah=al+1 → Al=al, one raw bit per block
-    for al in range(dc_al - 1, -1, -1):
-        bw = _JpegBitWriter()
-        for ci, byy, bxx in mcu_blocks():
-            bw.write((int(coefz[ci][byy, bxx, 0]) >> al) & 1, 1)
-        bw.flush()
-        scans.append(
-            sos_header(list(range(1, ncomp + 1)), 0, 0, al + 1, al)
-            + bytes(bw.out)
-        )
-
-    # --- per comp, per band: AC first (Al=1) then refinement (Ah=1),
-    # over the comp's ceil(size/8) grid (MCU-pad blocks stay DC-only)
-    for ci in range(ncomp):
-        nby, nbx = nb[ci]
-        for ss, se in bands:
-            bw = _JpegBitWriter()
-            for m in range(nby * nbx):
-                my, mx = divmod(m, nbx)
-                blk = coefz[ci][my, mx]
-                run = 0
-                for k in range(ss, se + 1):
-                    v = int(blk[k])
-                    v = (abs(v) >> 1) * (1 if v > 0 else -1)
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, ln = ac_codes[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                    s = category(v)
-                    code, ln = ac_codes[(run << 4) | s]
-                    bw.write(code, ln)
-                    write_mag(bw, v, s)
-                    run = 0
-                if run:
-                    code, ln = ac_codes[0x00]  # EOB (run of 1 block)
-                    bw.write(code, ln)
-            bw.flush()
-            scans.append(sos_header([ci + 1], ss, se, 0, 1) + bytes(bw.out))
-
-            bw = _JpegBitWriter()
-            for m in range(nby * nbx):
-                my, mx = divmod(m, nbx)
-                blk = coefz[ci][my, mx]
-                run = 0
-                pending: "list[int]" = []
-                for k in range(ss, se + 1):
-                    v = int(blk[k])
-                    if (abs(v) >> 1) != 0:  # history-nonzero: correction bit
-                        pending.append(abs(v) & 1)
-                    elif v != 0:  # newly nonzero (|v| == 1)
-                        while run > 15:
-                            code, ln = ac_codes[0xF0]
-                            bw.write(code, ln)
-                            for bit in pending:
-                                bw.write(bit, 1)
-                            pending = []
-                            run -= 16
-                        code, ln = ac_codes[(run << 4) | 1]
-                        bw.write(code, ln)
-                        bw.write(1 if v > 0 else 0, 1)
-                        for bit in pending:
-                            bw.write(bit, 1)
-                        pending = []
-                        run = 0
-                    else:
-                        run += 1
-                if run > 0 or pending:
-                    code, ln = ac_codes[0x00]
-                    bw.write(code, ln)
-                    for bit in pending:
-                        bw.write(bit, 1)
-            bw.flush()
-            scans.append(sos_header([ci + 1], ss, se, 1, 0) + bytes(bw.out))
-
-    def seg(marker: int, data: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-    zig_q = bytes(int(qtab.flat[_JPEG_ZZ[k]]) for k in range(64))
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, b"\x00" + zig_q)
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci, (ch, cv) in enumerate(samp):
-        sof += bytes([ci + 1, (ch << 4) | cv, 0])  # sampling, quant table 0
-    out += seg(0xC2, sof)
-    out += seg(0xC4, b"\x00" + dht_dc)
-    out += seg(0xC4, b"\x10" + dht_ac)
-    for sc in scans:
-        out += sc
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def decode_real(payload: bytes, kind: str):  # pragma: no cover - stub
-    """Full decode for the formats still beyond the stdlib.
-
-    What IS decoded for real: PNG pixels (:func:`decode_png_pixels`,
-    stdlib zlib — samples, channel count, pixel statistics), GIF
-    first-frame pixels (:func:`decode_gif_pixels`, hand-rolled LZW),
-    BMP pixels (:func:`decode_bmp_pixels`, plain slice-and-reshape),
-    netpbm PGM/PPM pixels (:func:`decode_pnm_pixels`), JPEG pixels —
-    BOTH baseline sequential and progressive
-    (:func:`decode_jpeg_pixels`, hand-rolled Huffman + spectral
-    selection / successive approximation + dequant + IDCT + YCbCr),
-    WAV PCM/float32 samples (:func:`decode_wav_samples`), animated-GIF
-    frame sequences (:func:`decode_gif_frames` — real video-frame
-    sampling), image container dimensions
-    (:func:`parse_image_header`), WAV duration
-    (:func:`parse_wav_header`). This stub marks the remainder:
-    arithmetic-coded and hierarchical JPEG variants, perceptual audio
-    codecs (MP3/AAC-class), and ffmpeg-class video codecs, none of
-    which this environment's libraries cover.
-    """
-    raise NotImplementedError(
-        "arithmetic-coded and hierarchical JPEG, MP3/AAC-class audio, and "
-        "ffmpeg-class video codecs require PIL/soundfile/ffmpeg, none "
-        "of which ship in this environment; PNG/GIF/BMP/PNM pixels, "
-        "baseline AND progressive JPEG pixels, WAV PCM/float32/G.711/"
-        "IMA-ADPCM samples, and animated-GIF frames decode for real via decode_*_pixels / "
-        "decode_wav_samples / decode_gif_frames, headers via "
-        "parse_image_header/parse_wav_header, and unrecognized "
-        "payloads fall back to the deterministic _decode_stub"
-    )
-
-
 def _decode_stub(payload: bytes, kind: str) -> dict:
     """Deterministic fake decode: properties derived from the payload's
     sha256 so outputs are stable across runs/partitionings."""
@@ -2338,93 +820,104 @@ def _decode_stub(payload: bytes, kind: str) -> dict:
     }
 
 
+_NO_PX = {"channels": None, "px_mean": None, "px_std": None}
+
+
+def _stats(arr) -> dict:
+    """Channel count (last axis) and rounded mean/std of decoded
+    pixels or samples."""
+    return {
+        "channels": int(arr.shape[-1]),
+        "px_mean": round(float(arr.mean()), 4),
+        "px_std": round(float(arr.std()), 4),
+    }
+
+
+def _pixel_tier(decode, name: str):
+    """Image tier over a pixel decoder returning (H, W, C) or None."""
+
+    def tier(payload) -> dict | None:
+        px = decode(payload)
+        if px is None:
+            return None
+        return {
+            "width": int(px.shape[1]), "height": int(px.shape[0]),
+            "duration_s": 0.0, "n_frames": 1, **_stats(px), "decoder": name,
+        }
+
+    return tier
+
+
+def _image_header_tier(payload) -> dict | None:
+    parsed = parse_image_header(payload)
+    if parsed is None:
+        return None
+    fmt, w, h = parsed
+    return {
+        "width": w, "height": h, "duration_s": 0.0, "n_frames": 1,
+        **_NO_PX, "decoder": f"header:{fmt}",
+    }
+
+
+def _wav_samples_tier(payload) -> dict | None:
+    smp = decode_wav_samples(payload)
+    if smp is None:
+        return None
+    dur = parse_wav_header(payload)
+    return {
+        "width": 0, "height": 0,
+        "duration_s": round(dur, 3) if dur is not None else 0.0,
+        "n_frames": int(smp.shape[0]), **_stats(smp), "decoder": "samples:wav",
+    }
+
+
+def _wav_header_tier(payload) -> dict | None:
+    dur = parse_wav_header(payload)
+    if dur is None:
+        return None
+    return {
+        "width": 0, "height": 0, "duration_s": round(dur, 3), "n_frames": 0,
+        **_NO_PX, "decoder": "header:wav",
+    }
+
+
+#: (kind, tier) in probe order: the first tier of a row's kind that
+#: returns a feature dict wins; video rows and payloads no tier
+#: recognizes fall to :func:`_decode_stub`
+_TIERS = (
+    ("image", _pixel_tier(decode_png_pixels, "pixels:png")),
+    ("image", _pixel_tier(decode_gif_pixels, "pixels:gif")),
+    ("image", _pixel_tier(decode_bmp_pixels, "pixels:bmp")),
+    ("image", _pixel_tier(decode_jpeg_pixels, "pixels:jpeg")),
+    ("image", _image_header_tier),
+    ("audio", _wav_samples_tier),
+    ("audio", _wav_header_tier),
+)
+
+
+def _decode_one(payload, kind: str) -> dict:
+    for tier_kind, tier in _TIERS:
+        if tier_kind == kind:
+            row = tier(payload)
+            if row is not None:
+                return row
+    return {**_decode_stub(payload, kind), **_NO_PX, "decoder": "stub"}
+
+
 def extract_media_features(media: DataFrame) -> DataFrame:
-    """Per-payload feature extraction via ``mapInPandas``.
+    """Per-payload feature extraction via ``mapInPandas``: each row
+    walks ``_TIERS`` (see the module docstring).
 
     Arrow streams whole column batches into Python; each batch is
-    processed vectorized-where-possible and yielded back — no per-row
-    pickling. This is the narrow (shuffle-free) stage: features compute
-    where the payload bytes already live.
+    processed and yielded back — no per-row pickling. This is the
+    narrow (shuffle-free) stage: features compute where the payload
+    bytes already live.
     """
-
-    no_px = {"channels": None, "px_mean": None, "px_std": None}
-
-    def decode_one(payload, kind: str) -> dict:
-        if kind == "image":
-            # full pixel decode first (PNG via stdlib zlib, GIF via
-            # hand-rolled LZW, BMP via plain slicing, baseline JPEG via
-            # hand-rolled Huffman + IDCT) — real sample statistics;
-            # header-only decode as the fallback tier
-            for px, name in ((decode_png_pixels(payload), "pixels:png"),
-                             (decode_gif_pixels(payload), "pixels:gif"),
-                             (decode_bmp_pixels(payload), "pixels:bmp"),
-                             (decode_pnm_pixels(payload), "pixels:pnm"),
-                             (decode_jpeg_pixels(payload), "pixels:jpeg")):
-                if px is not None:
-                    return {
-                        "width": int(px.shape[1]), "height": int(px.shape[0]),
-                        "duration_s": 0.0, "n_frames": 1,
-                        "channels": int(px.shape[2]),
-                        "px_mean": round(float(px.mean()), 4),
-                        "px_std": round(float(px.std()), 4),
-                        "decoder": name,
-                    }
-            parsed = parse_image_header(payload)
-            if parsed is not None:
-                fmt, w, h = parsed
-                return {
-                    "width": w, "height": h, "duration_s": 0.0,
-                    "n_frames": 1, **no_px, "decoder": f"header:{fmt}",
-                }
-        elif kind == "audio":
-            # real sample decode first (plain PCM/float bytes) — the
-            # stat columns carry sample mean/std in [-1, 1] and
-            # n_frames the PCM frame count; header-only as fallback
-            smp = decode_wav_samples(payload)
-            if smp is not None:
-                dur = parse_wav_header(payload)
-                return {
-                    "width": 0, "height": 0,
-                    "duration_s": round(dur, 3) if dur is not None else 0.0,
-                    "n_frames": int(smp.shape[0]),
-                    "channels": int(smp.shape[1]),
-                    "px_mean": round(float(smp.mean()), 4),
-                    "px_std": round(float(smp.std()), 4),
-                    "decoder": "samples:wav",
-                }
-            dur = parse_wav_header(payload)
-            if dur is not None:
-                return {
-                    "width": 0, "height": 0, "duration_s": round(dur, 3),
-                    "n_frames": 0, **no_px, "decoder": "header:wav",
-                }
-        elif kind == "video":
-            # animated GIF is the one video container with a
-            # stdlib-decodable frame sequence — real frame count,
-            # duration (graphic-control delays), and pixel statistics
-            # over the composed canvases; ffmpeg formats stay stubbed
-            dec = decode_gif_frames(payload)
-            if dec is not None:
-                import numpy as np
-
-                fr, dur = dec
-                stack = np.stack(fr)
-                return {
-                    "width": int(fr[0].shape[1]),
-                    "height": int(fr[0].shape[0]),
-                    "duration_s": dur,
-                    "n_frames": len(fr),
-                    "channels": 3,
-                    "px_mean": round(float(stack.mean()), 4),
-                    "px_std": round(float(stack.std()), 4),
-                    "decoder": "frames:gif",
-                }
-        return {**_decode_stub(payload, kind), **no_px, "decoder": "stub"}
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             decoded = [
-                decode_one(p, k) for p, k in zip(pdf["payload"], pdf["kind"])
+                _decode_one(p, k) for p, k in zip(pdf["payload"], pdf["kind"])
             ]
             yield pd.DataFrame(
                 {
@@ -2446,109 +939,3 @@ def extract_media_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(extract, schema=FEATURES_SCHEMA)
-
-
-def decode_image_pixels(payload: bytes | None):
-    """First pixel tier that recognizes ``payload`` (PNG → GIF → BMP →
-    PNM → baseline JPEG, the same order the feature extractor probes),
-    or None — the shared entry point for any caller that just wants
-    samples."""
-    for fn in (decode_png_pixels, decode_gif_pixels, decode_bmp_pixels,
-               decode_pnm_pixels, decode_jpeg_pixels):
-        px = fn(payload)
-        if px is not None:
-            return px
-    return None
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize every image payload to ``width``×``height``.
-
-    Decodable payloads (any :func:`decode_image_pixels` tier) resize
-    for REAL — nearest-neighbor index resample (pure numpy fancy
-    indexing, no interpolation library) re-encoded as PNG; the
-    ``decoder`` column says ``resize:nn``. Unrecognized payloads keep
-    the deterministic stub bytes (sha256 of input ‖ target dims,
-    ``decoder`` = ``stub``). The plumbing is the production shape
-    either way: filter non-images *before* the Python boundary so
-    Catalyst prunes them at the scan, then map payload batches.
-    """
-    import numpy as np
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("decoder", T.StringType()),
-        ]
-    )
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tag = f"{width}x{height}".encode()
-        for pdf in batches:
-            blobs, decoders = [], []
-            for p in pdf["payload"]:
-                px = decode_image_pixels(p)
-                if px is not None:
-                    yi = np.minimum(
-                        (np.arange(height) * px.shape[0]) // height,
-                        px.shape[0] - 1,
-                    )
-                    xi = np.minimum(
-                        (np.arange(width) * px.shape[1]) // width,
-                        px.shape[1] - 1,
-                    )
-                    blobs.append(encode_png(px[yi][:, xi]))
-                    decoders.append("resize:nn")
-                else:
-                    blobs.append(hashlib.sha256((p or b"") + tag).digest())
-                    decoders.append("stub")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": blobs,
-                    "width": width,
-                    "height": height,
-                    "decoder": decoders,
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(do_resize, schema=out_schema)
-
-
-def sample_frames(media: DataFrame, every_n: int = 16) -> DataFrame:
-    """Sample every ``every_n``-th frame of each video: one input row →
-    many output rows, the explode-shaped ``mapInPandas`` pattern.
-
-    Animated-GIF payloads decode for REAL (:func:`decode_gif_frames`):
-    the sampled frames come back as genuine PNG bytes of the composed
-    canvases (:func:`encode_png`). Everything else falls to the stub
-    (sha256(payload ‖ frame_idx), frame count from the stubbed
-    decode). Output fan-out is bounded either way, and the non-video
-    filter stays JVM-side.
-    """
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, blobs = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = decode_gif_frames(payload)
-                if dec is not None:
-                    fr, _dur = dec
-                    for i in range(0, len(fr), every_n):
-                        ids.append(mid)
-                        idxs.append(i)
-                        blobs.append(encode_png(fr[i]))
-                    continue
-                n = _decode_stub(payload, "video")["n_frames"]
-                for i in range(0, n, every_n):
-                    ids.append(mid)
-                    idxs.append(i)
-                    blobs.append(
-                        hashlib.sha256((payload or b"") + str(i).encode()).digest()
-                    )
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": blobs})
-
-    return media.filter(F.col("kind") == "video").mapInPandas(frames, schema=FRAMES_SCHEMA)

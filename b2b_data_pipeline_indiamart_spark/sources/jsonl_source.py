@@ -15,8 +15,9 @@ native distributed scans — the value is in the contracts:
   multimodal table layout (operators/multimodal.py): one row per
   file, payload as ``binary``, path/length metadata — Spark's
   ``binaryFile`` source handles distribution and pathGlobFilter
-  pushdown. Pair it with ``multimodal.decode_features`` for the
-  header-level decode.
+  pushdown. Pair it with ``multimodal.extract_media_features`` for
+  the decode tiers (alias ``doc_id`` to ``media_id`` and map the
+  extension ``kind`` to ``image``/``audio``/``video`` first).
 """
 
 from __future__ import annotations

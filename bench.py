@@ -311,7 +311,7 @@ def main() -> None:
     # The driver captures only the TAIL of stdout and parses the LAST
     # JSON line. The extended dict (70+ entries) once lived inside the
     # headline object and pushed "value"/"queries" past that capture
-    # window (BENCH_r09.json parsed: null). Emit extended as its OWN
+    # window (the r9 driver record parsed as null). Emit extended as its OWN
     # line FIRST, and the frozen compact headline object LAST so the
     # driver always sees a parseable record well under 2000 chars.
     if extended:

@@ -50,8 +50,6 @@ def test_similarity_on_empty(empty_emb):
 def test_multimodal_on_empty(empty_docs):
     media = multimodal.media_from_documents(empty_docs)
     assert multimodal.extract_media_features(media).count() == 0
-    assert multimodal.resize_images(media, 64, 64).count() == 0
-    assert multimodal.sample_frames(media).count() == 0
 
 
 def test_cleaning_profiling_outliers_on_empty(spark):

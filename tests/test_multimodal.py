@@ -1,9 +1,16 @@
 from __future__ import annotations
 
+import struct
+import zlib
+
+import numpy as np
 import pytest
 
 from b2b_data_pipeline_indiamart_spark import catalog
 from b2b_data_pipeline_indiamart_spark.operators import multimodal as mm
+
+MEDIA_DDL = "media_id long, kind string, payload binary, meta map<string,string>"
+META = {"source": "t", "lang": "en"}
 
 
 @pytest.fixture(scope="module")
@@ -12,6 +19,349 @@ def media(spark, sf_small):
     m = mm.media_from_documents(docs)
     m.cache().count()
     return m
+
+
+# ---------------------------------------------------------------------------
+# encoder fixtures: minimal writers for the container variants the package
+# decodes
+# ---------------------------------------------------------------------------
+
+
+def _png_chunk(typ: bytes, data: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(data)) + typ + data
+        + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
+    )
+
+
+def _png(w: int, h: int, ctype: int, raw: bytes, plte: bytes = b"") -> bytes:
+    """8-bit, non-interlaced PNG around already-filtered scanlines."""
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+        + (_png_chunk(b"PLTE", plte) if plte else b"")
+        + _png_chunk(b"IDAT", zlib.compress(raw)) + _png_chunk(b"IEND", b"")
+    )
+
+
+_PNG_CTYPE = {1: 0, 2: 4, 3: 2, 4: 6}  # channels → color type
+
+
+def _encode_png(arr) -> bytes:
+    """8-bit gray/GA/RGB/RGBA PNG, every row filter 0."""
+    a = np.asarray(arr, dtype=np.uint8)
+    if a.ndim == 2:
+        a = a[:, :, None]
+    h, w, nch = a.shape
+    raw = b"".join(b"\x00" + a[r].tobytes() for r in range(h))
+    return _png(w, h, _PNG_CTYPE[nch], raw)
+
+
+def _png_with_filters(expected, filters):
+    """Build a PNG whose rows use the given per-row filter types, by
+    FORWARD-filtering the expected pixels per the PNG spec."""
+    a = np.asarray(expected, dtype=np.int32)
+    h, w, nch = a.shape
+    flat = a.reshape(h, w * nch)
+    raw = b""
+    for r, f in zip(range(h), filters):
+        cur = flat[r]
+        prev = flat[r - 1] if r > 0 else np.zeros(w * nch, dtype=np.int32)
+        line = np.zeros(w * nch, dtype=np.int32)
+        for i in range(w * nch):
+            left = int(cur[i - nch]) if i >= nch else 0
+            up = int(prev[i])
+            ul = int(prev[i - nch]) if i >= nch else 0
+            if f == 0:
+                pred = 0
+            elif f == 1:
+                pred = left
+            elif f == 2:
+                pred = up
+            elif f == 3:
+                pred = (left + up) // 2
+            else:
+                p = left + up - ul
+                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
+                pred = left if pa <= pb and pa <= pc else (up if pb <= pc else ul)
+            line[i] = (int(cur[i]) - pred) % 256
+        raw += bytes([f]) + line.astype(np.uint8).tobytes()
+    return _png(w, h, _PNG_CTYPE[nch], raw)
+
+
+def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
+    """GIF-variant LZW encode of color-index bytes: real dictionary
+    growth with code-size bookkeeping MIRRORING the decoder's timing,
+    clear-and-reset at the 12-bit ceiling."""
+    clear = 1 << min_code_size
+    eoi = clear + 1
+    out = bytearray()
+    acc = nbits = 0
+
+    def emit(code: int, size: int):
+        nonlocal acc, nbits
+        acc |= code << nbits
+        nbits += size
+        while nbits >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+
+    code_size = min_code_size + 1
+    table = {bytes([i]): i for i in range(clear)}
+    next_code = eoi + 1
+    emit(clear, code_size)
+    s = b""
+    for px in indices:
+        c = bytes([px])
+        if s + c in table:
+            s += c
+            continue
+        emit(table[s], code_size)
+        table[s + c] = next_code
+        next_code += 1
+        # decoder grows its table one entry behind the emitted code and
+        # widens when the table fills the current width — mirror that
+        if next_code - 1 == (1 << code_size) and code_size < 12:
+            code_size += 1
+        elif next_code - 1 == 4096:
+            emit(clear, code_size)
+            code_size = min_code_size + 1
+            table = {bytes([i]): i for i in range(clear)}
+            next_code = eoi + 1
+        s = c
+    if s:
+        emit(table[s], code_size)
+    emit(eoi, code_size)
+    if nbits:
+        out.append(acc & 0xFF)
+    return bytes(out)
+
+
+def _encode_gif(*frames, delay_cs: int = 10) -> bytes:
+    """GIF89a with one shared ≤256-color global palette and one
+    graphic-control extension + image descriptor per same-size frame
+    (2-D frames are gray)."""
+    arrs = [np.asarray(f, dtype=np.uint8) for f in frames]
+    arrs = [np.stack([a, a, a], axis=-1) if a.ndim == 2 else a for a in arrs]
+    h, w, _ = arrs[0].shape
+    allpx = np.concatenate([a.reshape(-1, 3) for a in arrs])
+    palette, inv = np.unique(allpx, axis=0, return_inverse=True)
+    inv = inv.reshape(-1).astype(np.uint8)
+    bits = max(2, (len(palette) - 1).bit_length())  # GIF minimum 2
+    pal = np.zeros((1 << bits, 3), dtype=np.uint8)
+    pal[: len(palette)] = palette
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
+    out += pal.tobytes()
+    for k in range(len(arrs)):
+        out += b"\x21\xf9\x04\x04" + struct.pack("<H", delay_cs) + b"\x00\x00"
+        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0) + bytes([bits])
+        data = _gif_lzw_encode(inv[k * h * w : (k + 1) * h * w].tobytes(), bits)
+        for i in range(0, len(data), 255):
+            out += bytes([len(data[i : i + 255])]) + data[i : i + 255]
+        out += b"\x00"
+    return bytes(out + b"\x3b")
+
+
+def _encode_bmp(arr) -> bytes:
+    """24-bit bottom-up BMP (2-D input is gray)."""
+    a = np.asarray(arr, dtype=np.uint8)
+    if a.ndim == 2:
+        a = np.stack([a, a, a], axis=-1)
+    h, w, _ = a.shape
+    stride = (w * 3 + 3) & ~3
+    body = bytearray()
+    for row in a[::-1]:  # bottom-up
+        line = row[:, [2, 1, 0]].tobytes()  # RGB → BGR
+        body += line + b"\x00" * (stride - len(line))
+    header = b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
+    return header + info + bytes(body)
+
+
+def _wav(fmt: bytes, data: bytes) -> bytes:
+    """RIFF/WAVE container around a fmt chunk and a data chunk."""
+    return (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+        + (b"\x00" if len(data) & 1 else b"")
+    )
+
+
+def _encode_wav(samples, sample_rate: int, bits: int = 16) -> bytes:
+    """PCM WAV (8-bit unsigned or 16-bit signed) from (n,) or
+    (n, channels) floats in [-1, 1]."""
+    a = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
+    if a.ndim == 1:
+        a = a[:, None]
+    if bits == 8:
+        body = (np.round(a * 127.0) + 128).astype(np.uint8).tobytes()
+    else:
+        body = np.round(a * 32767.0).astype("<i2").tobytes()
+    align = a.shape[1] * bits // 8
+    fmt = struct.pack(
+        "<HHIIHH", 1, a.shape[1], sample_rate, sample_rate * align, align, bits
+    )
+    return _wav(fmt, body)
+
+
+class _JpegBitWriter:
+    """MSB-first bit accumulator with JPEG 0xFF byte stuffing."""
+
+    def __init__(self) -> None:
+        self.out = bytearray()
+        self.acc = 0
+        self.nbits = 0
+
+    def write(self, value: int, nbits: int) -> None:
+        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
+        self.nbits += nbits
+        while self.nbits >= 8:
+            byte = (self.acc >> (self.nbits - 8)) & 0xFF
+            self.nbits -= 8
+            self.acc &= (1 << self.nbits) - 1
+            self.out.append(byte)
+            if byte == 0xFF:
+                self.out.append(0x00)
+
+    def flush(self) -> None:
+        if self.nbits:  # pad the final byte with 1-bits (F.1.2.3)
+            self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
+
+
+def _encode_jpeg(arr, quality: int = 95, subsampling=(1, 1),
+                 restart_interval: int = 0) -> bytes:
+    """8-bit baseline JPEG (SOF0). 2-D input → grayscale, (H, W, 3) →
+    YCbCr with luma sampling ``subsampling`` ((1, 1) = 4:4:4,
+    (2, 2) = 4:2:0; chroma is averaged over the sampling box). A
+    uniform quant table is scaled by ``quality`` (IJG formula;
+    quality=100 → all-ones). Huffman tables are valid single-length
+    canonical tables: 12 DC categories at 4 bits, the 162 AC symbols at
+    8 bits. Optional RSTn markers every ``restart_interval`` MCUs."""
+    a = np.asarray(arr, dtype=np.float64)
+    h, w = a.shape[:2]
+    if a.ndim == 2:
+        planes, samp = [a], [(1, 1)]
+    else:
+        r, g, bl = a[..., 0], a[..., 1], a[..., 2]
+        planes = [
+            0.299 * r + 0.587 * g + 0.114 * bl,
+            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * bl,
+            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * bl,
+        ]
+        samp = [tuple(subsampling), (1, 1), (1, 1)]
+    hmax = max(s[0] for s in samp)
+    vmax = max(s[1] for s in samp)
+    mcux = -(-w // (8 * hmax))
+    mcuy = -(-h // (8 * vmax))
+    q = max(1, min(100, int(quality)))
+    scale = 5000 // q if q < 50 else 200 - 2 * q
+    qtab = np.full((8, 8), float(max(1, min(255, (16 * scale + 50) // 100))))
+    basis = mm._dct_basis()
+
+    dc_vals = bytes(range(12))
+    ac_vals = bytes(sorted(
+        [r << 4 | s for r in range(16) for s in range(1, 11)] + [0x00, 0xF0]
+    ))
+    dc_codes = {v: (i, 4) for i, v in enumerate(dc_vals)}
+    ac_codes = {v: (i, 8) for i, v in enumerate(ac_vals)}
+
+    padded = []
+    for pl, (ch, cv) in zip(planes, samp):
+        ph, pw = mcuy * vmax * 8, mcux * hmax * 8
+        p = np.pad(pl, ((0, ph - h), (0, pw - w)), mode="edge")
+        if (ch, cv) != (hmax, vmax):  # box-average downsample
+            fy, fx = vmax // cv, hmax // ch
+            p = p.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
+        padded.append(p)
+
+    def write_mag(v: int, s: int) -> None:
+        if s:
+            bw.write(v if v > 0 else v + (1 << s) - 1, s)
+
+    bw = _JpegBitWriter()
+    body = bytearray()
+    preds = [0] * len(planes)
+    for m in range(mcux * mcuy):
+        if restart_interval and m and m % restart_interval == 0:
+            bw.flush()
+            body += bw.out
+            body += bytes([0xFF, 0xD0 + ((m // restart_interval - 1) % 8)])
+            bw = _JpegBitWriter()
+            preds = [0] * len(planes)
+        my, mx = divmod(m, mcux)
+        for ci, (pl, (ch, cv)) in enumerate(zip(padded, samp)):
+            for by in range(cv):
+                for bx in range(ch):
+                    y0 = (my * cv + by) * 8
+                    x0 = (mx * ch + bx) * 8
+                    blk = pl[y0 : y0 + 8, x0 : x0 + 8] - 128.0
+                    coefs = np.round((basis @ blk @ basis.T) / qtab).astype(int)
+                    diff = int(coefs[0, 0]) - preds[ci]
+                    preds[ci] = int(coefs[0, 0])
+                    s = abs(diff).bit_length()
+                    bw.write(*dc_codes[s])
+                    write_mag(diff, s)
+                    run = 0
+                    for k in range(1, 64):
+                        v = int(coefs.flat[mm._JPEG_ZZ[k]])
+                        if v == 0:
+                            run += 1
+                            continue
+                        while run > 15:
+                            bw.write(*ac_codes[0xF0])
+                            run -= 16
+                        s = abs(v).bit_length()
+                        bw.write(*ac_codes[run << 4 | s])
+                        write_mag(v, s)
+                        run = 0
+                    if run:
+                        bw.write(*ac_codes[0x00])
+    bw.flush()
+    body += bw.out
+
+    def seg(marker: int, data: bytes) -> bytes:
+        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
+
+    out = bytearray(b"\xff\xd8")
+    out += seg(0xDB, b"\x00" + bytes(int(qtab.flat[k]) for k in mm._JPEG_ZZ))
+    sof = struct.pack(">BHHB", 8, h, w, len(planes))
+    for ci, (ch, cv) in enumerate(samp):
+        sof += bytes([ci + 1, ch << 4 | cv, 0])
+    out += seg(0xC0, sof)
+    out += seg(0xC4, b"\x00" + bytes([0, 0, 0, 12] + [0] * 12) + dc_vals)
+    out += seg(0xC4, b"\x10" + bytes([0] * 7 + [len(ac_vals)] + [0] * 8) + ac_vals)
+    if restart_interval:
+        out += seg(0xDD, struct.pack(">H", restart_interval))
+    sos = bytes([len(planes)])
+    for ci in range(len(planes)):
+        sos += bytes([ci + 1, 0x00])
+    out += seg(0xDA, sos + b"\x00\x3f\x00")
+    return bytes(out + body + b"\xff\xd9")
+
+
+def _with_sof(jpeg: bytes, marker: int, precision: int = 8) -> bytes:
+    """``jpeg`` with its SOF0 marker and sample precision rewritten —
+    the other frame types, whose bodies the decoder must decline."""
+    b = bytearray(jpeg)
+    i = b.index(b"\xff\xc0")
+    b[i + 1], b[i + 4] = marker, precision
+    return bytes(b)
+
+
+def _extract_one(spark, kind: str, payload: bytes):
+    media = spark.createDataFrame(
+        [(1, kind, bytearray(payload), META)], MEDIA_DDL
+    )
+    [row] = mm.extract_media_features(media).collect()
+    return row
+
+
+# ---------------------------------------------------------------------------
+# Spark plumbing, header tier and stub tier on the registry's media table
+# ---------------------------------------------------------------------------
 
 
 def test_media_schema(media):
@@ -41,41 +391,7 @@ def test_extract_deterministic_across_partitionings(media):
     assert a == b
 
 
-def test_resize_images_only_images(media):
-    out = mm.resize_images(media, 224, 224)
-    rows = out.collect()
-    n_images = media.filter("kind = 'image'").count()
-    assert len(rows) == n_images
-    assert all(r["width"] == 224 and r["height"] == 224 for r in rows)
-    assert all(len(r["payload"]) == 32 for r in rows)  # stub emits sha256 bytes
-
-
-def test_sample_frames_fanout(media):
-    frames = mm.sample_frames(media, every_n=16)
-    rows = frames.collect()
-    vids = media.filter("kind = 'video'").count()
-    assert len(rows) >= vids  # ≥1 frame per video
-    assert all(r["frame_idx"] % 16 == 0 for r in rows)
-    # fan-out matches the stubbed decode's frame count
-    feats = {
-        r["media_id"]: r["n_frames"]
-        for r in mm.extract_media_features(media.filter("kind='video'")).collect()
-    }
-    from collections import Counter
-
-    per_vid = Counter(r["media_id"] for r in rows)
-    for mid, n_frames in feats.items():
-        assert per_vid[mid] == len(range(0, n_frames, 16))
-
-
-def test_decode_real_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        mm.decode_real(b"bytes", "image")
-
-
 def test_parse_image_header_known_bytes():
-    import struct
-
     png = (
         b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
         + struct.pack(">II", 640, 480) + b"\x08\x06\x00\x00\x00" + b"junkbody"
@@ -98,24 +414,17 @@ def test_parse_image_header_known_bytes():
 
 
 def test_parse_wav_header_known_bytes():
-    import struct
-
     byte_rate, data = 8000, b"\x00" * 4000  # 0.5 s of 8 kHz 8-bit mono
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, byte_rate, 1, 8)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
+    wav = _wav(struct.pack("<HHIIHH", 1, 1, 8000, byte_rate, 1, 8), data)
     assert mm.parse_wav_header(wav) == 0.5
     assert mm.parse_wav_header(b"not riff") is None
 
 
 def test_image_rows_decode_real_headers(media):
-    """media_from_documents synthesizes valid PNG/GIF/BMP headers for
-    image rows; the feature extractor must decode the REAL dimensions
-    (64 + id % 192 by 64 + 7*id % 192), not the stub's hash-derived
-    fakes — and report which header format it parsed."""
+    """media_from_documents synthesizes valid PNG/GIF/BMP/JPEG headers
+    for image rows; the feature extractor must decode the REAL
+    dimensions (64 + id % 192 by 64 + 7*id % 192), not the stub's
+    hash-derived fakes — and report which header format it parsed."""
     feats = mm.extract_media_features(media.filter("kind = 'image'")).collect()
     assert feats
     seen = set()
@@ -140,8 +449,7 @@ def test_non_image_rows_decode_audio_stub_video(media):
             data_bytes = r["n_bytes"] - 44
             assert r["n_frames"] == data_bytes and r["channels"] == 1
             assert abs(r["duration_s"] - round(data_bytes / 8000, 3)) < 1e-9
-            # ASCII text bytes are all >= 32 -> samples skew negative?
-            # no: (byte-128)/128 with printable ASCII 32..126 spans
+            # (byte-128)/128 with printable ASCII 32..126 spans
             # [-0.75, -0.02] -- mean must land in that band
             assert -0.76 <= r["px_mean"] <= 0.0
         else:
@@ -149,117 +457,33 @@ def test_non_image_rows_decode_audio_stub_video(media):
 
 
 # ---------------------------------------------------------------------------
-# round-5: real PNG pixel decode (stdlib zlib)
+# PNG pixel tier
 # ---------------------------------------------------------------------------
 
 
-def _png_with_filters(expected, filters):
-    """Build a PNG whose rows use the given per-row filter types, by
-    FORWARD-filtering the expected pixels per the PNG spec."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    a = np.asarray(expected, dtype=np.int32)
-    h, w, nch = a.shape
-    flat = a.reshape(h, w * nch)
-    raw = b""
-    for r, f in zip(range(h), filters):
-        cur = flat[r]
-        prev = flat[r - 1] if r > 0 else np.zeros(w * nch, dtype=np.int32)
-        line = np.zeros(w * nch, dtype=np.int32)
-        for i in range(w * nch):
-            left = int(cur[i - nch]) if i >= nch else 0
-            up = int(prev[i])
-            ul = int(prev[i - nch]) if i >= nch else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = left
-            elif f == 2:
-                pred = up
-            elif f == 3:
-                pred = (left + up) // 2
-            else:
-                p = left + up - ul
-                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                pred = left if pa <= pb and pa <= pc else (up if pb <= pc else ul)
-            line[i] = (int(cur[i]) - pred) % 256
-        raw += bytes([f]) + line.astype(np.uint8).tobytes()
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[nch]
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-
-
 def test_png_roundtrip_gray_rgb_rgba():
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_png_pixels,
-        encode_png,
-    )
-
     for nch in (1, 3, 4):
         arr = (np.arange(5 * 4 * nch, dtype=np.uint8).reshape(5, 4, nch) * 7) % 256
-        out = decode_png_pixels(encode_png(arr))
+        out = mm.decode_png_pixels(_encode_png(arr))
         assert out is not None and out.shape == (5, 4, nch)
         assert (out == arr).all()
 
 
 def test_png_all_filter_types_decode_exactly():
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_png_pixels,
-    )
-
     rng = np.random.RandomState(7)
     expected = rng.randint(0, 256, size=(5, 6, 3)).astype(np.uint8)
     payload = _png_with_filters(expected, filters=[0, 1, 2, 3, 4])
-    out = decode_png_pixels(payload)
+    out = mm.decode_png_pixels(payload)
     assert out is not None and (out == expected).all()
 
 
 def test_png_palette_expansion():
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_png_pixels,
-    )
-
     # 2x2 indexed image over a 3-color palette
     idx = np.array([[0, 1], [2, 1]], dtype=np.uint8)
     pal = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255])
     raw = b"".join(b"\x00" + idx[r].tobytes() for r in range(2))
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0))
-        + chunk(b"PLTE", pal)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    out = decode_png_pixels(payload)
+    payload = _png(2, 2, 3, raw, plte=pal)
+    out = mm.decode_png_pixels(payload)
     assert out is not None and out.shape == (2, 2, 3)
     assert tuple(out[0, 0]) == (255, 0, 0)
     assert tuple(out[0, 1]) == (0, 255, 0) == tuple(out[1, 1])
@@ -267,36 +491,28 @@ def test_png_palette_expansion():
 
 
 def test_extract_features_reports_real_pixel_stats(spark):
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        encode_png,
-        extract_media_features,
-    )
-
     arr = np.full((4, 4, 3), 100, dtype=np.uint8)
     arr[0, 0] = [200, 200, 200]  # one bright pixel
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_png(arr)), {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    [row] = extract_media_features(media).collect()
+    row = _extract_one(spark, "image", _encode_png(arr))
     assert row["decoder"] == "pixels:png"
     assert (row["width"], row["height"], row["channels"]) == (4, 4, 3)
     expect_mean = round(float(arr.mean()), 4)
     assert row["px_mean"] == expect_mean and row["px_std"] > 0
 
 
-def test_gif_roundtrip_rgb_and_gray():
-    import numpy as np
+# ---------------------------------------------------------------------------
+# GIF pixel tier (first frame)
+# ---------------------------------------------------------------------------
 
+
+def test_gif_roundtrip_rgb_and_gray():
     rng = np.random.RandomState(7)
     pal = rng.randint(0, 256, size=(16, 3), dtype=np.uint8)
     img = pal[rng.randint(0, 16, size=(24, 31))]
-    out = mm.decode_gif_pixels(mm.encode_gif(img))
+    out = mm.decode_gif_pixels(_encode_gif(img))
     assert out is not None and np.array_equal(out, img)
     g = rng.randint(0, 250, size=(9, 5), dtype=np.uint8)
-    out_g = mm.decode_gif_pixels(mm.encode_gif(g))
+    out_g = mm.decode_gif_pixels(_encode_gif(g))
     assert np.array_equal(out_g, np.stack([g, g, g], axis=-1))
 
 
@@ -304,182 +520,92 @@ def test_gif_lzw_dictionary_growth_and_12bit_reset():
     # a long low-entropy stream forces code-size growth to the 12-bit
     # ceiling and an encoder clear/reset — the decoder must track both
     data = bytes(range(16)) * 2000 + b"\x05" * 100000
-    enc = mm._gif_lzw_encode(data, 4)
+    enc = _gif_lzw_encode(data, 4)
     assert len(enc) < len(data) // 4  # real compression, not clear-spam
     assert mm._gif_lzw_decode(enc, 4, len(data)) == data
 
 
 def test_gif_decode_rejects_bad_inputs():
-    import numpy as np
-
     assert mm.decode_gif_pixels(None) is None
     assert mm.decode_gif_pixels(b"notagif") is None
-    full = mm.encode_gif(np.zeros((4, 4, 3), dtype=np.uint8))
+    full = _encode_gif(np.zeros((4, 4, 3), dtype=np.uint8))
     assert mm.decode_gif_pixels(full[:15]) is None  # truncated
     # interlace flag set → header-tier fallback (None here)
     tampered = bytearray(full)
-    # image descriptor packed byte: 6 header + 7 lsd + 12 palette + 9
+    # image descriptor packed byte: separator + 4 LE16 fields
     idx = full.index(b"\x2c") + 9
     tampered[idx] |= 0x40
     assert mm.decode_gif_pixels(bytes(tampered)) is None
 
 
-def test_gif_too_many_colors_rejected():
-    import numpy as np
-
-    i = np.arange(32 * 32, dtype=np.int64)
-    arr = np.stack([i % 256, i // 256, np.zeros_like(i)], axis=-1).reshape(32, 32, 3)
-    with pytest.raises(ValueError):
-        mm.encode_gif(arr.astype(np.uint8))
-
-
 def test_extract_features_reports_real_gif_pixel_stats(spark):
-    import numpy as np
-
     rng = np.random.RandomState(3)
     pal = rng.randint(0, 256, size=(8, 3), dtype=np.uint8)
     arr = pal[rng.randint(0, 8, size=(6, 10))]
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(mm.encode_gif(arr)), {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    [row] = mm.extract_media_features(media).collect()
+    row = _extract_one(spark, "image", _encode_gif(arr))
     assert row["decoder"] == "pixels:gif"
     assert (row["width"], row["height"], row["channels"]) == (10, 6, 3)
     assert row["px_mean"] == round(float(arr.mean()), 4)
     assert row["px_std"] == round(float(arr.std()), 4)
 
 
+def test_gif_animation_roundtrip_and_first_frame_tier(spark):
+    """A multi-frame GIF decodes as its FIRST image descriptor on the
+    image tier; as a video row it has no frame tier and lands on the
+    stub."""
+    frames = [np.full((12, 9, 3), i * 30, dtype=np.uint8) for i in range(5)]
+    frames[2][3:6, 2:5] = [200, 10, 99]
+    gif = _encode_gif(*frames, delay_cs=25)
+    assert (mm.decode_gif_pixels(gif) == frames[0]).all()
+    row = _extract_one(spark, "video", gif)
+    assert row["decoder"] == "stub" and row["channels"] is None
+
+
+# ---------------------------------------------------------------------------
+# BMP pixel tier
+# ---------------------------------------------------------------------------
+
+
 def test_bmp_roundtrip_rgb_and_gray():
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_bmp_pixels,
-        encode_bmp,
-    )
-
     rng = np.random.default_rng(11)
     for shape in [(5, 7, 3), (4, 4), (3, 5, 3)]:  # odd widths hit padding
         arr = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        out = decode_bmp_pixels(encode_bmp(arr))
+        out = mm.decode_bmp_pixels(_encode_bmp(arr))
         want = arr if arr.ndim == 3 else np.stack([arr] * 3, axis=-1)
         assert out.shape == want.shape
         assert (out == want).all()
 
 
 def test_bmp_top_down_negative_height():
-    import struct
-
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_bmp_pixels,
-        encode_bmp,
-    )
-
     arr = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
-    b = bytearray(encode_bmp(arr))
+    b = bytearray(_encode_bmp(arr))
     # flip to top-down: negate height, reverse the stored row order
     h = struct.unpack("<i", bytes(b[22:26]))[0]
     b[22:26] = struct.pack("<i", -h)
     stride = (2 * 3 + 3) & ~3
     rows = [bytes(b[54 + i * stride : 54 + (i + 1) * stride]) for i in range(2)]
     b[54:] = rows[1] + rows[0]
-    out = decode_bmp_pixels(bytes(b))
+    out = mm.decode_bmp_pixels(bytes(b))
     assert (out == arr).all()
 
 
 def test_bmp_rejects_compressed_and_short_payloads():
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_bmp_pixels,
-    )
-
-    assert decode_bmp_pixels(None) is None
-    assert decode_bmp_pixels(b"BM" + b"\x00" * 10) is None  # truncated
-    assert decode_bmp_pixels(b"\x89PNG\r\n\x1a\n") is None  # not a BMP
+    assert mm.decode_bmp_pixels(None) is None
+    assert mm.decode_bmp_pixels(b"BM" + b"\x00" * 10) is None  # truncated
+    assert mm.decode_bmp_pixels(b"\x89PNG\r\n\x1a\n") is None  # not a BMP
 
 
 def test_extract_features_bmp_pixel_tier(spark):
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        encode_bmp,
-        extract_media_features,
-    )
-
     arr = np.full((3, 5, 3), 64, dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_bmp(arr)), {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    [row] = extract_media_features(media).collect()
+    row = _extract_one(spark, "image", _encode_bmp(arr))
     assert row["decoder"] == "pixels:bmp"
     assert (row["width"], row["height"], row["channels"]) == (5, 3, 3)
     assert row["px_mean"] == 64.0 and row["px_std"] == 0.0
 
 
-def test_pnm_roundtrip_gray_and_rgb():
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_pnm_pixels,
-        encode_pnm,
-    )
-
-    rng = np.random.default_rng(13)
-    for shape in [(5, 7, 3), (4, 4), (1, 1, 3)]:
-        arr = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        out = decode_pnm_pixels(encode_pnm(arr))
-        want = arr if arr.ndim == 3 else arr[:, :, None]
-        assert out.shape == want.shape
-        assert (out == want).all()
-
-
-def test_pnm_header_comments_and_split_whitespace():
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_pnm_pixels,
-    )
-
-    # comments between any tokens, tokens split across lines — all
-    # legal netpbm; body = 2x3 gray ramp
-    body = bytes(range(6))
-    b = b"P5 # binary pgm\n# another comment\n3\n# w then h\n2 255\n" + body
-    out = decode_pnm_pixels(b)
-    assert out.shape == (2, 3, 1)
-    assert out.tobytes() == body
-
-
-def test_pnm_rejects_ascii_16bit_and_truncated():
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        decode_pnm_pixels,
-    )
-
-    assert decode_pnm_pixels(None) is None
-    assert decode_pnm_pixels(b"P2\n2 2\n255\n0 1 2 3") is None  # ASCII PGM
-    assert decode_pnm_pixels(b"P5\n2 2\n65535\n" + b"\x00" * 8) is None  # 16-bit
-    assert decode_pnm_pixels(b"P6\n4 4\n255\n\x00\x01") is None  # truncated
-    assert decode_pnm_pixels(b"BM\x00\x00") is None  # not PNM
-
-
-def test_extract_features_pnm_pixel_tier(spark):
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        encode_pnm,
-        extract_media_features,
-    )
-
-    arr = np.full((3, 5, 3), 200, dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_pnm(arr)), {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    [row] = extract_media_features(media).collect()
-    assert row["decoder"] == "pixels:pnm"
-    assert (row["width"], row["height"], row["channels"]) == (5, 3, 3)
-    assert row["px_mean"] == 200.0 and row["px_std"] == 0.0
+# ---------------------------------------------------------------------------
+# JPEG pixel tier (8-bit sequential); every other frame type → header tier
+# ---------------------------------------------------------------------------
 
 
 def test_jpeg_zigzag_matches_standard_table():
@@ -493,52 +619,42 @@ def test_jpeg_zigzag_matches_standard_table():
 
 
 def test_jpeg_solid_gray_exact_at_q100():
-    import numpy as np
-
     img = np.full((16, 24), 128, dtype=np.uint8)
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg(img, quality=100))
+    px = mm.decode_jpeg_pixels(_encode_jpeg(img, quality=100))
     assert px.shape == (16, 24, 1)
     assert int(np.abs(px[:, :, 0].astype(int) - 128).max()) == 0
 
 
 def test_jpeg_gray_roundtrip_q100_within_1lsb():
-    import numpy as np
-
     g = (np.arange(32 * 48).reshape(32, 48) * 7 % 251).astype(np.uint8)
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg(g, quality=100))
+    px = mm.decode_jpeg_pixels(_encode_jpeg(g, quality=100))
     assert px.shape == (32, 48, 1)
     assert int(np.abs(px[:, :, 0].astype(int) - g.astype(int)).max()) <= 1
 
 
 def test_jpeg_rgb_444_roundtrip():
-    import numpy as np
-
     rgb = np.zeros((24, 40, 3), dtype=np.uint8)
     rgb[..., 0] = (np.arange(40)[None, :] * 6) % 256
     rgb[..., 1] = (np.arange(24)[:, None] * 10) % 256
     rgb[..., 2] = 77
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg(rgb, quality=100))
+    px = mm.decode_jpeg_pixels(_encode_jpeg(rgb, quality=100))
     assert px.shape == (24, 40, 3)
     # YCbCr forward+inverse rounding + unit quant: a couple of LSB
     assert int(np.abs(px.astype(int) - rgb.astype(int)).max()) <= 3
 
 
 def test_jpeg_420_subsampling_constant_color_exact():
-    import numpy as np
-
     c = np.zeros((30, 34, 3), dtype=np.uint8)
     c[..., 0], c[..., 1], c[..., 2] = 200, 60, 110
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg(c, quality=100, subsampling=(2, 2)))
+    px = mm.decode_jpeg_pixels(_encode_jpeg(c, quality=100, subsampling=(2, 2)))
     assert px.shape == (30, 34, 3)  # odd dims crop back from the MCU grid
     assert int(np.abs(px.astype(int) - c.astype(int)).max()) <= 1
 
 
 def test_jpeg_restart_markers_resync():
-    import numpy as np
-
     g = (np.arange(32 * 48).reshape(32, 48) * 7 % 251).astype(np.uint8)
-    plain = mm.encode_jpeg(g, quality=100)
-    rst = mm.encode_jpeg(g, quality=100, restart_interval=2)
+    plain = _encode_jpeg(g, quality=100)
+    rst = _encode_jpeg(g, quality=100, restart_interval=2)
     assert any(bytes([0xFF, 0xD0 + i]) in rst for i in range(8))
     a = mm.decode_jpeg_pixels(plain)
     b = mm.decode_jpeg_pixels(rst)
@@ -546,331 +662,102 @@ def test_jpeg_restart_markers_resync():
 
 
 def test_jpeg_lossy_quality_still_tracks_smooth_image():
-    import numpy as np
-
     smooth = np.clip(
         np.add.outer(np.arange(32) * 3, np.arange(32) * 2), 0, 255
     ).astype(np.uint8)
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg(smooth, quality=75))
+    px = mm.decode_jpeg_pixels(_encode_jpeg(smooth, quality=75))
     assert int(np.abs(px[:, :, 0].astype(int) - smooth.astype(int)).max()) <= 8
 
 
 def test_jpeg_rejects_progressive_truncated_and_garbage():
-    import numpy as np
-
-    jb = mm.encode_jpeg(np.full((8, 8), 10, dtype=np.uint8), quality=100)
+    jb = _encode_jpeg(np.full((8, 8), 10, dtype=np.uint8), quality=100)
     assert mm.decode_jpeg_pixels(None) is None
     assert mm.decode_jpeg_pixels(b"not a jpeg") is None
     assert mm.decode_jpeg_pixels(jb[:20]) is None  # truncated mid-header
-    # flip SOF0 to SOF2: the scan body is then a MALFORMED progressive
-    # stream (a baseline Ss=0..63 scan is illegal under SOF2) — the
-    # decoder must decline it cleanly; header tier still reads dims
-    prog = jb.replace(b"\xff\xc0", b"\xff\xc2")
-    assert mm.decode_jpeg_pixels(prog) is None
-    assert mm.parse_image_header(prog) == ("jpeg", 8, 8)
+    # progressive (SOF2), lossless (SOF3), 12-bit extended (SOF1) and
+    # arithmetic (SOF9) frames have no pixel tier: the decoder declines
+    # them cleanly and the header tier still reads the dims
+    for variant in (_with_sof(jb, 0xC2), _with_sof(jb, 0xC3),
+                    _with_sof(jb, 0xC1, precision=12), _with_sof(jb, 0xC9)):
+        assert mm.decode_jpeg_pixels(variant) is None
+        assert mm.parse_image_header(variant) == ("jpeg", 8, 8)
+    # 8-bit SOF1 is the same sequential process and still decodes
+    assert mm.decode_jpeg_pixels(_with_sof(jb, 0xC1)) is not None
 
 
 def test_jpeg_header_parse_of_own_bytes():
-    import numpy as np
-
-    jb = mm.encode_jpeg(np.full((6, 9), 50, dtype=np.uint8), quality=90)
+    jb = _encode_jpeg(np.full((6, 9), 50, dtype=np.uint8), quality=90)
     assert mm.parse_image_header(jb) == ("jpeg", 9, 6)
 
 
 def test_extract_features_jpeg_pixel_tier(spark):
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators.multimodal import (
-        encode_jpeg,
-        extract_media_features,
-    )
-
     arr = np.full((16, 8, 3), 90, dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_jpeg(arr, quality=100)),
-          {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    [row] = extract_media_features(media).collect()
+    jb = _encode_jpeg(arr, quality=100)
+    row = _extract_one(spark, "image", jb)
     assert row["decoder"] == "pixels:jpeg"
     assert (row["width"], row["height"], row["channels"]) == (8, 16, 3)
     assert abs(row["px_mean"] - 90.0) <= 1.0
     assert row["px_std"] <= 1.0
+    # a progressive frame lands on the header tier, not an exception
+    row = _extract_one(spark, "image", _with_sof(jb, 0xC2))
+    assert row["decoder"] == "header:jpeg"
+    assert (row["width"], row["height"], row["channels"]) == (8, 16, None)
+
+
+def test_jpeg_bomb_guard_rejects_inflated_dims():
+    """The 512:1 payload-ratio guard: every block's DC coefficient costs
+    >= 1 Huffman bit, so a genuine stream carries >= w*h/512 bytes. A
+    tiny payload whose SOF dims are inflated past that bound is
+    rejected to header-only decode, cheaply, at header time, while the
+    unmodified encode decodes fine."""
+    img = np.full((16, 16), 128, dtype=np.uint8)
+    payload = _encode_jpeg(img, quality=90)
+    assert mm.decode_jpeg_pixels(payload) is not None
+    b = bytearray(payload)
+    i = b.index(b"\xff\xc0")
+    b[i + 5 : i + 9] = struct.pack(">HH", 8192, 8192)  # 1<<26 px
+    assert mm.decode_jpeg_pixels(bytes(b)) is None
+    assert mm.parse_image_header(bytes(b)) == ("jpeg", 8192, 8192)
+
+
+# ---------------------------------------------------------------------------
+# WAV sample tier (PCM 8/16-bit, float32); compressed codes → header tier
+# ---------------------------------------------------------------------------
 
 
 def test_wav_sample_roundtrip_8_and_16_bit():
-    import numpy as np
-
     t = np.linspace(0.0, 1.0, 800)
     s = np.stack([np.sin(2 * np.pi * 5 * t), np.cos(2 * np.pi * 3 * t)],
                  axis=1) * 0.5
-    out16 = mm.decode_wav_samples(mm.encode_wav(s, 800, bits=16))
+    out16 = mm.decode_wav_samples(_encode_wav(s, 800, bits=16))
     assert out16.shape == (800, 2)
     assert float(np.abs(out16 - s).max()) < 1.0 / 32000
-    out8 = mm.decode_wav_samples(mm.encode_wav(s[:, 0], 800, bits=8))
+    out8 = mm.decode_wav_samples(_encode_wav(s[:, 0], 800, bits=8))
     assert out8.shape == (800, 1)
     assert float(np.abs(out8[:, 0] - s[:, 0]).max()) < 1.0 / 120
-    assert mm.parse_wav_header(mm.encode_wav(s, 800, bits=16)) == 1.0
+    assert mm.parse_wav_header(_encode_wav(s, 800, bits=16)) == 1.0
 
 
 def test_wav_sample_rejects_non_pcm_and_garbage():
-    import struct
-
-    import numpy as np
-
     assert mm.decode_wav_samples(None) is None
     assert mm.decode_wav_samples(b"not riff") is None
     # ADPCM (fmt 2) must fall back to the header tier
-    fmt = struct.pack("<HHIIHH", 2, 1, 8000, 4000, 1, 4)
-    adpcm = (b"RIFF" + struct.pack("<I", 36) + b"WAVE"
-             + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-             + b"data" + struct.pack("<I", 4) + b"\x00" * 4)
+    adpcm = _wav(struct.pack("<HHIIHH", 2, 1, 8000, 4000, 1, 4), b"\x00" * 4)
     assert mm.decode_wav_samples(adpcm) is None
     assert mm.parse_wav_header(adpcm) is not None
     # float32 path decodes
     f = np.array([0.25, -0.5, 0.125], dtype="<f4")
-    fmt3 = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-    wav = (b"RIFF" + struct.pack("<I", 36 + 12) + b"WAVE"
-           + b"fmt " + struct.pack("<I", len(fmt3)) + fmt3
-           + b"data" + struct.pack("<I", 12) + f.tobytes())
+    wav = _wav(struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32), f.tobytes())
     out = mm.decode_wav_samples(wav)
     assert out.shape == (3, 1) and float(abs(out[:, 0] - f).max()) == 0.0
 
 
-def test_gif_animation_roundtrip_and_first_frame_tier():
-    import numpy as np
-
-    frames = [np.full((12, 9, 3), i * 30, dtype=np.uint8) for i in range(5)]
-    frames[2][3:6, 2:5] = [200, 10, 99]
-    gif = mm.encode_gif_animation(frames, delay_cs=25)
-    fr, dur = mm.decode_gif_frames(gif)
-    assert len(fr) == 5 and dur == 1.25
-    assert all((a == b).all() for a, b in zip(fr, frames))
-    # the single-IMAGE tier still reads the first descriptor
-    assert (mm.decode_gif_pixels(gif) == frames[0]).all()
-    assert mm.decode_gif_frames(b"nope") is None
-    assert mm.decode_gif_frames(None) is None
-
-
-def test_sample_frames_real_for_animated_gif(spark):
-    import numpy as np
-
-    frames = [np.full((8, 8, 3), i * 16, dtype=np.uint8) for i in range(9)]
-    gif = mm.encode_gif_animation(frames, delay_cs=10)
-    media = spark.createDataFrame(
-        [(7, "video", bytearray(gif), {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    rows = {r["frame_idx"]: bytes(r["frame"])
-            for r in mm.sample_frames(media, every_n=4).collect()}
-    assert sorted(rows) == [0, 4, 8]
-    # sampled frames are genuine PNG bytes of the composed canvases
-    for i, blob in rows.items():
-        px = mm.decode_png_pixels(blob)
-        assert (px == frames[i]).all()
-
-
-def test_extract_features_video_frames_tier(spark):
-    import numpy as np
-
-    frames = [np.full((6, 10, 3), 40 + i, dtype=np.uint8) for i in range(4)]
-    gif = mm.encode_gif_animation(frames, delay_cs=50)
-    media = spark.createDataFrame(
-        [(3, "video", bytearray(gif), {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    [row] = mm.extract_media_features(media).collect()
-    assert row["decoder"] == "frames:gif"
-    assert (row["width"], row["height"], row["n_frames"]) == (10, 6, 4)
-    assert row["duration_s"] == 2.0 and row["channels"] == 3
-    assert row["px_mean"] == 41.5  # mean of 40..43
-
-
-def test_resize_images_real_for_decodable_payloads(spark):
-    import numpy as np
-
-    # 4x6 gradient -> 8x8: nearest-neighbor indices are exact to compute
-    src = (np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3) * 3) % 256
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(mm.encode_png(src)), {"source": "t", "lang": "en"}),
-         (2, "image", bytearray(b"undecodable junk"), {"source": "t", "lang": "en"})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    rows = {r["media_id"]: r for r in mm.resize_images(media, 8, 8).collect()}
-    real = rows[1]
-    assert real["decoder"] == "resize:nn"
-    out = mm.decode_png_pixels(bytes(real["payload"]))
-    assert out.shape == (8, 8, 3)
-    yi = np.minimum((np.arange(8) * 4) // 8, 3)
-    xi = np.minimum((np.arange(8) * 6) // 8, 5)
-    assert (out == src[yi][:, xi]).all()
-    stub = rows[2]
-    assert stub["decoder"] == "stub" and len(stub["payload"]) == 32
-
-
-def test_jpeg_progressive_equals_baseline_decode():
-    """Progressive decode correctness pin: for the same image and
-    quality, the SOF2 scan script (DC first + refinement, spectral
-    bands, AC successive approximation) must reconstruct EXACTLY the
-    coefficients the baseline stream carries — so the decoded pixels
-    are bit-identical between the two paths."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    cases = [
-        (rng.integers(0, 256, (32, 48)).astype(np.uint8), 100,
-         ((1, 5), (6, 63)), 1),
-        (rng.integers(0, 256, (17, 9, 3)).astype(np.uint8), 75,
-         ((1, 2), (3, 10), (11, 40), (41, 63)), 2),
-        ((np.add.outer(np.arange(40) * 3, np.arange(25) * 2) % 256
-          ).astype(np.uint8), 30, ((1, 63),), 1),
-    ]
-    for img, q, bands, dc_al in cases:
-        base = mm.decode_jpeg_pixels(mm.encode_jpeg(img, quality=q))
-        prog = mm.decode_jpeg_pixels(
-            mm.encode_jpeg_progressive(img, quality=q, bands=bands,
-                                       dc_al=dc_al))
-        assert prog is not None
-        assert (prog == base).all(), (img.shape, q, bands, dc_al)
-
-
-def test_jpeg_progressive_sparse_eob_and_zrl_paths():
-    """A nearly-empty image quantizes to long zero runs: the AC first
-    scans hit EOB + ZRL and the refinement scans hit newly-nonzero
-    insertion across >16-position zero-history gaps."""
-    import numpy as np
-
-    sp = np.zeros((40, 40), dtype=np.uint8)
-    sp[7, 11], sp[23, 5], sp[0, 0] = 255, 130, 9
-    base = mm.decode_jpeg_pixels(mm.encode_jpeg(sp, quality=80))
-    prog = mm.decode_jpeg_pixels(mm.encode_jpeg_progressive(sp, quality=80))
-    assert (prog == base).all()
-
-
-def test_jpeg_progressive_roundtrip_quality100():
-    import numpy as np
-
-    g = (np.arange(32 * 48).reshape(32, 48) * 7 % 251).astype(np.uint8)
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg_progressive(g, quality=100))
-    assert px.shape == (32, 48, 1)
-    assert int(np.abs(px[:, :, 0].astype(int) - g.astype(int)).max()) <= 1
-
-
-def test_g711_mulaw_alaw_byte_roundtrip():
-    """Canonical G.711 property: expanding any code byte and
-    re-compressing reproduces the byte (µ-law's 0x7F is the negative
-    zero that canonically maps to 0xFF)."""
-    import numpy as np
-
-    mu = mm._g711_mulaw_table(np)
-    al = mm._g711_alaw_table(np)
-    for b in range(256):
-        if b != 0x7F:
-            assert mm._g711_mulaw_encode(int(mu[b])) == b
-        assert mm._g711_alaw_encode(int(al[b])) == b
-    assert mu[0x7F] == 0 and mm._g711_mulaw_encode(0) == 0xFF
-    assert (abs(mu).max(), abs(al).max()) == (32124, 32256)
-
-
-def test_wav_compressed_codecs_roundtrip():
-    import numpy as np
-
-    t = np.linspace(0.0, 1.0, 2000)
-    s = 0.6 * np.sin(2 * np.pi * 7 * t) + 0.2 * np.sin(2 * np.pi * 31 * t)
-    for codec, tol in [("mulaw", 0.02), ("alaw", 0.02), ("ima", 0.01)]:
-        out = mm.decode_wav_samples(mm.encode_wav(s, 2000, codec=codec))
-        assert out is not None
-        err = float(np.abs(out[: len(s), 0] - s).max())
-        assert err < tol, (codec, err)
-    # stereo IMA: channels decode independently
-    st = np.stack([s, -0.5 * s], axis=1)
-    out = mm.decode_wav_samples(mm.encode_wav(st, 2000, codec="ima"))
-    assert out.shape[1] == 2
-    assert float(np.abs(out[: len(s)] - st).max()) < 0.01
-
-
 def test_wav_decode_rejects_unknown_compression():
-    import struct
-
-    # MPEG-in-WAV (fmt 0x55) must fall back to the header tier
-    fmt = struct.pack("<HHIIHH", 0x55, 1, 8000, 2000, 1, 0)
-    wav = (b"RIFF" + struct.pack("<I", 36 + 4) + b"WAVE"
-           + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-           + b"data" + struct.pack("<I", 4) + b"\x00" * 4)
-    assert mm.decode_wav_samples(wav) is None
-    assert mm.parse_wav_header(wav) is not None
-
-
-def test_jpeg_progressive_subsampled_equals_baseline_decode():
-    """4:2:0 / 4:2:2 progressive coverage: the non-interleaved AC
-    scans run over each component's OWN ceil(size/8) grid while the
-    interleaved DC scan covers the full MCU grid (pad blocks stay
-    DC-only) — decoded pixels must still be bit-identical to the
-    baseline path on the same coefficients."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    for sub in [(2, 2), (2, 1), (1, 2)]:
-        img = rng.integers(0, 256, (21, 35, 3)).astype(np.uint8)
-        base = mm.decode_jpeg_pixels(
-            mm.encode_jpeg(img, quality=90, subsampling=sub))
-        prog = mm.decode_jpeg_pixels(
-            mm.encode_jpeg_progressive(img, quality=90, subsampling=sub))
-        assert prog is not None and (prog == base).all(), sub
-
-
-def test_jpeg_12bit_extended_sequential_roundtrip():
-    """precision=12 (SOF1, 16-bit DQT, level shift 2048): the finer
-    quantization headroom makes the q=100 round trip EXACT for gray,
-    RGB and 4:2:0 constant-chroma inputs; the decoder maps 12-bit
-    samples back to the uint8 contract."""
-    import numpy as np
-
-    g = (np.arange(24 * 40).reshape(24, 40) * 7 % 251).astype(np.uint8)
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg(g, quality=100, precision=12))
-    assert px.shape == (24, 40, 1)
-    assert int(np.abs(px[:, :, 0].astype(int) - g.astype(int)).max()) == 0
-
-    rgb = np.zeros((17, 21, 3), dtype=np.uint8)
-    rgb[..., 0] = (np.arange(21)[None, :] * 11) % 256
-    rgb[..., 1] = 200
-    rgb[..., 2] = (np.arange(17)[:, None] * 9) % 256
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg(rgb, quality=100, precision=12))
-    assert int(np.abs(px.astype(int) - rgb.astype(int)).max()) == 0
-
-    c = np.zeros((14, 18, 3), dtype=np.uint8)
-    c[..., 0], c[..., 1], c[..., 2] = 180, 70, 90
-    px = mm.decode_jpeg_pixels(
-        mm.encode_jpeg(c, quality=100, precision=12, subsampling=(2, 2)))
-    assert int(np.abs(px.astype(int) - c.astype(int)).max()) == 0
-    # the 16-bit-DQT/SOF1 markers are really in the stream
-    jb = mm.encode_jpeg(g, quality=100, precision=12)
-    assert b"\xff\xc1" in jb and jb[jb.find(b"\xff\xdb") + 4] == 0x10
-
-
-def test_jpeg_lossless_bit_exact_all_predictors():
-    """SOF3 lossless: prediction residuals code losslessly (no DCT, no
-    quantization, direct RGB) — the round trip is BIT-exact for every
-    one of the seven spatial predictors, gray and color."""
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    for shape in [(13, 21), (9, 7, 3)]:
-        img = rng.integers(0, 256, shape).astype(np.uint8)
-        want = img if img.ndim == 3 else img[:, :, None]
-        for pred in range(1, 8):
-            px = mm.decode_jpeg_pixels(
-                mm.encode_jpeg_lossless(img, predictor=pred))
-            assert px is not None and (px == want).all(), (shape, pred)
-    assert mm.parse_image_header(
-        mm.encode_jpeg_lossless(np.zeros((5, 6), np.uint8))
-    ) == ("jpeg", 6, 5)
-
-
-def test_jpeg_lossless_point_transform_bounded_loss():
-    import numpy as np
-
-    img = np.arange(64, dtype=np.uint8).reshape(8, 8) * 3 % 256
-    px = mm.decode_jpeg_pixels(mm.encode_jpeg_lossless(img, point_transform=2))
-    # pt=2 drops the two low bits: error strictly < 4
-    assert int(np.abs(px[:, :, 0].astype(int) - img.astype(int)).max()) <= 3
+    # MPEG-in-WAV (0x55), G.711 A-law (6) / µ-law (7) and IMA ADPCM
+    # (0x11) have no sample tier: each falls back to the header tier,
+    # which still reads the duration (8000 data bytes at 2000 B/s)
+    for code, bits in ((0x55, 0), (6, 8), (7, 8), (0x11, 4)):
+        fmt = struct.pack("<HHIIHH", code, 1, 8000, 2000, 1, bits)
+        wav = _wav(fmt, b"\x00" * 8000)
+        assert mm.decode_wav_samples(wav) is None, code
+        assert mm.parse_wav_header(wav) == 4.0, code

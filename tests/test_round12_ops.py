@@ -1,6 +1,6 @@
 """Round-12 additions: exact_sum wide path (ADVICE r11), scale_up's
 signed-permutation embedding rotations and word-salt de-tiling
-(VERDICT r11 #5), and the profile-aware JPEG bomb guard (ADVICE r11).
+(VERDICT r11 #5).
 """
 
 from __future__ import annotations
@@ -160,46 +160,6 @@ def test_scale_up_word_salt_breaks_cross_replica_shingles(spark):
     # similarity matches the unsalted pair's to within a few points
     assert jac(2, 4) > 0.55
     assert jac(3, 5) > 0.55
-
-
-def test_jpeg_bomb_guard_rejects_inflated_dims_all_profiles():
-    """ADVICE r11 asked to relax the 512:1 payload-ratio bomb guard
-    for progressive frames (EOBn runs); DECLINED — T.81 G.1.1.1.1
-    makes every block's DC coefficient cost >= 1 Huffman bit in a DC
-    scan BEFORE any AC EOBn can span it, so a complete legit SOF2
-    stream is >= w*h/512 bytes for luma alone and the guard is tight,
-    not lossy (see multimodal.py comment + NOTES r12). This test pins
-    the guard on BOTH profiles: a tiny payload whose SOF dims are
-    inflated past the ratio bound is rejected to header-only decode,
-    while the unmodified encodes decode fine."""
-    import struct
-
-    import numpy as np
-
-    from b2b_data_pipeline_indiamart_spark.operators import (
-        multimodal as mm,
-    )
-
-    def inflate_sof(payload: bytes) -> bytes:
-        b = bytearray(payload)
-        i = 2
-        while i < len(b) - 1:
-            if b[i] == 0xFF and b[i + 1] in (0xC0, 0xC1, 0xC2):
-                b[i + 5:i + 9] = struct.pack(">HH", 8192, 8192)
-                return bytes(b)
-            if b[i] == 0xFF and b[i + 1] == 0xDA:
-                break
-            seg = struct.unpack(">H", bytes(b[i + 2:i + 4]))[0]
-            i += 2 + seg
-        raise AssertionError("no SOF marker found")
-
-    img = np.full((16, 16), 128, dtype=np.uint8)
-    for payload in (mm.encode_jpeg(img, quality=90),
-                    mm.encode_jpeg_progressive(img, quality=90)):
-        assert mm.decode_jpeg_pixels(payload) is not None
-        # 8192*8192 = 67.1M px > 1<<26 absolute cap AND > len*512:
-        # both guards want this rejected, cheaply, at header time
-        assert mm.decode_jpeg_pixels(inflate_sof(payload)) is None
 
 
 def test_cdc_chunking_is_shift_robust_where_spans_are_not(spark):

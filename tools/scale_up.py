@@ -135,7 +135,7 @@ def build(out_dir, k: int = 10, spark=None) -> None:
 
     rep = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("__rep")
     for t, (pk, fks) in KEYMAP.items():
-        df = catalog.load(spark, SRC, t)
+        df = src = catalog.load(spark, SRC, t)
         if k >= 1000 and (pk is not None or fks):
             # k=1000 (sf100): the tiny sf0.1 source files coalesce into
             # ONE input split under maxPartitionBytes, so the 1000x
@@ -188,8 +188,10 @@ def build(out_dir, k: int = 10, spark=None) -> None:
                 # range(1, k) loop would leave `rotated` None), and an
                 # empty / NULL-first-row embeddings table has no dim to
                 # read — skip rotation, the tile loop alone is correct.
+                # Probe the source, not the k>=1000 repartitioned frame:
+                # one row must not wait on a full round-robin shuffle.
                 first = (
-                    df.select("embedding")
+                    src.select("embedding")
                     .filter(F.col("embedding").isNotNull())
                     .first()
                 )
@@ -220,7 +222,7 @@ def build(out_dir, k: int = 10, spark=None) -> None:
             # exact by construction (every source row tiles k times);
             # running count() on the exploded frame would evaluate the
             # 1000x salt/rotation projection a second time per table
-            n = catalog.load(spark, SRC, t).count() * k
+            n = src.count() * k
         else:
             n = out.count()
         # write partitions scale with the replica count so per-task
