@@ -173,10 +173,17 @@ def deduplicate(df: DataFrame) -> DataFrame:
 
 def run_pipeline(spark: SparkSession, config: ETLConfig) -> dict[str, DataFrame]:
     """etl.py:453-473, step for step. Returns the three result frames
-    (curated / profile / issues) after writing the configured outputs."""
+    (curated / profile / issues) after writing the configured outputs.
+
+    Two eager ``localCheckpoint`` calls materialize the lineage once: the
+    typed frame (where issues and dedup split) and ``final`` (read by the
+    profile, the sinks and every ``analyze`` chart). Unlike ``persist``,
+    it truncates the plan and leaves no cache entry: the blocks live as
+    long as the returned frames, are freed by Spark's ContextCleaner, and
+    ``caching.release_cached`` never drops them."""
     df = read_csv_normalized(spark, config.input_file)
     df = standardize_fields(df)
-    df = fix_types_and_features(df, config)
+    df = fix_types_and_features(df, config).localCheckpoint()
 
     key_col = next((k for k in ("dispid", "itemid") if k in df.columns), None)
     issues = (
@@ -190,7 +197,7 @@ def run_pipeline(spark: SparkSession, config: ETLConfig) -> dict[str, DataFrame]
     df = cleaning.drop_critical_missing(
         df, [c for c in ("product_name", "supplier_name") if c in df.columns]
     )
-    final = cleaning.curate(df, list(config.final_columns))
+    final = cleaning.curate(df, list(config.final_columns)).localCheckpoint()
     profile = profiling.profile_report(final)
 
     base = os.path.splitext(config.output_csv)[0]
@@ -219,8 +226,9 @@ def analyze(final: DataFrame, exact: bool = False) -> dict[str, DataFrame]:
     oracle-gated registry keys request exactness themselves, so
     nothing off the parity surface pays the exact-percentile buffer.
     """
-    from .operators import analytics, outliers
+    from .operators import analytics
 
+    priced = final.filter(F.col("price_numeric").isNotNull())
     charts: dict[str, DataFrame] = {
         "kpi_cards": analytics.kpi_summary(
             final,
@@ -239,13 +247,9 @@ def analyze(final: DataFrame, exact: bool = False) -> dict[str, DataFrame]:
         ),
         "treemap_top8": analytics.top_groups(final, "search_keyword", n=8),
         "top10_price_cumulative": analytics.topk_cumulative(
-            final.filter(F.col("price_numeric").isNotNull()),
-            "price_numeric",
-            "product_name",
-            k=10,
+            priced, "price_numeric", "product_name", k=10
         ),
     }
-    priced = final.filter(F.col("price_numeric").isNotNull())
     p99_fn = "percentile" if exact else "approx_percentile"
     thr = priced.agg(
         F.expr(f"{p99_fn}(price_numeric, 0.99)").alias("p99")

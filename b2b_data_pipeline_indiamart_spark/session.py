@@ -16,6 +16,12 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
+def default_driver_memory() -> str:
+    """min(16g, half of physical RAM), in whole megabytes."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(app_name: str = "b2b-pipeline-spark", master: str | None = None) -> SparkSession:
     """Create (or fetch) a tuned SparkSession.
 
@@ -44,12 +50,15 @@ def get_spark(app_name: str = "b2b-pipeline-spark", master: str | None = None) -
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128MB")
         .config("spark.sql.session.timeZone", "UTC")
-        # 16g: local mode runs all 32 task slots in the ONE driver JVM
-        # and task retries are off (maxFailures=1), so a transient
+        # Up to 16g: local mode runs all 32 task slots in the ONE driver
+        # JVM and task retries are off (maxFailures=1), so a transient
         # GCLocker allocation failure in a heavy stage is fatal — at
         # 8g the sf10 wedge-closure stage died this way (round 13).
-        # On a real cluster this is per-executor memory, not driver.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Capped at half of physical RAM. On a cluster this is per-executor.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

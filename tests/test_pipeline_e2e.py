@@ -7,6 +7,7 @@ import sqlite3
 
 import pytest
 
+from b2b_data_pipeline_indiamart_spark.operators import caching
 from b2b_data_pipeline_indiamart_spark.pipeline import (
     DEFAULT_FINAL_COLUMNS,
     ETLConfig,
@@ -53,6 +54,9 @@ def test_run_pipeline_end_to_end(spark, raw_csv, tmp_path):
         output_db=str(tmp_path / "products.db"),
     )
     out = run_pipeline(spark, cfg)
+    # the returned frames are checkpointed, not cached: dropping every
+    # tracked cache entry must leave them readable
+    caching.release_cached()
 
     final = {r["dispid"]: r for r in out["final"].collect()}
     # exact curated column set + order (etl.py:403-408)
@@ -103,8 +107,14 @@ def test_analyze_chart_set(spark, raw_csv, tmp_path):
         quality_issues=str(tmp_path / "issues.csv"),
         export_sqlite=False,
     )
-    final = run_pipeline(spark, cfg)["final"]
+    out = run_pipeline(spark, cfg)
+    final = out["final"]
     charts = analyze(final)
+    # every sink and chart reads the materialized ETL, never the raw CSV
+    for name, df in {**out, **charts}.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan csv" not in plan, name
+        assert "Scan ExistingRDD" in plan, name
     assert set(charts) >= {
         "kpi_cards", "avg_price_by_keyword", "top_cities", "keyword_share",
         "city_index", "count_avg_combo", "treemap_top8",
