@@ -209,10 +209,18 @@ def load_parallel(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     first LOCALLY SORTS its input so task retries reproduce the same
     row→partition map (``spark.sql.execution.sortBeforeRepartition``);
     hashing a deterministic high-cardinality key needs no such sort
-    and is retry-stable by construction. Measured at sf0.1 best-of-3:
-    etl_pipeline_e2e 1.35 s → 0.94 s, q3 0.43 s → 0.35 s; plan diff =
+    and is retry-stable by construction (plan diff =
     ``Exchange RoundRobinPartitioning`` + map-side ``Sort`` →
-    ``Exchange hashpartitioning(id)``.
+    ``Exchange hashpartitioning(id)``).
+
+    Measured against a plain ``load`` on 4 cores, 5 interleaved warm
+    runs per side, every key's rows hash-identical on both sides: at
+    sf0.1 the fan-out wins on 13 of the 19 keys that reach it, by
+    1.15–1.73× (etl_pipeline_e2e 3.66 → 2.53 s, docs_cdc_dedup
+    2.45 → 1.42 s, docs_unigram_logprob 2.76 → 1.63 s), and the other
+    6 are neutral (0.93–1.09×). At sf0.01 it is mixed: plain ``load``
+    is up to 14% faster on some keys, while docs_cdc_dedup is 1.84×
+    slower without the fan-out. sf1 and sf10 are unmeasured.
     """
     df = load(spark, sf_dir, table)
     target = spark.sparkContext.defaultParallelism

@@ -1,15 +1,12 @@
 """Text cleaning / normalization column expressions.
 
 Parity: reference ``etl.py`` helpers ``clean_text`` (etl.py:99-106),
-``to_snake_case`` (etl.py:92-96), ``normalize_keyword`` (etl.py:155-166),
-``normalize_city_state`` (etl.py:169-175) — re-expressed as Catalyst
-column expressions so they run JVM-side inside whole-stage codegen
+``normalize_keyword`` (etl.py:155-166), ``normalize_city_state``
+(etl.py:169-175) — re-expressed as Catalyst column expressions so they run JVM-side inside whole-stage codegen
 instead of a per-row Python ``.apply``.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -68,14 +65,6 @@ def normalize_keyword(col: Column) -> Column:
     for bad, good in _KEYWORD_FIXES.items():
         out = F.when(out == bad, F.lit(good)).otherwise(out)
     return out
-
-
-def snake_case_name(name: str) -> str:
-    """Driver-side column-name snake_casing (etl.py:92-96)."""
-    name = str(name).strip()
-    name = re.sub(r"[^\w\s]", "", name)
-    name = re.sub(r"\s+", "_", name)
-    return name.lower()
 
 
 def tokens(col: Column, min_len: int = 3) -> Column:

@@ -8,11 +8,13 @@ until the storage pool evicts under pressure. Every internal persist
 therefore goes through :func:`persist_tracked`, and lifetimes are
 released two ways:
 
-- **Scoped** (:func:`mark` / :func:`release_from`): an operator that
-  materializes its expensive stages eagerly (``dedup_clusters`` — the
+- **Scoped** (:func:`scope`): an operator that materializes its
+  expensive stages eagerly (``dedup_clusters`` — the
   connected-components loop runs during construction and its output is
   ``localCheckpoint``-truncated, so it no longer references the
-  upstream caches) releases those intermediates before returning.
+  upstream caches) releases those intermediates before returning, and
+  an exception inside the block releases them too. The streaming
+  suppress sinks scope each micro-batch the same way.
 - **Session** (:func:`release_cached`): operators whose returned plan
   still reads the caches lazily (``ngram_jaccard_verified``) cannot
   release before the caller's action; the caller invokes
@@ -24,6 +26,8 @@ parquet; in-session caching is the local[.] analogue.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -37,18 +41,25 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def mark() -> int:
-    """Position token for a scoped release (see :func:`release_from`)."""
-    return len(_TRACKED)
+@contextmanager
+def scope():
+    """Unpersist, on leaving the block (by return or by exception),
+    every DataFrame :func:`persist_tracked` registered inside it;
+    persists tracked before the block stay.
+
+    Safe only when nothing returned from the block still lazily reads
+    those caches — the eager operators checkpoint-truncate their output
+    lineage (or write it) before the block ends.
+    """
+    pos = len(_TRACKED)
+    try:
+        yield
+    finally:
+        release_from(pos)
 
 
 def release_from(pos: int) -> int:
-    """Unpersist every tracked DataFrame registered at or after ``pos``.
-
-    Safe only when nothing still lazily references those caches — the
-    eager operators call this after checkpoint-truncating their output
-    lineage.
-    """
+    """Unpersist every tracked DataFrame registered at or after ``pos``."""
     n = 0
     while len(_TRACKED) > pos:
         df = _TRACKED.pop()

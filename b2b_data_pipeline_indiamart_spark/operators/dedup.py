@@ -814,20 +814,19 @@ def dedup_clusters(
     """
     members = caching.persist_tracked(exact_collapse(docs, text_col, id_col))
     reps = _representatives(docs, members, id_col)
-    scope = caching.mark()
-    # persisted: connected_components materializes its input twice
-    # (node list + canonical edge list) — without this the LSH
-    # self-join + distinct runs twice
-    pairs = caching.persist_tracked(
-        minhash_lsh_pairs(reps, text_col, id_col, k=k, bands=bands,
-                          max_bucket_size=max_bucket_size)
-    )
-    comps = connected_components(pairs, small_graph_cap=small_graph_cap)
-    # the CC loop ran eagerly and checkpoint-truncated its output
+    # the CC loop runs eagerly and checkpoint-truncates its output
     # lineage: the pair list and the LSH band table feeding it are dead
-    # weight now — release them before returning (members stays: the
-    # final join below still reads it lazily)
-    caching.release_from(scope)
+    # weight once it returns (or raises), so the scope releases them
+    # (members stays: the final join below still reads it lazily)
+    with caching.scope():
+        # persisted: connected_components materializes its input twice
+        # (node list + canonical edge list) — without this the LSH
+        # self-join + distinct runs twice
+        pairs = caching.persist_tracked(
+            minhash_lsh_pairs(reps, text_col, id_col, k=k, bands=bands,
+                              max_bucket_size=max_bucket_size)
+        )
+        comps = connected_components(pairs, small_graph_cap=small_graph_cap)
     return _expand_members(members, comps, id_col)
 
 

@@ -1,7 +1,7 @@
-"""Outlier handling: IQR winsorization and top-percent extraction.
+"""Outlier handling: IQR winsorization.
 
 Parity: reference ``etl.py`` ``iqr_bounds``/``winsorize_series``
-(etl.py:210-222) and ``reports/outliers_top_1pct_prices.csv``.
+(etl.py:210-222).
 
 Scale notes
 -----------
@@ -12,18 +12,13 @@ Scale notes
   ``quantile_cont``). Used for oracle parity at test SFs.
 - ``exact=False`` — ``approx_percentile`` (t-digest, single pass,
   mergeable) — the 100 TB path: no global sort, bounded memory.
-
-``top_fraction`` is rank-based (row_number over a global ordering) so
-the cut is deterministic under ties; the 100 TB path would first
-pre-filter with an approximate threshold so the global window only
-sees a sliver of the data.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -59,20 +54,3 @@ def winsorize(df: DataFrame, col: str, out_col: str | None = None, exact: bool =
         F.least(F.greatest(F.col(col), F.col("__lo")), F.col("__hi")),
     ).otherwise(F.col(col))
     return joined.withColumn(out_col, clipped).drop("__lo", "__hi")
-
-
-def top_fraction(df: DataFrame, order_col: str, tiebreak: str, fraction: float = 0.01) -> DataFrame:
-    """Deterministic top-``fraction`` rows by ``order_col`` desc.
-
-    Rank-based (not threshold-based) so engine-to-engine float noise
-    cannot move the cut line: rn <= ceil(n * fraction) with an explicit
-    tiebreak column.
-    """
-    w = Window.orderBy(F.col(order_col).desc(), F.col(tiebreak).asc())
-    total = df.agg(F.count(F.lit(1)).alias("__n"))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("__rn") <= F.ceil(F.col("__n") * fraction))
-        .drop("__rn", "__n")
-    )

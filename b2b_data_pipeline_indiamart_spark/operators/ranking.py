@@ -48,19 +48,6 @@ from pyspark.sql import functions as F
 from . import caching
 
 
-def global_rank(
-    df: DataFrame, order_cols: list[Column | str], out_col: str = "global_rank"
-) -> DataFrame:
-    """Exact 1-based global rank over a total order, no global window.
-
-    ``order_cols`` must define a TOTAL order (tie-break with a unique
-    key) — with ties the rank would depend on physical placement.
-    Returns ``df``'s columns + ``out_col`` (long).
-    """
-    ranked, _total = _ranked(df, order_cols, out_col)
-    return ranked
-
-
 def global_ntile(
     df: DataFrame, n: int, order_cols: list[Column | str], out_col: str
 ) -> DataFrame:
@@ -140,7 +127,7 @@ def global_cumsum(
     """Exact running sum over a global total order, no single-reducer
     window — the two-phase distributed prefix scan.
 
-    Same skeleton as :func:`global_rank`: range-repartition on
+    Same skeleton as :func:`global_ntile`: range-repartition on
     ``order_cols`` (which must be a TOTAL order — tie-break with a
     unique key), sort within partitions, then a window partitioned by
     the physical partition id computes the LOCAL running sum (P

@@ -10,7 +10,7 @@ LLM-data-pipeline extensions, designed Spark-first:
 - ``brute_force_topk`` broadcasts the (small) query set and cross-joins
   it against the corpus: one pass over the corpus per batch of
   queries, ranked with a per-query window — the exact baseline.
-- ``lsh_bucketed_pairs``/``ann_lsh_topk`` use random-hyperplane LSH:
+- ``ann_lsh_topk`` uses random-hyperplane LSH:
   each vector gets a ``n_planes``-bit signature (sign of dot product
   with fixed pseudo-random planes); candidates come from an equi-join
   on the bucket id, so shuffle is O(corpus), not O(corpus²). That is
@@ -150,8 +150,8 @@ def cosine_neardup_pairs(
     """All pairs (id_a, id_b, cos_sim) with cosine >= threshold.
 
     Exact O(N²) formulation for oracle parity / modest N. The scale
-    path is ``lsh_bucketed_pairs`` (same output contract, candidate
-    recall < 1). The self-join condition id_a < id_b halves the work
+    path is :func:`cosine_neardup_blocked` (same output, distributed
+    block-pair gemm). The self-join condition id_a < id_b halves the work
     and makes output deterministic.
     """
     # per-VECTOR norm hoisted out of the per-PAIR cosine (r16): the
@@ -194,11 +194,12 @@ def cosine_neardup_blocked(
     once per block pair it joins); per-task memory is
     O((N / n_blocks) · dim) doubles. Compute stays O(N²) — that is the
     *semantics* — so size ``n_blocks`` so two blocks fit in executor
-    memory (1 M × 64 doubles at n_blocks=32 → ~32 MB per block), or
-    switch to :func:`lsh_bucketed_pairs`, the O(corpus)-shuffle
-    approximate path. Block assignment only picks *where* a pair is
-    scored, never which pairs exist or their values, so the output is
-    invariant to ``n_blocks`` and partitioning.
+    memory (1 M × 64 doubles at n_blocks=32 → ~32 MB per block); an
+    O(corpus)-shuffle approximate path would bucket candidates with
+    :func:`hyperplane_signature` as :func:`ann_lsh_topk` does. Block
+    assignment only picks *where* a pair is scored, never which pairs
+    exist or their values, so the output is invariant to ``n_blocks``
+    and partitioning.
 
     Values match the pure-Catalyst formulation after the 4dp round:
     gemm reorders float additions, but a ~1e-15 perturbation cannot
@@ -288,43 +289,6 @@ def cosine_neardup_blocked(
 
     return rep.groupBy("grp", "bi", "bj").applyInPandas(
         score, schema="id_a long, id_b long, cos_sim double"
-    )
-
-
-def lsh_bucketed_pairs(
-    emb: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    n_planes: int = 12,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup pairs restricted to same-LSH-bucket candidates.
-
-    Equi-join on the signature → shuffle O(corpus); high-cosine pairs
-    collide with probability (1 - θ/π)^n_planes. Output contract
-    matches ``cosine_neardup_pairs`` (approximate recall).
-    """
-    va = as_double_array(F.col(vec_col))
-    v = emb.select(
-        F.col(id_col).alias("id"),
-        va.alias("v"),
-        norm(va).alias("n"),
-        hyperplane_signature(F.col(vec_col), dim, n_planes, seed).alias("bucket"),
-    )
-    a, b = v.alias("a"), v.alias("b")
-    # per-vector norms hoisted out of the per-pair cosine (r16,
-    # bit-identical — see cosine_pair)
-    sim = cosine_pair(F.col("a.v"), F.col("b.v"), F.col("a.n"), F.col("b.n"))
-    return (
-        a.join(b, [F.col("a.bucket") == F.col("b.bucket"), F.col("a.id") < F.col("b.id")])
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            round_half_up(sim, 4).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
     )
 
 

@@ -1714,8 +1714,9 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     block pair scored by one BLAS multiply inside ``applyInPandas``; no
     driver materialization, shuffle O(N·n_blocks), same values as the
     interpreted pair join after the 4dp round).
-    ``similarity.lsh_bucketed_pairs`` is the O(corpus)-shuffle
-    approximate path when N² compute itself is too big."""
+    When N² compute itself is too big, hyperplane-LSH bucketing (as in
+    ``similarity.ann_lsh_topk``) is the O(corpus)-shuffle approximate
+    path."""
     emb = _t(spark, sf_dir, "embeddings")
     # n_blocks=None: auto-size blocks from the corpus count so the
     # per-task gemm matrix stays ~128 MB at ANY scale (r14: the
@@ -10749,8 +10750,8 @@ def embedding_lsh_buckets_portable(
     hyperplanes are the SAME seeded-LCG literals in both engines and
     the dot product folds left-to-right on both sides, so every
     vector's bucket id hash-matches — value-verifying the projection →
-    sign → bit-assembly construction that ann_lsh / lsh_bucketed_pairs
-    (rows-only: their 16-plane buckets feed a self-join) inherit.
+    sign → bit-assembly construction that ann_lsh (rows-only: its
+    16-plane buckets feed a self-join) inherits.
     Map-only plan: one projection over the embedding scan, no
     shuffle."""
     emb = _t(spark, sf_dir, "embeddings")

@@ -1,5 +1,5 @@
 """Sources & sinks: CSV with header normalization, resumable ingestion
-with a checkpoint manifest, parquet/CSV/JSON/JDBC-style sinks."""
+with a checkpoint manifest, parquet/CSV/SQLite/JDBC sinks."""
 
 from b2b_data_pipeline_indiamart_spark.sources.csv_source import (
     read_csv_normalized,
@@ -21,7 +21,6 @@ from b2b_data_pipeline_indiamart_spark.sources.sinks import (
     write_clustered,
     write_csv,
     write_jdbc,
-    write_json,
     write_parquet,
     write_sqlite,
 )
@@ -41,6 +40,5 @@ __all__ = [
     "write_clustered",
     "write_csv",
     "write_jdbc",
-    "write_json",
     "write_sqlite",
 ]

@@ -1,9 +1,9 @@
-"""Sinks: parquet (partitioned), CSV, JSON, SQLite.
+"""Sinks: parquet (partitioned), CSV, SQLite, JDBC.
 
 Reference parity: etl.py:411-435 (``export_outputs``) writes the
 curated CSV with ``na_rep="NaN"`` in ``utf-8-sig`` plus an optional
 SQLite table. At 100 TB the real sinks are partitioned parquet and a
-warehouse JDBC write; CSV/JSON/SQLite are kept for drop-in parity with
+warehouse JDBC write; CSV/SQLite are kept for drop-in parity with
 the reference's outputs and are documented as small-result sinks.
 """
 
@@ -103,10 +103,6 @@ def write_csv(
             if not data.startswith(b"\xef\xbb\xbf"):
                 with open(full, "wb") as f:
                     f.write(b"\xef\xbb\xbf" + data)
-
-
-def write_json(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
 
 
 def write_sqlite(
@@ -338,6 +334,59 @@ def write_clustered(
     )
 
 
+def hadoop_path(spark, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop API, so
+    existence checks, renames and marker files work on any URI Spark
+    writes to (``s3a://``, ``abfs://``, ``hdfs://``, ``file:``) — a
+    plain ``os.path`` check would never see an object-store path."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
+
+
+def recover_dir(spark, cur: str, nxt: str, aside: str) -> bool:
+    """Crash recovery for :func:`swap_dir`, run before reading ``cur``.
+
+    The swap never deletes the only copy, so a run that died mid-swap
+    left a complete copy at ``cur``, ``nxt`` or ``aside``. A missing
+    ``cur`` is restored from ``nxt`` (fully written before any rename
+    started, so it is the newer copy), else from ``aside``. Returns
+    whether ``cur`` exists afterwards.
+    """
+    fs, cur_p = hadoop_path(spark, cur)
+    if not fs.exists(cur_p):
+        for src in (nxt, aside):
+            _, src_p = hadoop_path(spark, src)
+            if fs.exists(src_p):
+                fs.rename(src_p, cur_p)
+                break
+    return fs.exists(cur_p)
+
+
+def swap_dir(spark, cur: str, nxt: str, aside: str) -> None:
+    """Replace directory ``cur`` with the fully written ``nxt`` so a
+    complete copy is reachable at every step: park ``cur`` at
+    ``aside``, rename ``nxt`` in, then delete the parked copy. If the
+    second rename fails the original is put back and IOError raised.
+
+    NOT atomic on object stores (a rename is copy + delete there): run
+    it from the single owner of the path, in the ingestion pause,
+    exactly like Delta/Iceberg's OPTIMIZE asks. Pair it with
+    :func:`recover_dir` at the start of the next run.
+    """
+    fs, cur_p = hadoop_path(spark, cur)
+    _, nxt_p = hadoop_path(spark, nxt)
+    _, aside_p = hadoop_path(spark, aside)
+    if fs.exists(aside_p):  # superseded copy from a prior run
+        fs.delete(aside_p, True)
+    if fs.exists(cur_p) and not fs.rename(cur_p, aside_p):
+        raise IOError(f"could not park {cur} aside")
+    if not fs.rename(nxt_p, cur_p):
+        if fs.exists(aside_p):
+            fs.rename(aside_p, cur_p)
+        raise IOError(f"rename {nxt} -> {cur} failed; original restored")
+    fs.delete(aside_p, True)
+
+
 def compact_parquet(
     spark,
     path: str,
@@ -352,68 +401,34 @@ def compact_parquet(
     does). Rewrites the dataset into ``ceil(total_bytes /
     target_file_bytes)`` files and returns the new file count.
 
-    Mechanics: read (with the caller's stated ``schema`` if given —
-    same rationale as the JSONL reader: inference over a corrupt or
-    evolving lake is the risk), repartition to the target count,
-    write to a ``_compacting`` sibling, then swap via the Hadoop
-    FileSystem API (works on any supported URI, same contract as the
-    streaming epoch ledger). The swap is delete-then-rename — NOT
-    atomic on object stores: run it from the single maintenance
-    owner of the path (concurrent readers on HDFS see the old listing
-    until the rename; on S3-style stores schedule it in the
-    ingestion pause, exactly like Delta/Iceberg's OPTIMIZE asks).
-    Row-content equality is the test's contract; ordering is not.
+    Mechanics: recover from a crashed earlier run
+    (:func:`recover_dir`), read (with the caller's stated ``schema`` if
+    given — same rationale as the JSONL reader: inference over a
+    corrupt or evolving lake is the risk), repartition to the target
+    count, write to a ``_compacting`` sibling, then swap it in with the
+    park-aside sequence of :func:`swap_dir` (old tree parked at
+    ``_pre_compact`` until the new one is in place; not atomic on
+    object stores — see there). Row-content equality is the test's
+    contract; ordering is not.
     Partitioned lakes: this rewrites the tree UNPARTITIONED — compact
     a partitioned dataset per partition directory (point ``path`` at
     the partition), or recombine with :func:`upsert_partitions`.
     """
     import math
 
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    src_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = src_path.getFileSystem(hconf)
     tmp = path.rstrip("/") + "_compacting"
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
     aside = path.rstrip("/") + "_pre_compact"
-    aside_path = jvm.org.apache.hadoop.fs.Path(aside)
-    # crash recovery FIRST: the swap below never deletes the only
-    # copy, so the invariant is "at least one complete copy exists at
-    # src, tmp, or aside". If a prior run died mid-swap, put it back.
-    if not fs.exists(src_path):
-        if fs.exists(tmp_path):
-            # died between rename(src→aside) and rename(tmp→src); the
-            # tmp copy was fully written before any rename started
-            fs.rename(tmp_path, src_path)
-        elif fs.exists(aside_path):
-            fs.rename(aside_path, src_path)
-        else:
-            raise IOError(f"compact_parquet: {path} does not exist")
+    if not recover_dir(spark, path, tmp, aside):
+        raise IOError(f"compact_parquet: {path} does not exist")
+    fs, src_path = hadoop_path(spark, path)
     total = fs.getContentSummary(src_path).getLength()
     n_files = max(1, math.ceil(total / target_file_bytes))
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.parquet(path)
     # overwrite mode replaces any stale/partial tmp from a prior crash
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    # swap sequence that keeps a complete copy reachable at every
-    # step: park the old tree aside, move the new one in, THEN drop
-    # the old. (The previous delete-then-rename left a window where
-    # the only copy sat at the tmp path — and a later run treated
-    # that tmp as garbage.)
-    if fs.exists(aside_path):  # superseded old data from a prior run
-        fs.delete(aside_path, True)
-    if not fs.rename(src_path, aside_path):
-        raise IOError(f"compact_parquet: could not park {path} aside")
-    if not fs.rename(tmp_path, src_path):
-        # put the original back; nothing lost
-        fs.rename(aside_path, src_path)
-        raise IOError(
-            f"compact_parquet: rename {tmp} -> {path} failed; "
-            "original restored"
-        )
-    fs.delete(aside_path, True)
+    reader.parquet(path).repartition(n_files).write.mode("overwrite").parquet(tmp)
+    swap_dir(spark, path, tmp, aside)
     return n_files
 
 

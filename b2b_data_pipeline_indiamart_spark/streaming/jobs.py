@@ -8,11 +8,17 @@ re-scraping. The Spark-native equivalent is a file-source stream with a
 plus idempotent sink commit gives exactly-once file→parquet ingestion,
 strictly stronger than the reference's at-least-once manifest.
 
-Everything here is expressed with built-in streaming operators
-(``window``, ``session_window``, watermarks) so state lives in the
-JVM's state store; only :func:`running_user_totals` drops to
-``applyInPandasWithState`` — deliberately, as the template for custom
-stateful operators the built-ins can't express.
+Aggregations use built-in streaming operators (``window``,
+``session_window``, watermarks) wherever they can, so state lives in
+the JVM's state store. Three operators the built-ins can't express drop
+to ``applyInPandasWithState``: :func:`running_user_totals`,
+:func:`stateful_sessionize` (event-time timeout) and
+:func:`running_distinct_types`.
+
+The ``foreachBatch`` sinks share two protocols, each written once: the
+epoch ledger (:func:`_ledgered`) that makes a replayed epoch a no-op,
+and the park-aside directory swap with its crash recovery
+(``sources.sinks.swap_dir`` / ``recover_dir``).
 """
 
 from __future__ import annotations
@@ -25,6 +31,14 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.rounding import round_half_up
 from ..operators.dedup import LSH_MAX_BUCKET_DEFAULT
+from ..sources.sinks import (
+    hadoop_path,
+    recover_dir,
+    scd2_apply,
+    scd2_init,
+    swap_dir,
+    upsert_partitions,
+)
 
 
 def event_stream_schema() -> T.StructType:
@@ -433,59 +447,68 @@ def streaming_cms_cells(
     return cms_cells(event_stream, key_col, depth=depth, width=width)
 
 
+def _ledgered(ledger_dir: str, write_epoch):
+    """The epoch ledger every exactly-once ``foreachBatch`` sink here
+    shares: returns the function to pass to ``foreachBatch``, which
+    runs ``write_epoch(batch_df, epoch_id)`` unless the epoch is
+    already committed.
+
+    Spark's foreachBatch contract is AT-LEAST-once: after a crash
+    between "user function ran" and "offsets committed", the SAME
+    epoch_id is replayed with the same data. A replayed epoch whose
+    marker ``ledger_dir/epoch-<id>`` exists is skipped; otherwise
+    ``write_epoch`` runs (it must overwrite its own partial output from
+    a crashed try) and the marker is created only AFTER it returns, so
+    a writer that raises leaves the epoch uncommitted for the retry.
+    Markers go through the Hadoop FileSystem API
+    (:func:`~...sources.sinks.hadoop_path`), so the ledger works on any
+    URI Spark can write to — a plain ``os.path`` check would never see
+    markers on an object store and every replayed epoch would rewrite.
+    """
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        fs, marker = hadoop_path(
+            batch_df.sparkSession, f"{ledger_dir}/epoch-{epoch_id}"
+        )
+        if fs.exists(marker):  # replay of a committed epoch
+            return
+        write_epoch(batch_df, epoch_id)
+        # commit AFTER the data lands; creating the marker is atomic on
+        # HDFS and a single conditional PUT on object stores
+        fs.mkdirs(marker.getParent())
+        fs.createNewFile(marker)
+
+    return run
+
+
 def start_idempotent_batch_sink(
     sdf: DataFrame,
     output_dir: str,
     checkpoint_dir: str,
     ledger_dir: str,
 ) -> StreamingQuery:
-    """foreachBatch sink with an epoch ledger — exactly-once delivery
-    to a sink that is only atomic per-directory (object stores, JDBC
-    staging tables, external APIs).
+    """foreachBatch sink with an epoch ledger (:func:`_ledgered`) —
+    exactly-once delivery to a sink that is only atomic per-directory
+    (object stores, JDBC staging tables, external APIs).
 
-    Spark's foreachBatch contract is AT-LEAST-once: after a crash
-    between "user function ran" and "offsets committed", the SAME
-    epoch_id is replayed with the same data. The standard production
-    defense is an idempotent writer keyed on epoch_id: each epoch
-    writes to ``output_dir/epoch=<id>`` and then records the id in a
-    ledger; a replayed epoch whose ledger entry exists is skipped, and
+    Each epoch writes to ``output_dir/epoch=<id>`` in overwrite mode, so
     a half-written directory without a ledger entry is overwritten by
-    the retry. Readers see exactly-once output; the partition layout
-    also gives them epoch-grain pruning.
+    the retry and a committed epoch is never rewritten. Readers see
+    exactly-once output; the partition layout also gives them
+    epoch-grain pruning.
 
     Scale notes: the ledger touch is one tiny driver-side marker per
     epoch (metadata-scale, like the streaming offset log itself);
-    the epoch write is a normal distributed parquet job. The marker
-    check/create goes through the Hadoop FileSystem API, so the
-    ledger works on ANY URI Spark can write to (``s3a://``,
-    ``abfs://``, ``hdfs://``, ``file:``) — a plain ``os.path`` check
-    would silently never see markers on an object store and every
-    replayed epoch would rewrite. The same shape serves JDBC (staging
-    table + transactional rename) or an API (epoch-id dedup key).
+    the epoch write is a normal distributed parquet job. The same
+    shape serves JDBC (staging table + transactional rename) or an API
+    (epoch-id dedup key).
     """
 
-    def _fs_and_path(spark, path_str: str):
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
-
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fs, marker = _fs_and_path(spark, f"{ledger_dir}/epoch-{epoch_id}")
-        if fs.exists(marker):  # replay of a committed epoch
-            return
-        (
-            batch_df.write.mode("overwrite")  # retry overwrites partials
-            .parquet(f"{output_dir}/epoch={epoch_id}")
-        )
-        # commit AFTER the data lands; createNewFile is atomic on HDFS
-        # and a single conditional PUT on object stores
-        fs.mkdirs(marker.getParent())
-        fs.createNewFile(marker)
+        batch_df.write.mode("overwrite").parquet(f"{output_dir}/epoch={epoch_id}")
 
     return (
-        sdf.writeStream.foreachBatch(write_epoch)
+        sdf.writeStream.foreachBatch(_ledgered(ledger_dir, write_epoch))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .start()
@@ -569,10 +592,7 @@ def _assert_no_legacy_neardup_store(spark, state_dir: str) -> None:
     band-bucketed ``state_dir/{sigs,bands}/epoch=N`` layout — see
     :func:`start_neardup_suppress_sink`. Silent acceptance would drop
     all previously-admitted state from cross-batch suppression."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root = hadoop_path(spark, state_dir)
     if not fs.exists(root):
         return
     legacy = [
@@ -633,12 +653,11 @@ def start_neardup_suppress_sink(
        matches ≥ ``threshold`` suppress the batch doc;
     4. admitted docs append to ``output_dir/epoch=<id>`` and their
        signatures to ``state_dir/sigs/epoch=<id>`` (and their band
-       index to ``state_dir/bands/epoch=<id>/band_bucket=<b>``); an
-       epoch-ledger marker
-       makes replays idempotent (the start_idempotent_batch_sink
-       pattern — retried epochs overwrite their own directories, and
-       the state read excludes the in-flight epoch so a replay can't
-       suppress a doc against its own half-written signatures).
+       index to ``state_dir/bands/epoch=<id>/band_bucket=<b>``); the
+       epoch ledger (:func:`_ledgered`) makes replays idempotent —
+       retried epochs overwrite their own directories, and the state
+       read excludes the in-flight epoch so a replay can't suppress a
+       doc against its own half-written signatures.
 
     Scale shape: state grows one signature row (k longs) plus
     ``bands`` index rows per ADMITTED doc — the minimum any
@@ -665,25 +684,11 @@ def start_neardup_suppress_sink(
     # be migrated (or a fresh state_dir used) explicitly.
     _assert_no_legacy_neardup_store(docs.sparkSession, state_dir)
 
-    def _fs_and_path(spark, path_str: str):
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
-
-    sig_cols = [f"mh_{i}" for i in range(k)]
-
     def suppress_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, marker = _fs_and_path(spark, f"{ledger_dir}/epoch-{epoch_id}")
-        if fs.exists(marker):  # replay of a committed epoch
-            return
-        pos = caching.mark()
-        batch = batch_df.persist()
-        try:
+        with caching.scope():
+            batch = caching.persist_tracked(batch_df)
             if not batch.take(1):
-                fs.mkdirs(marker.getParent())
-                fs.createNewFile(marker)
                 return
             # (1b) collapse exact duplicates BEFORE signatures (ADVICE
             # r12; the ngram_jaccard_verified discipline). Without
@@ -734,7 +739,7 @@ def start_neardup_suppress_sink(
                     .cast("int"),
                 )
             )
-            state_fs, state_path = _fs_and_path(spark, f"{state_dir}/bands")
+            state_fs, state_path = hadoop_path(spark, f"{state_dir}/bands")
             if state_fs.exists(state_path):
                 # the probe's bucket set (≤ state_buckets ints) prunes
                 # the band-index scan to matching partitions
@@ -802,14 +807,9 @@ def start_neardup_suppress_sink(
                 .partitionBy("band_bucket")
                 .parquet(f"{state_dir}/bands/epoch={epoch_id}")
             )
-            fs.mkdirs(marker.getParent())
-            fs.createNewFile(marker)
-        finally:
-            caching.release_from(pos)
-            batch.unpersist()
 
     return (
-        docs.writeStream.foreachBatch(suppress_epoch)
+        docs.writeStream.foreachBatch(_ledgered(ledger_dir, suppress_epoch))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .start()
@@ -901,10 +901,11 @@ def start_embedding_neardup_suppress_sink(
        always wins: arrival order is the stream's total order, the
        same asymmetry as the MinHash sink);
     4. admitted vectors append to ``output_dir/epoch=<id>`` and the
-       state store; an epoch-ledger marker makes replays idempotent
-       (retried epochs overwrite their own directories; the state
-       read excludes the in-flight epoch so a replay cannot suppress
-       a vector against its own half-written state).
+       state store; the epoch ledger (:func:`_ledgered`) makes
+       replays idempotent (retried epochs overwrite their own
+       directories; the state read excludes the in-flight epoch so a
+       replay cannot suppress a vector against its own half-written
+       state).
 
     Scale shape: state grows ONE (id, vector) row per ADMITTED vector
     — the minimum any exact-memory semantic dedup needs (the
@@ -920,23 +921,11 @@ def start_embedding_neardup_suppress_sink(
     """
     from ..operators import caching, similarity
 
-    def _fs_and_path(spark, path_str: str):
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
-
     def suppress_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, marker = _fs_and_path(spark, f"{ledger_dir}/epoch-{epoch_id}")
-        if fs.exists(marker):  # replay of a committed epoch
-            return
-        pos = caching.mark()
-        batch = batch_df.persist()
-        try:
+        with caching.scope():
+            batch = caching.persist_tracked(batch_df)
             if not batch.take(1):
-                fs.mkdirs(marker.getParent())
-                fs.createNewFile(marker)
                 return
             # (1) route to cells with the batch keys' assignment gemm
             assigned = similarity.ivf_assign(
@@ -973,7 +962,7 @@ def start_embedding_neardup_suppress_sink(
             # (3) cross-batch probe, pruned to the batch's own cells
             sup = batch_sup
             id_field = clustered.schema[id_col]
-            state_fs, state_path = _fs_and_path(spark, f"{state_dir}/vecs")
+            state_fs, state_path = hadoop_path(spark, f"{state_dir}/vecs")
             if state_fs.exists(state_path):
                 probe_cells = [
                     r["__cell"]
@@ -1018,14 +1007,9 @@ def start_embedding_neardup_suppress_sink(
                 .partitionBy("cell")
                 .parquet(f"{state_dir}/vecs/epoch={epoch_id}")
             )
-            fs.mkdirs(marker.getParent())
-            fs.createNewFile(marker)
-        finally:
-            caching.release_from(pos)
-            batch.unpersist()
 
     return (
-        vecs.writeStream.foreachBatch(suppress_epoch)
+        vecs.writeStream.foreachBatch(_ledgered(ledger_dir, suppress_epoch))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .start()
@@ -1052,112 +1036,30 @@ def streaming_quality_gate(doc_stream: DataFrame) -> DataFrame:
     return quality_logit(doc_stream)
 
 
+_TYPES_STATE = T.StructType([T.StructField("types", T.ArrayType(T.StringType()))])
+
+_TYPES_OUT = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("n_types", T.LongType()),
+        T.StructField("n_events", T.LongType()),
+    ]
+)
+
+
 def running_distinct_types(events: DataFrame) -> DataFrame:
-    """Per-user distinct-event-type tracker via Spark 4's
-    ``transformWithStateInPandas`` — the SECOND-generation stateful
-    API (SPARK-49564): a ``StatefulProcessor`` class with typed state
-    handles (ValueState here; ListState/MapState and event/processing
-    timers in the same API) instead of applyInPandasWithState's single
-    tuple. This is the template for new custom stateful operators;
-    the older API stays on the sessionizer for comparison.
+    """Per-user distinct-event-type tracker via
+    ``applyInPandasWithState``: state is one sorted distinct-type list
+    per user, and each batch emits (user_id, n_types, n_events) with
+    that batch's event count.
 
-    State per user is one (sorted distinct types) value; each batch
-    emits (user_id, n_types, n_events). Requires the RocksDB state
-    store provider and the ``protobuf`` Python package (the TWS
-    driver↔worker channel is proto-serialized) — absent protobuf,
-    the query fails at initialization, and the end-to-end pytest
-    coverage is importorskip-gated accordingly. The processor class
-    itself lives at module level so its CROSS-BATCH state handling is
-    unit-tested against a fake ValueState even where protobuf is
-    missing (tests/test_streaming.py) — that path is the whole point
-    of a stateful operator and must not depend on env luck.
-    """
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=DistinctTypesProcessor(),
-        outputStructType=DistinctTypesProcessor.OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def _stateful_processor_base():
-    """Resolve the StatefulProcessor base class.
-
-    NOT lazy — this runs in ``DistinctTypesProcessor``'s base-class
-    list, i.e. at import of this module (which ``streaming/__init__``
-    pulls in). That is fine today: Spark 4.1's
-    ``stateful_processor`` module imports without protobuf (only query
-    START needs it). The helper exists to keep the dependency in ONE
-    named seam: if a future Spark moves the proto import to module
-    scope, this is the single line to wrap in a stub-emitting
-    try/except so the batch package keeps importing."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    return StatefulProcessor
-
-
-class DistinctTypesProcessor(_stateful_processor_base()):
-    """transformWithStateInPandas processor for running_distinct_types.
-
-    One ValueState per user holding the sorted distinct event types.
-    ``ValueState.update`` takes ONE tuple element per schema field —
-    ``(list,)`` for the single array<string> field. Double-wrapping
-    ``([list],)`` pickles fine on batch 1 but corrupts state: the next
-    batch's ``get()[0]`` is a list-of-lists and ``set()`` raises
-    unhashable-type, killing the query on any RETURNING user.
-    """
-
-    OUT_SCHEMA = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_types", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-
-    STATE_SCHEMA = T.StructType(
-        [T.StructField("types", T.ArrayType(T.StringType()))]
-    )
-
-    def init(self, handle) -> None:
-        self._seen = handle.getValueState("seen", self.STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        import pandas as pd
-
-        seen = set(self._seen.get()[0]) if self._seen.exists() else set()
-        n = 0
-        for pdf in rows:
-            seen |= set(pdf["event_type"])
-            n += len(pdf)
-        self._seen.update((sorted(seen),))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_types": [len(seen)], "n_events": [n]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_distinct_types_apws(events: DataFrame) -> DataFrame:
-    """First-generation twin of :func:`running_distinct_types` on
-    ``applyInPandasWithState`` (VERDICT r14 #6): the IDENTICAL
-    per-user distinct-type tracker — state is one sorted distinct-type
-    list, each batch emits (user_id, n_types, n_events) — with the
-    tuple-per-schema-field state contract shared with
-    ``DistinctTypesProcessor`` (the ``(sorted_list,)`` single-wrap
-    both APIs require; the double-wrap corruption pin in
-    tests/test_streaming.py covers both through the same reference
-    semantics).
-
-    Why it exists: the TWS channel is protobuf-serialized, so the
-    second-generation template can only RUN where ``google.protobuf``
-    is installed; this twin is the environment-independent production
-    path — HDFS-backed state store, no extra Python deps — and the
-    end-to-end streaming coverage for the operator semantics runs on
-    it unconditionally. Same scale shape as every apws operator here:
-    one keyed shuffle to group by user, state strictly
-    O(distinct types) per user.
+    ``state.update`` takes ONE tuple element per state-schema field —
+    ``(sorted_list,)`` for the single array<string> field. Double
+    wrapping ``([sorted_list],)`` stores fine on the first batch but
+    corrupts the state: a RETURNING user's next ``state.get[0]`` is a
+    list of lists and ``set()`` raises unhashable-type, killing the
+    query (the two-batch streaming test pins this). Scale shape: one
+    keyed shuffle to group by user, state O(distinct types) per user.
     """
 
     def update(key, pdf_iter, state: GroupState):
@@ -1178,8 +1080,8 @@ def running_distinct_types_apws(events: DataFrame) -> DataFrame:
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
-            outputStructType=DistinctTypesProcessor.OUT_SCHEMA,
-            stateStructType=DistinctTypesProcessor.STATE_SCHEMA,
+            outputStructType=_TYPES_OUT,
+            stateStructType=_TYPES_STATE,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -1219,8 +1121,6 @@ def start_incremental_rollup(
     (day=.../hour=.../event_type=...) with columns (window_start,
     n_events, sum_value) — no streaming awareness needed.
     """
-    from ..sources.sinks import upsert_partitions
-
     agg = (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1277,17 +1177,16 @@ def start_scd2_dimension_sink(
     per-batch contract), stamp the version at the epoch grain
     ('epoch-<id>' as valid_from would break timestamp typing, so the
     batch timestamp is derived from the epoch id deterministically),
-    apply, and swap the snapshot directory with the compact_parquet
-    park-aside sequence (recover at batch start, write to ``__next``,
-    rename current→``__aside``, rename next→current, delete aside) so
-    a COMPLETE snapshot copy is reachable at every step — a crash
-    between renames can no longer leave no snapshot and trick the
-    replayed epoch into the scd2_init branch (which would silently
-    drop all history). Non-atomicity on object stores is documented
-    at compact_parquet. Replays of a crashed epoch re-apply the
-    identical batch; scd2_apply is idempotent on identical input
-    (pytest-pinned), so the snapshot converges rather than
-    double-versioning.
+    apply, write to ``__next`` and swap it in with the park-aside
+    sequence of ``sources.sinks.swap_dir`` (``__aside`` holds the old
+    copy), after ``recover_dir`` at batch start, so a COMPLETE
+    snapshot copy is reachable at every step — a crash between renames
+    can no longer leave no snapshot and trick the replayed epoch into
+    the scd2_init branch (which would silently drop all history).
+    Non-atomicity on object stores is documented at swap_dir. Replays
+    of a crashed epoch re-apply the identical batch; scd2_apply is
+    idempotent on identical input (pytest-pinned), so the snapshot
+    converges rather than double-versioning.
 
     Scale notes: each epoch is one open-slice equi-join (broadcast
     when the batch is small — the common case) plus a full snapshot
@@ -1296,7 +1195,6 @@ def start_scd2_dimension_sink(
     touched partitions (upsert_partitions) or a MERGE INTO a
     table format with row-level deletes.
     """
-    from ..sources.sinks import scd2_apply, scd2_init
 
     def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1319,27 +1217,15 @@ def start_scd2_dimension_sink(
         batch_ts = (
             _dt.datetime(2000, 1, 1) + _dt.timedelta(minutes=epoch_id)
         ).strftime("%Y-%m-%d %H:%M:%S")
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        cur_path = jvm.org.apache.hadoop.fs.Path(snapshot_dir)
-        fs = cur_path.getFileSystem(hconf)
         nxt = snapshot_dir.rstrip("/") + "__next"
-        nxt_path = jvm.org.apache.hadoop.fs.Path(nxt)
         aside = snapshot_dir.rstrip("/") + "__aside"
-        aside_path = jvm.org.apache.hadoop.fs.Path(aside)
-        # crash recovery FIRST (compact_parquet contract): if a prior
-        # epoch died mid-swap the snapshot dir may be missing while a
-        # complete copy sits at __next (fully written before any
-        # rename — it already INCLUDES that epoch's apply) or __aside
+        # crash recovery FIRST: if a prior epoch died mid-swap the
+        # snapshot dir may be missing while a complete copy sits at
+        # __next (it already INCLUDES that epoch's apply) or __aside
         # (the pre-apply snapshot). Restore it before deciding between
         # the init and apply branches, otherwise the replayed epoch
         # rebuilds the dimension from one batch and loses all history.
-        if not fs.exists(cur_path):
-            if fs.exists(nxt_path):
-                fs.rename(nxt_path, cur_path)
-            elif fs.exists(aside_path):
-                fs.rename(aside_path, cur_path)
-        if fs.exists(cur_path):
+        if recover_dir(spark, snapshot_dir, nxt, aside):
             current = spark.read.parquet(snapshot_dir)
             snap = scd2_apply(
                 current, latest, key_cols, tracked_cols, batch_ts
@@ -1349,22 +1235,7 @@ def start_scd2_dimension_sink(
         # overwrite replaces any stale partial __next from a crash
         # that happened mid-write (before the copy was complete)
         snap.write.mode("overwrite").parquet(nxt)
-        # park-aside swap: a complete copy is reachable at every step
-        if fs.exists(aside_path):  # superseded copy from a prior run
-            fs.delete(aside_path, True)
-        if fs.exists(cur_path):
-            if not fs.rename(cur_path, aside_path):
-                raise IOError(
-                    f"scd2 sink: could not park {snapshot_dir} aside"
-                )
-        if not fs.rename(nxt_path, cur_path):
-            if fs.exists(aside_path):
-                fs.rename(aside_path, cur_path)
-            raise IOError(
-                f"scd2 sink: rename {nxt} -> {snapshot_dir} failed; "
-                "prior snapshot restored"
-            )
-        fs.delete(aside_path, True)
+        swap_dir(spark, snapshot_dir, nxt, aside)
 
     return (
         update_stream.writeStream.foreachBatch(apply_epoch)
@@ -1445,8 +1316,6 @@ def start_drift_monitor_sink(
     Output table: epoch=N partitions with (n_rows, psi, drifted).
     """
     import math as _math
-
-    from ..sources.sinks import upsert_partitions
 
     n_bins = len(ref_counts)
     if len(ref_edges) != n_bins - 1:

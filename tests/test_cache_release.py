@@ -55,3 +55,22 @@ def test_dedup_clusters_releases_pair_caches_in_operator(spark, sf_small):
     assert len(caching._TRACKED) == 1
     out.collect()
     caching.release_cached()
+
+
+def test_scope_releases_inner_persists_on_error(spark):
+    """``caching.scope`` unpersists what was tracked inside it even
+    when the block raises; a frame tracked before the scope stays."""
+    caching.release_cached()
+    outer = caching.persist_tracked(spark.range(10))
+    outer.count()
+    inner = None
+    with pytest.raises(RuntimeError, match="boom"):
+        with caching.scope():
+            inner = caching.persist_tracked(spark.range(20))
+            inner.count()
+            assert inner.storageLevel.useMemory
+            raise RuntimeError("boom")
+    assert not inner.storageLevel.useMemory
+    assert outer.storageLevel.useMemory
+    assert len(caching._TRACKED) == 1 and caching._TRACKED[0] is outer
+    caching.release_cached()

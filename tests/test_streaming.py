@@ -392,6 +392,37 @@ def test_idempotent_batch_sink_skips_replayed_epochs(spark, tmp_path):
     assert spark.read.parquet(out).where("epoch = 0").count() == len(BATCH1)
 
 
+def test_ledger_commits_only_after_the_writer_succeeds(spark, tmp_path):
+    """The ledger's failure path: a writer that raises must leave its
+    epoch uncommitted (no ``epoch-<id>`` marker), so Spark's retry of
+    that epoch runs the writer again and only then commits."""
+    import os
+
+    from b2b_data_pipeline_indiamart_spark.streaming.jobs import _ledgered
+
+    ledger = str(tmp_path / "ledger")
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+    marker = os.path.join(ledger, "epoch-3")
+
+    def failing(batch_df, epoch_id):
+        raise RuntimeError("sink down")
+
+    with pytest.raises(RuntimeError, match="sink down"):
+        _ledgered(ledger, failing)(batch, 3)
+    assert not os.path.exists(marker)
+
+    calls = []
+
+    def writer(batch_df, epoch_id):
+        calls.append((batch_df.count(), epoch_id))
+
+    run = _ledgered(ledger, writer)
+    run(batch, 3)
+    assert calls == [(2, 3)] and os.path.exists(marker)
+    run(batch, 3)  # replay of the committed epoch: writer skipped
+    assert calls == [(2, 3)]
+
+
 def test_streaming_quality_gate_equals_batch(spark, tmp_path):
     from b2b_data_pipeline_indiamart_spark.operators.textstats import quality_logit
     from b2b_data_pipeline_indiamart_spark.sources.jsonl_source import (
@@ -471,102 +502,21 @@ def test_available_now_trigger_drains_backlog_and_stops(spark, tmp_path):
     assert spark.read.parquet(out).count() == len(BATCH1) + len(BATCH2)
 
 
-def test_running_distinct_types_transform_with_state(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas template. The TWS channel is
-    protobuf-serialized: with the package present this runs the full
-    end-to-end stream; WITHOUT it (this container) the documented
-    failure mode is itself the pin — the query must FAIL (not hang,
-    not silently drop state), so the test passes in both environments
-    with zero skips (VERDICT r14 #6). The operator's semantics keep
-    unconditional end-to-end coverage via the applyInPandasWithState
-    twin test below."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
+def test_running_distinct_types_cross_batch(spark, tmp_path):
+    """End-to-end streaming coverage for the distinct-type tracker.
+    Two micro-batches drive the RETURNING-user path (user 1 adds no
+    new type in batch 2 but re-emits; the state round-trip is where
+    the double-wrap corruption class lived), and final counts must
+    equal the batch reference."""
     from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
         running_distinct_types,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "in"
-        src.mkdir()
-        _write_events(src / "b1.json", BATCH1)
-        if has_protobuf:
-            q = start_memory_sink(
-                running_distinct_types(read_event_stream(spark, str(src))),
-                "tws_types",
-                output_mode="update",
-            )
-            _drain(q)
-            rows = {
-                r["user_id"]: r["n_types"]
-                for r in spark.sql("select * from tws_types").collect()
-            }
-            ref = {}
-            for ts, uid, etype, value in BATCH1:
-                ref.setdefault(uid, set()).add(etype)
-            assert rows == {u: len(t) for u, t in ref.items()}
-        else:
-            q = None
-            # ADVICE r15: pin the FAILURE MODE, not just "some
-            # exception" — transformWithStateInPandas without protobuf
-            # must fail LOUDLY (the TWS driver worker crashes at init;
-            # the protobuf ImportError itself sits in the JVM cause
-            # chain, not in str(exception), so the match pins the
-            # worker-crash surface — an unrelated analysis/schema/
-            # source error produces neither phrase).
-            with pytest.raises(
-                Exception,
-                match=r"(?i)protobuf|TransformWithStateInPySpark "
-                      r"driver worker exited unexpectedly",
-            ):
-                q = start_memory_sink(
-                    running_distinct_types(
-                        read_event_stream(spark, str(src))
-                    ),
-                    "tws_types",
-                    output_mode="update",
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-            if q is not None and q.isActive:
-                q.stop()
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_running_distinct_types_apws_cross_batch(spark, tmp_path):
-    """End-to-end streaming coverage for the distinct-type tracker on
-    the applyInPandasWithState twin — no protobuf dependency, so this
-    runs in every environment. Two micro-batches drive the RETURNING-
-    user path (user 1 adds no new type in batch 2 but re-emits; the
-    state round-trip is where the double-wrap corruption class lived),
-    and final counts must equal the batch reference."""
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        running_distinct_types_apws,
     )
 
     src = tmp_path / "in"
     src.mkdir()
     _write_events(src / "b1.json", BATCH1)
     q = start_memory_sink(
-        running_distinct_types_apws(read_event_stream(spark, str(src))),
+        running_distinct_types(read_event_stream(spark, str(src))),
         "apws_types",
         output_mode="update",
     )
@@ -589,64 +539,6 @@ def test_running_distinct_types_apws_cross_batch(spark, tmp_path):
     # user 1 returned in batch 2 (1 event, no new type): the state
     # round-trip emitted a second revision with per-batch n_events
     assert (2, 1) in by_user[1] and len(by_user[1]) == 2
-
-
-def test_distinct_types_processor_cross_batch_state():
-    """The CROSS-BATCH path of the TWS processor, driven directly with
-    a fake ValueState (no protobuf / RocksDB needed). This is the
-    regression pin for the state double-wrap bug: update() takes one
-    tuple element per schema field — (sorted_list,), not
-    ([sorted_list],) — and the corruption only ever surfaced on the
-    SECOND batch for a returning user, which the end-to-end test
-    (single batch per user, protobuf-gated) never reached."""
-    import pandas as pd
-
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        DistinctTypesProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, new_value):
-            assert isinstance(new_value, tuple) and len(new_value) == 1
-            # schema field is array<string>: flat list of strings only
-            assert all(isinstance(t, str) for t in new_value[0])
-            self._v = new_value
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema):
-            return self.state
-
-    proc = DistinctTypesProcessor()
-    proc.init(FakeHandle())
-
-    def run_batch(types):
-        out = list(
-            proc.handleInputRows(
-                (7,), iter([pd.DataFrame({"event_type": types})]), None
-            )
-        )
-        assert len(out) == 1
-        return out[0].iloc[0]
-
-    first = run_batch(["view", "click", "view"])
-    assert (first["n_types"], first["n_events"]) == (2, 3)
-    # returning user: state from batch 1 must merge with batch 2
-    second = run_batch(["purchase", "view"])
-    assert (second["n_types"], second["n_events"]) == (3, 2)
-    third = run_batch(["click"])
-    assert (third["n_types"], third["n_events"]) == (3, 1)
 
 
 def test_session_window_stream_matches_batch_twin(spark, tmp_path):
