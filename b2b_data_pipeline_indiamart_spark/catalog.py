@@ -173,7 +173,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
 
 
 #: high-cardinality, never-NULL key per table for load_parallel's
-#: hash repartition (the table's id column; l_orderkey is non-unique
+#: hash repartition — one for every entry of TABLES (the table's id column; l_orderkey is non-unique
 #: but dense and high-cardinality, which is all hash spread needs)
 _PARALLEL_KEYS = {
     "region": "r_regionkey",
@@ -225,13 +225,5 @@ def load_parallel(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     df = load(spark, sf_dir, table)
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
-        key = _PARALLEL_KEYS.get(table)
-        if key is not None:
-            df = df.repartition(target, df[key])
-        else:
-            # ADVICE r16: a table wired through _tp without a registered
-            # parallel key must not fail at plan time — fall back to the
-            # keyless round-robin repartition (pays the local
-            # sortBeforeRepartition, but stays correct).
-            df = df.repartition(target)
+        df = df.repartition(target, df[_PARALLEL_KEYS[table]])
     return df

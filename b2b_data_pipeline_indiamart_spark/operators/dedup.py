@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import round_half_up
 
 from ..functions.text import clean_text
+from ..session import scoped_confs
 
 from . import caching
 
@@ -532,7 +533,7 @@ def connected_components(
         if len(head) <= small_graph_cap:
             return _connected_components_driver(raw.sparkSession, head)
     # Pin shuffle parallelism to the machine for the duration of the
-    # loop (restored in the finally below). A vanilla session's default
+    # loop (restored by the conf scope below). A vanilla session's default
     # 200 shuffle partitions get materialized by EVERY per-round
     # localCheckpoint (eager RDD materialization bypasses AQE's
     # partition coalescing), so on an 8-core driver session the loop
@@ -540,16 +541,13 @@ def connected_components(
     # ~6 s at sf0.01 with the pin. A cluster deployment would instead
     # size shuffle.partitions to the cluster up front.
     spark = pairs.sparkSession
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
-    )
-    try:
+    with scoped_confs(
+        spark, "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    ):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
+        )
         return _connected_components_loop(raw, max_iterations, check_every)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 def _connected_components_driver(spark: SparkSession, rows) -> DataFrame:
@@ -741,8 +739,8 @@ def _connected_components_loop(
         # coalesce or skew-split), but still pays its per-stage
         # replanning latency — which on a contracted edge list IS
         # the round's cost (measured: 7.0 s → 4.2 s over a 7-round
-        # loop at sf0.1). Re-enabled by connected_components'
-        # finally, and left on whenever the graph spans >1
+        # loop at sf0.1). Restored by connected_components'
+        # conf scope, and left on whenever the graph spans >1
         # partition, where skew-splitting star centers matters.
         spark.conf.set("spark.sql.adaptive.enabled", str(parts > 1).lower())
         obs = Observation()

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.rounding import round_half_up
+from ..session import scoped_confs
 from . import caching
 
 #: iteration-boundary rounding — see module docstring
@@ -161,19 +162,12 @@ def pagerank(
     n_edges = e_raw.count()
     p = max(2, min(int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
                    n_edges // 50_000 + 2))
-    # snapshot the confs as SET-OR-UNSET, not as resolved values: a
-    # conf the user never touched resolves to a DERIVED default (AQE
-    # true; shuffle width from the session builder / cluster manager),
-    # and writing that resolved value back on exit would PIN what was
-    # previously floating. Restore means: set back what was set, unset
-    # what was unset.
-    prev_aqe = _conf_snapshot(spark, "spark.sql.adaptive.enabled")
-    prev_sp = _conf_snapshot(spark, "spark.sql.shuffle.partitions")
-    # both conf.set calls sit INSIDE the try (snapshots outside): if
-    # the second set raised with the first already applied, a set
-    # outside the try would leave the session half-pinned with the
-    # finally never running
-    try:
+    # both conf.set calls sit INSIDE the scope: if the second set
+    # raised with the first already applied, the session would
+    # otherwise be left half-pinned
+    with scoped_confs(
+        spark, "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    ):
         if n_edges < 1_000_000:
             spark.conf.set("spark.sql.adaptive.enabled", "false")
         # pin the session shuffle width to the loop's own p: every
@@ -189,26 +183,6 @@ def pagerank(
         return _pagerank_loop(
             e_raw, p, damping, tol, max_iter
         )
-    finally:
-        _conf_restore(spark, "spark.sql.adaptive.enabled", prev_aqe)
-        _conf_restore(spark, "spark.sql.shuffle.partitions", prev_sp)
-
-
-def _conf_snapshot(spark, key: str):
-    """The conf's EXPLICIT session value, or None when it is unset and
-    resolving to a default (SQLConf.contains checks the session's
-    settings map — RuntimeConfig.get would hand back the resolved
-    default and erase the set/unset distinction)."""
-    if spark._jsparkSession.sessionState().conf().contains(key):
-        return spark.conf.get(key)
-    return None
-
-
-def _conf_restore(spark, key: str, prev) -> None:
-    if prev is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, prev)
 
 
 def _pagerank_loop(

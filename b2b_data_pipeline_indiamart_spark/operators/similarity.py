@@ -110,6 +110,21 @@ def cosine_pair(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom)
 
 
+def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """The ANN family's one ranking contract: per ``query_id`` the
+    ``k`` highest ``score_col`` rows, ties to the lower ``neighbor_id``,
+    as (query_id, neighbor_id, score_col, rnk). Every top-k operator
+    and its DuckDB oracle (``plans.queries._topk_sql``) rank this way."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", score_col, "rnk")
+    )
+
+
 def _pseudo_random_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic unit-free hyperplanes from a seeded generator.
 
@@ -292,9 +307,18 @@ def cosine_neardup_blocked(
     )
 
 
-#: above this sample size, kmeans training switches from the
-#: driver-side numpy path to distributed partial-sum Lloyd iterations
-DRIVER_SAMPLE_MAX = 65536
+def _lcg_order(seed: int, n: int, k: int) -> "list[int]":
+    """The first ``min(k, n)`` distinct indices of a seeded LCG walk
+    over ``range(n)`` — the trainers' one seed permutation,
+    reproducible across numpy versions."""
+    state, order, taken = seed & 0x7FFFFFFF, [], set()
+    while len(order) < min(k, n):
+        state = (1103515245 * state + 12345) % (1 << 31)
+        j = state % n
+        if j not in taken:
+            taken.add(j)
+            order.append(j)
+    return order
 
 
 def kmeans_centroids(
@@ -308,47 +332,17 @@ def kmeans_centroids(
 ) -> "list[list[float]]":
     """Deterministic Lloyd-iteration centroids for the IVF index.
 
-    At the default cap, training runs driver-side in numpy over a
-    bounded sample (first ``sample_cap`` vectors by id — deterministic,
-    no RNG in the data path); the cluster-scale story is that centroid
-    TRAINING is always a small-sample problem (n_cells × dim floats),
-    while ASSIGNMENT — the O(corpus) part — stays distributed. Seeds
-    are the first ``n_cells`` sample rows shuffled by a seeded LCG
-    permutation. When ``sample_cap`` exceeds :data:`DRIVER_SAMPLE_MAX`
-    the whole training loop goes distributed too
-    (:func:`kmeans_centroids_distributed`) — no corpus-sized
-    ``toPandas`` ever reaches the driver.
+    Training runs driver-side in numpy over a bounded sample (first
+    ``sample_cap`` vectors by id — deterministic, no RNG in the data
+    path); the cluster-scale story is that centroid TRAINING is always
+    a small-sample problem (n_cells × dim floats), while ASSIGNMENT —
+    the O(corpus) part — stays distributed. Seeds are ``n_cells``
+    sample rows picked by a seeded LCG permutation.
     """
-    if sample_cap > DRIVER_SAMPLE_MAX:
-        return kmeans_centroids_distributed(
-            emb, dim, n_cells=n_cells, vec_col=vec_col,
-            sample_cap=sample_cap, iters=iters, seed=seed,
-        )
     import numpy as np
 
-    id_col = "vec_id" if "vec_id" in emb.columns else emb.columns[0]
-    sample = (
-        emb.select(as_double_array(F.col(vec_col)).alias("v"), F.col(id_col).alias("i"))
-        .orderBy("i")
-        .limit(sample_cap)
-        .toPandas()
-    )
-    if len(sample) == 0:
-        raise ValueError("kmeans_centroids: empty embedding table")
-    mat = np.array([np.asarray(v, dtype=np.float64) for v in sample["v"]])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    mat = mat / norms
-    # seeded LCG permutation → reproducible across numpy versions
-    state, order = seed & 0x7FFFFFFF, []
-    taken = set()
-    while len(order) < min(n_cells, len(mat)):
-        state = (1103515245 * state + 12345) % (1 << 31)
-        j = state % len(mat)
-        if j not in taken:
-            taken.add(j)
-            order.append(j)
-    cents = mat[order].copy()
+    mat = _fetch_unit_sample(emb, vec_col, sample_cap, who="kmeans_centroids")
+    cents = mat[_lcg_order(seed, len(mat), n_cells)].copy()
     for _ in range(iters):
         assign = (mat @ cents.T).argmax(axis=1)  # cosine on unit vectors
         for c in range(len(cents)):
@@ -358,107 +352,6 @@ def kmeans_centroids(
                 n = np.linalg.norm(m)
                 if n > 0:
                     cents[c] = m / n
-    return cents.tolist()
-
-
-def kmeans_centroids_distributed(
-    emb: DataFrame,
-    dim: int,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    sample_cap: int = 4096,
-    iters: int = 5,
-    seed: int = 42,
-) -> "list[list[float]]":
-    """Lloyd iterations with DISTRIBUTED assignment + partial sums —
-    the large-sample training path (``sample_cap`` >
-    :data:`DRIVER_SAMPLE_MAX`), where shipping the sample to the
-    driver would be the bottleneck.
-
-    Per iteration: one narrow ``mapInPandas`` pass computes, per Arrow
-    batch, the per-cell (count, vector-sum) partials via a single
-    (batch × n_cells) gemm; only ``partitions × n_cells`` tiny partial
-    rows reach the driver, which reduces them in numpy (n_cells × dim
-    floats — metadata scale) and re-normalizes the centroids. The
-    working sample is a deterministic hash-threshold filter
-    (partition/retry invariant — no sort, no limit, no RNG); seeds are
-    the ``n_cells`` vectors with the smallest ``xxhash64(id)``
-    (a bounded TakeOrdered). Deterministic for a fixed input layout:
-    partials are reduced in sorted order so the float summation order
-    is pinned.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_col = "vec_id" if "vec_id" in emb.columns else emb.columns[0]
-    src = emb.select(F.col(id_col).alias("i"), as_double_array(F.col(vec_col)).alias("v"))
-    n_rows = src.count()
-    if n_rows == 0:
-        raise ValueError("kmeans_centroids_distributed: empty embedding table")
-    if n_rows > sample_cap:
-        # deterministic fraction via the 16-hex-digit md5 prefix —
-        # same idiom as sampling.deterministic_sample
-        frac = sample_cap / n_rows
-        cut = int(frac * (16**15))
-        src = src.filter(
-            F.conv(F.substring(F.md5(F.col("i").cast("string")), 1, 15), 16, 10).cast("long")
-            < F.lit(cut)
-        )
-    seeds_rows = (
-        src.select("i", "v", F.xxhash64(F.col("i"), F.lit(seed)).alias("h"))
-        .orderBy("h", "i")
-        .limit(n_cells)
-        .collect()
-    )
-
-    def unit(m):
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        return m / norms
-
-    cents = unit(np.array([np.asarray(r["v"], dtype=np.float64) for r in seeds_rows]))
-    spark = emb.sparkSession
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(cents)
-
-        def partials(batches):
-            c = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                vecs = unit(
-                    np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-                )
-                assign = (vecs @ c.T).argmax(axis=1)
-                cells, counts, sums = [], [], []
-                for cell in np.unique(assign):
-                    # spherical k-means: partials over UNIT vectors,
-                    # matching the driver-side path's normalized mean
-                    members = vecs[assign == cell]
-                    cells.append(int(cell))
-                    counts.append(len(members))
-                    sums.append(list(members.sum(axis=0)))
-                yield pd.DataFrame({"cell": cells, "n": counts, "s": sums})
-
-        rows = src.mapInPandas(
-            partials, schema="cell int, n long, s array<double>"
-        ).collect()
-        new = cents.copy()
-        agg: dict[int, "np.ndarray"] = {}
-        cnt: dict[int, int] = {}
-        # pin the float reduce order: sort partials by (cell, n, s)
-        for r in sorted(rows, key=lambda r: (r["cell"], r["n"], tuple(r["s"]))):
-            c = r["cell"]
-            v = np.asarray(r["s"], dtype=np.float64)
-            agg[c] = agg.get(c, 0) + v
-            cnt[c] = cnt.get(c, 0) + r["n"]
-        for c, total in agg.items():
-            m = total / cnt[c]
-            nm = np.linalg.norm(m)
-            if nm > 0:
-                new[c] = m / nm
-        cents = new
-        bc.destroy()
     return cents.tolist()
 
 
@@ -554,12 +447,7 @@ def ann_ivf_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _topk_per_query(scored, "cos_sim", k)
 
 
 def _lowest_ids(df: DataFrame, id_col: str, n: int) -> DataFrame:
@@ -571,6 +459,43 @@ def _lowest_ids(df: DataFrame, id_col: str, n: int) -> DataFrame:
     rather than silently degenerating (ADVICE r9). On dense 0-based
     ids the two formulations select identical rows."""
     return df.select(id_col).orderBy(F.col(id_col).asc()).limit(n)
+
+
+def _lowest_id_seeds(v: DataFrame, n: int) -> DataFrame:
+    """(__cid, __se, __sn): the ``n`` lowest-id rows of a
+    (__vid, __e, __n) frame as the seed cells of :func:`_nearest_seeds`."""
+    return v.join(F.broadcast(_lowest_ids(v, "__vid", n)), "__vid").select(
+        F.col("__vid").alias("__cid"),
+        F.col("__e").alias("__se"),
+        F.col("__n").alias("__sn"),
+    )
+
+
+def _nearest_seeds(
+    side: DataFrame, seeds: DataFrame, out_id: str, n: int, keep: "tuple[str, ...]" = ()
+) -> DataFrame:
+    """(out_id, *keep, cell): the ``n`` nearest seed cells per vector —
+    the seeded twins' one assignment rule. ``side`` carries
+    (__vid, __e, __n, *keep), ``seeds`` (__cid, __se, __sn) and is
+    broadcast; similarity is the hoisted-norm cosine rounded to 6dp
+    BEFORE ranking, ties to the lower cell id (round-before-compare,
+    so the cell choice is engine-stable and SQL-restatable). The rank
+    window is partitioned by the high-cardinality vector id."""
+    sims = side.crossJoin(F.broadcast(seeds)).select(
+        F.col("__vid").alias(out_id),
+        *keep,
+        F.col("__cid"),
+        round_half_up(
+            cosine_pair(F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")),
+            6,
+        ).alias("__sim"),
+    )
+    w = Window.partitionBy(out_id).orderBy(F.col("__sim").desc(), F.col("__cid").asc())
+    return (
+        sims.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
+        .select(out_id, *keep, F.col("__cid").alias("cell"))
+    )
 
 
 def ann_ivf_seeded_topk(
@@ -604,36 +529,8 @@ def ann_ivf_seeded_topk(
     v = emb.select(
         F.col(id_col).alias("__vid"), ea.alias("__e"), norm(ea).alias("__n")
     )
-    seeds = (
-        v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid")
-        .select(
-            F.col("__vid").alias("__cid"),
-            F.col("__e").alias("__se"),
-            F.col("__n").alias("__sn"),
-        )
-    )
-
-    def cells(side: DataFrame, out_id: str, n: int) -> DataFrame:
-        sims = side.crossJoin(F.broadcast(seeds)).select(
-            F.col("__vid").alias(out_id),
-            F.col("__cid"),
-            round_half_up(
-                cosine_pair(
-                    F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")
-                ),
-                6,
-            ).alias("__sim"),
-        )
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("__sim").desc(), F.col("__cid").asc()
-        )
-        return (
-            sims.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(out_id, F.col("__cid").alias("cell"))
-        )
-
-    corpus = cells(v, "neighbor_id", 1).join(
+    seeds = _lowest_id_seeds(v, n_seeds)
+    corpus = _nearest_seeds(v, seeds, "neighbor_id", 1).join(
         v.select(
             F.col("__vid").alias("neighbor_id"),
             F.col("__e").alias("cv"),
@@ -642,8 +539,12 @@ def ann_ivf_seeded_topk(
         "neighbor_id",
     )
     probes = (
-        cells(v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
-              "query_id", n_probe)
+        _nearest_seeds(
+            v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
+            seeds,
+            "query_id",
+            n_probe,
+        )
         .join(
             v.select(
                 F.col("__vid").alias("query_id"),
@@ -665,14 +566,7 @@ def ann_ivf_seeded_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _topk_per_query(scored, "cos_sim", k)
 
 
 def ann_ivf_lloyd_seeded_topk(
@@ -766,35 +660,15 @@ def ann_ivf_lloyd_seeded_topk(
         .persist()
     )
 
-    def assign(side: DataFrame, cent_df: DataFrame, out_id: str, n: int) -> DataFrame:
-        sims = side.crossJoin(F.broadcast(cent_df)).select(
-            F.col("__vid").alias(out_id),
-            F.col("__cid"),
-            round_half_up(
-                cosine_pair(
-                    F.col("__e"), F.col("__ce"), F.col("__n"), F.col("__cn")
-                ),
-                6,
-            ).alias("__sim"),
-        )
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("__sim").desc(), F.col("__cid").asc()
-        )
-        return (
-            sims.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(out_id, F.col("__cid").alias("cell"))
-        )
-
     def cent_frame() -> DataFrame:
         return spark.createDataFrame(
             [(c, vec, py_norm(vec)) for c, vec in cents],
-            "__cid long, __ce array<double>, __cn double",
+            "__cid long, __se array<double>, __sn double",
         )
 
     try:
         for _ in range(n_iters):
-            cells = assign(v, cent_frame(), "__uid", 1)
+            cells = _nearest_seeds(v, cent_frame(), "__uid", 1)
             sums = (
                 uq.join(cells, "__uid")
                 .groupBy("cell", "__j")
@@ -822,7 +696,7 @@ def ann_ivf_lloyd_seeded_topk(
         uq.unpersist()
 
     trained = cent_frame()
-    corpus = assign(v, trained, "neighbor_id", 1).join(
+    corpus = _nearest_seeds(v, trained, "neighbor_id", 1).join(
         v.select(
             F.col("__vid").alias("neighbor_id"),
             F.col("__e").alias("cv"),
@@ -831,7 +705,7 @@ def ann_ivf_lloyd_seeded_topk(
         "neighbor_id",
     )
     probes = (
-        assign(
+        _nearest_seeds(
             v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
             trained,
             "query_id",
@@ -858,14 +732,7 @@ def ann_ivf_lloyd_seeded_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _topk_per_query(scored, "cos_sim", k)
 
 
 def pca_eigen_invariants(
@@ -990,12 +857,7 @@ def brute_force_topk(
             round_half_up(dot(F.col("query_id_v"), F.col("neighbor_id_v")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _topk_per_query(scored, "cos_sim", k)
 
 
 def mmr_rerank(
@@ -1400,12 +1262,7 @@ def ann_lsh_topk(
             round_half_up(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _topk_per_query(scored, "cos_sim", k)
 
 
 def dim_bounds(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -1566,8 +1423,7 @@ def _fetch_unit_sample(
     emb: DataFrame, vec_col: str, sample_cap: int, who: str
 ) -> "np.ndarray":
     """Deterministic unit-normalized driver sample (first ``sample_cap``
-    rows by id) shared by the PQ/IVF-PQ trainers — the same bounded-
-    sample framing as :func:`kmeans_centroids`."""
+    rows by id) shared by the k-means, PQ and IVF-PQ trainers."""
     import numpy as np
 
     id_col = "vec_id" if "vec_id" in emb.columns else emb.columns[0]
@@ -1596,15 +1452,7 @@ def _lloyd_subspaces(
     books: list[list[list[float]]] = []
     for s in range(m):
         sub = mat[:, s * dsub : (s + 1) * dsub]
-        state, order = (seed + 31 * s) & 0x7FFFFFFF, []
-        taken: set[int] = set()
-        while len(order) < min(k, len(sub)):
-            state = (1103515245 * state + 12345) % (1 << 31)
-            j = state % len(sub)
-            if j not in taken:
-                taken.add(j)
-                order.append(j)
-        cents = sub[order].copy()
+        cents = sub[_lcg_order(seed + 31 * s, len(sub), k)].copy()
         for _ in range(iters):
             d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
@@ -1798,14 +1646,7 @@ def ann_topk_pq(
             round_half_up(score, 4).alias("pq_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rnk")
-    )
+    return _topk_per_query(scored, "pq_score", k)
 
 
 def ann_pq_seeded_topk(
@@ -1909,14 +1750,7 @@ def ann_pq_seeded_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rnk")
-    )
+    return _topk_per_query(scored, "pq_score", k)
 
 
 def embedding_cov_quantized(
@@ -2098,14 +1932,7 @@ def ann_topk_ivfpq(
             round_half_up(score, 4).alias("ivfpq_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ivfpq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "ivfpq_score", "rnk")
-    )
+    return _topk_per_query(scored, "ivfpq_score", k)
 
 
 def ann_ivfpq_seeded_topk(
@@ -2264,14 +2091,7 @@ def ann_ivfpq_seeded_topk(
             ).alias("ivfpq_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ivfpq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "ivfpq_score", "rnk")
-    )
+    return _topk_per_query(scored, "ivfpq_score", k)
 
 
 def _mean_cov(
@@ -2447,8 +2267,7 @@ def semdedup_kmeans(
 ) -> DataFrame:
     """End-to-end SemDeDup: k-means cluster the embeddings
     (:func:`kmeans_centroids` — deterministic seeded init, driver
-    Lloyd under the 64k sample cap, distributed partial-sum Lloyd
-    above), assign every vector to its nearest centroid
+    Lloyd over a bounded sample), assign every vector to its nearest centroid
     (:func:`ivf_assign`, map-only against the broadcast centroid
     table), then apply the within-cluster keep rule of
     :func:`semdedup`. Rows-only (k-means isn't SQL-expressible);
@@ -2511,13 +2330,7 @@ def _exact_rerank(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        j.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _topk_per_query(j, "cos_sim", k)
 
 
 def ann_matryoshka(
@@ -2857,30 +2670,9 @@ def cluster_label_purity_seeded(
         norm(ea).alias("__n"),
         F.col(label_col),
     )
-    seeds = (
-        v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid")
-        .select(
-            F.col("__vid").alias("__cid"),
-            F.col("__e").alias("__se"),
-            F.col("__n").alias("__sn"),
-        )
-    )
-    sims = v.crossJoin(F.broadcast(seeds)).select(
-        "__vid",
-        label_col,
-        "__cid",
-        round_half_up(
-            cosine_pair(F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")),
-            6,
-        ).alias("__sim"),
-    )
-    w = Window.partitionBy("__vid").orderBy(
-        F.col("__sim").desc(), F.col("__cid").asc()
-    )
-    cl = (
-        sims.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(F.col("__cid").alias("cluster"), label_col)
+    seeds = _lowest_id_seeds(v, n_seeds)
+    cl = _nearest_seeds(v, seeds, "__vid", 1, keep=(label_col,)).select(
+        F.col("cell").alias("cluster"), label_col
     )
     return _purity_readout(cl, label_col)
 
@@ -2921,26 +2713,9 @@ def semdedup_seeded(
         ea.alias("__e"),
         norm(ea).alias("__n"),
     )
-    seeds = v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid").select(
-        F.col("__vid").alias("__cid"),
-        F.col("__e").alias("__se"),
-        F.col("__n").alias("__sn"),
-    )
-    sims = v.crossJoin(F.broadcast(seeds)).select(
-        "__vid",
-        "__cid",
-        round_half_up(
-            cosine_pair(F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")),
-            6,
-        ).alias("__sim"),
-    )
-    w = Window.partitionBy("__vid").orderBy(
-        F.col("__sim").desc(), F.col("__cid").asc()
-    )
-    cells = (
-        sims.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("__vid", F.col("__cid").alias("__cluster"))
+    seeds = _lowest_id_seeds(v, n_seeds)
+    cells = _nearest_seeds(v, seeds, "__vid", 1).select(
+        "__vid", F.col("cell").alias("__cluster")
     )
     clustered = (
         emb.select(

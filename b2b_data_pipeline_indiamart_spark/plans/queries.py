@@ -157,6 +157,30 @@ def _sql_list(words) -> str:
     return "[" + ", ".join(f"'{w}'" for w in words) + "]"
 
 
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB spelling of similarity.cosine / cosine_pair over two
+    DOUBLE[] expressions: the same ordered dot folds, NULL when either
+    norm is 0. Unrounded — each caller rounds or thresholds it."""
+    return (
+        f"CASE WHEN sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b})) > 0"
+        f" THEN list_dot_product({a}, {b})"
+        f" / (sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b}))) END"
+    )
+
+
+def _topk_sql(src: str, score: str, k: int) -> str:
+    """DuckDB spelling of similarity._topk_per_query: per query_id the
+    ``k`` highest ``score`` rows of ``src``, ties to the lower
+    neighbor_id, as (query_id, neighbor_id, score, rnk)."""
+    return f"""SELECT query_id, neighbor_id, {score}, rnk FROM (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+                                   ORDER BY {score} DESC, neighbor_id ASC) AS rnk
+      FROM {src}
+    ) WHERE rnk <= {k}"""
+
+
 # ==========================================================================
 # §2A — cleaning / standardization (etl.py parity)
 # ==========================================================================
@@ -1693,16 +1717,11 @@ def docs_jaccard_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "embedding_neardup",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     SELECT id_a, id_b, cos_sim FROM (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             round(CASE WHEN sqrt(list_dot_product(a.e, a.e))
-                             * sqrt(list_dot_product(b.e, b.e)) > 0
-                        THEN list_dot_product(a.e, b.e)
-                             / (sqrt(list_dot_product(a.e, a.e))
-                                * sqrt(list_dot_product(b.e, b.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('a.e', 'b.e')}, 4) AS cos_sim
       FROM v a JOIN v b ON a.vec_id < b.vec_id
     ) WHERE cos_sim >= 0.35
     """,
@@ -1728,24 +1747,15 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ann_topk",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
     scored AS (
       SELECT q.query_id, v.vec_id AS neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(qe, qe))
-                             * sqrt(list_dot_product(v.e, v.e)) > 0
-                        THEN list_dot_product(qe, v.e)
-                             / (sqrt(list_dot_product(qe, qe))
-                                * sqrt(list_dot_product(v.e, v.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('qe', 'v.e')}, 4) AS cos_sim
       FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 10
+    {_topk_sql('scored', 'cos_sim', 10)}
     """,
 )
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1758,17 +1768,12 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ann_range_search",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 20),
     scored AS (
       SELECT q.query_id, v.vec_id AS neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(qe, qe))
-                             * sqrt(list_dot_product(v.e, v.e)) > 0
-                        THEN list_dot_product(qe, v.e)
-                             / (sqrt(list_dot_product(qe, qe))
-                                * sqrt(list_dot_product(v.e, v.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('qe', 'v.e')}, 4) AS cos_sim
       FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     )
     SELECT query_id, neighbor_id, cos_sim FROM scored WHERE cos_sim >= 0.3
@@ -1832,19 +1837,10 @@ def _lsh_bucket_sql_expr(dim: int = 64, n_planes: int = 8, seed: int = 42) -> st
     q AS (SELECT vec_id AS query_id, bucket, e AS qe FROM b WHERE vec_id < 5),
     scored AS (
       SELECT q.query_id, c.vec_id AS neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(qe, qe))
-                             * sqrt(list_dot_product(c.e, c.e)) > 0
-                        THEN list_dot_product(qe, c.e)
-                             / (sqrt(list_dot_product(qe, qe))
-                                * sqrt(list_dot_product(c.e, c.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('qe', 'c.e')}, 4) AS cos_sim
       FROM b c JOIN q ON c.bucket = q.bucket AND c.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 10
+    {_topk_sql('scored', 'cos_sim', 10)}
     """,
 )
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1963,18 +1959,13 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ann_ivf_portable",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     seeds AS (SELECT vec_id AS cid, e AS se FROM v
               WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 16)),
     sims AS (
       SELECT v.vec_id, s.cid,
-             round(CASE WHEN sqrt(list_dot_product(v.e, v.e))
-                             * sqrt(list_dot_product(se, se)) > 0
-                        THEN list_dot_product(v.e, se)
-                             / (sqrt(list_dot_product(v.e, v.e))
-                                * sqrt(list_dot_product(se, se)))
-                   END, 6) AS sim
+             round({_cos_sql('v.e', 'se')}, 6) AS sim
       FROM v CROSS JOIN seeds s
     ),
     ranked AS (
@@ -1988,23 +1979,14 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                WHERE rn <= 4 AND vec_id < 5),
     scored AS (
       SELECT p.query_id, c.vec_id AS neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(q.e, q.e))
-                             * sqrt(list_dot_product(n.e, n.e)) > 0
-                        THEN list_dot_product(q.e, n.e)
-                             / (sqrt(list_dot_product(q.e, q.e))
-                                * sqrt(list_dot_product(n.e, n.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('q.e', 'n.e')}, 4) AS cos_sim
       FROM cells c
       JOIN probes p USING (cell)
       JOIN v n ON n.vec_id = c.vec_id
       JOIN v q ON q.vec_id = p.query_id
       WHERE c.vec_id <> p.query_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 10
+    {_topk_sql('scored', 'cos_sim', 10)}
     """,
 )
 def ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3145,7 +3127,7 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reconstructed vectors (the whole pipeline is deterministic: SQ8 has
 # no trained state, unlike PQ/IVF whose codebooks keep those keys
 # rows-only).
-_SQ8_RECON_CTES = """
+_SQ8_RECON_CTES = f"""
     v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     dims AS (SELECT unnest(range(1, 65)) AS d),
     b AS (
@@ -3168,12 +3150,7 @@ _SQ8_RECON_CTES = """
     q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
     sq8_scored AS (
       SELECT q.query_id, recon.vec_id AS neighbor_id, recon.r,
-             round(CASE WHEN sqrt(list_dot_product(qe, qe))
-                             * sqrt(list_dot_product(r, r)) > 0
-                        THEN list_dot_product(qe, r)
-                             / (sqrt(list_dot_product(qe, qe))
-                                * sqrt(list_dot_product(r, r)))
-                   END, 4) AS cos_sim_sq8
+             round({_cos_sql('qe', 'r')}, 4) AS cos_sim_sq8
       FROM recon CROSS JOIN q WHERE recon.vec_id <> q.query_id
     )
 """
@@ -3183,12 +3160,7 @@ _SQ8_RECON_CTES = """
     "ann_sq8",
     f"""
     WITH {_SQ8_RECON_CTES}
-    SELECT query_id, neighbor_id, cos_sim_sq8, rnk FROM (
-      SELECT query_id, neighbor_id, cos_sim_sq8,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos_sim_sq8 DESC, neighbor_id ASC) AS rnk
-      FROM sq8_scored
-    ) WHERE rnk <= 10
+    {_topk_sql('sq8_scored', 'cos_sim_sq8', 10)}
     """,
 )
 def ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3910,7 +3882,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ann_pq_portable",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     u AS (SELECT vec_id AS vid,
                  CASE WHEN sqrt(list_dot_product(e, e)) > 0
@@ -3944,11 +3916,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
              round(list_dot_product(qu, recon), 4) AS pq_score
       FROM recon r CROSS JOIN q WHERE r.vid <> q.query_id
     )
-    SELECT query_id, neighbor_id, pq_score, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY pq_score DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 10
+    {_topk_sql('scored', 'pq_score', 10)}
     """,
 )
 def ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3970,7 +3938,7 @@ def ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ann_ivf_pq_portable",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     u AS (SELECT vec_id AS vid,
                  CASE WHEN sqrt(list_dot_product(e, e)) > 0
@@ -4024,11 +3992,7 @@ def ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
                JOIN seeds sd ON sd.cid = r.cell
                JOIN q ON q.query_id = p.query_id
                WHERE r.vid <> p.query_id)
-    SELECT query_id, neighbor_id, ivfpq_score, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY ivfpq_score DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 10
+    {_topk_sql('scored', 'ivfpq_score', 10)}
     """,
 )
 def ann_ivf_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6567,18 +6531,13 @@ def docs_quality_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "semdedup_by_label",
-    """
+    f"""
     WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
                FROM embeddings),
     dropped AS (
       SELECT DISTINCT b.vec_id AS did
       FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE round(CASE WHEN sqrt(list_dot_product(a.e, a.e))
-                            * sqrt(list_dot_product(b.e, b.e)) > 0
-                       THEN list_dot_product(a.e, b.e)
-                            / (sqrt(list_dot_product(a.e, a.e))
-                               * sqrt(list_dot_product(b.e, b.e)))
-                  END, 4) >= 0.3
+      WHERE round({_cos_sql('a.e', 'b.e')}, 4) >= 0.3
     )
     SELECT v.vec_id, v.label AS cluster, (d.did IS NULL) AS kept
     FROM v LEFT JOIN dropped d ON v.vec_id = d.did
@@ -7257,17 +7216,12 @@ def customer_churn_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "embedding_knn_degree",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     p AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM v a JOIN v b ON a.vec_id < b.vec_id
-      WHERE round(CASE WHEN sqrt(list_dot_product(a.e, a.e))
-                            * sqrt(list_dot_product(b.e, b.e)) > 0
-                       THEN list_dot_product(a.e, b.e)
-                            / (sqrt(list_dot_product(a.e, a.e))
-                               * sqrt(list_dot_product(b.e, b.e)))
-                  END, 4) >= 0.3
+      WHERE round({_cos_sql('a.e', 'b.e')}, 4) >= 0.3
     ),
     deg AS (
       SELECT v.vec_id, CAST(count(p.nid) AS BIGINT) AS degree
@@ -7571,30 +7525,16 @@ def q16_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH {_SQ8_RECON_CTES},
     shortlist AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim_sq8 DESC, neighbor_id ASC) AS srnk
-        FROM sq8_scored
-      ) WHERE srnk <= 64
+      {_topk_sql('sq8_scored', 'cos_sim_sq8', 64)}
     ),
     exact AS (
       SELECT s.query_id, s.neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(q.qe, q.qe))
-                             * sqrt(list_dot_product(n.e, n.e)) > 0
-                        THEN list_dot_product(q.qe, n.e)
-                             / (sqrt(list_dot_product(q.qe, q.qe))
-                                * sqrt(list_dot_product(n.e, n.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('q.qe', 'n.e')}, 4) AS cos_sim
       FROM shortlist s
       JOIN q ON q.query_id = s.query_id
       JOIN v n ON n.vec_id = s.neighbor_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-      FROM exact
-    ) WHERE rnk <= 10
+    {_topk_sql('exact', 'cos_sim', 10)}
     """,
 )
 def ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7626,39 +7566,20 @@ def _matryoshka_topk_sql(prefix_dim: int, shortlist: int = 64,
     pq AS (SELECT query_id, qe[1:{prefix_dim}] AS pqe FROM q),
     s1 AS (
       SELECT pq.query_id, pv.vec_id AS neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(pqe, pqe))
-                             * sqrt(list_dot_product(pe, pe)) > 0
-                        THEN list_dot_product(pqe, pe)
-                             / (sqrt(list_dot_product(pqe, pqe))
-                                * sqrt(list_dot_product(pe, pe)))
-                   END, 4) AS pcos
+             round({_cos_sql('pqe', 'pe')}, 4) AS pcos
       FROM pv CROSS JOIN pq WHERE pv.vec_id <> pq.query_id
     ),
     shortlist AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY pcos DESC, neighbor_id ASC) AS srnk
-        FROM s1
-      ) WHERE srnk <= {shortlist}
+      {_topk_sql('s1', 'pcos', shortlist)}
     ),
     exact AS (
       SELECT s.query_id, s.neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(q.qe, q.qe))
-                             * sqrt(list_dot_product(n.e, n.e)) > 0
-                        THEN list_dot_product(q.qe, n.e)
-                             / (sqrt(list_dot_product(q.qe, q.qe))
-                                * sqrt(list_dot_product(n.e, n.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('q.qe', 'n.e')}, 4) AS cos_sim
       FROM shortlist s
       JOIN q ON q.query_id = s.query_id
       JOIN v n ON n.vec_id = s.neighbor_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-      FROM exact
-    ) WHERE rnk <= {k}
+    {_topk_sql('exact', 'cos_sim', k)}
     """
 
 
@@ -7927,7 +7848,7 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "embedding_hard_negatives",
-    """
+    f"""
     WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
                FROM embeddings),
     a AS (SELECT vec_id AS anchor_id, label AS anchor_label, e AS ae
@@ -7935,12 +7856,7 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored AS (
       SELECT a.anchor_id, a.anchor_label,
              v.vec_id AS neighbor_id, v.label AS neighbor_label,
-             round(CASE WHEN sqrt(list_dot_product(ae, ae))
-                             * sqrt(list_dot_product(v.e, v.e)) > 0
-                        THEN list_dot_product(ae, v.e)
-                             / (sqrt(list_dot_product(ae, ae))
-                                * sqrt(list_dot_product(v.e, v.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('ae', 'v.e')}, 4) AS cos_sim
       FROM v CROSS JOIN a WHERE v.label <> a.anchor_label
     )
     SELECT anchor_id, anchor_label, neighbor_id, neighbor_label,
@@ -8192,19 +8108,14 @@ def embedding_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "embedding_cluster_purity_portable",
-    """
+    f"""
     WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
                FROM embeddings),
     seeds AS (SELECT vec_id AS cid, e AS se FROM v
               WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 8)),
     sims AS (
       SELECT v.vec_id, v.label, s.cid,
-             round(CASE WHEN sqrt(list_dot_product(v.e, v.e))
-                             * sqrt(list_dot_product(se, se)) > 0
-                        THEN list_dot_product(v.e, se)
-                             / (sqrt(list_dot_product(v.e, v.e))
-                                * sqrt(list_dot_product(se, se)))
-                   END, 6) AS sim
+             round({_cos_sql('v.e', 'se')}, 6) AS sim
       FROM v CROSS JOIN seeds s
     ),
     cells AS (SELECT vec_id, label, cluster FROM (
@@ -10496,17 +10407,12 @@ def orders_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "embedding_sim_histogram",
-    """
+    f"""
     WITH s AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
                FROM embeddings
                WHERE substr(md5('simhist:' || CAST(vec_id AS VARCHAR)),
                             1, 8) < '66666666'),
-    p AS (SELECT round(CASE WHEN sqrt(list_dot_product(a.e, a.e))
-                                 * sqrt(list_dot_product(b.e, b.e)) > 0
-                            THEN list_dot_product(a.e, b.e)
-                                 / (sqrt(list_dot_product(a.e, a.e))
-                                    * sqrt(list_dot_product(b.e, b.e)))
-                       END, 4) AS cos_sim
+    p AS (SELECT round({_cos_sql('a.e', 'b.e')}, 4) AS cos_sim
           FROM s a JOIN s b ON a.vec_id < b.vec_id)
     SELECT CAST(floor(cos_sim * 20) AS INT) AS sim_bin,
            round(CAST(floor(cos_sim * 20) AS INT) * 0.05, 2) AS bin_low,
@@ -10929,39 +10835,20 @@ def docs_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq AS (SELECT vec_id AS query_id, rp AS prq FROM p WHERE vec_id < 5),
     s1 AS (
       SELECT pq.query_id, p.vec_id AS neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(prq, prq))
-                             * sqrt(list_dot_product(rp, rp)) > 0
-                        THEN list_dot_product(prq, rp)
-                             / (sqrt(list_dot_product(prq, prq))
-                                * sqrt(list_dot_product(rp, rp)))
-                   END, 4) AS pcos
+             round({_cos_sql('prq', 'rp')}, 4) AS pcos
       FROM p CROSS JOIN pq WHERE p.vec_id <> pq.query_id
     ),
     shortlist AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY pcos DESC, neighbor_id ASC) AS srnk
-        FROM s1
-      ) WHERE srnk <= 64
+      {_topk_sql('s1', 'pcos', 64)}
     ),
     exact AS (
       SELECT s.query_id, s.neighbor_id,
-             round(CASE WHEN sqrt(list_dot_product(q.qe, q.qe))
-                             * sqrt(list_dot_product(n.e, n.e)) > 0
-                        THEN list_dot_product(q.qe, n.e)
-                             / (sqrt(list_dot_product(q.qe, q.qe))
-                                * sqrt(list_dot_product(n.e, n.e)))
-                   END, 4) AS cos_sim
+             round({_cos_sql('q.qe', 'n.e')}, 4) AS cos_sim
       FROM shortlist s
       JOIN q ON q.query_id = s.query_id
       JOIN v n ON n.vec_id = s.neighbor_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-      FROM exact
-    ) WHERE rnk <= 10
+    {_topk_sql('exact', 'cos_sim', 10)}
     """,
 )
 def ann_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11708,13 +11595,6 @@ def _mmr_sql(k: int = 10, shortlist: int = 30, lam: float = 0.7) -> str:
     max(sim to selected)`` on RAW doubles from 4dp-rounded inputs and takes
     (score DESC, id ASC). short/ps are MATERIALIZED — referenced by
     every step."""
-    cos = (
-        "round(CASE WHEN sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b})) > 0"
-        " THEN list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b}))) END, 4)"
-    )
     steps = []
     for j in range(2, k + 1):
         prev = f"sel{j-1}"
@@ -11752,18 +11632,15 @@ def _mmr_sql(k: int = 10, shortlist: int = 30, lam: float = 0.7) -> str:
     q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
     scored AS (
       SELECT q.query_id, v.vec_id AS neighbor_id,
-             {cos.format(a="qe", b="v.e")} AS rel
+             round({_cos_sql('qe', 'v.e')}, 4) AS rel
       FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id),
     short AS MATERIALIZED (
-      SELECT query_id, neighbor_id, rel FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY rel DESC, neighbor_id ASC) AS rn
-        FROM scored) WHERE rn <= {shortlist}),
+      {_topk_sql('scored', 'rel', shortlist)}),
     sv AS (SELECT s.query_id, s.neighbor_id, v.e
            FROM short s JOIN v ON v.vec_id = s.neighbor_id),
     ps AS MATERIALIZED (
       SELECT a.query_id, a.neighbor_id AS a, b.neighbor_id AS b,
-             {cos.format(a="a.e", b="b.e")} AS sim
+             round({_cos_sql('a.e', 'b.e')}, 4) AS sim
       FROM sv a JOIN sv b ON a.query_id = b.query_id
                          AND a.neighbor_id <> b.neighbor_id),
     pick1 AS (
@@ -11786,19 +11663,12 @@ def _kcenter_sql(k: int = 8) -> str:
     the vector maximizing min(4dp cosine distance to selected), ties
     (dist DESC, id ASC). Distances are minima of 4dp-ROUNDED values,
     so both engines compare identical doubles."""
-    cosd = (
-        "round(1 - CASE WHEN sqrt(list_dot_product(v.e, v.e))"
-        " * sqrt(list_dot_product(s.e, s.e)) > 0"
-        " THEN list_dot_product(v.e, s.e)"
-        " / (sqrt(list_dot_product(v.e, v.e))"
-        " * sqrt(list_dot_product(s.e, s.e))) END, 4)"
-    )
     steps = []
     for j in range(2, k + 1):
         prev = f"sel{j-1}"
         steps.append(f"""
     scored{j} AS (
-      SELECT v.vec_id, v.e, min({cosd}) AS md
+      SELECT v.vec_id, v.e, min(round(1 - {_cos_sql('v.e', 's.e')}, 4)) AS md
       FROM v JOIN {prev} s ON TRUE
       WHERE v.vec_id NOT IN (SELECT vec_id FROM {prev})
       GROUP BY 1, 2),
@@ -11863,19 +11733,14 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "semdedup_seeded_portable",
-    """
+    f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
                FROM embeddings),
     seeds AS (SELECT vec_id AS cid, e AS se FROM v
               WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 8)),
     sims AS (
       SELECT v.vec_id, s.cid,
-             round(CASE WHEN sqrt(list_dot_product(v.e, v.e))
-                             * sqrt(list_dot_product(se, se)) > 0
-                        THEN list_dot_product(v.e, se)
-                             / (sqrt(list_dot_product(v.e, v.e))
-                                * sqrt(list_dot_product(se, se)))
-                   END, 6) AS sim
+             round({_cos_sql('v.e', 'se')}, 6) AS sim
       FROM v CROSS JOIN seeds s
     ),
     cells AS (SELECT vec_id, cluster FROM (
@@ -11888,12 +11753,7 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped AS (
       SELECT DISTINCT b.vec_id AS did
       FROM cv a JOIN cv b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-      WHERE round(CASE WHEN sqrt(list_dot_product(a.e, a.e))
-                            * sqrt(list_dot_product(b.e, b.e)) > 0
-                       THEN list_dot_product(a.e, b.e)
-                            / (sqrt(list_dot_product(a.e, a.e))
-                               * sqrt(list_dot_product(b.e, b.e)))
-                  END, 4) >= 0.3
+      WHERE round({_cos_sql('a.e', 'b.e')}, 4) >= 0.3
     )
     SELECT cv.vec_id, cv.cluster, (d.did IS NULL) AS kept
     FROM cv LEFT JOIN dropped d ON cv.vec_id = d.did
@@ -11931,20 +11791,12 @@ def _ivf_lloyd_sql(n_iters: int = 2, n_probe: int = 4, k: int = 10) -> str:
     ``round6(S_j / sqrt(Σ S_j²))`` (Σ S_j² in HUGEINT — S² overflows
     BIGINT at sf10 corpus sizes). Iteration CTEs are MATERIALIZED
     (each is referenced by the next assignment AND the sum join)."""
-    cos6 = (
-        "round(CASE WHEN sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b})) > 0"
-        " THEN list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b}))) END, 6)"
-    )
-    cos4 = cos6.replace(", 6)", ", 4)")
     steps = []
     prev_cent = "seeds"
     for t in range(n_iters):
         steps.append(f"""
     sims{t} AS (
-      SELECT v.vec_id, c.cid, {cos6.format(a="v.e", b="c.ce")} AS sim
+      SELECT v.vec_id, c.cid, round({_cos_sql('v.e', 'c.ce')}, 6) AS sim
       FROM v CROSS JOIN {prev_cent} c),
     cells{t} AS MATERIALIZED (
       SELECT vec_id, cid AS cell FROM (
@@ -11978,7 +11830,7 @@ def _ivf_lloyd_sql(n_iters: int = 2, n_probe: int = 4, k: int = 10) -> str:
       FROM v CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS j) dd),
     {",".join(steps)},
     simsF AS (
-      SELECT v.vec_id, c.cid, {cos6.format(a="v.e", b="c.ce")} AS sim
+      SELECT v.vec_id, c.cid, round({_cos_sql('v.e', 'c.ce')}, 6) AS sim
       FROM v CROSS JOIN {prev_cent} c),
     ranked AS (
       SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
@@ -11989,16 +11841,13 @@ def _ivf_lloyd_sql(n_iters: int = 2, n_probe: int = 4, k: int = 10) -> str:
                WHERE rn <= {n_probe} AND vec_id < 5),
     scored AS (
       SELECT p.query_id, c.vec_id AS neighbor_id,
-             {cos4.format(a="q.e", b="n.e")} AS cos_sim
+             round({_cos_sql('q.e', 'n.e')}, 4) AS cos_sim
       FROM fcells c
       JOIN probes p USING (cell)
       JOIN v n ON n.vec_id = c.vec_id
       JOIN v q ON q.vec_id = p.query_id
       WHERE c.vec_id <> p.query_id)
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-      FROM scored) WHERE rnk <= {k}
+    {_topk_sql('scored', 'cos_sim', k)}
     """
 
 

@@ -10,6 +10,7 @@ code scales from sf0.001 (32 partitions) to 100 TB (tens of thousands).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -62,3 +63,33 @@ def get_spark(app_name: str = "b2b-pipeline-spark", master: str | None = None) -
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def conf_snapshot(spark: SparkSession, key: str) -> "str | None":
+    """The conf's EXPLICIT session value, or None when it is unset and
+    resolving to a default (SQLConf.contains checks the session's
+    settings map — RuntimeConfig.get would hand back the resolved
+    default and erase the set/unset distinction)."""
+    if spark._jsparkSession.sessionState().conf().contains(key):
+        return spark.conf.get(key)
+    return None
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, *keys: str):
+    """Restore ``keys`` on exit, on error too, to what they were on
+    entry: set back what was set, unset what was unset. Writing back
+    the RESOLVED value instead would pin a conf that was previously
+    default-derived (AQE true; shuffle width from the session builder
+    or cluster manager). Session-scoped: other queries submitted
+    concurrently on the same session plan under the values set inside
+    the block."""
+    prev = {key: conf_snapshot(spark, key) for key in keys}
+    try:
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

@@ -15,6 +15,12 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("b2b-pipeline-tests")
     yield spark
+    # stop streams and the state-store maintenance thread first: left
+    # scheduled, it fires after spark.stop() and logs a
+    # "SparkEnv not active" stack trace
+    for query in spark.streams.active:
+        query.stop()
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     spark.stop()
 
 

@@ -18,6 +18,23 @@ def test_connected_components_on_known_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_restores_unset_confs_to_unset(spark):
+    """The loop's conf scope must not pin a default-derived conf: keys
+    unset before the call are unset after it."""
+    from b2b_data_pipeline_indiamart_spark.session import conf_snapshot
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    own = spark.newSession()
+    for key in keys:
+        own.conf.unset(key)
+    pairs = own.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+    got = dedup.connected_components(pairs, small_graph_cap=0).collect()
+    assert {(r["node"], r["cluster_id"]) for r in got} == {
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
+    }
+    assert [conf_snapshot(own, key) for key in keys] == [None, None]
+
+
 def test_dedup_clusters_invariants(spark, sf_small):
     docs = catalog.load(spark, sf_small, "documents")
     out = dedup.dedup_clusters(docs).persist()

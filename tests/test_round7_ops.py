@@ -1307,13 +1307,11 @@ def test_pagerank_restores_unset_confs_to_unset(spark):
     """ADVICE r7: the loop's finally-restore must not pin a previously
     default-derived conf — a conf that was UNSET before pagerank must
     be unset after, and an explicitly set one must keep its value."""
-    from b2b_data_pipeline_indiamart_spark.operators.graph import (
-        _conf_snapshot,
-        pagerank,
-    )
+    from b2b_data_pipeline_indiamart_spark.operators.graph import pagerank
+    from b2b_data_pipeline_indiamart_spark.session import conf_snapshot
 
     key = "spark.sql.adaptive.enabled"
-    before = _conf_snapshot(spark, key)
+    before = conf_snapshot(spark, key)
     if before is not None:  # make it unset for the probe, restore after
         spark.conf.unset(key)
     try:
@@ -1321,7 +1319,7 @@ def test_pagerank_restores_unset_confs_to_unset(spark):
             [(1, 2), (2, 1), (3, 1)], "src int, dst int"
         )
         pagerank(edges, max_iter=3).collect()
-        assert _conf_snapshot(spark, key) is None
+        assert conf_snapshot(spark, key) is None
     finally:
         if before is not None:
             spark.conf.set(key, before)

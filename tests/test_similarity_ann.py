@@ -150,44 +150,6 @@ def test_embedding_stats_partitioning_invariant(emb):
     assert all(r[1] > 0 for r in a)
 
 
-def test_kmeans_distributed_path(emb):
-    """Large-cap training path: distributed partial-sum Lloyd. Must be
-    deterministic across runs, produce unit-norm centroids of the right
-    shape, and assignment over them must populate multiple cells."""
-    import math
-
-    c1 = similarity.kmeans_centroids_distributed(emb, dim=64, n_cells=8, sample_cap=10_000)
-    c2 = similarity.kmeans_centroids_distributed(emb, dim=64, n_cells=8, sample_cap=10_000)
-    assert c1 == c2
-    assert len(c1) == 8 and len(c1[0]) == 64
-    for c in c1:
-        assert math.isclose(sum(x * x for x in c) ** 0.5, 1.0, rel_tol=1e-9)
-    cells = {r["cell"] for r in similarity.ivf_assign(emb, c1).select("cell").distinct().collect()}
-    assert len(cells) >= 4
-
-
-def test_kmeans_dispatch_default_cap_unchanged(emb):
-    """Default cap stays on the driver-side numpy path — bit-identical
-    to round-3 behavior; above DRIVER_SAMPLE_MAX the dispatch switches
-    to the distributed trainer."""
-    direct = similarity.kmeans_centroids(emb, dim=64, n_cells=8, sample_cap=4096)
-    assert direct == similarity.kmeans_centroids(emb, dim=64, n_cells=8, sample_cap=4096)
-    via_dispatch = similarity.kmeans_centroids(
-        emb, dim=64, n_cells=8, sample_cap=similarity.DRIVER_SAMPLE_MAX + 1
-    )
-    dist = similarity.kmeans_centroids_distributed(
-        emb, dim=64, n_cells=8, sample_cap=similarity.DRIVER_SAMPLE_MAX + 1
-    )
-    assert via_dispatch == dist
-
-
-def test_kmeans_distributed_subsample_filter(emb):
-    """sample_cap below corpus size must engage the deterministic
-    hash-threshold filter and still train (no empty cells crash)."""
-    c = similarity.kmeans_centroids_distributed(emb, dim=64, n_cells=4, sample_cap=100)
-    assert len(c) == 4 and len(c[0]) == 64
-
-
 def test_ann_rerank_recall_at_least_sq8(spark, sf_medium):
     """The exact re-rank can only improve on the raw SQ8 ranking:
     recall@10 vs exact must be >= the plain SQ8@10 recall, and the

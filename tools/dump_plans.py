@@ -6,12 +6,15 @@ Usage:
 Writes ``<out_dir>/<key>_<suffix>.txt`` for each key (default: the
 bench headline set). Plans are captured against $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1). Explain is driver-side planning only,
-so this is safe to run on a contended box.
+so this is safe to run on a contended box. Expression ids (``#123``),
+``plan_id=`` numbers and RDD ids with their call sites are masked, so
+dumps of two checkouts diff clean when their plans are the same.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -33,6 +36,14 @@ DEFAULT_KEYS = [
 ]
 
 
+def mask_ids(plan: str) -> str:
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    # an ExistingRDD scan names its RDD id and creation call site
+    # (file:line), which move with unrelated edits
+    return re.sub(r"RDD\[\d+\] at [^,]*", "RDD[N]", plan)
+
+
 def main() -> None:
     out_dir = sys.argv[1] if len(sys.argv) > 1 else "plans/r16"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
@@ -51,7 +62,7 @@ def main() -> None:
             plan = f"EXPLAIN FAILED: {exc}"
         path = os.path.join(out_dir, f"{key}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(mask_ids(plan))
         print(f"wrote {path} ({len(plan)} chars)")
     spark.stop()
 
