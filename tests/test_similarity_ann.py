@@ -103,6 +103,18 @@ def test_kmeans_centroids_deterministic(emb):
     assert len(c1) == 8 and len(c1[0]) == 64
 
 
+def test_kmeans_dispatch_default_cap_unchanged(emb):
+    """The default cap is the explicit 4096 driver sample, and a cap far
+    above the corpus (65537, once the distributed-trainer switch) trains
+    on the same driver sample — so the centroids are identical."""
+    default = similarity.kmeans_centroids(emb, dim=64, n_cells=8)
+    direct = similarity.kmeans_centroids(emb, dim=64, n_cells=8, sample_cap=4096)
+    assert direct == default
+    assert emb.count() <= 4096
+    big = similarity.kmeans_centroids(emb, dim=64, n_cells=8, sample_cap=65537)
+    assert big == direct
+
+
 def test_lsh_topk_subset_of_exact_scores(emb, queries, exact_topk):
     # LSH results are a subset of the candidate-restricted ranking —
     # sanity: the contract holds and every rnk run is 1..n consecutive
