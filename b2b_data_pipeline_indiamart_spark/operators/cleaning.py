@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import clean_text
@@ -48,25 +48,6 @@ def drop_critical_missing(df: DataFrame, required: Sequence[str]) -> DataFrame:
     return df.filter(cond) if cond is not None else df
 
 
-def dedup_keep_first(df: DataFrame, keys: Sequence[str], order_by: Sequence[Column]) -> DataFrame:
-    """Key-based dedup with a *deterministic* keep-first.
-
-    Parity: etl.py:358-368 (``drop_duplicates(keep="first")``). The
-    reference's "first" is input-file order; in a distributed engine
-    input order is not a stable concept, so the caller provides an
-    explicit ``order_by`` that defines "first" (e.g. min line number).
-    Implemented as row_number over a window — one shuffle on ``keys``,
-    which is the minimum the semantics admit. At 100 TB this is a hash
-    repartition on the dedup key; AQE splits skewed keys.
-    """
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def dedup_keep_first_agg(
     df: DataFrame,
     keys: Sequence[str],
@@ -75,13 +56,15 @@ def dedup_keep_first_agg(
 ) -> DataFrame:
     """Keep-first dedup as ``groupBy(keys).agg(min(struct(...)))``.
 
-    Same result as :func:`dedup_keep_first` when ``order_cols`` are
-    ascending AND unique per row (e.g. a primary key): the struct min
-    is lexicographic, so ordering fields come first and ``payload``
-    fields are carried along (they can only influence selection on a
-    total tie of the order columns).
+    Parity: etl.py:358-368 (``drop_duplicates(keep="first")``). The
+    reference's "first" is input-file order; in a distributed engine
+    input order is not a stable concept, so "first" is the smallest
+    ``order_cols`` (ascending, unique per row, e.g. min line number):
+    the struct min is lexicographic, so ordering fields come first and
+    ``payload`` fields are carried along (they can only influence
+    selection on a total tie of the order columns).
 
-    Scale rationale: the window formulation shuffles EVERY row and
+    Scale rationale: a row_number window shuffles EVERY row and
     sorts each partition; this formulation gets map-side partial
     aggregation — duplicate groups collapse before the shuffle, so
     shuffle volume is O(distinct keys), and there is no sort at all.

@@ -90,23 +90,6 @@ def pack_sequences(
     return src.groupBy("pack_bucket").applyInPandas(pack, schema=_PACK_OUT)
 
 
-def packing_efficiency(packed: DataFrame, budget: int) -> DataFrame:
-    """One-row rollup: bins, docs, token fill ratio of the packing —
-    the metric a pipeline watches to size its budget/bucket knobs."""
-    bins = packed.groupBy("pack_bucket", "bin_id").agg(
-        F.sum("n_tokens").alias("bin_tokens")
-    )
-    return bins.agg(
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-        F.sum("bin_tokens").cast("long").alias("total_tokens"),
-        F.round(
-            F.sum("bin_tokens")
-            / (F.count(F.lit(1)) * F.lit(float(budget))),
-            4,
-        ).alias("fill_ratio"),
-    )
-
-
 def chunk_documents(
     docs: DataFrame,
     text_col: str = "text",

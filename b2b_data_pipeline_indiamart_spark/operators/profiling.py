@@ -247,78 +247,6 @@ def expectations(
     return out
 
 
-def diff_snapshots(
-    old: DataFrame, new: DataFrame, keys: "list[str]"
-) -> DataFrame:
-    """Row-level diff between two versions of a keyed table — the
-    reconciliation report run after a backfill/migration (datacompy's
-    job, Spark-shaped): classify every key as added / removed /
-    changed / unchanged and say WHICH columns changed.
-
-    Output (one row per non-unchanged key + per-status rollup is the
-    caller's groupBy away): (status, <keys...>, changed_cols
-    array<string> — empty for added/removed).
-
-    Scale shape: ONE full outer join on the key columns (null-safe on
-    both sides' presence flags, not on key values — keys are assumed
-    non-null, the usual PK contract), column comparison as a map-only
-    projection of ``NOT (old.c <=> new.c)`` null-safe equals per
-    shared non-key column; no windows, no collects. Column sets may
-    differ: only SHARED non-key columns are compared (schema
-    evolution adds columns — a column present on one side only is not
-    a row-level change).
-    """
-    shared = [
-        c for c in old.columns if c in set(new.columns) and c not in keys
-    ]
-    o = old.select(
-        *[F.col(k).alias(f"__k_{k}") for k in keys],
-        *[F.col(c).alias(f"__o_{c}") for c in shared],
-        F.lit(True).alias("__in_old"),
-    )
-    n = new.select(
-        *[F.col(k).alias(f"__nk_{k}") for k in keys],
-        *[F.col(c).alias(f"__n_{c}") for c in shared],
-        F.lit(True).alias("__in_new"),
-    )
-    cond = None
-    for k in keys:
-        e = F.col(f"__k_{k}") == F.col(f"__nk_{k}")
-        cond = e if cond is None else (cond & e)
-    j = o.join(n, cond, "full_outer")
-    changed = F.filter(
-        F.array(
-            *[
-                F.when(
-                    ~F.col(f"__o_{c}").eqNullSafe(F.col(f"__n_{c}")),
-                    F.lit(c),
-                )
-                for c in shared
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
-    status = (
-        F.when(F.col("__in_old").isNull(), "added")
-        .when(F.col("__in_new").isNull(), "removed")
-        .when(F.size(changed) > 0, "changed")
-        .otherwise("unchanged")
-    )
-    return j.select(
-        status.alias("status"),
-        *[
-            F.coalesce(F.col(f"__k_{k}"), F.col(f"__nk_{k}")).alias(k)
-            for k in keys
-        ],
-        F.when(
-            F.col("__in_old").isNotNull() & F.col("__in_new").isNotNull(),
-            changed,
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("changed_cols"),
-    ).filter(F.col("status") != "unchanged")
-
-
 def psi_drift(
     df: DataFrame,
     value_col: str,

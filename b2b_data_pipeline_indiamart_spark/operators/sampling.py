@@ -298,49 +298,6 @@ def sample_per_group(
     )
 
 
-def purge_subjects(
-    tables: "dict[str, DataFrame]",
-    subject_keys: DataFrame,
-    key_cols: "dict[str, str]",
-) -> "dict[str, DataFrame]":
-    """Deletion-request propagation (GDPR Art. 17 / CCPA shape): drop
-    every row belonging to the requested subjects from each table of a
-    dataset, in one consistent sweep.
-
-    ``tables`` maps table name → DataFrame; ``key_cols`` maps the same
-    names to the column that identifies the subject there (e.g.
-    ``{"events": "user_id", "orders": "o_custkey"}``). Tables absent
-    from ``key_cols`` pass through untouched (no subject data).
-
-    Scale shape: the request list is small by nature (a regulator's
-    batch, not a corpus) — broadcast LEFT ANTI join per table, so each
-    table is one map-side pass with zero shuffle and the request list
-    is scanned once per table. Writing the result back with
-    ``sources.sinks.upsert_partitions`` (date-partitioned layouts)
-    rewrites only the partitions that actually contained the subject
-    when paired with a pre-filter on the partition column; the sweep
-    itself never collects or mutates in place.
-
-    Returns the purged frames keyed like ``tables``; callers decide
-    the write-back. The anti join preserves each table's schema
-    exactly.
-    """
-    key_df = subject_keys
-    [subject_col] = key_df.columns
-    out: "dict[str, DataFrame]" = {}
-    for name, df in tables.items():
-        col = key_cols.get(name)
-        if col is None:
-            out[name] = df
-            continue
-        out[name] = df.join(
-            F.broadcast(key_df),
-            df[col] == key_df[subject_col],
-            "left_anti",
-        )
-    return out
-
-
 def k_anonymity_report(
     df: DataFrame, quasi_cols: "list[str]", k: int = 5
 ) -> DataFrame:
@@ -387,55 +344,6 @@ def k_anonymity_report(
         .otherwise(F.lit(0.0))
         .alias("risky_row_share"),
     )
-
-
-def k_anonymity_suppress(
-    df: DataFrame, quasi_cols: "list[str]", k: int = 5
-) -> DataFrame:
-    """Enforcement half of :func:`k_anonymity_report`: NULL out the
-    quasi-identifier columns of every row whose quasi-group has fewer
-    than ``k`` members (suppression — the simplest k-anonymity
-    mechanism; generalization hierarchies are the finer-grained
-    alternative). Other columns pass through untouched, schema
-    preserved.
-
-    Scale shape: group sizes via one keyed combining aggregate; the
-    risky-group set joins back as a flag join on the quasi key with
-    NULL-SAFE equality — a NULL city is a real group and must
-    suppress like any other. Never a window over the full frame. The
-    risky set carries NO forced broadcast: a high-cardinality
-    quasi-identifier set (many tiny groups — exactly the risky-release
-    scenario this audits) makes it unbounded, so the hint is left to
-    the threshold + AQE, which broadcast precisely when the set is
-    actually small (the expectations fk branch's reasoning).
-    """
-    small = (
-        df.groupBy(*quasi_cols)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") < k)
-        .select(
-            *[F.col(c).alias(f"__q_{c}") for c in quasi_cols],
-            F.lit(True).alias("__small"),
-        )
-    )
-    cond = None
-    for c in quasi_cols:
-        e = F.col(c).eqNullSafe(F.col(f"__q_{c}"))
-        cond = e if cond is None else (cond & e)
-    joined = df.join(small, cond, "left")
-    out_cols = []
-    for c in df.columns:
-        if c in quasi_cols:
-            out_cols.append(
-                F.when(
-                    F.col("__small"), F.lit(None).cast(df.schema[c].dataType)
-                )
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        else:
-            out_cols.append(F.col(c))
-    return joined.select(*out_cols)
 
 
 def l_diversity_report(

@@ -181,6 +181,19 @@ def _topk_sql(src: str, score: str, k: int) -> str:
     ) WHERE rnk <= {k}"""
 
 
+def _nearest_seeds_sql(seeds: str, vec: str, keep: "tuple[str, ...]" = ()) -> str:
+    """DuckDB spelling of similarity._nearest_seeds: every row of CTE
+    ``v`` (vec_id, e, *keep) against every row of ``seeds`` (cid,
+    ``vec``), cosine rounded to 6dp BEFORE ranking, ties to the lower
+    cid, as (vec_id, *keep, cid, rn); ``rn = 1`` is the cell."""
+    kept = "".join(f"{c}, " for c in keep)
+    return f"""SELECT vec_id, {kept}cid, row_number() OVER (
+        PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
+      FROM (SELECT v.vec_id, {"".join(f"v.{c}, " for c in keep)}s.cid,
+                   round({_cos_sql('v.e', f's.{vec}')}, 6) AS sim
+            FROM v CROSS JOIN {seeds} s)"""
+
+
 # ==========================================================================
 # §2A — cleaning / standardization (etl.py parity)
 # ==========================================================================
@@ -1963,17 +1976,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     seeds AS (SELECT vec_id AS cid, e AS se FROM v
               WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 16)),
-    sims AS (
-      SELECT v.vec_id, s.cid,
-             round({_cos_sql('v.e', 'se')}, 6) AS sim
-      FROM v CROSS JOIN seeds s
-    ),
-    ranked AS (
-      SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY sim DESC, cid ASC) AS rn
-      FROM sims
-    ),
+    ranked AS ({_nearest_seeds_sql('seeds', 'se')}),
     cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
     probes AS (SELECT vec_id AS query_id, cid AS cell FROM ranked
                WHERE rn <= 4 AND vec_id < 5),
@@ -8113,16 +8116,9 @@ def embedding_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM embeddings),
     seeds AS (SELECT vec_id AS cid, e AS se FROM v
               WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 8)),
-    sims AS (
-      SELECT v.vec_id, v.label, s.cid,
-             round({_cos_sql('v.e', 'se')}, 6) AS sim
-      FROM v CROSS JOIN seeds s
-    ),
-    cells AS (SELECT vec_id, label, cluster FROM (
-      SELECT vec_id, label, cid AS cluster,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY sim DESC, cid ASC) AS rn
-      FROM sims) WHERE rn = 1),
+    cells AS (SELECT vec_id, label, cid AS cluster
+              FROM ({_nearest_seeds_sql('seeds', 'se', ('label',))})
+              WHERE rn = 1),
     cl AS (SELECT cluster, label, count(*) AS n FROM cells GROUP BY 1, 2),
     agg AS (SELECT cluster, CAST(sum(n) AS BIGINT) AS n_vecs
             FROM cl GROUP BY 1),
@@ -8452,9 +8448,9 @@ def events_users_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit (sampling.k_anonymity_report) on the customer
     table over the (nation, market segment) quasi-identifier pair —
-    the privacy QA gate before a data release, completing the privacy
-    family next to pii_redact / anonymize_hash / purge_subjects. One
-    keyed combining aggregate + a one-row rollup."""
+    the privacy QA gate before a data release, next to pii_redact and
+    anonymize_hash in the privacy family. One keyed combining
+    aggregate + a one-row rollup."""
     from ..operators import sampling
 
     customer = _t(spark, sf_dir, "customer")
@@ -11738,16 +11734,8 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM embeddings),
     seeds AS (SELECT vec_id AS cid, e AS se FROM v
               WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 8)),
-    sims AS (
-      SELECT v.vec_id, s.cid,
-             round({_cos_sql('v.e', 'se')}, 6) AS sim
-      FROM v CROSS JOIN seeds s
-    ),
-    cells AS (SELECT vec_id, cluster FROM (
-      SELECT vec_id, cid AS cluster,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY sim DESC, cid ASC) AS rn
-      FROM sims) WHERE rn = 1),
+    cells AS (SELECT vec_id, cid AS cluster
+              FROM ({_nearest_seeds_sql('seeds', 'se')}) WHERE rn = 1),
     cv AS (SELECT c.vec_id, c.cluster, v.e
            FROM cells c JOIN v ON c.vec_id = v.vec_id),
     dropped AS (
@@ -11795,14 +11783,9 @@ def _ivf_lloyd_sql(n_iters: int = 2, n_probe: int = 4, k: int = 10) -> str:
     prev_cent = "seeds"
     for t in range(n_iters):
         steps.append(f"""
-    sims{t} AS (
-      SELECT v.vec_id, c.cid, round({_cos_sql('v.e', 'c.ce')}, 6) AS sim
-      FROM v CROSS JOIN {prev_cent} c),
     cells{t} AS MATERIALIZED (
-      SELECT vec_id, cid AS cell FROM (
-        SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                 ORDER BY sim DESC, cid ASC) AS rn
-        FROM sims{t}) WHERE rn = 1),
+      SELECT vec_id, cid AS cell
+      FROM ({_nearest_seeds_sql(prev_cent, 'ce')}) WHERE rn = 1),
     s{t} AS MATERIALIZED (
       SELECT c.cell, u.j, sum(u.q) AS s
       FROM uq u JOIN cells{t} c ON c.vec_id = u.vec_id
@@ -11829,13 +11812,7 @@ def _ivf_lloyd_sql(n_iters: int = 2, n_probe: int = 4, k: int = 10) -> str:
                              ELSE e[dd.j] END * 1000000.0 + 0.5) AS BIGINT) AS q
       FROM v CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS j) dd),
     {",".join(steps)},
-    simsF AS (
-      SELECT v.vec_id, c.cid, round({_cos_sql('v.e', 'c.ce')}, 6) AS sim
-      FROM v CROSS JOIN {prev_cent} c),
-    ranked AS (
-      SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-               ORDER BY sim DESC, cid ASC) AS rn
-      FROM simsF),
+    ranked AS ({_nearest_seeds_sql(prev_cent, 'ce')}),
     fcells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
     probes AS (SELECT vec_id AS query_id, cid AS cell FROM ranked
                WHERE rn <= {n_probe} AND vec_id < 5),

@@ -431,175 +431,3 @@ def compact_parquet(
     swap_dir(spark, path, tmp, aside)
     return n_files
 
-
-def scd2_apply(
-    current: DataFrame,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    tracked_cols: Sequence[str],
-    batch_ts: str,
-    *,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    is_current: str = "is_current",
-    open_end: str = "9999-12-31 00:00:00",
-) -> DataFrame:
-    """Slowly-changing-dimension TYPE 2 merge: fold one update batch
-    into a versioned dimension snapshot, returning the NEW snapshot —
-    the warehouse-load pattern the reference's append-only SQLite load
-    (main.py's to_sql) silently loses history to. Rows whose tracked
-    attributes changed get their current version CLOSED
-    (valid_to = batch_ts, is_current = false) and a fresh open version
-    appended; unchanged rows pass through untouched; brand-new keys
-    open their first version at ``batch_ts``.
-
-    Pure-DataFrame (engine-agnostic output): the function computes the
-    snapshot rather than mutating storage, so the caller picks the
-    sink — overwrite a parquet dimension dir, MERGE INTO a warehouse
-    table via JDBC, or feed a downstream join directly.
-
-    Scale shape: ONE equi-join of the current OPEN slice against the
-    update batch on the business key (historical/closed versions never
-    join — they union back unchanged after a cheap is_current filter),
-    change detection is a null-safe equality on the tracked columns
-    (eqNullSafe — NULL→value and value→NULL are real changes), and the
-    output is three union branches (history + closed/carried current +
-    new versions) with identical schemas. No window, no global sort;
-    the join broadcasts whenever the batch is small (AQE/threshold),
-    which is the common nightly-load case.
-
-    Contract: ``updates`` carries exactly (key_cols + tracked_cols) —
-    one row per key (dedupe upstream: batches with several versions of
-    one key need one scd2_apply per micro-batch or a pre-collapse);
-    ``current`` is a prior scd2 snapshot or an empty frame with the
-    snapshot schema.
-    """
-    from pyspark.sql import functions as F
-
-    keys = list(key_cols)
-    tracked = list(tracked_cols)
-    ts = F.lit(batch_ts).cast("timestamp")
-    open_lit = F.lit(open_end).cast("timestamp")
-
-    history = current.filter(~F.col(is_current))
-    open_now = current.filter(F.col(is_current))
-
-    upd = updates.select(
-        *[F.col(c).alias(f"__u_{c}") for c in keys + tracked]
-    )
-    key_cond = None
-    for c in keys:
-        e = F.col(c).eqNullSafe(F.col(f"__u_{c}"))
-        key_cond = e if key_cond is None else (key_cond & e)
-    joined = open_now.join(upd, key_cond, "full_outer")
-
-    same = None
-    for c in tracked:
-        e = F.col(c).eqNullSafe(F.col(f"__u_{c}"))
-        same = e if same is None else (same & e)
-
-    in_current = F.col(is_current).isNotNull()
-    in_batch = F.col(f"__u_{keys[0]}").isNotNull() if keys else F.lit(False)
-
-    # branch 1: open rows — carried (unchanged or absent from batch),
-    # or closed at batch_ts (tracked attrs changed)
-    carried = joined.filter(in_current).select(
-        *keys,
-        *tracked,
-        F.col(valid_from),
-        F.when(in_batch & ~same, ts).otherwise(F.col(valid_to)).alias(valid_to),
-        F.when(in_batch & ~same, F.lit(False))
-        .otherwise(F.lit(True))
-        .alias(is_current),
-    )
-    # branch 2: fresh versions — changed keys and brand-new keys
-    fresh = joined.filter(
-        in_batch & (~in_current | ~same)
-    ).select(
-        *[F.col(f"__u_{c}").alias(c) for c in keys],
-        *[F.col(f"__u_{c}").alias(c) for c in tracked],
-        ts.alias(valid_from),
-        open_lit.alias(valid_to),
-        F.lit(True).alias(is_current),
-    )
-    cols = keys + tracked + [valid_from, valid_to, is_current]
-    return (
-        history.select(*cols)
-        .unionByName(carried.select(*cols))
-        .unionByName(fresh.select(*cols))
-    )
-
-
-def scd2_init(
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    tracked_cols: Sequence[str],
-    batch_ts: str,
-    *,
-    open_end: str = "9999-12-31 00:00:00",
-) -> DataFrame:
-    """First snapshot for :func:`scd2_apply`: every row opens its
-    initial version at ``batch_ts``. Pure projection — no shuffle."""
-    from pyspark.sql import functions as F
-
-    return updates.select(
-        *key_cols,
-        *tracked_cols,
-        F.lit(batch_ts).cast("timestamp").alias("valid_from"),
-        F.lit(open_end).cast("timestamp").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-
-
-def scd2_asof_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    *,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    how: str = "left",
-) -> DataFrame:
-    """Temporal (point-in-time) join of a fact stream against an SCD2
-    dimension: each fact row picks up the dimension version that was
-    CURRENT at the fact's own timestamp (``valid_from <= ts <
-    valid_to``) — the consumer side of :func:`scd2_apply`, and the
-    join that makes keeping history worthwhile (training-data
-    point-in-time correctness: features must reflect what was known
-    AT event time, not today's values — the leakage rule every
-    feature-store join has to obey).
-
-    Scale shape: an equi-join on the business key with the validity
-    range as a residual join condition — NOT a generic interval/theta
-    join, because version intervals of ONE key never overlap (the
-    scd2 invariant), so the per-key match is unique and the equi-join
-    keyed on the business key is the whole story: hash/sort-merge on
-    the key, range predicate evaluated on the joined row. Dimensions
-    are usually ≪ facts, so the dim side broadcasts under the
-    threshold/AQE like any other dim. No window, no explode, no
-    bucketized range trick needed (contrast operators/temporal's
-    range_join, where intervals DO overlap).
-
-    ``how='left'`` keeps facts whose timestamp precedes the first
-    version (NULL dim columns) — the honest default for late
-    backfills; 'inner' drops them.
-    """
-    from pyspark.sql import functions as F
-
-    keys = list(key_cols)
-    cond = None
-    for c in keys:
-        e = facts[c].eqNullSafe(dim[c])
-        cond = e if cond is None else (cond & e)
-    cond = (
-        cond
-        & (facts[ts_col] >= dim[valid_from])
-        & (facts[ts_col] < dim[valid_to])
-    )
-    joined = facts.join(dim, cond, how)
-    # drop the dim's duplicate key columns (facts' survive)
-    out = joined
-    for c in keys:
-        out = out.drop(dim[c])
-    return out

@@ -15,10 +15,8 @@ to ``applyInPandasWithState``: :func:`running_user_totals`,
 :func:`stateful_sessionize` (event-time timeout) and
 :func:`running_distinct_types`.
 
-The ``foreachBatch`` sinks share two protocols, each written once: the
-epoch ledger (:func:`_ledgered`) that makes a replayed epoch a no-op,
-and the park-aside directory swap with its crash recovery
-(``sources.sinks.swap_dir`` / ``recover_dir``).
+The exactly-once ``foreachBatch`` sinks share one epoch ledger
+(:func:`_ledgered`) that makes a replayed epoch a no-op.
 """
 
 from __future__ import annotations
@@ -31,14 +29,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.rounding import round_half_up
 from ..operators.dedup import LSH_MAX_BUCKET_DEFAULT
-from ..sources.sinks import (
-    hadoop_path,
-    recover_dir,
-    scd2_apply,
-    scd2_init,
-    swap_dir,
-    upsert_partitions,
-)
+from ..sources.sinks import hadoop_path, upsert_partitions
 
 
 def event_stream_schema() -> T.StructType:
@@ -424,29 +415,6 @@ def streaming_decontaminate(
     )
 
 
-def streaming_cms_cells(
-    event_stream: DataFrame, key_col: str = "user_id", depth: int = 4, width: int = 1024
-) -> DataFrame:
-    """Streaming face of the count-min sketch: the same per-event
-    (row, bucket) expansion as operators/sketches.cms_cells, but the
-    counter table is maintained as a STREAMING aggregation — state is
-    bounded at depth × width rows forever, which is the whole point of
-    sketching a stream: heavy-hitter frequency over an unbounded key
-    space with O(1) memory and no watermark/eviction policy needed
-    (counters only grow; emit in update mode).
-
-    Both faces share the SAME code path — this delegates to
-    sketches.cms_cells (the transformation is streaming-agnostic, so
-    Spark plans it as a streaming aggregation when the input is a
-    stream), which is what makes the pinned stream-cells == batch-
-    cells twin contract unbreakable: there is one hash expression to
-    change, not two copies to keep in sync.
-    """
-    from ..operators.sketches import cms_cells
-
-    return cms_cells(event_stream, key_col, depth=depth, width=width)
-
-
 def _ledgered(ledger_dir: str, write_epoch):
     """The epoch ledger every exactly-once ``foreachBatch`` sink here
     shares: returns the function to pass to ``foreachBatch``, which
@@ -479,40 +447,6 @@ def _ledgered(ledger_dir: str, write_epoch):
         fs.createNewFile(marker)
 
     return run
-
-
-def start_idempotent_batch_sink(
-    sdf: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    ledger_dir: str,
-) -> StreamingQuery:
-    """foreachBatch sink with an epoch ledger (:func:`_ledgered`) —
-    exactly-once delivery to a sink that is only atomic per-directory
-    (object stores, JDBC staging tables, external APIs).
-
-    Each epoch writes to ``output_dir/epoch=<id>`` in overwrite mode, so
-    a half-written directory without a ledger entry is overwritten by
-    the retry and a committed epoch is never rewritten. Readers see
-    exactly-once output; the partition layout also gives them
-    epoch-grain pruning.
-
-    Scale notes: the ledger touch is one tiny driver-side marker per
-    epoch (metadata-scale, like the streaming offset log itself);
-    the epoch write is a normal distributed parquet job. The same
-    shape serves JDBC (staging table + transactional rename) or an API
-    (epoch-id dedup key).
-    """
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{output_dir}/epoch={epoch_id}")
-
-    return (
-        sdf.writeStream.foreachBatch(_ledgered(ledger_dir, write_epoch))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
 
 
 def neardup_state_schemas(id_field, k: int):
@@ -1016,26 +950,6 @@ def start_embedding_neardup_suppress_sink(
     )
 
 
-def streaming_quality_gate(doc_stream: DataFrame) -> DataFrame:
-    """Streaming face of the model-based quality filter: the SAME
-    operator function (operators/textstats.quality_logit) applied to
-    the live ingest feed.
-
-    There is deliberately no reimplementation here — quality_logit is
-    a pure Catalyst projection (zero shuffle, zero state), so the
-    batch operator IS streaming-safe as written: append-mode clean,
-    no watermark, per-row cost identical to the batch plan. This
-    wrapper exists to state that contract and to carry the pytest pin
-    that streaming flags equal the batch operator's on the same rows
-    (tests/test_streaming.py) — the same twin discipline as
-    streaming_decontaminate, which needed an actual restatement
-    (its batch shape has a groupBy) where this one does not.
-    """
-    from ..operators.textstats import quality_logit
-
-    return quality_logit(doc_stream)
-
-
 _TYPES_STATE = T.StructType([T.StructField("types", T.ArrayType(T.StringType()))])
 
 _TYPES_OUT = T.StructType(
@@ -1113,8 +1027,8 @@ def start_incremental_rollup(
     silently dropping the untouched ones (measured, not
     hypothetical). Crash/replay safety comes from the same property:
     a replayed microbatch rewrites the same partitions with the same
-    state-store contents (idempotent) — the epoch-ledger sink's
-    guarantee without a ledger, because the write unit IS the update
+    state-store contents (idempotent) — the guarantee of
+    :func:`_ledgered` without a ledger, because the write unit IS the update
     unit.
 
     Readers see a plain partitioned parquet table
@@ -1147,100 +1061,6 @@ def start_incremental_rollup(
         agg.writeStream.foreachBatch(upsert)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def start_scd2_dimension_sink(
-    update_stream: DataFrame,
-    snapshot_dir: str,
-    checkpoint_dir: str,
-    key_cols: "list[str]",
-    tracked_cols: "list[str]",
-    snapshot_schema: str,
-) -> StreamingQuery:
-    """Streaming type-2 dimension maintenance: each micro-batch of
-    attribute updates folds into a versioned SCD2 snapshot via
-    ``sources.sinks.scd2_apply`` — the live counterpart of the nightly
-    dimension load, giving downstream joins an always-current
-    ``is_current`` slice plus full history.
-
-    foreachBatch is the right tool (not a stateful operator): the
-    snapshot is a TABLE the merge both reads and rewrites, which
-    stream-native operators cannot express — and foreachBatch's
-    batch-DataFrame view lets the same scd2_apply code serve batch
-    and streaming unchanged.
-
-    Batch mechanics: read the prior snapshot (or start empty with the
-    declared schema), collapse the micro-batch to ONE row per key
-    (latest by a deterministic struct-max — scd2_apply's one-version-
-    per-batch contract), stamp the version at the epoch grain
-    ('epoch-<id>' as valid_from would break timestamp typing, so the
-    batch timestamp is derived from the epoch id deterministically),
-    apply, write to ``__next`` and swap it in with the park-aside
-    sequence of ``sources.sinks.swap_dir`` (``__aside`` holds the old
-    copy), after ``recover_dir`` at batch start, so a COMPLETE
-    snapshot copy is reachable at every step — a crash between renames
-    can no longer leave no snapshot and trick the replayed epoch into
-    the scd2_init branch (which would silently drop all history).
-    Non-atomicity on object stores is documented at swap_dir. Replays
-    of a crashed epoch re-apply the identical batch; scd2_apply is
-    idempotent on identical input (pytest-pinned), so the snapshot
-    converges rather than double-versioning.
-
-    Scale notes: each epoch is one open-slice equi-join (broadcast
-    when the batch is small — the common case) plus a full snapshot
-    rewrite; at a 100 TB dimension the rewrite becomes the bottleneck
-    and the swap target is a partitioned layout rewritten only for
-    touched partitions (upsert_partitions) or a MERGE INTO a
-    table format with row-level deletes.
-    """
-
-    def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        # one row per key: latest wins, deterministically — max over a
-        # struct ordered by every tracked column (no event-time column
-        # in the update contract, so value-order is the tiebreak)
-        latest = (
-            batch_df.groupBy(*key_cols)
-            .agg(
-                F.max(F.struct(*tracked_cols)).alias("__v")
-            )
-            .select(*key_cols, "__v.*")
-        )
-        # version timestamp = pure function of the epoch id (strictly
-        # increasing across epochs, identical on replay)
-        import datetime as _dt
-
-        batch_ts = (
-            _dt.datetime(2000, 1, 1) + _dt.timedelta(minutes=epoch_id)
-        ).strftime("%Y-%m-%d %H:%M:%S")
-        nxt = snapshot_dir.rstrip("/") + "__next"
-        aside = snapshot_dir.rstrip("/") + "__aside"
-        # crash recovery FIRST: if a prior epoch died mid-swap the
-        # snapshot dir may be missing while a complete copy sits at
-        # __next (it already INCLUDES that epoch's apply) or __aside
-        # (the pre-apply snapshot). Restore it before deciding between
-        # the init and apply branches, otherwise the replayed epoch
-        # rebuilds the dimension from one batch and loses all history.
-        if recover_dir(spark, snapshot_dir, nxt, aside):
-            current = spark.read.parquet(snapshot_dir)
-            snap = scd2_apply(
-                current, latest, key_cols, tracked_cols, batch_ts
-            )
-        else:
-            snap = scd2_init(latest, key_cols, tracked_cols, batch_ts)
-        # overwrite replaces any stale partial __next from a crash
-        # that happened mid-write (before the copy was complete)
-        snap.write.mode("overwrite").parquet(nxt)
-        swap_dir(spark, snapshot_dir, nxt, aside)
-
-    return (
-        update_stream.writeStream.foreachBatch(apply_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
         .start()
     )
 

@@ -1,9 +1,12 @@
 """SURVEY.md §2 is the judge's coverage checklist — every registry key
 must have a row there (and the bench extended keys must exist), so the
-inventory can never drift from the code."""
+inventory can never drift from the code; and every package function
+needs a non-test caller, so code that only tests reach cannot return."""
 
 from __future__ import annotations
 
+import ast
+from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -52,3 +55,77 @@ def test_survey_status_cells_match_oracle_membership():
         if key not in ORACLE and says_sql:
             stale.append((key, "labeled SQL but has no oracle"))
     assert not stale, stale
+
+
+#: package functions kept without a non-test caller, each for a reason
+#: the code inventory alone cannot show
+_NO_CALLER_ALLOWED = {
+    # ROADMAP item 1 wires it into run_pipeline's run record
+    "observe_quality",
+    # exact all-pairs reference that cosine_neardup_blocked is tested against
+    "cosine_neardup_pairs",
+    # the raw-corpus entry points (JSONL, media dir); the warehouses are parquet
+    "read_jsonl_documents",
+    "read_binary_documents",
+    # the applyInPandasWithState tracker the streaming module documents
+    "running_distinct_types",
+}
+
+
+def _names_used(nodes) -> set:
+    used = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+    return used
+
+
+def test_package_functions_have_a_non_test_caller():
+    """Code that only tests reach goes: every top-level package function
+    is a registered query, is listed in its subpackage's ``__all__``, is
+    referenced by non-test code (the package outside the function's own
+    body, ``tools/``, ``perfbench/``, ``bench.py``, ``__spark_entry__.py``),
+    or is allowlisted above. References match by bare name, so a
+    function that shares a name with a used attribute passes."""
+    pkg = REPO / "b2b_data_pipeline_indiamart_spark"
+    modules = {
+        p: ast.parse(p.read_text()).body
+        for p in sorted(pkg.rglob("*.py"))
+        if p.name != "__init__.py"
+    }
+    exported = set()
+    for init in pkg.glob("*/__init__.py"):
+        for node in ast.parse(init.read_text()).body:
+            if isinstance(node, ast.Assign) and any(
+                getattr(t, "id", None) == "__all__" for t in node.targets
+            ):
+                exported |= set(ast.literal_eval(node.value))
+    others = [
+        *(REPO / "tools").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+    ]
+    used_outside = _names_used(
+        ast.parse(p.read_text()) for p in others if not p.name.startswith("test_")
+    )
+    # per top-level statement, so a function's own body is left out below
+    uses = {id(n): _names_used([n]) for b in modules.values() for n in b}
+    n_users = Counter(name for names in uses.values() for name in names)
+    orphans = []
+    for path, body in modules.items():
+        for fn in body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            registered = any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "_register"
+                for d in fn.decorator_list
+            )
+            if registered or fn.name in exported | used_outside | _NO_CALLER_ALLOWED:
+                continue
+            if n_users[fn.name] - (fn.name in uses[id(fn)]) == 0:
+                orphans.append(f"{path.relative_to(REPO)}::{fn.name}")
+    assert not orphans, f"package functions only tests reach: {orphans}"

@@ -52,15 +52,6 @@ def test_packing_partitioning_invariant(spark):
     assert a == b
 
 
-def test_packing_efficiency_rollup(spark):
-    df = _docs(spark, [128] * 10)
-    packed = packing.pack_sequences(df, "ws_tokens", budget=256, n_buckets=1)
-    eff = packing.packing_efficiency(packed, budget=256).collect()[0]
-    assert eff["n_bins"] == 5
-    assert eff["total_tokens"] == 1280
-    assert eff["fill_ratio"] == 1.0
-
-
 def test_packing_rejects_bad_budget(spark):
     with pytest.raises(ValueError):
         packing.pack_sequences(_docs(spark, [1]), "ws_tokens", budget=0)

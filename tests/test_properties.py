@@ -373,73 +373,6 @@ def test_bpe_pair_counts_conservation(spark, texts):
 
 @SLOW
 @given(
-    batches=st.lists(
-        st.dictionaries(
-            st.integers(0, 4),  # key space
-            st.sampled_from(["a", "b", "c", None]),  # tracked value
-            min_size=1,
-            max_size=5,
-        ),
-        min_size=1,
-        max_size=4,
-    )
-)
-@pytest.mark.slow
-def test_scd2_apply_reconstructs_change_history(spark, batches):
-    """Folding N update batches through scd2_apply yields: (1) the
-    is_current slice == each key's LAST seen value; (2) total versions
-    per key == number of VALUE CHANGES in that key's update sequence;
-    (3) per-key validity intervals chain without gaps or overlaps."""
-    from b2b_data_pipeline_indiamart_spark.sources.sinks import (
-        scd2_apply,
-        scd2_init,
-    )
-
-    ts = [f"2026-01-{i + 1:02d} 00:00:00" for i in range(len(batches))]
-    snap = None
-    seen: dict[int, list] = {}
-    for i, batch in enumerate(batches):
-        df = spark.createDataFrame(
-            [(k, v) for k, v in batch.items()], "id long, v string"
-        ).coalesce(1)
-        if snap is None:
-            snap = scd2_init(df, ["id"], ["v"], ts[i])
-        else:
-            snap = scd2_apply(snap, df, ["id"], ["v"], ts[i])
-        for k, v in batch.items():
-            seen.setdefault(k, []).append(v)
-
-    rows = snap.collect()
-    # (1) current slice = last distinct-run value per key
-    cur = {r["id"]: r["v"] for r in rows if r["is_current"]}
-    want_cur = {k: vs[-1] for k, vs in seen.items()}
-    assert cur == want_cur
-    # (2) version count = change count (first value counts as one)
-    def n_changes(vs):
-        n, prev = 0, object()
-        for v in vs:
-            if v != prev:
-                n += 1
-            prev = v
-        return n
-
-    per_key: dict[int, list] = {}
-    for r in rows:
-        per_key.setdefault(r["id"], []).append(r)
-    for k, vs in seen.items():
-        assert len(per_key[k]) == n_changes(vs), (k, vs)
-    # (3) intervals chain: sorted by valid_from, each valid_to equals
-    # the successor's valid_from; only the last is open/current
-    for k, krows in per_key.items():
-        krows.sort(key=lambda r: r["valid_from"])
-        for a, b in zip(krows, krows[1:]):
-            assert a["valid_to"] == b["valid_from"]
-            assert not a["is_current"]
-        assert krows[-1]["is_current"]
-
-
-@SLOW
-@given(
     users=st.lists(st.integers(0, 10_000), min_size=1, max_size=60),
     dup=st.integers(1, 4),
 )

@@ -1019,44 +1019,6 @@ def test_hll_union_equals_direct_sketch_of_union(spark):
     assert merged == direct
 
 
-# ------------------------------------------------------ snapshot diff
-
-
-def test_diff_snapshots_classifies_and_names_columns(spark):
-    from b2b_data_pipeline_indiamart_spark.operators.profiling import (
-        diff_snapshots,
-    )
-
-    old = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", None), (4, "d", 40.0)],
-        "k long, name string, v double",
-    )
-    # 1 unchanged; 2 value change; 3 NULL->value change; 4 removed;
-    # 5 added; new side also carries an extra column (ignored)
-    new = spark.createDataFrame(
-        [(1, "a", 10.0, "x"), (2, "b", 21.0, "x"),
-         (3, "c", 3.0, "x"), (5, "e", 50.0, "x")],
-        "k long, name string, v double, extra string",
-    )
-    out = {r["k"]: (r["status"], sorted(r["changed_cols"]))
-           for r in diff_snapshots(old, new, ["k"]).collect()}
-    assert out == {
-        2: ("changed", ["v"]),
-        3: ("changed", ["v"]),
-        4: ("removed", []),
-        5: ("added", []),
-    }
-
-
-def test_diff_snapshots_identical_frames_empty(spark, sf_small):
-    from b2b_data_pipeline_indiamart_spark.operators.profiling import (
-        diff_snapshots,
-    )
-
-    orders = spark.read.parquet(f"{sf_small}/orders.parquet")
-    assert diff_snapshots(orders, orders, ["o_orderkey"]).count() == 0
-
-
 # --------------------------------------------------------- A/B testing
 
 

@@ -74,45 +74,9 @@ def test_sampling_plan_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_purge_subjects_removes_only_requested_rows(spark):
-    from b2b_data_pipeline_indiamart_spark.operators.sampling import purge_subjects
-
-    events = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (3, 30.0)], ["user_id", "v"]
-    )
-    orders = spark.createDataFrame(
-        [(100, 1), (101, 2), (102, 9)], ["o_orderkey", "o_custkey"]
-    )
-    lookup = spark.createDataFrame([("x",)], ["name"])  # no subject column
-    req = spark.createDataFrame([(2,)], ["subject"])
-    out = purge_subjects(
-        {"events": events, "orders": orders, "lookup": lookup},
-        req,
-        {"events": "user_id", "orders": "o_custkey"},
-    )
-    assert {r["user_id"] for r in out["events"].collect()} == {1, 3}
-    assert {r["o_custkey"] for r in out["orders"].collect()} == {1, 9}
-    # untouched table passes through with schema intact
-    assert out["lookup"].columns == ["name"] and out["lookup"].count() == 1
-    # schema preserved on purged tables
-    assert out["events"].columns == events.columns
-
-
-def test_purge_subjects_anti_join_is_broadcast(spark):
-    from b2b_data_pipeline_indiamart_spark.operators.sampling import purge_subjects
-
-    events = spark.range(100).select(F.col("id").alias("user_id"))
-    req = spark.createDataFrame([(5,)], ["subject"])
-    out = purge_subjects({"events": events}, req, {"events": "user_id"})
-    plan = out["events"]._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert out["events"].count() == 99
-
-
-def test_k_anonymity_report_and_suppress(spark):
+def test_k_anonymity_report(spark):
     from b2b_data_pipeline_indiamart_spark.operators.sampling import (
         k_anonymity_report,
-        k_anonymity_suppress,
     )
 
     rows = (
@@ -125,17 +89,3 @@ def test_k_anonymity_report_and_suppress(spark):
     assert (r["n_rows"], r["n_groups"]) == (9, 3)
     assert (r["n_small_groups"], r["n_risky_rows"]) == (2, 3)
     assert r["risky_row_share"] == 0.3333
-
-    sup = {row["id"]: (row["country"], row["segment"])
-           for row in k_anonymity_suppress(df, ["country", "segment"], k=5).collect()}
-    assert len(sup) == 9
-    for i in range(6):
-        assert sup[i] == ("IN", "retail")  # safe group untouched
-    for i in (10, 11, 20):
-        assert sup[i] == (None, None)      # risky rows suppressed
-    # post-suppression: every surviving quasi-group is >= k or fully NULL
-    [r2] = k_anonymity_report(
-        k_anonymity_suppress(df, ["country", "segment"], k=5),
-        ["country", "segment"], k=3,
-    ).collect()
-    assert r2["n_small_groups"] == 0

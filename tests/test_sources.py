@@ -629,122 +629,6 @@ def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
     assert compact_parquet(spark, p, target_file_bytes=1 << 30) == 1
 
 
-# ------------------------------------------------------------- SCD2 merge
-
-
-def test_scd2_init_and_apply_versions(spark):
-    from b2b_data_pipeline_indiamart_spark.sources.sinks import (
-        scd2_apply,
-        scd2_init,
-    )
-
-    updates0 = spark.createDataFrame(
-        [(1, "alice", "IN"), (2, "bob", "US")],
-        "id long, name string, country string",
-    )
-    snap = scd2_init(updates0, ["id"], ["name", "country"], "2026-01-01 00:00:00")
-    assert snap.count() == 2
-    assert {r["is_current"] for r in snap.collect()} == {True}
-
-    # batch 2: id=1 changes country, id=2 unchanged, id=3 new
-    updates1 = spark.createDataFrame(
-        [(1, "alice", "SG"), (2, "bob", "US"), (3, "carol", None)],
-        "id long, name string, country string",
-    )
-    snap2 = scd2_apply(
-        snap, updates1, ["id"], ["name", "country"], "2026-02-01 00:00:00"
-    )
-    rows = {(r["id"], r["is_current"]): r for r in snap2.collect()}
-    assert len(rows) == 4  # 1-closed, 1-open, 2-open(carried), 3-open
-    closed = rows[(1, False)]
-    assert str(closed["valid_to"]).startswith("2026-02-01")
-    assert closed["country"] == "IN"
-    assert rows[(1, True)]["country"] == "SG"
-    assert str(rows[(1, True)]["valid_from"]).startswith("2026-02-01")
-    # unchanged row carried with its ORIGINAL valid_from
-    assert str(rows[(2, True)]["valid_from"]).startswith("2026-01-01")
-    # new key opens at batch ts; NULL tracked value is fine
-    assert rows[(3, True)]["country"] is None
-
-
-def test_scd2_null_transitions_are_changes(spark):
-    """NULL→value and value→NULL must CLOSE the version (eqNullSafe
-    change detection), not pass through as 'unchanged'."""
-    from b2b_data_pipeline_indiamart_spark.sources.sinks import (
-        scd2_apply,
-        scd2_init,
-    )
-
-    snap = scd2_init(
-        spark.createDataFrame([(1, None), (2, "x")], "id long, v string"),
-        ["id"],
-        ["v"],
-        "2026-01-01 00:00:00",
-    )
-    upd = spark.createDataFrame([(1, "now-set"), (2, None)], "id long, v string")
-    snap2 = scd2_apply(snap, upd, ["id"], ["v"], "2026-03-01 00:00:00")
-    cur = {r["id"]: r["v"] for r in snap2.filter("is_current").collect()}
-    assert cur == {1: "now-set", 2: None}
-    assert snap2.filter("NOT is_current").count() == 2
-
-
-def test_scd2_apply_idempotent_on_unchanged_batch(spark):
-    """Re-applying the identical batch produces the identical
-    snapshot — no spurious versions (retry safety)."""
-    from b2b_data_pipeline_indiamart_spark.sources.sinks import (
-        scd2_apply,
-        scd2_init,
-    )
-
-    upd = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    snap = scd2_init(upd, ["id"], ["v"], "2026-01-01 00:00:00")
-    snap2 = scd2_apply(snap, upd, ["id"], ["v"], "2026-02-01 00:00:00")
-    a = sorted(map(str, snap.collect()))
-    b = sorted(map(str, snap2.collect()))
-    assert a == b
-
-
-def test_scd2_asof_join_point_in_time(spark):
-    """Facts pick the dim version valid AT their timestamp; facts
-    before the first version keep NULLs under how='left'."""
-    from b2b_data_pipeline_indiamart_spark.sources.sinks import (
-        scd2_apply,
-        scd2_asof_join,
-        scd2_init,
-    )
-
-    snap = scd2_init(
-        spark.createDataFrame([(1, "IN"), (2, "US")], "id long, c string"),
-        ["id"], ["c"], "2026-01-01 00:00:00",
-    )
-    snap = scd2_apply(
-        snap,
-        spark.createDataFrame([(1, "SG"), (2, "US")], "id long, c string"),
-        ["id"], ["c"], "2026-02-01 00:00:00",
-    )
-    facts = spark.createDataFrame(
-        [
-            (1, "2025-12-31 23:00:00"),  # before first version -> NULL
-            (1, "2026-01-15 00:00:00"),  # IN era
-            (1, "2026-02-01 00:00:00"),  # boundary: new version wins
-            (1, "2026-03-01 00:00:00"),  # SG era
-            (2, "2026-06-01 00:00:00"),  # unchanged key
-        ],
-        "id long, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    out = scd2_asof_join(facts, snap, ["id"], "ts").orderBy("id", "ts")
-    got = [(r["id"], str(r["ts"])[:16], r["c"]) for r in out.collect()]
-    assert got == [
-        (1, "2025-12-31 23:00", None),
-        (1, "2026-01-15 00:00", "IN"),
-        (1, "2026-02-01 00:00", "SG"),
-        (1, "2026-03-01 00:00", "SG"),
-        (2, "2026-06-01 00:00", "US"),
-    ]
-    # every fact row appears exactly once (non-overlap invariant)
-    assert out.count() == facts.count()
-
-
 # ----------------------------------------- lake-maintenance crash injection
 
 
@@ -757,7 +641,9 @@ def test_compact_parquet_crash_injection_every_swap_state(spark, tmp_path):
     (2) died between rename(src→aside) and rename(tmp→src) — src
         missing, COMPLETE copies at both _compacting and _pre_compact;
     (3) died after rename(tmp→src), before delete(aside) — new src
-        plus a superseded _pre_compact."""
+        plus a superseded _pre_compact;
+    (4) src missing, only the COMPLETE _compacting copy left —
+        recovery renames it in."""
     import os
     import shutil
 
@@ -801,6 +687,15 @@ def test_compact_parquet_crash_injection_every_swap_state(spark, tmp_path):
     shutil.copytree(lake, lake + "_pre_compact")
     assert compact_parquet(spark, lake, target_file_bytes=1 << 30) == 1
     assert rows() == want
+    assert not os.path.exists(lake + "_pre_compact")
+
+    # (4) src gone, no aside: the fully written tmp is the only copy —
+    # without recovery the re-run would fail "does not exist"
+    os.rename(lake, lake + "_compacting")
+    assert not os.path.exists(lake)
+    assert compact_parquet(spark, lake, target_file_bytes=1 << 30) == 1
+    assert rows() == want
+    assert not os.path.exists(lake + "_compacting")
     assert not os.path.exists(lake + "_pre_compact")
 
 

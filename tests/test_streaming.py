@@ -309,12 +309,12 @@ def test_streaming_decontaminate_stream_static_join(spark, tmp_path):
 
 
 def test_streaming_cms_matches_batch_cells(spark, tmp_path):
-    """The streaming CMS counter table equals the batch sketch over a
-    replay of the same events — the shared-hash twin contract."""
+    """sketches.cms_cells applied to a stream plans as a streaming
+    aggregation whose counter table equals the batch sketch over a
+    replay of the same events — one hash expression serves both."""
     import json as _json
 
     from b2b_data_pipeline_indiamart_spark.operators.sketches import cms_cells
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import streaming_cms_cells
     from pyspark.sql import types as T
 
     events = [(i, i % 9) for i in range(200)]
@@ -328,7 +328,7 @@ def test_streaming_cms_matches_batch_cells(spark, tmp_path):
     )
     stream = spark.readStream.schema(schema).json(str(src))
     q = start_memory_sink(
-        streaming_cms_cells(stream, "user_id", depth=4, width=64),
+        cms_cells(stream, "user_id", depth=4, width=64),
         "cms_stream",
         output_mode="complete",
     )
@@ -344,52 +344,6 @@ def test_streaming_cms_matches_batch_cells(spark, tmp_path):
     )
     assert got == expected and len(got) <= 4 * 64
     assert sum(c for (_, _, c) in got) == 4 * 200
-
-
-def test_idempotent_batch_sink_skips_replayed_epochs(spark, tmp_path):
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        start_idempotent_batch_sink,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    ledger = str(tmp_path / "ledger")
-
-    _write_events(src / "b1.json", BATCH1)
-    q = start_idempotent_batch_sink(
-        read_event_stream(spark, str(src)), out, ckpt, ledger
-    )
-    _drain(q)
-    first = spark.read.parquet(out)
-    assert first.count() == len(BATCH1)
-
-    # simulate the replay-after-crash: the ledger says epoch 0 is
-    # committed, so re-invoking the epoch writer must be a no-op even
-    # with different data (the marker, not the content, decides)
-    import os
-
-    # ignore Hadoop LocalFileSystem .crc sidecars — the ledger now
-    # goes through the FileSystem API so it works on object stores too
-    def visible(d):
-        return {f for f in os.listdir(d) if not f.startswith(".")}
-
-    markers = visible(ledger)
-    assert markers  # at least one committed epoch
-    before = first.collect()
-    # restart with the same checkpoint + new file: new epoch appends,
-    # old epoch directories remain untouched
-    _write_events(src / "b2.json", BATCH2)
-    q = start_idempotent_batch_sink(
-        read_event_stream(spark, str(src)), out, ckpt, ledger
-    )
-    _drain(q)
-    df = spark.read.parquet(out)
-    assert df.count() == len(BATCH1) + len(BATCH2)
-    assert visible(ledger) > markers  # new epoch committed
-    # epoch partition column gives epoch-grain pruning on read
-    assert spark.read.parquet(out).where("epoch = 0").count() == len(BATCH1)
 
 
 def test_ledger_commits_only_after_the_writer_succeeds(spark, tmp_path):
@@ -424,12 +378,12 @@ def test_ledger_commits_only_after_the_writer_succeeds(spark, tmp_path):
 
 
 def test_streaming_quality_gate_equals_batch(spark, tmp_path):
+    """textstats.quality_logit is a pure projection, so the batch
+    operator runs on the live ingest stream as written: its streaming
+    flags equal the batch operator's on the same rows."""
     from b2b_data_pipeline_indiamart_spark.operators.textstats import quality_logit
     from b2b_data_pipeline_indiamart_spark.sources.jsonl_source import (
         DOCUMENTS_SCHEMA,
-    )
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        streaming_quality_gate,
     )
 
     src = tmp_path / "docs"
@@ -449,7 +403,7 @@ def test_streaming_quality_gate_equals_batch(spark, tmp_path):
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).json(str(src))
     out = str(tmp_path / "out")
     q = (
-        streaming_quality_gate(stream)
+        quality_logit(stream)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -687,139 +641,6 @@ def test_incremental_rollup_maintains_partitioned_table(spark, tmp_path):
     hours = {h for h in os.listdir(out + "/day=2026-01-01")
              if h.startswith("hour=")}
     assert hours == {"hour=10", "hour=11", "hour=12", "hour=14"}
-
-
-def test_streaming_scd2_dimension_sink(spark, tmp_path):
-    """Two micro-batches of attribute updates fold into a versioned
-    SCD2 snapshot: changed keys close their version, unchanged carry,
-    new keys open — through the foreachBatch snapshot-swap sink."""
-    import time
-
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        start_scd2_dimension_sink,
-    )
-
-    src = str(tmp_path / "updates")
-    snap_dir = str(tmp_path / "snap")
-    ckpt = str(tmp_path / "ckpt")
-    import os
-
-    os.makedirs(src)
-    spark.createDataFrame(
-        [(1, "IN"), (2, "US")], "id long, country string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b0")
-
-    stream = (
-        spark.readStream.schema("id long, country string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/*")
-    )
-    q = start_scd2_dimension_sink(
-        stream, snap_dir, ckpt, ["id"], ["country"],
-        "id long, country string",
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            q.processAllAvailable()
-            try:
-                if spark.read.parquet(snap_dir).count() >= 2:
-                    break
-            except Exception:
-                pass
-            time.sleep(0.5)
-        # batch 2: id=1 changes country, id=3 new
-        spark.createDataFrame(
-            [(1, "SG"), (3, "BR")], "id long, country string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            q.processAllAvailable()
-            try:
-                if spark.read.parquet(snap_dir).count() >= 4:
-                    break
-            except Exception:
-                pass
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    rows = {(r["id"], r["is_current"]): r for r in spark.read.parquet(snap_dir).collect()}
-    assert len(rows) == 4  # 1-closed, 1-open, 2-open, 3-open
-    assert rows[(1, False)]["country"] == "IN"
-    assert rows[(1, True)]["country"] == "SG"
-    assert rows[(2, True)]["country"] == "US"
-    assert rows[(3, True)]["country"] == "BR"
-    # closed version's valid_to == its successor's valid_from
-    assert rows[(1, False)]["valid_to"] == rows[(1, True)]["valid_from"]
-
-
-def test_streaming_scd2_sink_recovers_after_crashed_swap(spark, tmp_path):
-    """Regression for the delete-then-rename hazard: a crash between
-    the snapshot-swap renames used to leave NO snapshot dir, so the
-    replayed epoch took the scd2_init branch and silently rebuilt the
-    dimension from one batch, losing all history. The park-aside swap
-    recovers at batch start: with the snapshot missing but a complete
-    copy at ``__next``, the next epoch restores it and folds on top —
-    history intact."""
-    import os
-    import time
-
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        start_scd2_dimension_sink,
-    )
-
-    src = str(tmp_path / "updates")
-    snap_dir = str(tmp_path / "snap")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [(1, "IN"), (2, "US")], "id long, country string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b0")
-
-    def run_until(n_rows, ckpt):
-        stream = (
-            spark.readStream.schema("id long, country string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/*")
-        )
-        q = start_scd2_dimension_sink(
-            stream, snap_dir, ckpt, ["id"], ["country"],
-            "id long, country string",
-        )
-        try:
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                q.processAllAvailable()
-                try:
-                    if spark.read.parquet(snap_dir).count() >= n_rows:
-                        return
-                except Exception:
-                    pass
-                time.sleep(0.5)
-        finally:
-            q.stop()
-
-    run_until(2, str(tmp_path / "ckpt0"))
-    # simulate the crash window: the epoch's result was fully written
-    # to __next, the old snapshot was already removed, the process
-    # died before rename(__next -> snap)
-    os.rename(snap_dir, snap_dir + "__next")
-    assert not os.path.exists(snap_dir)
-    # next epoch (fresh checkpoint so b0+b1 both replay is NOT needed;
-    # only b1 is new work — recovery must restore b0's snapshot first)
-    spark.createDataFrame(
-        [(1, "SG")], "id long, country string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
-    run_until(3, str(tmp_path / "ckpt0"))
-    rows = {
-        (r["id"], r["is_current"]): r
-        for r in spark.read.parquet(snap_dir).collect()
-    }
-    # id=1's IN version survived the crash and is properly closed
-    assert rows[(1, False)]["country"] == "IN"
-    assert rows[(1, True)]["country"] == "SG"
-    assert rows[(2, True)]["country"] == "US"
-    assert not os.path.exists(snap_dir + "__next")
-    assert not os.path.exists(snap_dir + "__aside")
 
 
 def test_streaming_batch_dedup_reconcile_on_replayed_window(spark, tmp_path):
@@ -1320,91 +1141,6 @@ def test_streaming_neardup_exact_dup_storm_survives_bucket_cap(
     assert sorted(
         os.path.basename(d) for d in glob.glob(f"{out}/epoch=*")
     ) == ["epoch=0", "epoch=1"]
-
-
-def test_streaming_scd2_sink_crash_states_both_dirs_and_stale_aside(
-    spark, tmp_path
-):
-    """VERDICT r12 #6, the remaining two swap-crash windows: (a) died
-    between rename(cur→__aside) and rename(__next→cur) — cur missing,
-    BOTH __next (post-apply, authoritative) and __aside (pre-apply)
-    present: recovery must restore __next, not the older __aside, or
-    the crashed epoch's versions are lost; (b) died after
-    rename(__next→cur) before delete(__aside): the stale __aside must
-    be swept, never resurrected into a double-counted dimension."""
-    import os
-    import shutil
-    import time
-
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        start_scd2_dimension_sink,
-    )
-
-    src = str(tmp_path / "updates")
-    snap_dir = str(tmp_path / "snap")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [(1, "IN"), (2, "US")], "id long, country string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b0")
-
-    def run_until(n_rows, ckpt):
-        stream = (
-            spark.readStream.schema("id long, country string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/*")
-        )
-        q = start_scd2_dimension_sink(
-            stream, snap_dir, ckpt, ["id"], ["country"],
-            "id long, country string",
-        )
-        try:
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                q.processAllAvailable()
-                try:
-                    if spark.read.parquet(snap_dir).count() >= n_rows:
-                        return
-                except Exception:
-                    pass
-                time.sleep(0.5)
-        finally:
-            q.stop()
-
-    run_until(2, str(tmp_path / "ckpt0"))
-    # (a) build the post-apply state by hand: __next = snapshot plus a
-    # closed/open pair for id=1 (what a crashed epoch had fully
-    # written); __aside = the pre-apply snapshot; cur removed
-    shutil.copytree(snap_dir, snap_dir + "__aside")
-    os.rename(snap_dir, snap_dir + "__next")
-    # next epoch arrives; recovery must pick __next over __aside
-    spark.createDataFrame(
-        [(3, "BR")], "id long, country string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
-    run_until(3, str(tmp_path / "ckpt0"))
-    rows = {
-        (r["id"], r["is_current"]): r["country"]
-        for r in spark.read.parquet(snap_dir).collect()
-    }
-    assert rows == {(1, True): "IN", (2, True): "US", (3, True): "BR"}
-    assert not os.path.exists(snap_dir + "__next")
-    assert not os.path.exists(snap_dir + "__aside")
-
-    # (b) stale __aside next to a live snapshot: swept on next epoch,
-    # dimension not double-counted
-    shutil.copytree(snap_dir, snap_dir + "__aside")
-    spark.createDataFrame(
-        [(1, "SG")], "id long, country string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b2")
-    run_until(4, str(tmp_path / "ckpt0"))
-    got = {
-        (r["id"], r["is_current"]): r["country"]
-        for r in spark.read.parquet(snap_dir).collect()
-    }
-    assert got == {
-        (1, False): "IN", (1, True): "SG",
-        (2, True): "US", (3, True): "BR",
-    }
-    assert not os.path.exists(snap_dir + "__aside")
 
 
 def test_streaming_drift_monitor_psi(spark, tmp_path):
