@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import fan_out
+
 TABLES = (
     "region",
     "nation",
@@ -72,7 +74,7 @@ def table_disk_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
     FileSystem API (metadata only — no Spark job; works on any
     supported URI, same contract as compact_parquet / the streaming
     epoch ledger). Cached per path: the testdata is immutable for a
-    session, and the cache keeps the gate free on the 185-key registry
+    session, and the cache keeps the gate free across the registry,
     where the same dims load thousands of times."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     cached = _disk_bytes_cache.get(path)
@@ -190,28 +192,11 @@ _PARALLEL_KEYS = {
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """``load`` + adaptive HASH repartition (on the table id) for
-    fact-side scans.
-
-    A single-file, single-row-group parquet (the shape of the testdata)
-    scans as ONE task no matter how many cores exist, serializing every
-    downstream join/window/regex until the first shuffle. When the scan
-    yields fewer partitions than ``defaultParallelism``, repartition up
-    to it; on a real multi-file dataset (the 100 TB case) the scan
-    already has ≥ cores partitions and this is a no-op — no shuffle is
-    added. Catalyst still pushes filters through the repartition into
-    the scan. Use for fact tables feeding compute-heavy plans; keep
-    plain ``load`` for scan→aggregate plans where map-side partial
-    aggregation makes an extra shuffle a pure loss.
-
-    The repartition hashes the table's id column instead of the old
-    round-robin (r16, guide §2.5): every keyless ``repartition(n)``
-    first LOCALLY SORTS its input so task retries reproduce the same
-    row→partition map (``spark.sql.execution.sortBeforeRepartition``);
-    hashing a deterministic high-cardinality key needs no such sort
-    and is retry-stable by construction (plan diff =
-    ``Exchange RoundRobinPartitioning`` + map-side ``Sort`` →
-    ``Exchange hashpartitioning(id)``).
+    """``load`` + ``session.fan_out`` on the table id, for fact-side
+    scans feeding compute-heavy plans. Catalyst still pushes filters
+    through the repartition into the scan. Keep plain ``load`` for
+    scan→aggregate plans where map-side partial aggregation makes an
+    extra shuffle a pure loss.
 
     Measured against a plain ``load`` on 4 cores, 5 interleaved warm
     runs per side, every key's rows hash-identical on both sides: at
@@ -222,8 +207,4 @@ def load_parallel(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     is up to 14% faster on some keys, while docs_cdc_dedup is 1.84×
     slower without the fan-out. sf1 and sf10 are unmeasured.
     """
-    df = load(spark, sf_dir, table)
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, df[_PARALLEL_KEYS[table]])
-    return df
+    return fan_out(load(spark, sf_dir, table), _PARALLEL_KEYS[table])

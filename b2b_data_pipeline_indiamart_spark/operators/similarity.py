@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_half_up
+from ..session import fan_out
 
 
 def as_double_array(col: Column) -> Column:
@@ -376,11 +377,7 @@ def ivf_assign(
     cents = np.array(centroids, dtype=np.float64)
     spark = emb.sparkSession
     bc = spark.sparkContext.broadcast(cents)
-    n = emb.rdd.getNumPartitions()
-    target = spark.sparkContext.defaultParallelism
-    src = emb.select(F.col(id_col), F.col(vec_col))
-    if n < target:
-        src = src.repartition(target)
+    src = fan_out(emb.select(F.col(id_col), F.col(vec_col)), id_col)
 
     def assign(batches):
         c = bc.value
@@ -838,15 +835,12 @@ def brute_force_topk(
     Both sides L2-normalize in their own narrow projection (norm
     computed once per VECTOR), so the per-pair work is a single dot
     product instead of three — cosine(a,b) = dot(â,b̂), NULL preserved
-    via the norm guards. The corpus side repartitions up to
-    defaultParallelism when the scan arrives under-parallelized.
+    via the norm guards. The corpus side fans out on its id
+    (``session.fan_out``) when the scan arrives under-parallelized.
     """
 
     q = _normed_projection(queries, vec_col, id_col, "query_id")
-    spark = emb.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < target:
-        emb = emb.repartition(target)
+    emb = fan_out(emb, id_col)
     c = _normed_projection(emb, vec_col, id_col, "neighbor_id")
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -2440,10 +2434,7 @@ def hard_negatives(
         anchors, vec_col, id_col, "anchor_id",
         extra={label_col: "anchor_label"},
     )
-    spark = emb.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < target:
-        emb = emb.repartition(target)
+    emb = fan_out(emb, id_col)
     c = _normed_projection(
         emb, vec_col, id_col, "neighbor_id",
         extra={label_col: "neighbor_label"},

@@ -41,9 +41,10 @@ def tumbling_agg(events: DataFrame, bucket: str = "hour") -> DataFrame:
 
 def session_ids(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-event session ids: events + a ``session_id`` column (1-based
-    per user). The shared core of :func:`sessionize` and
-    :func:`bounce_rate_daily` — lag + cumulative-sum-of-boundaries
-    over (user, time), ONE user-keyed shuffle, local sort within user.
+    per user). The one gap-session rule behind :func:`sessionize`,
+    :func:`bounce_rate_daily`, :func:`session_paths` and
+    :func:`max_concurrency` — lag + cumulative-sum-of-boundaries over
+    (user, time), ONE user-keyed shuffle, local sort within user.
     """
     gap_ms = gap_minutes * 60 * 1000
     w_user = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -404,30 +405,14 @@ def session_paths(
     into a ``"a > b > c"`` path, counted corpus-wide, top ``top_n`` by
     frequency — the clickstream path-analysis rollup.
 
-    One shuffle on user_id assigns sessions (lag + boundary cumsum);
+    One shuffle on user_id assigns sessions (:func:`session_ids`);
     the per-session prefix is an ``array_sort(collect_list(struct))``
     whose struct sorts (ts, event_id, type) — deterministic under any
     partitioning — sliced to ``path_len`` BEFORE the path groupBy, so
     the second shuffle carries one short string per session. Final
     top-n is a TakeOrderedAndProject with path tie-break.
     """
-    gap_ms = gap_minutes * 60 * 1000
-    w_user = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    ms = F.unix_millis(F.col("ts"))
-    flagged = events.withColumn(
-        "__new_session",
-        F.when(
-            F.lag(ms).over(w_user).isNull() | ((ms - F.lag(ms).over(w_user)) > gap_ms),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    w_cum = w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    with_ids = flagged.withColumn(
-        "session_id", F.sum("__new_session").over(w_cum).cast("long")
-    )
-    paths = with_ids.groupBy("user_id", "session_id").agg(
+    paths = session_ids(events, gap_minutes).groupBy("user_id", "session_id").agg(
         F.array_join(
             F.slice(
                 F.transform(
@@ -586,21 +571,8 @@ def max_concurrency(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """
     from .ranking import global_cumsum
 
-    gap_ms = gap_minutes * 60 * 1000
-    w_user = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    ms = F.unix_millis(F.col("ts"))
-    flagged = events.withColumn(
-        "__new",
-        F.when(
-            F.lag(ms).over(w_user).isNull() | ((ms - F.lag(ms).over(w_user)) > gap_ms),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    w_cum = w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     sess = (
-        flagged.withColumn("session_id", F.sum("__new").over(w_cum).cast("long"))
+        session_ids(events, gap_minutes)
         .groupBy("user_id", "session_id")
         .agg(
             F.min(F.unix_millis("ts")).alias("__start"),

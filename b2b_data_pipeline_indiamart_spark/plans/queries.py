@@ -15,17 +15,14 @@ correctness gate). Conventions that make the hash-compare stable:
   1-ulp difference in the interpolated percentile cannot move a row
   across the cut line.
 
-Scale notes live with each query. Broadcast-hint policy: region/nation
-(fixed 5/25 rows at every SF) carry an explicit ``F.broadcast`` —
-the hint documents intent and survives a conservative cluster config —
-as do one-row/bounded aggregate frames (thresholds, totals, top-k).
-The SF-PROPORTIONAL tables (customer SF·150k, supplier SF·10k, part
-SF·200k) are NEVER force-broadcast: they go through the size-gated
-``_dim`` / ``_gb`` helpers (catalog.gate_broadcast), which apply the
-hint only while the base table's on-disk footprint is under the 64 MB
-cap and otherwise leave the join to autoBroadcastJoinThreshold + AQE —
-at the 100 TB target that means a shuffle join on the key instead of a
-forced executor-OOM broadcast.
+Scale notes live with each query. Broadcast-hint policy: every hinted
+dim goes through ``_dim`` / ``_gb`` (catalog.gate_broadcast), which
+hints region/nation (fixed 5/25 rows at every SF) always and the
+SF-proportional customer/supplier/part only while the base table's
+on-disk footprint is under the 64 MB cap — over it the join is left to
+autoBroadcastJoinThreshold + AQE, a shuffle join on the key instead of
+a forced executor-OOM broadcast. One-row/bounded aggregate frames
+(thresholds, totals, top-k) carry a plain ``F.broadcast``.
 """
 
 from __future__ import annotations
@@ -157,6 +154,32 @@ def _sql_list(words) -> str:
     return "[" + ", ".join(f"'{w}'" for w in words) + "]"
 
 
+#: the textstats curation features as CTEs ``n``/``t``/``m``: per doc_id
+#: normalized text ``s``, tokens ``tk``, char/token/digit/punctuation/
+#: stopword counts, summed token length, and NULL-when-zero divisors
+_DOC_FEATURES_SQL = f"""n AS (SELECT doc_id, {_NORM} AS s FROM documents),
+    t AS (SELECT doc_id, s, {_TOKS} AS tk FROM n),
+    m AS (
+      SELECT doc_id,
+             length(s) AS n_chars, len(tk) AS n_tokens,
+             length(s) - length(regexp_replace(s, '[0-9]', '', 'g')) AS n_digits,
+             length(s) - length(regexp_replace(s, '[^\\w\\s]', '', 'g')) AS n_punct,
+             len(list_filter(tk, x -> list_contains({_sql_list(textstats.LANG_STOPWORDS["en"])}, x)))
+               AS n_stop,
+             list_sum(list_transform(tk, x -> length(x))) AS tok_chars,
+             CASE WHEN length(s) > 0 THEN CAST(length(s) AS DOUBLE) END AS safe_chars,
+             CASE WHEN len(tk) > 0 THEN CAST(len(tk) AS DOUBLE) END AS safe_toks
+      FROM t
+    )"""
+
+#: textstats.quality_logit's logistic score over ``_DOC_FEATURES_SQL``'s ``m``
+_QUALITY_Z_SQL = """(-3.0
+             + 0.8 * ln(1.0 + CAST(n_tokens AS DOUBLE))
+             + 0.2 * coalesce(tok_chars / safe_toks, 0.0)
+             + 4.0 * coalesce(n_stop / safe_toks, 0.0)
+             - 5.0 * coalesce((n_digits + n_punct) / safe_chars, 0.0))"""
+
+
 def _cos_sql(a: str, b: str) -> str:
     """DuckDB spelling of similarity.cosine / cosine_pair over two
     DOUBLE[] expressions: the same ordered dot folds, NULL when either
@@ -192,6 +215,24 @@ def _nearest_seeds_sql(seeds: str, vec: str, keep: "tuple[str, ...]" = ()) -> st
       FROM (SELECT v.vec_id, {"".join(f"v.{c}, " for c in keep)}s.cid,
                    round({_cos_sql('v.e', f's.{vec}')}, 6) AS sim
             FROM v CROSS JOIN {seeds} s)"""
+
+
+def _session_ids_sql(cols: str) -> str:
+    """DuckDB spelling of temporal.session_ids as a CTE named ``ids``:
+    events ``cols`` plus a BIGINT ``session_id`` (1-based per user),
+    a new session at a user's first event or after a gap over 30
+    minutes."""
+    return f"""ids AS (
+      SELECT {cols},
+             CAST(sum(CASE WHEN prev_ms IS NULL OR epoch_ms(ts) - prev_ms > 1800000
+                           THEN 1 ELSE 0 END)
+                  OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS session_id
+      FROM (SELECT *, lag(epoch_ms(ts)) OVER (PARTITION BY user_id
+                        ORDER BY ts ASC, event_id ASC) AS prev_ms
+            FROM events)
+    )"""
 
 
 # ==========================================================================
@@ -317,8 +358,8 @@ def region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer → nation → region with both dims broadcast — zero
     shuffle on the fact side until the tiny final aggregation."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    region = F.broadcast(_t(spark, sf_dir, "region"))
+    nation = _dim(spark, sf_dir, "nation")
+    region = _dim(spark, sf_dir, "region")
     return (
         cust.join(nation, cust.c_nationkey == nation.n_nationkey)
         .join(region, nation.n_regionkey == region.r_regionkey)
@@ -529,8 +570,8 @@ def etl_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _tp(spark, sf_dir, "lineitem")
     part = _dim(spark, sf_dir, "part")
     supp = _dim(spark, sf_dir, "supplier")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    region = F.broadcast(_t(spark, sf_dir, "region"))
+    nation = _dim(spark, sf_dir, "nation")
+    region = _dim(spark, sf_dir, "region")
     # part and supplier joins must precede the dedup (its keys come
     # from them); nation/region resolve AFTER the dedup so (a) the
     # dedup shuffle carries a long s_nationkey instead of the
@@ -641,7 +682,7 @@ def top_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency top-N (analysis.py:277-296 city bar chart ≙ customers
     per nation). Dim join broadcast; top-k is TakeOrderedAndProject."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
     joined = cust.join(nation, cust.c_nationkey == nation.n_nationkey)
     return analytics.top_groups(joined, "n_name", n=10)
 
@@ -696,7 +737,7 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def count_avg_combo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group count + avg combo chart (analysis.py:390-431)."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
     joined = cust.join(nation, cust.c_nationkey == nation.n_nationkey)
     return analytics.count_avg_combo(joined, "n_name", "c_acctbal", n=8)
 
@@ -834,7 +875,7 @@ def unknown_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unknown-location share (reports/unknown_location_share.csv);
     unknowns constructed via c_custkey % 13 then filled."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
     loc = F.coalesce(
         F.when(F.col("c_custkey") % 13 == 0, F.lit(None).cast("string")).otherwise(F.col("n_name")),
         F.lit("Unknown"),
@@ -1008,8 +1049,8 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = _t(spark, sf_dir, "lineitem")
     supp = _dim(spark, sf_dir, "supplier")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    region = F.broadcast(_t(spark, sf_dir, "region"))
+    nation = _dim(spark, sf_dir, "nation")
+    region = _dim(spark, sf_dir, "region")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -1110,20 +1151,8 @@ def events_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "events_sessionize",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, ts, value,
-             CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ), ids AS (
-      SELECT user_id, ts, value,
-             CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM flagged
-    )
+    f"""
+    WITH {_session_ids_sql("user_id, ts, value")}
     SELECT user_id, session_id, COUNT(*) AS n_events,
            CAST(max(epoch_ms(ts)) - min(epoch_ms(ts)) AS BIGINT) AS session_ms,
            round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
@@ -2186,24 +2215,11 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "doc_quality",
     f"""
-    WITH n AS (SELECT doc_id, {_NORM} AS s FROM documents),
-    t AS (SELECT doc_id, s, {_TOKS} AS tk FROM n),
-    m AS (
-      SELECT doc_id, s, tk,
-             length(s) AS n_chars, len(tk) AS n_tokens,
-             length(s) - length(regexp_replace(s, '[0-9]', '', 'g')) AS n_digits,
-             length(s) - length(regexp_replace(s, '[^\\w\\s]', '', 'g')) AS n_punct,
-             len(list_filter(tk, x -> list_contains({_sql_list(textstats.LANG_STOPWORDS["en"])}, x)))
-               AS n_stop,
-             CASE WHEN length(s) > 0 THEN CAST(length(s) AS DOUBLE) END AS safe_chars,
-             CASE WHEN len(tk) > 0 THEN CAST(len(tk) AS DOUBLE) END AS safe_toks
-      FROM t
-    )
+    WITH {_DOC_FEATURES_SQL}
     SELECT doc_id,
            CAST(n_chars AS BIGINT) AS n_chars,
            CAST(n_tokens AS BIGINT) AS n_tokens,
-           round(coalesce(list_sum(list_transform(tk, x -> length(x))) / safe_toks, 0.0), 4)
-             AS avg_token_len,
+           round(coalesce(tok_chars / safe_toks, 0.0), 4) AS avg_token_len,
            round(coalesce(n_digits / safe_chars, 0.0), 4) AS digit_ratio,
            round(coalesce(n_punct / safe_chars, 0.0), 4) AS punct_ratio,
            round(coalesce(n_stop / safe_toks, 0.0), 4) AS stopword_ratio,
@@ -2893,7 +2909,7 @@ def filtered_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     for partitioning the serving table by the interactive filter
     columns: the filter prunes partitions before any IO."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
     joined = cust.join(nation, cust.c_nationkey == nation.n_nationkey)
     filtered = analytics.apply_filters(
         joined, {"n_name": "NATION_11", "c_mktsegment": "BUILDING"}
@@ -3513,21 +3529,8 @@ ORACLE["corpus_prep_e2e"] = f"""
 
 @_register(
     "events_session_paths",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, ts, event_type,
-             CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ), ids AS (
-      SELECT user_id, event_id, ts, event_type,
-             sum(new_session) OVER (PARTITION BY user_id
-                  ORDER BY ts ASC, event_id ASC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged
-    ), p AS (
+    f"""
+    WITH {_session_ids_sql("user_id, event_id, ts, event_type")}, p AS (
       SELECT user_id, session_id,
              array_to_string(list(event_type ORDER BY ts, event_id)[1:3], ' > ')
                AS path
@@ -4326,20 +4329,8 @@ def part_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "events_session_stats",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, ts, value,
-             CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ), ids AS (
-      SELECT user_id, ts, value,
-             CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM flagged
-    ), sess AS (
+    f"""
+    WITH {_session_ids_sql("user_id, ts, value")}, sess AS (
       SELECT user_id, session_id, COUNT(*) AS n_events,
              CAST(max(epoch_ms(ts)) - min(epoch_ms(ts)) AS BIGINT) AS session_ms,
              round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
@@ -4724,17 +4715,17 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey; the asymmetric pair filter (either direction, not both
     nations on one side) runs after the dims attach, and the final
     group is ≤ 2 directions × years."""
-    nation = _t(spark, sf_dir, "nation")
+    nation = _dim(spark, sf_dir, "nation")
     pair = ("NATION_1", "NATION_2")
     supp = (
         _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .filter(F.col("n_name").isin(*pair))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust = (
         _t(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .filter(F.col("n_name").isin(*pair))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
@@ -4787,7 +4778,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the filtered half-year slice. Top-20 is
     TakeOrderedAndProject — no global sort materializes."""
     cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    nation = _dim(spark, sf_dir, "nation")
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
@@ -4796,7 +4787,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(exact_sum(_pc() * _dc(), 4).alias("revenue"))
         .select(
@@ -5626,22 +5617,8 @@ def docs_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "events_max_concurrency",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ), ids AS (
-      SELECT user_id, ts,
-             CAST(sum(new_session) OVER (PARTITION BY user_id
-                  ORDER BY ts ASC, event_id ASC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-               AS session_id
-      FROM flagged
-    ), sess AS (
+    f"""
+    WITH {_session_ids_sql("user_id, ts")}, sess AS (
       SELECT user_id, session_id,
              min(epoch_ms(ts)) AS s, max(epoch_ms(ts)) + 1 AS e
       FROM ids GROUP BY 1, 2
@@ -5945,18 +5922,18 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem ⋈ orders on orderkey; everything else is a broadcast
     hash join, and the share is a conditional-sum ratio in a
     years-sized aggregate."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = _dim(spark, sf_dir, "nation")
+    region = _dim(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     cust = (
         _t(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey")
     )
     supp = (
         _t(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
+            nation.select("n_nationkey", "n_name"),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
@@ -6493,29 +6470,8 @@ def docs_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "docs_quality_logit",
     f"""
-    WITH n AS (SELECT doc_id, {_NORM} AS s FROM documents),
-    t AS (SELECT doc_id, s, {_TOKS} AS tk FROM n WHERE s IS NOT NULL),
-    m AS (
-      SELECT doc_id,
-             length(s) AS n_chars, len(tk) AS n_tokens,
-             length(s) - length(regexp_replace(s, '[0-9]', '', 'g')) AS n_digits,
-             length(s) - length(regexp_replace(s, '[^\\w\\s]', '', 'g')) AS n_punct,
-             len(list_filter(tk, x -> list_contains({_sql_list(textstats.LANG_STOPWORDS["en"])}, x)))
-               AS n_stop,
-             list_sum(list_transform(tk, x -> length(x))) AS tok_chars,
-             CASE WHEN length(s) > 0 THEN CAST(length(s) AS DOUBLE) END AS safe_chars,
-             CASE WHEN len(tk) > 0 THEN CAST(len(tk) AS DOUBLE) END AS safe_toks
-      FROM t
-    ),
-    z AS (
-      SELECT doc_id,
-             -3.0
-             + 0.8 * ln(1.0 + CAST(n_tokens AS DOUBLE))
-             + 0.2 * coalesce(tok_chars / safe_toks, 0.0)
-             + 4.0 * coalesce(n_stop / safe_toks, 0.0)
-             - 5.0 * coalesce((n_digits + n_punct) / safe_chars, 0.0) AS z
-      FROM m
-    )
+    WITH {_DOC_FEATURES_SQL},
+    z AS (SELECT doc_id, {_QUALITY_Z_SQL} AS z FROM m WHERE n_chars IS NOT NULL)
     SELECT doc_id,
            round(1.0 / (1.0 + exp(-z)), 4) AS quality_prob,
            round(1.0 / (1.0 + exp(-z)), 4) >= 0.5 AS keep
@@ -6846,13 +6802,13 @@ def supplier_percentile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation-PARTITIONED — bounded partitions, never a global sort."""
     li = _t(spark, sf_dir, "lineitem")
     supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    nation = _dim(spark, sf_dir, "nation")
     rev = li.groupBy("l_suppkey").agg(
         exact_sum(_pc() * _dc(), 4).alias("revenue")
     )
     j = rev.join(
         _gb(supp, spark, sf_dir, "supplier"), rev["l_suppkey"] == supp["s_suppkey"]
-    ).join(F.broadcast(nation), supp["s_nationkey"] == nation["n_nationkey"])
+    ).join(nation, supp["s_nationkey"] == nation["n_nationkey"])
     w = Window.partitionBy("n_name").orderBy("revenue", "s_suppkey")
     return j.select(
         "s_suppkey",
@@ -6903,29 +6859,11 @@ def events_error_rate_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "docs_curriculum_buckets",
     f"""
-    WITH n AS (SELECT doc_id, {_NORM} AS s FROM documents),
-    t AS (SELECT doc_id, s, {_TOKS} AS tk FROM n WHERE s IS NOT NULL),
-    m AS (
-      SELECT doc_id, len(tk) AS n_tokens,
-             length(s) AS n_chars,
-             length(s) - length(regexp_replace(s, '[0-9]', '', 'g')) AS n_digits,
-             length(s) - length(regexp_replace(s, '[^\\w\\s]', '', 'g')) AS n_punct,
-             len(list_filter(tk, x -> list_contains({_sql_list(textstats.LANG_STOPWORDS["en"])}, x)))
-               AS n_stop,
-             list_sum(list_transform(tk, x -> length(x))) AS tok_chars,
-             CASE WHEN length(s) > 0 THEN CAST(length(s) AS DOUBLE) END AS safe_chars,
-             CASE WHEN len(tk) > 0 THEN CAST(len(tk) AS DOUBLE) END AS safe_toks
-      FROM t
-    ),
+    WITH {_DOC_FEATURES_SQL},
     z AS (
       SELECT doc_id, n_tokens,
-             round(1.0 / (1.0 + exp(-(-3.0
-               + 0.8 * ln(1.0 + CAST(n_tokens AS DOUBLE))
-               + 0.2 * coalesce(tok_chars / safe_toks, 0.0)
-               + 4.0 * coalesce(n_stop / safe_toks, 0.0)
-               - 5.0 * coalesce((n_digits + n_punct) / safe_chars, 0.0)))), 4)
-               AS quality_prob
-      FROM m
+             round(1.0 / (1.0 + exp(-{_QUALITY_Z_SQL})), 4) AS quality_prob
+      FROM m WHERE n_chars IS NOT NULL
     ),
     ph AS (SELECT *, ntile(4) OVER (ORDER BY quality_prob ASC, doc_id ASC) AS phase
            FROM z)
@@ -6967,20 +6905,8 @@ def docs_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "events_bounce_rate",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ), ids AS (
-      SELECT user_id, ts,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged
-    ), sess AS (
+    f"""
+    WITH {_session_ids_sql("user_id, ts")}, sess AS (
       SELECT user_id, session_id, min(ts) AS st, count(*) AS n
       FROM ids GROUP BY 1, 2
     )
@@ -7453,13 +7379,13 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    nation = _dim(spark, sf_dir, "nation")
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
     j = (
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .join(_gb(part, spark, sf_dir, "part"), li["l_partkey"] == part["p_partkey"])
         .join(_gb(supp, spark, sf_dir, "supplier"), li["l_suppkey"] == supp["s_suppkey"])
-        .join(F.broadcast(nation), supp["s_nationkey"] == nation["n_nationkey"])
+        .join(nation, supp["s_nationkey"] == nation["n_nationkey"])
     )
     # exact 1e4-scaled integers: 0.6*retail*qty = 60*retail_cents*qty
     profit_i = _pc() * _dc() - F.lit(60) * money_ints("p_retailprice") * money_ints(
@@ -7885,23 +7811,20 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.hard_negatives(emb, anchors, k=5)
 
 
+# not _session_ids_sql: Spark's session_window closes a session at exactly the gap (>=)
 @_register(
     "events_session_window_native",
     """
-    WITH flagged AS (
-      SELECT user_id, event_id, ts, value,
-             CASE WHEN lag(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER w >= 1800000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ), ids AS (
+    WITH ids AS (
       SELECT user_id, ts, value,
-             CAST(sum(new_session) OVER (PARTITION BY user_id
-                  ORDER BY ts ASC, event_id ASC
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS session_id
-      FROM flagged
+             CAST(sum(CASE WHEN prev_ms IS NULL OR epoch_ms(ts) - prev_ms >= 1800000
+                           THEN 1 ELSE 0 END)
+                  OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS session_id
+      FROM (SELECT *, lag(epoch_ms(ts)) OVER (PARTITION BY user_id
+                        ORDER BY ts ASC, event_id ASC) AS prev_ms
+            FROM events)
     )
     SELECT user_id,
            CAST(min(epoch_us(ts)) AS BIGINT) AS session_start_us,
@@ -9186,7 +9109,7 @@ def filtered_top_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — at 100 TB the filter prunes row groups
     before any join IO, same layout argument as filtered_summary."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
     joined = cust.join(nation, cust.c_nationkey == nation.n_nationkey)
     filtered = analytics.apply_filters(joined, {"c_mktsegment": "BUILDING"})
     return analytics.top_groups(filtered, "n_name", n=10)
@@ -9364,7 +9287,7 @@ def nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order noise cannot reach the regression."""
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
     m = (
         orders.join(
             _gb(cust, spark, sf_dir, "customer"),
@@ -9836,7 +9759,7 @@ def dashboard_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort. The nation join is a fixed-size broadcast. Long-form output
     (filter_name, value) keeps the two lists in one flat frame."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
 
     def _options(df: DataFrame, col: str, name: str) -> DataFrame:
         return (
@@ -9983,8 +9906,8 @@ def filtered_top_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, top-12 via TakeOrderedAndProject on the ≤5-row region
     grain."""
     cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    region = F.broadcast(_t(spark, sf_dir, "region"))
+    nation = _dim(spark, sf_dir, "nation")
+    region = _dim(spark, sf_dir, "region")
     joined = cust.join(nation, cust.c_nationkey == nation.n_nationkey).join(
         region, nation.n_regionkey == region.r_regionkey
     )
@@ -10063,8 +9986,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("unit_cost")
     )
     supp = _t(spark, sf_dir, "supplier")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    region = F.broadcast(_t(spark, sf_dir, "region"))
+    nation = _dim(spark, sf_dir, "nation")
+    region = _dim(spark, sf_dir, "region")
     eu = (
         supp.join(nation, supp.s_nationkey == nation.n_nationkey)
         .join(
@@ -10233,7 +10156,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qty") > 0.5 * F.col("total_qty")
     )
     supp = _t(spark, sf_dir, "supplier")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    nation = _dim(spark, sf_dir, "nation")
     named = supp.join(
         nation, supp.s_nationkey == nation.n_nationkey
     ).select("s_suppkey", "s_name", "n_name")

@@ -5,6 +5,7 @@ what we would ship to a 1000-executor cluster — AQE (runtime re-plan +
 skew-join splitting), auto broadcast for dim tables, Arrow for the few
 pandas-UDF operators, and shuffle partitions sized via env so the same
 code scales from sf0.001 (32 partitions) to 100 TB (tens of thousands).
+``fan_out`` is the one rule for widening an under-partitioned scan.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -63,6 +64,26 @@ def get_spark(app_name: str = "b2b-pipeline-spark", master: str | None = None) -
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def fan_out(df: DataFrame, key: str) -> DataFrame:
+    """Hash ``df`` on ``key`` up to ``defaultParallelism`` partitions
+    when it has fewer; otherwise return it unchanged.
+
+    A single-file, single-row-group parquet scans as ONE task however
+    many cores exist, serializing all work up to the first shuffle; a
+    real multi-file dataset already has ≥ cores partitions and gets no
+    extra shuffle. The repartition hashes ``key`` (a high-cardinality,
+    never-NULL id) rather than going round-robin: every keyless
+    ``repartition(n)`` first LOCALLY SORTS its input so task retries
+    reproduce the same row→partition map
+    (``spark.sql.execution.sortBeforeRepartition``), while hashing a
+    deterministic key needs no such sort and is retry-stable by
+    construction."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, df[key])
+    return df
 
 
 def conf_snapshot(spark: SparkSession, key: str) -> "str | None":

@@ -1,7 +1,8 @@
 """SURVEY.md §2 is the judge's coverage checklist — every registry key
 must have a row there (and the bench extended keys must exist), so the
-inventory can never drift from the code; and every package function
-needs a non-test caller, so code that only tests reach cannot return."""
+inventory can never drift from the code; every package function
+needs a non-test caller, so code that only tests reach cannot return;
+and each shared plan rule stays spelled in one place."""
 
 from __future__ import annotations
 
@@ -129,3 +130,24 @@ def test_package_functions_have_a_non_test_caller():
             if n_users[fn.name] - (fn.name in uses[id(fn)]) == 0:
                 orphans.append(f"{path.relative_to(REPO)}::{fn.name}")
     assert not orphans, f"package functions only tests reach: {orphans}"
+
+
+def test_shared_plan_rules_are_spelled_once():
+    """The scan fan-out is decided only in ``session.fan_out``; hinted
+    region/nation loads go through ``_dim`` (catalog.load_dim); the
+    oracle's gap-session boundary is ``_session_ids_sql`` plus the
+    native session_window key's own ``>=`` spelling."""
+    pkg = REPO / "b2b_data_pipeline_indiamart_spark"
+    fan_out_deciders = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef):
+                body = ast.get_source_segment(src, node)
+                if "getNumPartitions()" in body and "defaultParallelism" in body:
+                    fan_out_deciders.append(f"{path.relative_to(pkg)}::{node.name}")
+    assert fan_out_deciders == ["session.py::fan_out"], fan_out_deciders
+
+    queries = (pkg / "plans" / "queries.py").read_text()
+    assert "F.broadcast(_t(" not in queries
+    assert queries.count("lag(epoch_ms(ts))") <= 2

@@ -1,10 +1,14 @@
-"""The session's host-sized defaults."""
+"""The session's host-sized defaults and its scan fan-out rule."""
 
 from __future__ import annotations
 
 import os
 
-from b2b_data_pipeline_indiamart_spark import session
+import pytest
+from pyspark.sql import functions as F
+
+from b2b_data_pipeline_indiamart_spark import catalog, session
+from b2b_data_pipeline_indiamart_spark.operators import similarity
 
 
 def _mb(spec: str) -> int:
@@ -23,3 +27,26 @@ def test_default_driver_memory_fits_host_and_caps_at_16g(monkeypatch):
         fake = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}
         monkeypatch.setattr(session.os, "sysconf", fake.__getitem__)
         assert _mb(session.default_driver_memory()) == want_mb
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("case", ["one_partition", "wide_enough", "brute_force_topk"])
+def test_fan_out_hashes_only_under_parallelized_frames(spark, sf_small, case):
+    target = spark.sparkContext.defaultParallelism
+    if case == "brute_force_topk":
+        emb = catalog.load(spark, sf_small, "embeddings")
+        queries = emb.filter(F.col("vec_id") < 5)
+        plan = _executed(similarity.brute_force_topk(emb, queries, k=10))
+        assert "RoundRobinPartitioning" not in plan
+        assert "hashpartitioning(vec_id" in plan
+        return
+    df = spark.range(0, 64, numPartitions=1 if case == "one_partition" else target)
+    out = session.fan_out(df, "id")
+    if case == "wide_enough":
+        assert out is df
+    else:
+        assert out.rdd.getNumPartitions() == target
+        assert "hashpartitioning(id" in _executed(out)

@@ -21,19 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from b2b_data_pipeline_indiamart_spark.plans import QUERIES
 from b2b_data_pipeline_indiamart_spark.session import get_spark
-
-DEFAULT_KEYS = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "windowed_rank",
-    "etl_pipeline_e2e",
-    "events_sessionize",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "doc_quality",
-    "ann_topk",
-]
+from bench import DEFAULT_KEYS
 
 
 def mask_ids(plan: str) -> str:
