@@ -16,30 +16,23 @@ from pyspark.sql import functions as F
 from ..functions.rounding import exact_avg, money_ints, round_half_up
 
 
-def apply_filters(
-    df: DataFrame, filters: dict[str, str | None], case_insensitive: bool = False
-) -> DataFrame:
+def apply_filters(df: DataFrame, filters: dict[str, str | None]) -> DataFrame:
     """Dashboard-style interactive predicates (reference
     dashboard/webapp/views.py:40 ``apply_filters``): every chart/API
     query first narrows to the user's (state, keyword, …) selection.
 
     None values are "no filter" (the reference's absent query param).
-    Default is DIRECT equality on standardized columns — a plain
+    Predicates are DIRECT equality on standardized columns — a plain
     ``col = literal`` comparison Catalyst pushes into the parquet scan
     (visible as PushedFilters; at 100 TB, partition/row-group pruning
     is the difference between an interactive query and a full scan).
     The reference lowercases both sides (views.py:45,48) because its
     CSV is unstandardized; this engine standardizes upstream (etl
     parity), so canonical-cased equality is equivalent on engine
-    outputs. ``case_insensitive=True`` reproduces the reference
-    behavior for raw inputs, at the cost of scan pushdown.
+    outputs.
     """
     for col, val in filters.items():
-        if val is None:
-            continue
-        if case_insensitive:
-            df = df.filter(F.lower(F.col(col)) == val.lower())
-        else:
+        if val is not None:
             df = df.filter(F.col(col) == val)
     return df
 

@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 from ..functions.text import clean_text
 
 
-def standardize_strings(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """Apply ``clean_text`` to every (or the given) string column.
+def standardize_strings(df: DataFrame) -> DataFrame:
+    """Apply ``clean_text`` to every string column.
 
     Parity: etl.py:257-262 — the reference maps ``clean_text`` over all
     object columns; here it is a single projection, fully codegen'd.
     """
-    cols = columns or [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
+    cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
     out = df
     for c in cols:
         out = out.withColumn(c, clean_text(F.col(c)))

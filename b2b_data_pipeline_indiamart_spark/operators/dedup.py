@@ -470,8 +470,6 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 20,
-    check_every: int = 1,
     small_graph_cap: int = 0,
 ) -> DataFrame:
     """Cluster ids from near-dup pairs: (node, cluster_id) where
@@ -511,14 +509,11 @@ def connected_components(
     edges. Each round's edge list is ``localCheckpoint``-ed — a plain
     persist is NOT enough: unpersisting round k cascade-invalidates
     round k+1's cache, silently recomputing the whole history.
-    Convergence is checked every ``check_every`` rounds with one small
-    aggregate (edge count + order-independent hash/id sums — no
-    edge-table self-join), stopping when the edge set is stable; the
-    star fixpoint is idempotent under both steps. The default checks
-    EVERY round: a signature scan is one map-side aggregate over the
-    checkpointed edges (no extra shuffle) while a star round is ~5
-    shuffles over the same data, so detecting the fixpoint one round
-    earlier always wins — at any scale.
+    Convergence is checked every round against a signature (edge count
+    + order-independent hash/id xors — no edge-table self-join) that
+    rides the checkpoint as an ``Observation``, stopping when the edge
+    set is stable; the star fixpoint is idempotent under both steps.
+    More than ``_CC_MAX_ROUNDS`` rounds raise ``RuntimeError``.
     """
     raw = pairs.select(
         F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
@@ -547,7 +542,7 @@ def connected_components(
         spark.conf.set(
             "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
         )
-        return _connected_components_loop(raw, max_iterations, check_every)
+        return _connected_components_loop(raw)
 
 
 def _connected_components_driver(spark: SparkSession, rows) -> DataFrame:
@@ -595,6 +590,10 @@ def _connected_components_driver(spark: SparkSession, rows) -> DataFrame:
 #: ~32 MB of (long, long) edge rows per shuffle task in the CC loop.
 _CC_EDGE_ROWS_PER_TASK = 2_000_000
 
+#: star rounds before the CC loop gives up; rounds needed grow
+#: O(log² diameter), so 20 covers any graph this engine meets
+_CC_MAX_ROUNDS = 20
+
 # Measured dead-end, recorded so nobody re-tries it: fusing 2 star
 # rounds per checkpoint/signature sync was SLOWER at sf0.1 (best
 # 14.8 s vs 10.0 s), both naively (the lazily-composed intermediate is
@@ -615,23 +614,14 @@ def _cc_loop_partitions(spark: SparkSession, n_edges: int) -> int:
     The signature aggregate already collects the edge count each
     round, so sizing is free: ceil(edges / rows-per-task), capped at
     defaultParallelism (total cluster cores) — a 1B-edge round still
-    uses every core; a 12 k-edge round runs 1-task stages.
-
-    Staleness: the caller refreshes ``n_edges`` only at signature
-    checks, so with ``check_every > 1`` a round can be sized from a
-    count up to ``check_every`` rounds old. Edge lists only contract,
-    so a stale count merely over-provisions partitions (never
-    under-sizes a grown graph); the default ``check_every = 1`` makes
-    the count exact every round."""
+    uses every core; a 12 k-edge round runs 1-task stages."""
     import math
 
     cap = max(1, spark.sparkContext.defaultParallelism)
     return max(1, min(cap, math.ceil(n_edges / _CC_EDGE_ROWS_PER_TASK)))
 
 
-def _connected_components_loop(
-    raw: DataFrame, max_iterations: int, check_every: int
-) -> DataFrame:
+def _connected_components_loop(raw: DataFrame) -> DataFrame:
     spark = raw.sparkSession
     # localCheckpoint persists an INTERNAL RDD we hold no handle to; the
     # id-diff bookkeeping below (single-threaded driver — diffs are
@@ -723,16 +713,13 @@ def _connected_components_loop(
     # checkpoint's own observation — no separate job.
     prev_sig = _sig_of(obs0)
     n_edges = prev_sig[0]
-    converged = False
-    syncs = 0
-    it = 0
     # ONE star round per materialization (sync point) — see the
     # measured fused-rounds dead-end note above _cc_loop_partitions.
     # Each round's cost at small live-edge counts is per-sync fixed
     # overhead (checkpoint job + stage scheduling), which the
     # observe-fused signature and the live-edge shuffle sizing below
     # minimize.
-    while it < max_iterations:
+    for _ in range(_CC_MAX_ROUNDS):
         parts = _cc_loop_partitions(spark, n_edges)
         spark.conf.set("spark.sql.shuffle.partitions", parts)
         # A 1-partition round cannot benefit from AQE (nothing to
@@ -753,26 +740,20 @@ def _connected_components_loop(
         caching.unpersist_rdd_ids(spark, prev_ids)
         prev_ids = new_ids
         edges = ss
-        it += 1
-        syncs += 1
-        # the signature rides every checkpoint for free now; the live
-        # edge count is therefore exact every round even when the
-        # convergence COMPARE runs only at check_every sync points
+        # the signature rides the checkpoint: the live edge count and
+        # the convergence compare cost no job of their own
         sig = _sig_of(obs)
         n_edges = sig[0]
-        if syncs % check_every == 0 or it >= max_iterations:
-            if sig == prev_sig:
-                converged = True
-                break
-            prev_sig = sig
-    if not converged:
+        if sig == prev_sig:
+            break
+        prev_sig = sig
+    else:
         # The final extraction below assumes the star fixpoint (every
         # node points at its component min); an exhausted iteration
         # budget would silently yield wrong cluster ids otherwise.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations; raise max_iterations (rounds needed grow "
-            "O(log^2 diameter))"
+            f"connected_components did not converge in {_CC_MAX_ROUNDS} "
+            "rounds (rounds needed grow O(log^2 diameter))"
         )
     # nodes + final edges checkpoints stay live for the returned plan;
     # releasable by the caller via caching.release_cached() after
@@ -898,7 +879,6 @@ def blocked_dedup_clusters(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    prefixes: tuple[tuple[int, int], ...] | None = None,
     prepared: bool = False,
     small_graph_cap: int = 0,
 ) -> DataFrame:
@@ -918,11 +898,10 @@ def blocked_dedup_clusters(
     Scale shape: each blocking is a self-equi-join on a short prefix
     key (shuffle ∝ corpus); prefix length bounds expected block size
     (16^len buckets) and is AUTO-SIZED from the corpus count via
-    :func:`blocking_prefix_len` when ``prefixes`` is None — two
-    non-overlapping windows ``(1, L), (L+1, L)`` so the union graph
-    needs a real transitive closure. The sizing count is one cheap
-    column-pruned scan, paid once to keep every block O(target) at any
-    corpus size. Exact duplicates share the full digest, hence every
+    :func:`blocking_prefix_len` — two non-overlapping windows
+    ``(1, L), (L+1, L)`` so the union graph needs a real transitive
+    closure. The sizing count is one cheap column-pruned scan, paid
+    once to keep every block O(target) at any corpus size. Exact duplicates share the full digest, hence every
     block, hence always cluster together — consistent with the
     reference's exact dedup semantics (etl.py:358-368).
     """
@@ -939,9 +918,7 @@ def blocked_dedup_clusters(
             F.md5(content).alias("h"),
         )
     )
-    if prefixes is None:
-        length = blocking_prefix_len(d.count())
-        prefixes = ((1, length), (length + 1, length))
+    length = blocking_prefix_len(d.count())
     # Each block is a CLIQUE (every member shares the key), so its
     # star — member → block-minimum — has the identical transitive
     # closure with O(block) edges instead of O(block²). One shuffle
@@ -959,7 +936,7 @@ def blocked_dedup_clusters(
                 F.lit(i).alias("pid"),
                 F.substring(F.col("h"), start, length).alias("k"),
             )
-            for i, (start, length) in enumerate(prefixes)
+            for i, start in enumerate((1, length + 1))
         ]
     )
     keyed = d.select("doc_id", F.explode(pk).alias("pk")).select(

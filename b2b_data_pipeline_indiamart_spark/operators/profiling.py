@@ -16,21 +16,14 @@ from pyspark.sql import functions as F
 from ..functions.rounding import round_half_up
 
 
-def profile_report(df: DataFrame, exact_distinct: bool = True) -> DataFrame:
-    """n_rows/non_null/nulls/null_pct/distinct per column, one scan.
-
-    ``exact_distinct=False`` switches every distinct count to
-    HyperLogLog++ (``approx_count_distinct``, ~2% default rsd) — the
-    100 TB path: exact multi-column countDistinct expands the input
-    once per column, HLL sketches merge map-side in the same single
-    aggregate with O(columns) fixed-size state.
-    """
+def profile_report(df: DataFrame) -> DataFrame:
+    """n_rows/non_null/nulls/null_pct/distinct per column, one scan;
+    the distinct counts are exact."""
     cols = df.columns
-    uq = F.countDistinct if exact_distinct else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in cols:
         aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))
-        aggs.append(uq(F.col(c)).alias(f"__uq_{c}"))
+        aggs.append(F.countDistinct(F.col(c)).alias(f"__uq_{c}"))
     wide = df.agg(*aggs)
 
     # Unpivot the single wide row into (column, rows, non_null, ...) rows.

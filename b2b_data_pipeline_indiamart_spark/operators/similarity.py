@@ -1022,7 +1022,6 @@ def kcenter_coreset(
     k: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "running_min",
 ) -> DataFrame:
     """Greedy k-center (farthest-point) coreset selection (Gonzalez
     1985; Sener & Savarese 2018 for training-data curation): start
@@ -1032,21 +1031,15 @@ def kcenter_coreset(
     corpus geometry, the diversity-first dual of MMR's
     relevance-first selection.
 
-    Scale shape (``method="running_min"``, the default): carry ONE
-    persisted (id, vec, min_dist) frame; each of the k rounds updates
-    it with ``least(carried, dist-to-newest-center)`` — a single dot
-    per row per round, O(k·corpus) total — then argmaxes via
+    Scale shape: carry ONE persisted (id, vec, min_dist) frame; each
+    of the k rounds updates it with ``least(carried,
+    dist-to-newest-center)`` — a single dot per row per round,
+    O(k·corpus) total — then argmaxes via
     TakeOrderedAndProject(1) + a 1-row loop-control collect (the
     kmeans/pagerank driver-loop pattern — metadata scale, never data
     movement). No shuffle anywhere; the previous round's persist is
     released only after the next frame is materialized, so each round
     is one map-only scan of the cached frame regardless of k.
-
-    ``method="kpass"`` is the original formulation (re-least() over
-    all selected centers every round, O(k²·corpus) dots) kept as the
-    equality pin for the incremental form: ``least`` is associative
-    and null-skipping in both shapes, so the two paths produce
-    identical 4dp distances, picks, and tie-breaks.
 
     Distances are min-of-4dp values, so both engines argmax identical
     doubles; ties (dist desc NULLS LAST, id asc). Output (≤ k rows):
@@ -1067,9 +1060,8 @@ def kcenter_coreset(
     first_rows = v.orderBy(F.col("__kid").asc()).limit(1).collect()
     if not first_rows:
         return spark.createDataFrame([], schema)
-    first = first_rows[0]
-    centers = [(int(first["__kid"]), [float(x) for x in first["__kv"]])]
-    out = [(1, centers[0][0], None)]
+    first_id = int(first_rows[0]["__kid"])
+    out = [(1, first_id, None)]
 
     def _dist_to(cvec):
         return round_half_up(
@@ -1083,39 +1075,11 @@ def kcenter_coreset(
             4,
         )
 
-    if method == "kpass":
-        for rank in range(2, k + 1):
-            dists = [_dist_to(cvec) for _, cvec in centers]
-            md = dists[0] if len(dists) == 1 else F.least(*dists)
-            pick = (
-                v.filter(
-                    ~F.col("__kid").isin([cid for cid, _ in centers])
-                )
-                .select("__kid", "__kv", md.alias("__md"))
-                .orderBy(F.col("__md").desc(), F.col("__kid").asc())
-                .limit(1)
-                .collect()
-            )
-            if not pick:
-                break
-            row = pick[0]
-            centers.append(
-                (int(row["__kid"]), [float(x) for x in row["__kv"]])
-            )
-            out.append(
-                (
-                    rank,
-                    int(row["__kid"]),
-                    None if row["__md"] is None else float(row["__md"]),
-                )
-            )
-        return spark.createDataFrame(out, schema)
-
-    # running_min: one persisted frame carrying the min distance so far
+    # one persisted frame carrying the min distance so far
     # (and the hoisted vector norm, read by every round's _dist_to)
     cur = (
-        v.filter(F.col("__kid") != centers[0][0])
-        .select("__kid", "__kv", "__kn", _dist_to(centers[0][1]).alias("__md"))
+        v.filter(F.col("__kid") != first_id)
+        .select("__kid", "__kv", "__kn", _dist_to(first_rows[0]["__kv"]).alias("__md"))
         .persist()
     )
     prev = None

@@ -31,26 +31,22 @@ def salted_join(
     build: DataFrame,
     on: Sequence[str],
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join ``facts`` ⋈ ``build`` on ``on``, salted ``n_salts`` ways.
+    """Inner join ``facts`` ⋈ ``build`` on ``on``, salted ``n_salts``
+    ways.
 
-    Result rows are identical to ``facts.join(build, on, how)`` — the
-    salt only changes the partitioning. The fact side's salt can be any
+    Result rows are identical to ``facts.join(build, on)`` — the salt
+    only changes the partitioning. The fact side's salt can be any
     value in [0, n_salts); a hash of the whole row spreads a hot key's
     rows uniformly and deterministically (no rand(), so re-runs and
-    retried tasks agree). Supported ``how``: inner / left — the
-    fact-preserving shapes salting is for (right/full would need the
-    build side de-replicated afterwards).
+    retried tasks agree).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner|left, got {how!r}")
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in facts.columns]), F.lit(n_salts))
     salted_facts = facts.withColumn("__salt", salt.cast("int"))
     salted_build = build.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    out = salted_facts.join(salted_build, [*on, "__salt"], how)
+    out = salted_facts.join(salted_build, [*on, "__salt"])
     return out.drop("__salt")
 
 
@@ -61,10 +57,7 @@ def hot_keys(facts: DataFrame, on: Sequence[str], threshold: int) -> DataFrame:
     counts collapse per key before the shuffle, so the extra pass costs
     one column-pruned scan, not a full-width shuffle. The result is
     small BY CONSTRUCTION (at most ``count(facts) / threshold`` keys),
-    which is what makes broadcasting it safe at any fact size. A
-    production pipeline that already maintains a key histogram (e.g.
-    from ingest stats) can skip this and feed that table to
-    :func:`hybrid_salted_join` directly via ``hot``.
+    which is what makes broadcasting it safe at any fact size.
     """
     return (
         facts.groupBy(*[F.col(c) for c in on])
@@ -80,35 +73,24 @@ def hybrid_salted_join(
     on: Sequence[str],
     threshold: int,
     n_salts: int = 16,
-    how: str = "inner",
-    hot: DataFrame | None = None,
 ) -> DataFrame:
     """Salt ONLY the hot keys; plain-join everything else; union.
 
     :func:`salted_join` replicates the ENTIRE build side ``n_salts``× —
     the right trade when most keys are hot, pure waste when one key in
     a million is. The production shape is hybrid: detect keys above a
-    frequency ``threshold`` (one cheap aggregate, or a pre-computed
-    ``hot`` table), route those fact/build rows through the salted
-    join, and let the uniform bulk take the ordinary shuffle join.
-    Build-side replication then costs ``n_salts × |hot build rows|``
+    frequency ``threshold`` (one cheap aggregate, :func:`hot_keys`),
+    route those fact/build rows through the salted inner join, and let
+    the uniform bulk take the ordinary shuffle join. Build-side replication then costs ``n_salts × |hot build rows|``
     (a handful of keys), not ``n_salts × |build|``.
 
-    Results are identical to ``facts.join(build, on, how)`` — both
-    branches partition the SAME rows differently, and the hot set is
-    broadcast to both sides so the split is consistent. Supported
-    ``how``: inner / left (the fact-preserving shapes; each fact row
-    lands in exactly one branch, so the union never duplicates).
+    Results are identical to ``facts.join(build, on)`` — both branches
+    partition the SAME rows differently, and the hot set (one row per
+    key) is broadcast to both sides so the split is consistent: each
+    fact row lands in exactly one branch, so the union never
+    duplicates.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"hybrid_salted_join supports inner|left, got {how!r}")
-    if hot is None:
-        hot = hot_keys(facts, on, threshold)
-    # de-dup the membership set: the flag join is 1-to-N, so a
-    # caller-supplied histogram with repeated keys (e.g. per-partition
-    # counts not yet merged) would duplicate every hot-key row and
-    # break the results-identical-to-plain-join contract
-    hot = hot.select(*on).distinct()
+    hot = hot_keys(facts, on, threshold)
     flag = F.broadcast(hot.withColumn("__hot", F.lit(True)))
     f_flagged = facts.join(flag, list(on), "left")
     b_flagged = build.join(flag, list(on), "left")
@@ -116,8 +98,8 @@ def hybrid_salted_join(
     f_cold = f_flagged.filter(F.col("__hot").isNull()).drop("__hot")
     b_hot = b_flagged.filter(F.col("__hot").isNotNull()).drop("__hot")
     b_cold = b_flagged.filter(F.col("__hot").isNull()).drop("__hot")
-    hot_out = salted_join(f_hot, b_hot, on, n_salts, how)
-    cold_out = f_cold.join(b_cold, list(on), how)
+    hot_out = salted_join(f_hot, b_hot, on, n_salts)
+    cold_out = f_cold.join(b_cold, list(on))
     return hot_out.unionByName(cold_out)
 
 

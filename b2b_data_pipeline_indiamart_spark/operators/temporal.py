@@ -122,29 +122,26 @@ def asof_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     right_cols: list[str] | None = None,
-    strict: bool = True,
 ) -> DataFrame:
     """Backward as-of join: attach to each left row the latest right row
-    with ``right.ts < left.ts`` (``<=`` when ``strict=False``) within the
-    same ``on`` keys. Left rows with no match keep NULL right columns.
+    with ``right.ts < left.ts`` within the same ``on`` keys. Left rows with no match keep NULL right columns.
 
     Spark-first shape: NO join at all — union the two sides, run one
     ``last(..., ignorenulls)`` window over (on, ts), keep left rows.
     Single shuffle on the ``on`` keys, local sort within each key: the
     scale-correct idiom (a theta-join formulation would be a cross
     product per key). Tie-break at equal timestamps is encoded in the
-    sort: with ``strict`` the left row sorts BEFORE same-ts right rows
-    (excluding them from its frame); with ``strict=False`` after.
+    sort: the left row sorts BEFORE same-ts right rows, excluding them
+    from its frame.
 
     Right payload rides in one struct so arbitrarily many columns cost
     a single window expression.
     """
     right_cols = list(right_cols or [c for c in right.columns if c not in on and c != right_ts])
-    l_side, r_side = (0, 1) if strict else (1, 0)
     lhs = left.select(
         *on,
         F.col(left_ts).alias("__ts"),
-        F.lit(l_side).alias("__side"),
+        F.lit(0).alias("__side"),
         F.struct(*[F.col(c) for c in left.columns]).alias("__lv"),
         F.lit(None).cast(
             "struct<" + ",".join(f"{c}:{right.schema[c].dataType.simpleString()}" for c in [right_ts] + right_cols) + ">"
@@ -153,7 +150,7 @@ def asof_join(
     rhs = right.select(
         *on,
         F.col(right_ts).alias("__ts"),
-        F.lit(r_side).alias("__side"),
+        F.lit(1).alias("__side"),
         F.lit(None).cast(lhs.schema["__lv"].dataType.simpleString()).alias("__lv"),
         F.struct(F.col(right_ts), *[F.col(c) for c in right_cols]).alias("__rv"),
     )
@@ -165,7 +162,7 @@ def asof_join(
     matched = (
         lhs.unionByName(rhs)
         .withColumn("__m", F.last("__rv", ignorenulls=True).over(w))
-        .filter(F.col("__side") == l_side)
+        .filter(F.col("__side") == 0)
     )
     out_cols = [F.col(f"__lv.{c}").alias(c) for c in left.columns]
     out_cols.append(F.col(f"__m.{right_ts}").alias(f"matched_{right_ts}"))

@@ -64,13 +64,6 @@ class ETLConfig:
     output_db: str = "products.db"
     keep_phone_hash: bool = True
     winsorize_price: bool = True
-    #: False (default) = t-digest approx_percentile for the winsorize
-    #: bounds — the single-pass mergeable 100 TB path. True = sort-based
-    #: exact percentile, the oracle-parity mode (the registry's
-    #: ``winsorize_price`` key requests it explicitly; the pipeline
-    #: surface itself is not oracle-gated and defaults to the scale
-    #: path).
-    exact_percentiles: bool = False
     final_columns: tuple[str, ...] = field(default=DEFAULT_FINAL_COLUMNS)
 
 
@@ -112,13 +105,16 @@ def fix_types_and_features(df: DataFrame, config: ETLConfig) -> DataFrame:
         df = df.drop("phone")
 
     # etl.py:303-306: winsorize only when ≥10 non-null prices exist —
-    # the count is a single cheap action, same gate as the reference
+    # the count is a single cheap action, same gate as the reference.
+    # The bounds are t-digest approx_percentile, the single-pass
+    # mergeable path; the oracle-gated ``winsorize_price`` registry key
+    # requests the exact percentile itself.
     if config.winsorize_price and df.filter(F.col("price_numeric").isNotNull()).limit(10).count() >= 10:
         df = outliers.winsorize(
             df,
             "price_numeric",
             out_col="price_numeric_winsor",
-            exact=config.exact_percentiles,
+            exact=False,
         )
     else:
         df = df.withColumn("price_numeric_winsor", F.col("price_numeric"))
@@ -209,7 +205,7 @@ def run_pipeline(spark: SparkSession, config: ETLConfig) -> dict[str, DataFrame]
     return {"final": final, "profile": profile, "issues": issues}
 
 
-def analyze(final: DataFrame, exact: bool = False) -> dict[str, DataFrame]:
+def analyze(final: DataFrame) -> dict[str, DataFrame]:
     """The reference's full chart set (analysis.py:205-520) over a
     curated listing table — one lazy DataFrame per chart, all built
     from the generic ``operators.analytics`` plans.
@@ -219,12 +215,10 @@ def analyze(final: DataFrame, exact: bool = False) -> dict[str, DataFrame]:
     stable concept across partitionings); p99 clipping mirrors
     analysis.py's outlier handling.
 
-    ``exact=False`` (default) plans every percentile as t-digest
-    ``approx_percentile`` and distinct counts as HLL++ — single-pass,
-    mergeable map-side, the 100 TB path. ``exact=True`` restores
-    sort-based exact aggregates for small-data parity checks; the
-    oracle-gated registry keys request exactness themselves, so
-    nothing off the parity surface pays the exact-percentile buffer.
+    Every percentile is t-digest ``approx_percentile`` and every
+    distinct count HLL++ — single-pass, mergeable map-side, the 100 TB
+    path. The oracle-gated registry keys request exactness themselves,
+    so nothing off the parity surface pays the exact-percentile buffer.
     """
     from .operators import analytics
 
@@ -234,7 +228,7 @@ def analyze(final: DataFrame, exact: bool = False) -> dict[str, DataFrame]:
             final,
             {"n_keywords": "search_keyword", "n_cities": "city"},
             "price_numeric",
-            exact=exact,
+            exact=False,
         ),
         "avg_price_by_keyword": analytics.avg_by_group(
             final, "search_keyword", "price_numeric", n=10
@@ -250,10 +244,7 @@ def analyze(final: DataFrame, exact: bool = False) -> dict[str, DataFrame]:
             priced, "price_numeric", "product_name", k=10
         ),
     }
-    p99_fn = "percentile" if exact else "approx_percentile"
-    thr = priced.agg(
-        F.expr(f"{p99_fn}(price_numeric, 0.99)").alias("p99")
-    )
+    thr = priced.agg(F.expr("approx_percentile(price_numeric, 0.99)").alias("p99"))
     clipped = priced.crossJoin(F.broadcast(thr)).filter(F.col("price_numeric") <= F.col("p99"))
     charts["price_histogram"] = analytics.fixed_histogram(
         clipped, "price_numeric", bin_width=5000.0, max_bin=40

@@ -22,9 +22,11 @@ import json
 import os
 import shutil
 from datetime import datetime, timezone
-from typing import Callable, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+from .csv_source import read_csv_normalized
 
 _EMPTY = {"completed_files": [], "updated_at": None}
 
@@ -66,12 +68,11 @@ def resumable_ingest(
     output_dir: str,
     manifest_path: str,
     *,
-    reader: Callable[[SparkSession, str], DataFrame] | None = None,
     key_cols: Sequence[str] | None = None,
 ) -> list[str]:
-    """Ingest ``input_files`` into an append-mode parquet dataset,
-    skipping files the manifest already records. Returns the list of
-    files processed *this* call.
+    """Ingest ``input_files`` (CSV, via :func:`read_csv_normalized`)
+    into an append-mode parquet dataset, skipping files the manifest
+    already records. Returns the list of files processed *this* call.
 
     ``key_cols``: optional row-dedup keys. New rows whose key already
     exists in the output dataset are dropped via a left-anti join —
@@ -92,11 +93,6 @@ def resumable_ingest(
     swap the commit step for the store's atomic-commit protocol
     (e.g. a Hadoop committer / table format).
     """
-    if reader is None:
-        from b2b_data_pipeline_indiamart_spark.sources.csv_source import read_csv_normalized
-
-        reader = read_csv_normalized
-
     manifest = load_manifest(manifest_path)
     completed = list(manifest["completed_files"])
     done = set(completed)
@@ -111,7 +107,7 @@ def resumable_ingest(
         # its own partial commit.
         for leftover in glob.glob(os.path.join(output_dir, f"ingest-{tag}-*.parquet")):
             os.remove(leftover)
-        batch = reader(spark, path)
+        batch = read_csv_normalized(spark, path)
         if key_cols:
             if os.path.isdir(output_dir) and any(
                 not entry.startswith((".", "_")) for entry in os.listdir(output_dir)

@@ -44,7 +44,6 @@ def read_csv_normalized(
     path: str,
     *,
     scraped_at_col: str = "scraped_at",
-    infer_schema: bool = True,
 ) -> DataFrame:
     """Read a CSV file/dir with snake_cased headers.
 
@@ -57,7 +56,7 @@ def read_csv_normalized(
     """
     df = (
         spark.read.option("header", "true")
-        .option("inferSchema", str(infer_schema).lower())
+        .option("inferSchema", "true")
         .option("encoding", "UTF-8")
         .csv(path)
     )

@@ -65,7 +65,6 @@ def write_csv(
     path: str,
     *,
     na_rep: str = "NaN",
-    header: bool = True,
     single_file: bool = False,
     mode: str = "overwrite",
     encoding: str = "utf-8",
@@ -85,7 +84,7 @@ def write_csv(
     out = df.coalesce(1) if single_file else df
     (
         out.write.mode(mode)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .option("nullValue", na_rep)
         .option("emptyValue", na_rep)
         .option("encoding", "UTF-8" if bom else encoding)
@@ -392,7 +391,6 @@ def compact_parquet(
     path: str,
     *,
     target_file_bytes: int = 128 * 1024 * 1024,
-    schema: str | None = None,
 ) -> int:
     """Small-file compaction for a parquet directory — the lake
     maintenance job every streaming/incremental sink eventually needs
@@ -402,10 +400,8 @@ def compact_parquet(
     target_file_bytes)`` files and returns the new file count.
 
     Mechanics: recover from a crashed earlier run
-    (:func:`recover_dir`), read (with the caller's stated ``schema`` if
-    given — same rationale as the JSONL reader: inference over a
-    corrupt or evolving lake is the risk), repartition to the target
-    count, write to a ``_compacting`` sibling, then swap it in with the
+    (:func:`recover_dir`), read, repartition to the target count,
+    write to a ``_compacting`` sibling, then swap it in with the
     park-aside sequence of :func:`swap_dir` (old tree parked at
     ``_pre_compact`` until the new one is in place; not atomic on
     object stores — see there). Row-content equality is the test's
@@ -423,11 +419,8 @@ def compact_parquet(
     fs, src_path = hadoop_path(spark, path)
     total = fs.getContentSummary(src_path).getLength()
     n_files = max(1, math.ceil(total / target_file_bytes))
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
     # overwrite mode replaces any stale/partial tmp from a prior crash
-    reader.parquet(path).repartition(n_files).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(path).repartition(n_files).write.mode("overwrite").parquet(tmp)
     swap_dir(spark, path, tmp, aside)
     return n_files
 

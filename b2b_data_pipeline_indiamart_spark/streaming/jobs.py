@@ -67,20 +67,18 @@ def windowed_event_counts(
     events: DataFrame,
     *,
     window: str = "1 hour",
-    slide: str | None = None,
     watermark: str = "15 minutes",
 ) -> DataFrame:
-    """Tumbling (or sliding) windowed counts + value sum per event_type.
+    """Tumbling windowed counts + value sum per event_type.
 
     The watermark bounds state: windows older than
     ``max(event time) - watermark`` are finalized and evicted, so state
     size is O(active windows × event types) regardless of stream
     length — the property that lets this run forever at scale.
     """
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(win.alias("w"), "event_type")
+        .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),

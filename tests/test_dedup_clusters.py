@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from b2b_data_pipeline_indiamart_spark import catalog
@@ -16,6 +17,17 @@ def test_connected_components_on_known_graph(spark):
         for r in dedup.connected_components(pairs).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+
+
+def test_connected_components_fails_loudly_without_convergence(spark, monkeypatch):
+    """An exhausted round budget raises instead of returning labels
+    from a graph that has not reached the star fixpoint."""
+    monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 1)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(chain, small_graph_cap=0)
 
 
 def test_connected_components_restores_unset_confs_to_unset(spark):
@@ -110,15 +122,6 @@ def test_blocking_prefix_len_sizing():
     # monotone non-decreasing
     vals = [dedup.blocking_prefix_len(n) for n in (10, 10**3, 10**6, 10**9, 10**12)]
     assert vals == sorted(vals)
-
-
-def test_blocked_dedup_clusters_auto_prefix_matches_explicit(spark, sf_small):
-    docs = catalog.load(spark, sf_small, "documents")
-    auto = sorted(map(tuple, dedup.blocked_dedup_clusters(docs).collect()))
-    explicit = sorted(
-        map(tuple, dedup.blocked_dedup_clusters(docs, prefixes=((1, 3), (4, 3))).collect())
-    )
-    assert auto == explicit  # small corpus sits at the floor → same graph
 
 
 def test_driver_union_find_matches_distributed_loop(spark, sf_small):

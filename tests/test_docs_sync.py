@@ -1,8 +1,9 @@
 """SURVEY.md §2 is the judge's coverage checklist — every registry key
 must have a row there (and the bench extended keys must exist), so the
 inventory can never drift from the code; every package function
-needs a non-test caller, so code that only tests reach cannot return;
-and each shared plan rule stays spelled in one place."""
+needs a non-test caller, and so does every bool flag it takes, so code
+that only tests reach cannot return; and each shared plan rule stays
+spelled in one place."""
 
 from __future__ import annotations
 
@@ -84,6 +85,41 @@ def _names_used(nodes) -> set:
     return used
 
 
+_PKG = REPO / "b2b_data_pipeline_indiamart_spark"
+
+
+def _package_modules() -> dict:
+    """Top-level statements of every package module but ``__init__``."""
+    return {
+        p: ast.parse(p.read_text()).body
+        for p in sorted(_PKG.rglob("*.py"))
+        if p.name != "__init__.py"
+    }
+
+
+def _exported() -> set:
+    names = set()
+    for init in _PKG.glob("*/__init__.py"):
+        for node in ast.parse(init.read_text()).body:
+            if isinstance(node, ast.Assign) and any(
+                getattr(t, "id", None) == "__all__" for t in node.targets
+            ):
+                names |= set(ast.literal_eval(node.value))
+    return names
+
+
+def _non_test_outside_package() -> list:
+    """Parsed non-test code outside the package: ``tools/``,
+    ``perfbench/``, ``bench.py``, ``__spark_entry__.py``."""
+    others = [
+        *(REPO / "tools").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+    ]
+    return [ast.parse(p.read_text()) for p in others if not p.name.startswith("test_")]
+
+
 def test_package_functions_have_a_non_test_caller():
     """Code that only tests reach goes: every top-level package function
     is a registered query, is listed in its subpackage's ``__all__``, is
@@ -91,28 +127,9 @@ def test_package_functions_have_a_non_test_caller():
     body, ``tools/``, ``perfbench/``, ``bench.py``, ``__spark_entry__.py``),
     or is allowlisted above. References match by bare name, so a
     function that shares a name with a used attribute passes."""
-    pkg = REPO / "b2b_data_pipeline_indiamart_spark"
-    modules = {
-        p: ast.parse(p.read_text()).body
-        for p in sorted(pkg.rglob("*.py"))
-        if p.name != "__init__.py"
-    }
-    exported = set()
-    for init in pkg.glob("*/__init__.py"):
-        for node in ast.parse(init.read_text()).body:
-            if isinstance(node, ast.Assign) and any(
-                getattr(t, "id", None) == "__all__" for t in node.targets
-            ):
-                exported |= set(ast.literal_eval(node.value))
-    others = [
-        *(REPO / "tools").rglob("*.py"),
-        *(REPO / "perfbench").rglob("*.py"),
-        REPO / "bench.py",
-        REPO / "__spark_entry__.py",
-    ]
-    used_outside = _names_used(
-        ast.parse(p.read_text()) for p in others if not p.name.startswith("test_")
-    )
+    modules = _package_modules()
+    exported = _exported()
+    used_outside = _names_used(_non_test_outside_package())
     # per top-level statement, so a function's own body is left out below
     uses = {id(n): _names_used([n]) for b in modules.values() for n in b}
     n_users = Counter(name for names in uses.values() for name in names)
@@ -130,6 +147,71 @@ def test_package_functions_have_a_non_test_caller():
             if n_users[fn.name] - (fn.name in uses[id(fn)]) == 0:
                 orphans.append(f"{path.relative_to(REPO)}::{fn.name}")
     assert not orphans, f"package functions only tests reach: {orphans}"
+
+
+#: bool flags kept without a non-test caller that sets them, each for a
+#: reason the code inventory alone cannot show
+_FLAG_NO_CALLER_ALLOWED = {
+    # the overflow-safe sum for > sf40; making it the default is a q1
+    # perf question that needs its own measurement
+    "exact_sum.wide",
+}
+
+
+def test_bool_flags_have_a_non_test_caller():
+    """A flag only tests set keeps a second code path only tests run:
+    every bool-defaulted parameter of a top-level package function is
+    passed, by keyword or by position, by some non-test call (same file
+    set as the function-level check above, the function's own body left
+    out), unless the function is exempt there or the flag is allowlisted.
+    Calls match by bare name; a ``*args``/``**kwargs`` call counts as
+    passing every parameter it could reach."""
+    modules = _package_modules()
+    exempt = _exported() | _NO_CALLER_ALLOWED
+    trees = _non_test_outside_package()
+    calls = []  # (top-level statement or None, call node)
+    for tree in trees:
+        calls += [(None, n) for n in ast.walk(tree) if isinstance(n, ast.Call)]
+    for body in modules.values():
+        for top in body:
+            calls += [(top, n) for n in ast.walk(top) if isinstance(n, ast.Call)]
+
+    def callee(call):
+        f = call.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    unset = []
+    for path, body in modules.items():
+        for fn in body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name in exempt:
+                continue
+            a = fn.args
+            positional = a.posonlyargs + a.args
+            named = list(
+                zip(positional[len(positional) - len(a.defaults):], a.defaults)
+            ) + list(zip(a.kwonlyargs, a.kw_defaults))
+            flags = [
+                arg.arg
+                for arg, d in named
+                if isinstance(d, ast.Constant) and isinstance(d.value, bool)
+            ]
+            if not flags:
+                continue
+            mine = [c for top, c in calls if top is not fn and callee(c) == fn.name]
+            for flag in flags:
+                if f"{fn.name}.{flag}" in _FLAG_NO_CALLER_ALLOWED:
+                    continue
+                pos = next(
+                    (i for i, p in enumerate(positional) if p.arg == flag), None
+                )
+                if not any(
+                    any(k.arg in (flag, None) for k in c.keywords)
+                    or any(isinstance(x, ast.Starred) for x in c.args)
+                    or (pos is not None and len(c.args) > pos)
+                    for c in mine
+                ):
+                    unset.append(f"{path.relative_to(REPO)}::{fn.name}.{flag}")
+    assert not unset, f"bool flags only tests set: {unset}"
 
 
 def test_shared_plan_rules_are_spelled_once():

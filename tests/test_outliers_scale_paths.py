@@ -37,20 +37,6 @@ def test_quantiles_approx_runs(spark, sf_small):
     assert row["q_0"] <= row["q_1"] <= row["q_2"]
 
 
-def test_profile_report_approx_distinct(spark, sf_small):
-    from b2b_data_pipeline_indiamart_spark.operators import profiling
-
-    orders = catalog.load(spark, sf_small, "orders")
-    exact = {r["column"]: r["distinct_values"] for r in profiling.profile_report(orders).collect()}
-    approx = {
-        r["column"]: r["distinct_values"]
-        for r in profiling.profile_report(orders, exact_distinct=False).collect()
-    }
-    for col, e in exact.items():
-        if e:
-            assert abs(approx[col] - e) / e < 0.1  # HLL++ ~2% rsd, loose bound
-
-
 def test_kpi_summary_approx_mode(spark, sf_small):
     from b2b_data_pipeline_indiamart_spark.operators import analytics
 

@@ -194,14 +194,6 @@ def test_apply_filters_composes_with_analytics(spark, sf_small):
     assert hist.count() > 0
 
 
-def test_apply_filters_case_insensitive_mode(spark):
-    from b2b_data_pipeline_indiamart_spark.operators import analytics
-
-    df = spark.createDataFrame([("Delhi",), ("DELHI",), ("Mumbai",)], ["state"])
-    out = analytics.apply_filters(df, {"state": "delhi"}, case_insensitive=True)
-    assert out.count() == 2
-
-
 def test_docs_chunk_is_map_only(spark, sf_small):
     # the chunker's claim: zero shuffle at any corpus size
     plan = _plan(spark, sf_small, "docs_chunk")
@@ -563,9 +555,8 @@ def test_pipeline_surface_plans_no_exact_percentile(spark, tmp_path):
     ``fix_types_and_features`` and every ``analyze()`` chart — must be
     the single-pass mergeable t-digest ``approx_percentile``, never
     the sort-based exact ``percentile`` whose aggregation buffer holds
-    all values. Exactness stays opt-in (``ETLConfig.exact_percentiles``
-    / ``analyze(exact=True)``) for the oracle-parity keys, which
-    request it explicitly themselves."""
+    all values. Exactness belongs to the oracle-parity registry keys,
+    which request it explicitly themselves."""
     import re
 
     from b2b_data_pipeline_indiamart_spark import pipeline as pl
@@ -599,11 +590,6 @@ def test_pipeline_surface_plans_no_exact_percentile(spark, tmp_path):
         if "approx_percentile" in plan:
             pass  # the sanctioned form — presence is fine anywhere
     assert not offenders, offenders
-
-    # and the exact mode still exists for parity use
-    exact_frames = pl.analyze(featured, exact=True)
-    kpi_plan = exact_frames["kpi_cards"]._jdf.queryExecution().toString()
-    assert exact_pct.search(kpi_plan)
 
 
 def test_containment_tokenizes_once(spark, sf_small):

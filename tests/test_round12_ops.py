@@ -96,6 +96,27 @@ def test_scale_up_rotations_are_signed_permutations():
     assert max(cosines) < 4.5 / math.sqrt(dim)  # 4.5 sigma
 
 
+def test_scale_up_tiles_every_row_k_times(spark, sf_small, tmp_path, monkeypatch):
+    """The invariant behind ``build``'s ``n = src.count() * k`` row
+    count at k >= 1000: every tiled table holds exactly k copies of its
+    source rows, and the fixed dims (region, nation) are copied once."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    from tools import scale_up
+
+    from b2b_data_pipeline_indiamart_spark import catalog
+
+    monkeypatch.setattr(scale_up, "SRC", sf_small)
+    scale_up.build(tmp_path, 2, spark=spark)
+    for table, (pk, fks) in scale_up.KEYMAP.items():
+        copies = 1 if pk is None and not fks else 2
+        src = catalog.load(spark, sf_small, table).count()
+        out = spark.read.parquet(str(tmp_path / f"{table}.parquet")).count()
+        assert out == copies * src, (table, src, out)
+
+
 def test_scale_up_word_salt_breaks_cross_replica_shingles(spark):
     """VERDICT r11 #5 (de-tiled sf1 corpus): replicas of the SAME doc
     must not be near-duplicates (char-5-gram Jaccard well under the

@@ -4,7 +4,6 @@ the unrolled-SQL BPE trainer oracle."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from b2b_data_pipeline_indiamart_spark.operators import caching, similarity
 
@@ -256,27 +255,6 @@ def test_pandas_compare_path_matches_repr_path(spark, sf_medium):
 
 
 # ------------------------------------------------------------------ round 15
-
-
-@pytest.mark.slow
-def test_kcenter_running_min_equals_kpass_at_k32(spark, sf_small):
-    """The O(k·corpus) running-min formulation (VERDICT r14 #7) must
-    reproduce the O(k²·corpus) k-pass form EXACTLY — same picks, same
-    4dp min_dists, same tie-breaks — at a k large enough that the
-    least() chain in the legacy form is 31 wide. `least` is
-    associative and null-skipping in both shapes, so this is an
-    equality pin, not a tolerance check."""
-    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    inc = sorted(
-        similarity.kcenter_coreset(emb, k=32, method="running_min").collect(),
-        key=lambda r: r["center_rank"],
-    )
-    legacy = sorted(
-        similarity.kcenter_coreset(emb, k=32, method="kpass").collect(),
-        key=lambda r: r["center_rank"],
-    )
-    assert len(inc) == 32
-    assert [tuple(r) for r in inc] == [tuple(r) for r in legacy]
 
 
 def test_kcenter_empty_corpus_returns_empty_frame(spark):

@@ -758,20 +758,3 @@ def test_pq_short_codebook_stride(spark):
     for r in out:
         per_q.setdefault(r["query_id"], []).append(r["rnk"])
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per_q.values())
-
-
-def test_hybrid_salted_join_dedups_hot_table(spark):
-    from b2b_data_pipeline_indiamart_spark.operators import skew
-
-    facts = spark.createDataFrame([(1, "x"), (1, "y"), (2, "z")], ["k", "fv"])
-    build = spark.createDataFrame([(1, 10), (2, 20)], ["k", "bv"])
-    # caller-supplied histogram with a REPEATED key must not duplicate rows
-    hot = spark.createDataFrame([(1,), (1,)], ["k"])
-    got = sorted(
-        map(
-            tuple,
-            skew.hybrid_salted_join(facts, build, ["k"], threshold=1, hot=hot).collect(),
-        )
-    )
-    ref = sorted(map(tuple, facts.join(build, ["k"]).collect()))
-    assert got == ref

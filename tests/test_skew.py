@@ -3,7 +3,6 @@ from __future__ import annotations
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from b2b_data_pipeline_indiamart_spark import catalog
@@ -22,15 +21,6 @@ def test_salted_join_matches_plain_join(spark, sf_small):
     assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
 
 
-def test_salted_left_join_keeps_unmatched_facts(spark):
-    facts = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "x"])
-    build = spark.createDataFrame([(1, "dim1")], ["k", "d"])
-    rows = salted_join(facts, build, ["k"], n_salts=4, how="left").collect()
-    got = {(r["k"], r["d"]) for r in rows}
-    assert got == {(1, "dim1"), (2, None), (3, None)}
-    assert len(rows) == 3  # build replication must not duplicate facts
-
-
 def test_salted_join_spreads_hot_key(spark):
     # one key carries 90% of the rows; salted plan joins on (key, salt)
     facts = spark.createDataFrame(
@@ -43,12 +33,6 @@ def test_salted_join_spreads_hot_key(spark):
     with contextlib.redirect_stdout(buf):
         out.explain()
     assert "__salt" in buf.getvalue()  # join condition includes the salt
-
-
-def test_salted_join_rejects_unsupported_how(spark):
-    df = spark.range(1)
-    with pytest.raises(ValueError):
-        salted_join(df, df, ["id"], how="full")
 
 
 def test_hot_keys_detects_above_threshold(spark):
@@ -76,19 +60,6 @@ def test_hybrid_salted_join_matches_plain_join(spark):
     assert plain == hybrid
 
 
-def test_hybrid_salted_left_join_keeps_unmatched_facts(spark):
-    from b2b_data_pipeline_indiamart_spark.operators.skew import hybrid_salted_join
-
-    facts = spark.createDataFrame(
-        [(1, i) for i in range(20)] + [(2, 0), (3, 0)], ["k", "v"]
-    )
-    build = spark.createDataFrame([(1, "hot-dim"), (2, "cold-dim")], ["k", "d"])
-    rows = hybrid_salted_join(facts, build, ["k"], threshold=5, n_salts=4, how="left").collect()
-    assert len(rows) == 22  # every fact row exactly once
-    ks = {(r["k"], r["d"]) for r in rows}
-    assert (3, None) in ks and (1, "hot-dim") in ks and (2, "cold-dim") in ks
-
-
 def test_hybrid_plan_has_salted_and_plain_branches(spark):
     # cold keys must take the UNSALTED path: the optimized plan carries
     # two join branches under a union — one on (k, __salt), one on k
@@ -108,11 +79,3 @@ def test_hybrid_plan_has_salted_and_plain_branches(spark):
     join_lines = [ln for ln in plan.splitlines() if "Join Inner" in ln or "Join LeftOuter" in ln]
     assert any("__salt" not in ln for ln in join_lines), join_lines
     assert any("__salt" in ln for ln in join_lines), join_lines
-
-
-def test_hybrid_rejects_unsupported_how(spark):
-    from b2b_data_pipeline_indiamart_spark.operators.skew import hybrid_salted_join
-
-    df = spark.range(1)
-    with pytest.raises(ValueError):
-        hybrid_salted_join(df, df, ["id"], threshold=1, how="full")

@@ -9,6 +9,14 @@ bench headline set). Plans are captured against $SPARK_GRAFT_SF_DIR
 so this is safe to run on a contended box. Expression ids (``#123``),
 ``plan_id=`` numbers and RDD ids with their call sites are masked, so
 dumps of two checkouts diff clean when their plans are the same.
+
+Hazard: when many keys are dumped in one process, the masked plan of a
+key with several distinct aggregates (an ``Expand`` node, e.g.
+``events_variant_type_chisq``, ``experiment_report_e2e``) depends on
+how many expressions the earlier keys created: its ``Expand`` column
+order can flip between two checkouts whose plans for that key are the
+same. Before calling such a diff real, dump that key alone on both
+sides (``python tools/dump_plans.py <out_dir> <suffix> <key>``).
 """
 
 from __future__ import annotations
