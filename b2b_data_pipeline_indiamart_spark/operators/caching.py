@@ -105,11 +105,13 @@ def persistent_rdd_ids(spark) -> set[int]:
 def unpersist_rdd_ids(spark, ids: set[int]) -> None:
     """Unpersist persisted RDDs by id (the only handle available for
     ``localCheckpoint`` blocks). Data is unrecoverable afterwards —
-    checkpoint lineage is truncated by design."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist()
+    checkpoint lineage is truncated by design. Goes through
+    ``SparkContext.unpersistRDD``, which frees the same blocks as
+    ``RDD.unpersist()`` without its per-RDD "was locally checkpointed
+    ... cannot be recomputed" WARN on every deliberate release."""
+    sc = spark.sparkContext._jsc.sc()
+    for rdd_id in ids & persistent_rdd_ids(spark):
+        sc.unpersistRDD(rdd_id, False)
 
 
 def track_rdd_ids(spark, ids: set[int]) -> None:

@@ -9477,8 +9477,7 @@ def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     share = F.coalesce(F.col("n"), F.lit(0)) / F.col("tot").cast("double")
     return (
-        F.broadcast(e)
-        .join(g, "digit", "left")
+        e.join(g, "digit", "left")
         .crossJoin(F.broadcast(tot))
         .select(
             "digit",

@@ -24,6 +24,11 @@ def default_driver_memory() -> str:
     return f"{min(16 * 1024, ram_mb // 2)}m"
 
 
+def default_cpus() -> str:
+    """The cpus this process may run on (its scheduler affinity)."""
+    return str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "b2b-pipeline-spark", master: str | None = None) -> SparkSession:
     """Create (or fetch) a tuned SparkSession.
 
@@ -34,10 +39,10 @@ def get_spark(app_name: str = "b2b-pipeline-spark", master: str | None = None) -
       not sink a 100 TB run.
     - ``autoBroadcastJoinThreshold`` keeps dimension joins (region,
       nation, supplier, part) shuffle-free.
-    - Arrow makes the pandas-UDF operators (MinHash, SimHash,
-      multimodal) batch-transfer instead of row-pickle.
+    - Arrow makes the pandas-UDF operators (vector math, multimodal
+      decode, packing) batch-transfer instead of row-pickle.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", default_cpus())
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -52,7 +57,7 @@ def get_spark(app_name: str = "b2b-pipeline-spark", master: str | None = None) -
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128MB")
         .config("spark.sql.session.timeZone", "UTC")
-        # Up to 16g: local mode runs all 32 task slots in the ONE driver
+        # Up to 16g: local mode runs every task slot in the ONE driver
         # JVM and task retries are off (maxFailures=1), so a transient
         # GCLocker allocation failure in a heavy stage is fatal — at
         # 8g the sf10 wedge-closure stage died this way (round 13).

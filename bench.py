@@ -180,20 +180,6 @@ EXTENDED_KEYS = [
 ]
 
 
-#: sf10-only additions (VERDICT r12 #1): the near-dup / iterative
-#: families whose scaling behavior the second decade is meant to
-#: exercise (AQE skew handling, the LSH bucket cap, the CC loop's
-#: shuffle sizing). Timed best-of-1 at sf10 alongside the headline set.
-SF10_HEAVY_KEYS = [
-    "dedup_clusters_blocked",
-    "part_pagerank",
-    "part_triangle_census",
-    "ngram_jaccard",
-    "docs_pack_sequences",
-    "docs_pack_efficiency",
-]
-
-
 def sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else -1.0
@@ -343,11 +329,11 @@ def main() -> None:
             scale_up.build(sf1_dir, spark=spark)
         except Exception as exc:  # noqa: BLE001 — bench must still run
             sys.stderr.write(f"bench: sf1 build skipped: {exc}\n")
-    # The optional scale-point sections (sf1 / sf10) are SUPPLEMENTARY
-    # evidence: a failure there (an OOM on a box with less memory, a
-    # half-built warehouse dir) must never cost the driver its frozen
-    # sf0.1 headline line — r16: each section is fenced, logs to
-    # stderr, and the headline still prints LAST.
+    # The optional sf1 scale-point section is SUPPLEMENTARY evidence: a
+    # failure there (an OOM on a box with less memory, a half-built
+    # warehouse dir) must never cost the driver its frozen sf0.1
+    # headline line, so the section is fenced, logs to stderr, and the
+    # headline still prints LAST.
     if not keys_env and os.path.isdir(sf1_dir):
         try:
             sf1 = time_keys(keys, sf1_dir, 2)
@@ -360,49 +346,6 @@ def main() -> None:
             }))
         except Exception as exc:  # noqa: BLE001 — headline must print
             sys.stderr.write(f"bench: sf1 leg failed: {exc}\n")
-
-    # Third scale point (VERDICT r12 #1): the de-tiled sf10 tables
-    # (tools/scale_up.py 100) give a SECOND decade of data, so the
-    # published scaling exponents cover sf0.1 -> sf1 -> sf10. Timed
-    # only when the dir exists; the ~15 min build is opt-in
-    # (SPARK_GRAFT_BUILD_SF10=1), never a surprise in a driver run.
-    sf10_dir = os.environ.get(
-        "SPARK_GRAFT_SF10_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "spark-warehouse", "sf10"),
-    )
-    if (not keys_env and not os.path.isdir(sf10_dir)
-            and os.environ.get("SPARK_GRAFT_BUILD_SF10", "0") == "1"):
-        try:
-            sys.stderr.write("bench: building sf10 via tools/scale_up\n")
-            from tools import scale_up
-
-            scale_up.build(sf10_dir, k=100, spark=spark)
-        except Exception as exc:  # noqa: BLE001 — bench must still run
-            sys.stderr.write(f"bench: sf10 build skipped: {exc}\n")
-    if not keys_env and os.path.isdir(sf10_dir):
-        # best-of-2, SAME protocol as the sf1 line (r14): the r13
-        # best-of-1 sf10 leg compared a COLD sf10 number against a
-        # cache-warm sf1 best-of-2, which manufactured the spurious
-        # minhash d2 wall "exponent" of 1.32 — measured like-for-like
-        # (warm/warm OR cold/cold) the key scales at ~0.22 into the
-        # second decade (cold 16.4→27.2 s, warm 2.1→3.5 s on this
-        # box). Heavy keys stay best-of-1: pagerank/triangle at sf10
-        # are minutes each and their iterate-loop shape has no
-        # cross-iteration cache reuse to measure.
-        try:
-            sf10 = time_keys(keys, sf10_dir, 2)
-            heavy = time_keys(SF10_HEAVY_KEYS, sf10_dir, 1)
-            print(json.dumps({
-                "metric": "headline_queries_total_runtime_sf10",
-                "value": round(sum(sf10.values()), 3),
-                "unit": "sec",
-                "queries": sf10,
-                "heavy": heavy,
-                "sf": sf_from_dir(sf10_dir),
-            }))
-        except Exception as exc:  # noqa: BLE001 — headline must print
-            sys.stderr.write(f"bench: sf10 leg failed: {exc}\n")
 
     canary_end = canary_seconds(spark)
     # Canary-normalized total (VERDICT r14 #2): the canary is pure

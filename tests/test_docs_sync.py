@@ -2,8 +2,8 @@
 must have a row there (and the bench extended keys must exist), so the
 inventory can never drift from the code; every package function
 needs a non-test caller, and so does every bool flag it takes, so code
-that only tests reach cannot return; and each shared plan rule stays
-spelled in one place."""
+that only tests reach cannot return; and each shared plan rule, like
+the oracle parity canon, stays spelled in one place."""
 
 from __future__ import annotations
 
@@ -233,3 +233,22 @@ def test_shared_plan_rules_are_spelled_once():
     queries = (pkg / "plans" / "queries.py").read_text()
     assert "F.broadcast(_t(" not in queries
     assert queries.count("lag(epoch_ms(ts))") <= 2
+
+
+def test_parity_canon_is_spelled_once():
+    """The warehouse-wide DuckDB view setup and the float canon of the
+    driver's hash-compare live only in ``tools/full_parity.py``; the
+    tests and tools call its ``duck`` / ``check``. ``perfbench/`` keeps
+    its own frozen copy and is not scanned."""
+    import re
+
+    patterns = {
+        "view setup": re.compile(r"CREATE VIEW \{\w+\} AS SELECT \* FROM"),
+        "float canon": re.compile(r"repr\(\w+ \+ 0\.0\)"),
+    }
+    spelled = {name: [] for name in patterns}
+    for path in sorted([*(REPO / "tests").glob("*.py"), *(REPO / "tools").glob("*.py")]):
+        src = path.read_text()
+        for name, pat in patterns.items():
+            spelled[name] += [str(path.relative_to(REPO))] * len(pat.findall(src))
+    assert spelled == {name: ["tools/full_parity.py"] for name in patterns}, spelled

@@ -9,74 +9,42 @@ DuckDB SQL on the same parquet tables and assert:
   — the same shape the driver hashes.
 
 Floats are compared exactly after the registry's own rounding; a
-mismatch here means the driver's hash would differ too.
+mismatch here means the driver's hash would differ too. The compare is
+``tools/full_parity.check``, the same one the full sweep and the
+spot-check run.
 """
 
 from __future__ import annotations
 
-import math
+import sys
+from pathlib import Path
 
-import duckdb
 import pytest
 
-from b2b_data_pipeline_indiamart_spark.catalog import TABLES
 from b2b_data_pipeline_indiamart_spark.plans import ORACLE, QUERIES
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from tools import full_parity  # noqa: E402
 
 SQL_KEYS = sorted(ORACLE)
 ROWS_ONLY_KEYS = sorted(set(QUERIES) - set(ORACLE))
 
 
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
-def _normalize(value):
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "NaN"
-        # collapse -0.0 / 0.0 and fix float repr
-        return repr(value + 0.0)
-    if isinstance(value, int):
-        return repr(value)
-    return str(value)
-
-
-def _rows_to_comparable(colnames, rows):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(tuple(_normalize(r[i]) for i in order) for r in rows)
-
-
 @pytest.fixture(scope="module")
 def duck_medium(sf_medium):
-    con = _duck(sf_medium)
+    con = full_parity.duck(sf_medium)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("key", SQL_KEYS)
 def test_oracle_parity(key, spark, sf_medium, duck_medium):
-    sdf = QUERIES[key](spark, sf_medium)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    res = duck_medium.execute(ORACLE[key])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), f"{key}: column mismatch"
-    assert len(spark_rows) == len(duck_rows), (
-        f"{key}: row count {len(spark_rows)} (spark) vs {len(duck_rows)} (duckdb)"
+    rec = full_parity.check(spark, duck_medium, key, sf_medium)
+    assert rec["schema_match"], f"{key}: column mismatch {rec.get('diff')}"
+    assert rec["rows_match"], (
+        f"{key}: row count {rec['spark_rows']} (spark) vs {rec['oracle_rows']} (duckdb)"
     )
-    s_cmp = _rows_to_comparable(spark_cols, spark_rows)
-    d_cmp = _rows_to_comparable(duck_cols, duck_rows)
-    if s_cmp != d_cmp:
-        diffs = [(a, b) for a, b in zip(s_cmp, d_cmp) if a != b][:5]
-        raise AssertionError(f"{key}: value mismatch, first diffs: {diffs}")
+    assert rec["hash_match"], f"{key}: value mismatch, first diffs: {rec.get('diff')}"
 
 
 @pytest.mark.parametrize("key", ROWS_ONLY_KEYS)
@@ -86,3 +54,21 @@ def test_rows_only_queries_run(key, spark, sf_small):
     rows = sdf.collect()
     assert isinstance(rows, list)
     assert len(sdf.columns) > 0
+
+
+def test_spot_check_prints_the_differing_rows_of_a_perturbed_oracle(
+    spark, sf_small, capsys, monkeypatch
+):
+    assert full_parity.run(spark, ["parse_price"], [sf_small], 0, None) == 0
+    assert "parse_price: ok" in capsys.readouterr().out
+
+    bad = (
+        "SELECT * REPLACE (CASE WHEN p_partkey = 1 THEN price_num + 1 "
+        f"ELSE price_num END AS price_num) FROM ({ORACLE['parse_price']})"
+    )
+    monkeypatch.setitem(full_parity.ORACLE, "parse_price", bad)
+    assert full_parity.run(spark, ["parse_price"], [sf_small], 0, None) == 1
+    out = capsys.readouterr().out
+    assert "parse_price: FAIL" in out
+    assert '"spark_only": [["1", "900.1", "Piece"]]' in out
+    assert '"oracle_only": [["1", "901.1", "Piece"]]' in out

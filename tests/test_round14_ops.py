@@ -215,20 +215,12 @@ def test_pandas_compare_path_matches_repr_path(spark, sf_medium):
     import sys
     from pathlib import Path
 
-    import duckdb as _duck
-
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from tools.full_parity import _comparable, _pandas_compare
+    from tools.full_parity import _comparable, _pandas_compare, duck
 
-    from b2b_data_pipeline_indiamart_spark.catalog import TABLES
     from b2b_data_pipeline_indiamart_spark.plans import ORACLE, QUERIES
 
-    con = _duck.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_medium}/{t}.parquet')"
-        )
+    con = duck(sf_medium)
     for key in ["dedup_keep_first", "events_props_parse", "doc_quality"]:
         sdf = QUERIES[key](spark, sf_medium)
         rec = _pandas_compare(sdf, con, ORACLE[key])

@@ -29,6 +29,12 @@ def test_default_driver_memory_fits_host_and_caps_at_16g(monkeypatch):
         assert _mb(session.default_driver_memory()) == want_mb
 
 
+def test_default_cpus_is_the_affinity_count(monkeypatch):
+    assert session.default_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert session.default_cpus() == "3"
+
+
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 

@@ -60,10 +60,14 @@ from __future__ import annotations
 
 import math
 import os
+import sys
 from fractions import Fraction
+from pathlib import Path
 
-import duckdb
 import pytest
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from tools.full_parity import duck  # noqa: E402
 
 SF_DIRS = [
     "/root/testdata/sf0.001",
@@ -75,9 +79,6 @@ _SF1 = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                     "spark-warehouse", "sf1")
 if os.path.isdir(_SF1):
     SF_DIRS.append(_SF1)
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 # exact integer recoveries of the 2dp-quantized money columns
 PC = "CAST(round(l_extendedprice * 100) AS HUGEINT)"   # price cents
@@ -341,14 +342,7 @@ def _midpoint_distance(v: Fraction, scale: int) -> Fraction:
                 ids=[os.path.basename(d) for d in SF_DIRS])
 def con_sf(request):
     sf = request.param
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf}/{t}.parquet"
-        if os.path.isdir(p):
-            p = f"{p}/*.parquet"
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-        )
+    con = duck(sf)
     yield con, sf
     con.close()
 

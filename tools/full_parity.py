@@ -1,19 +1,49 @@
-"""Full-registry correctness artifact: the driver's hash-compare, run
-locally over EVERY registry key (the external driver grades a bounded
-prefix of ``queries()``; this writes the same evidence for all keys).
+"""The driver's hash-compare, written once: each registry key against
+its DuckDB oracle (SURVEY §2), or a determinism check for the rows-only
+keys. The full sweep, the per-key spot-check and the tier-1 tests
+(``tests/test_oracle_parity.py`` and friends) all call the three
+functions below, so the gate and the artifact cannot drift apart:
 
-Usage: python tools/full_parity.py [round_tag] [sf_dir]
-Writes PARITY_FULL_{round_tag}.json at the repo root with, per key:
-rows_match / schema_match / hash_match vs the DuckDB oracle (oracle
-keys) or rows + determinism across two runs (rows-only keys).
+- :func:`duck` — DuckDB views over the warehouse tables;
+- :func:`check` — one key's record (rows / schema / hash match, or
+  determinism), with the first differing rows on a mismatch;
+- :func:`summarize` — the artifact summary.
+
+Usage:
+    python tools/full_parity.py [ROUND_TAG] [SF_DIR]
+        The sweep over every key (SF_DIR defaults to sf0.01). Writes
+        PARITY_FULL_{ROUND_TAG}.json at the repo root, a partial one
+        every 20 keys.
+    python tools/full_parity.py KEY [KEY...] [--sf DIR ...]
+        The spot-check of the named keys, at sf0.001 and sf0.01 unless
+        ``--sf`` names the warehouses. Writes no artifact.
+
+Both print one status line per key, plus the differing rows of a
+failed key, and exit 1 if any key fails. Environment:
+
+- ``SPARK_GRAFT_PARITY_PARTITIONS`` (default 8): shuffle partitions; a
+  second sweep under another count catches order-sensitive float
+  reductions that sit on a rounding boundary.
+- ``SPARK_GRAFT_PARITY_DRIVER_MEM`` (default 4g): the driver heap; the
+  default 1g OOMs on the tiled sf1 tables.
+- ``SPARK_GRAFT_PARITY_KEY_TIMEOUT`` (default 0, none): a per-key wall
+  budget in seconds; a key over it (tiled scale points make some
+  pair-family oracles quadratic) is recorded as
+  ``err="key_budget_exceeded"`` instead of wedging the sweep.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import os
+import shutil
 import sys
+import tempfile
+import threading
 import time
+import uuid
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -21,17 +51,9 @@ import duckdb
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v + 0.0)
-    return repr(v) if isinstance(v, int) else str(v)
-
-
-def _comparable(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
-
+from b2b_data_pipeline_indiamart_spark.catalog import TABLES  # noqa: E402
+from b2b_data_pipeline_indiamart_spark.operators import caching  # noqa: E402
+from b2b_data_pipeline_indiamart_spark.plans import ORACLE, QUERIES  # noqa: E402
 
 #: rows-only outputs above this size use the distributed fingerprint
 #: instead of a 2x driver collect (dedup_minhash_lsh at sf1 emits 31 M
@@ -40,13 +62,79 @@ def _comparable(cols, rows):
 _BIG_ROWS = 2_000_000
 
 #: ORACLE outputs above this size switch from the repr-tuple canon
-#: (python objects: a 6 M-row orders-grain key at sf10 ballooned a
-#: shard past 48 GB RSS and got it OOM-killed — r14) to the Arrow /
-#: pandas path below: both sides land as columnar frames, are sorted
-#: with pandas.sort_values over every column (the DRIVER's own
-#: canonicalizer), and compared column-vectorized. Overridable for
-#: equivalence testing via SPARK_GRAFT_PARITY_BIG_ORACLE_ROWS.
-_BIG_ORACLE_ROWS = 500_000
+#: (python objects: a 6 M-row orders-grain key at sf10 ballooned past
+#: 48 GB RSS and got OOM-killed) to the Arrow path, :func:`_pandas_compare`
+BIG_ORACLE_ROWS = 500_000
+
+#: differing rows kept per side in a failed record
+_DIFF_ROWS = 5
+
+
+def _duck_limits() -> tuple[int, int]:
+    """(memory, temp spill) bounds for one DuckDB connection, in MiB: a
+    quarter of physical RAM (the Spark driver may take half) and half
+    the free disk under the temp directory. Unbounded, a long sweep
+    accumulated buffer-pool state until one recursive-CTE oracle
+    spilled ~75 GB, filled the disk and failed every later key."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    free = shutil.disk_usage(tempfile.gettempdir()).free
+    return ram // 4 >> 20, free // 2 >> 20
+
+
+def duck(sf: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per warehouse table of ``sf``.
+    A table that is a directory of part files (``tools/scale_up.py``
+    output) is read through a glob. The spill directory is private to
+    the connection (sweeps sharing one clean up each other's files and
+    abort with an IOException); DuckDB creates it on first spill and
+    removes it on close."""
+    con = duckdb.connect()
+    mem_mib, tmp_mib = _duck_limits()
+    spill = Path(tempfile.gettempdir()) / f"duck_parity_{uuid.uuid4().hex}"
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute(f"SET memory_limit = '{mem_mib}MiB'")
+    con.execute(f"SET max_temp_directory_size = '{tmp_mib}MiB'")
+    for t in TABLES:
+        p = f"{sf}/{t}.parquet"
+        if Path(p).is_dir():
+            p = f"{p}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def _norm(v):
+    if isinstance(v, float):
+        # NaN canon, -0.0 collapses to 0.0, shortest round-trip repr
+        return "NaN" if math.isnan(v) else repr(v + 0.0)
+    return repr(v) if isinstance(v, int) else str(v)
+
+
+def _comparable(cols, rows):
+    """The driver's canon: columns sorted by name, every value through
+    :func:`_norm`, rows sorted."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
+
+
+def _repr_compare(scols, srows, dcols, drows) -> dict:
+    a, b = _comparable(scols, srows), _comparable(dcols, drows)
+    rec = {
+        "rows_match": len(srows) == len(drows),
+        "schema_match": sorted(scols) == sorted(dcols),
+        "hash_match": a == b,
+        "spark_rows": len(srows),
+        "oracle_rows": len(drows),
+        "err": None,
+    }
+    if not rec["schema_match"]:
+        rec["diff"] = {"spark_cols": sorted(scols), "oracle_cols": sorted(dcols)}
+    elif not rec["hash_match"]:
+        sa, sb = Counter(a), Counter(b)
+        rec["diff"] = {
+            "spark_only": sorted((sa - sb).elements())[:_DIFF_ROWS],
+            "oracle_only": sorted((sb - sa).elements())[:_DIFF_ROWS],
+        }
+    return rec
 
 
 def _arrow_kind(t):
@@ -76,24 +164,18 @@ def _arrow_kind(t):
 
 
 def _pandas_compare(sdf, con, sql):
-    """Memory-safe hash-compare for big oracle outputs: Spark side via
-    toArrow() (columnar, ~50× smaller than Row objects), DuckDB side
-    via .arrow(); both sorted by every column with pandas.sort_values
-    (NaN last, the driver canon) and compared vectorized. Returns the
-    same record shape as the repr-tuple path; equivalence of the two
-    paths is pinned by tests/test_round14_ops.py on small data.
-
-    schema_match requires column NAMES and normalized logical KINDS
-    (int vs float vs bool vs decimal vs string, from the Arrow
-    schemas — null-robust, unlike pandas dtypes) to agree, so a
-    Spark BIGINT vs oracle DOUBLE (5 vs 5.0) fails here exactly as
-    it would under the repr-tuple canon; the per-column dtype pairs
-    are recorded in the artifact for audit."""
+    """Memory-safe hash-compare for big oracle outputs: both sides land
+    as Arrow tables (~50× smaller than Row objects), are sorted by every
+    column with pandas.sort_values (NaN last, the driver canon) and
+    compared vectorized. schema_match needs the column names and the
+    :func:`_arrow_kind` of each to agree, so a Spark BIGINT vs an oracle
+    DOUBLE (5 vs 5.0) fails as it does under the repr canon; the kind
+    pairs are recorded for audit. tests/test_round14_ops.py pins the
+    equivalence of the two paths."""
     import numpy as np
 
     sat = sdf.toArrow()
-    res = con.execute(sql)
-    dat = res.arrow()
+    dat = con.execute(sql).arrow()
     skinds = {f.name: _arrow_kind(f.type) for f in sat.schema}
     dkinds = {f.name: _arrow_kind(f.type) for f in dat.schema}
     spd = sat.to_pandas()
@@ -131,6 +213,13 @@ def _pandas_compare(sdf, con, sql):
                 & (b.isna().values if hasattr(b, "isna") else False)
             )
         if not bool(np.all(eq)):
+            first = int(np.argmin(eq))
+            rec["diff"] = {
+                "column": c,
+                "sorted_row": first,
+                "spark": [str(v) for v in spd.iloc[first]],
+                "oracle": [str(v) for v in dpd.iloc[first]],
+            }
             return rec
     rec["hash_match"] = True
     return rec
@@ -155,274 +244,215 @@ def _fingerprint(df):
     return (row["s1"], row["s2"], row["n"])
 
 
-def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r0"
-    sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+def check(spark, con, key: str, sf: str) -> dict:
+    """One key's parity record. An oracle key is compared with its
+    DuckDB oracle on ``con``: through the repr canon, in one DuckDB
+    query, unless the oracle returns more than :data:`BIG_ORACLE_ROWS`
+    rows, in which case the query is rerun through the Arrow path. A
+    rows-only key is run twice and must return the same rows, compared
+    by fingerprint above ``_BIG_ROWS``; the caches of the first run are
+    released first, so the rerun recomputes every persisted stage
+    instead of reading the first run's blocks. Exceptions propagate."""
+    fn = QUERIES[key]
+    sdf = fn(spark, sf)
+    if key in ORACLE:
+        res = con.execute(ORACLE[key])
+        drows = res.fetchmany(BIG_ORACLE_ROWS + 1)
+        if len(drows) > BIG_ORACLE_ROWS:
+            del drows  # the Arrow path reruns the query columnar
+            return _pandas_compare(sdf, con, ORACLE[key])
+        dcols = [d[0] for d in res.description]
+        srows = [tuple(r) for r in sdf.collect()]
+        return _repr_compare(sdf.columns, srows, dcols, drows)
+    fingerprinted = sdf.count() > _BIG_ROWS
+    if fingerprinted:
+        fp = _fingerprint(fn(spark, sf))
+        caching.release_cached()
+        n, same = fp[2], fp == _fingerprint(fn(spark, sf))
+    else:
+        srows = [tuple(r) for r in sdf.collect()]
+        caching.release_cached()
+        again = [tuple(r) for r in fn(spark, sf).collect()]
+        n, same = len(srows), sorted(map(str, srows)) == sorted(map(str, again))
+    rec = {"rows_match": None, "schema_match": None, "hash_match": None,
+           "spark_rows": n, "oracle_rows": None, "deterministic": same,
+           "err": "no_oracle"}
+    if fingerprinted:
+        rec["fingerprinted"] = True
+    return rec
+
+
+def _ok(rec: dict) -> bool:
+    if rec.get("err") == "no_oracle":
+        return bool(rec.get("deterministic"))
+    return bool(rec.get("hash_match"))
+
+
+def _budget_skipped(rec: dict) -> bool:
+    return (rec.get("err") or "").startswith("key_budget_exceeded")
+
+
+def summarize(records: dict, sf: str, elapsed: float) -> dict:
+    """The artifact summary of ``{key: record}`` checked on ``sf``."""
+    oracle_keys = [k for k in records if k in ORACLE]
+    return {
+        "sf_dir": sf,
+        "elapsed_sec": round(elapsed, 1),
+        "total_keys": len(records),
+        "oracle_keys": len(oracle_keys),
+        "hash_pass": sum(1 for k in oracle_keys if records[k]["hash_match"]),
+        "rows_only": len(records) - len(oracle_keys),
+        "rows_only_deterministic": sum(
+            1 for r in records.values()
+            if r.get("err") == "no_oracle" and r.get("deterministic")
+        ),
+        "budget_skipped": sum(1 for r in records.values() if _budget_skipped(r)),
+    }
+
+
+def _with_budget(spark, con, budget: float, body):
+    """Run ``body``; after ``budget`` seconds a watchdog interrupts
+    DuckDB and cancels the Spark jobs."""
+    if not budget:
+        return body()
+    done = threading.Event()
+
+    def watchdog():
+        if not done.wait(budget):
+            # re-check done before EACH cancel: if body() returned just
+            # as the budget elapsed, an unconditional interrupt would
+            # land on the NEXT key's query and fail it spuriously
+            if not done.is_set():
+                try:
+                    con.interrupt()
+                except Exception:  # noqa: BLE001
+                    pass
+            if not done.is_set():
+                try:
+                    spark.sparkContext.cancelAllJobs()
+                except Exception:  # noqa: BLE001
+                    pass
+
+    t = threading.Thread(target=watchdog, daemon=True)
+    t.start()
+    try:
+        return body()
+    finally:
+        done.set()
+        t.join()  # no key starts while a cancel could be in flight
+
+
+def run(spark, keys, sfs, budget: float, artifact: Path | None) -> int:
+    """Check ``keys`` on each warehouse of ``sfs``; the exit code, 1 if
+    any key failed."""
+    failed = 0
+    for sf in sfs:
+        out = _run_sf(spark, keys, sf, budget, artifact)
+        failed += sum(not _ok(r) and not _budget_skipped(r) for r in out.values())
+    return 1 if failed else 0
+
+
+def _run_sf(spark, keys, sf: str, budget: float, artifact: Path | None) -> dict:
+    """Check ``keys`` on ``sf`` in order, printing one status line per
+    key. Writes ``artifact`` (when given) every 20 keys and at the end."""
+    def write(summary):
+        if artifact is not None:
+            artifact.write_text(json.dumps({"summary": summary, "keys": out}, indent=1))
+
+    out: dict[str, dict] = {}
+    con = duck(sf)
+    t0 = time.time()
+    for n_done, key in enumerate(keys):
+        if n_done and n_done % 40 == 0:
+            # a fresh connection every 40 keys drops the buffer-pool
+            # state that heavy MATERIALIZED oracles leave behind
+            con.close()
+            con = duck(sf)
+        t_key = time.time()
+        try:
+            rec = _with_budget(spark, con, budget,
+                               lambda: check(spark, con, key, sf))
+        except Exception as exc:  # noqa: BLE001 — the artifact records failures
+            err = f"{type(exc).__name__}: {exc}"[:500]
+            if budget and time.time() - t_key >= budget:
+                err = f"key_budget_exceeded ({budget:.0f}s): " + err[:300]
+            rec = {"rows_match": False, "schema_match": False,
+                   "hash_match": False, "spark_rows": None,
+                   "oracle_rows": None, "err": err}
+            # a heavy key can kill the JVM; every later key would then
+            # fail in milliseconds. Abort with the partial artifact so
+            # a resumed run continues on a fresh JVM.
+            try:
+                spark.range(1).count()
+            except Exception:  # noqa: BLE001
+                out[key] = rec
+                print(f"{key}: FAIL (session dead — aborting sweep)", flush=True)
+                write({"partial": True, "aborted": "dead JVM", "keys_done": len(out)})
+                raise SystemExit(2)
+        caching.release_cached()
+        out[key] = rec
+        if _ok(rec):
+            status = "ok (fingerprint)" if rec.get("fingerprinted") else "ok"
+        elif _budget_skipped(rec):
+            status = "SKIP (budget)"
+        else:
+            status = "FAIL"
+        print(f"{Path(sf).name} {key}: {status} spark={rec['spark_rows']} "
+              f"oracle={rec['oracle_rows']}", flush=True)
+        detail = rec.get("diff") or (rec["err"] if rec["err"] != "no_oracle" else None)
+        if not _ok(rec) and detail:
+            print(f"  {json.dumps(detail)}", flush=True)
+        if len(out) % 20 == 0:
+            write({"partial": True, "keys_done": len(out)})
+    con.close()
+    summary = summarize(out, sf, time.time() - t0)
+    write(summary)
+    print(json.dumps(summary), flush=True)
+    return out
+
+
+def _parse(argv: list[str]) -> tuple[list[str], list[str], Path | None]:
+    """(keys, warehouse dirs, artifact path or None) from the command line."""
+    keys, sfs, rest = [], [], []
+    it = iter(argv)
+    for a in it:
+        if a == "--sf":
+            sfs.append(next(it, None) or sys.exit("--sf needs a directory"))
+        elif a in QUERIES:
+            keys.append(a)
+        else:
+            rest.append(a)
+    if keys:
+        if rest:
+            sys.exit(f"unknown keys: {rest}")
+        return keys, sfs or ["/root/testdata/sf0.001", "/root/testdata/sf0.01"], None
+    tag = rest[0] if rest else "r0"
+    return list(QUERIES), sfs or rest[1:2] or ["/root/testdata/sf0.01"], (
+        REPO / f"PARITY_FULL_{tag}.json"
+    )
+
+
+def main(argv: list[str]) -> int:
+    keys, sfs, artifact = _parse(argv)
 
     from pyspark.sql import SparkSession
 
-    from b2b_data_pipeline_indiamart_spark.catalog import TABLES
-    from b2b_data_pipeline_indiamart_spark.plans import ORACLE, QUERIES
-
-    # SPARK_GRAFT_PARITY_PARTITIONS lets a second pass run every key
-    # under a different shuffle partitioning — a value-level
-    # partitioning-invariance sweep that catches order-sensitive float
-    # reductions sitting on a rounding boundary (the r10
-    # events_session_stats flake class) before the driver does.
-    import os
-
-    nparts = os.environ.get("SPARK_GRAFT_PARITY_PARTITIONS", "8")
-    # default heap OOMs on the sf1 tiled tables (6 M lineitem); the
-    # driver's gate runs at sf0.01 where 4g is ample headroom
-    mem = os.environ.get("SPARK_GRAFT_PARITY_DRIVER_MEM", "4g")
+    env = os.environ.get
     spark = (
         SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", nparts)
-        .config("spark.driver.memory", mem)
-        # the Arrow big-output path collects up to ~10 M-row frames
-        # (1-2 GB serialized) — the 1 GB default records a spurious
-        # FAIL (maxResultSize) instead of a verdict
+        .config("spark.sql.shuffle.partitions", env("SPARK_GRAFT_PARITY_PARTITIONS", "8"))
+        .config("spark.driver.memory", env("SPARK_GRAFT_PARITY_DRIVER_MEM", "4g"))
+        # the Arrow path collects up to ~10 M-row frames (1-2 GB
+        # serialized): the 1 GB default would record a spurious FAIL
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
         .appName("full-parity")
         .getOrCreate()
     )
-    import os as _os
-
-    def _connect():
-        # Bound DuckDB's buffer pool and temp spill, and rebuild the
-        # connection periodically (below): the r13 sf1 sweep showed a
-        # single long-lived connection accumulating buffer-pool state
-        # across ~200 heavy MATERIALIZED oracles until a recursive-CTE
-        # key spilled ~75 GB of temp, filled the disk, and poisoned
-        # every subsequent key with spurious OOMs — environmental
-        # failures masquerading as parity failures.
-        c = duckdb.connect()
-        # PRIVATE spill dir per process: concurrent sweeps sharing the
-        # cwd-relative default `.tmp` clean up each other's files and
-        # abort the whole process with a C++ IOException (r14 shard
-        # crash) — collision-proof the temp path
-        import tempfile as _tf
-
-        c.execute(
-            "SET temp_directory = "
-            f"'{_tf.mkdtemp(prefix='duck_parity_tmp_')}'"
-        )
-        c.execute(
-            "SET memory_limit = "
-            f"'{_os.environ.get('SPARK_GRAFT_PARITY_DUCK_MEM', '32GB')}'"
-        )
-        c.execute(
-            "SET max_temp_directory_size = "
-            f"'{_os.environ.get('SPARK_GRAFT_PARITY_DUCK_TMP', '40GiB')}'"
-        )
-        for t in TABLES:
-            # driver testdata ships single files; scale_up.py output
-            # (sf1) is a directory of part files — glob in that case
-            p = f"{sf}/{t}.parquet"
-            if Path(p).is_dir():
-                p = f"{p}/*.parquet"
-            c.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-        return c
-
-    con = _connect()
-
-    # Optional per-key wall budget (seconds). At the tiled sf1 point a
-    # few pair-family DuckDB oracles go quadratic (tiling multiplies
-    # every near-dup family by K, so md5-block/LSH pair counts grow
-    # ~K^2 — dedup_clusters_blocked's WITH RECURSIVE ran >20 min); a
-    # budgeted key is recorded as err="key_budget_exceeded" instead of
-    # wedging the whole artifact. Enforced via a watchdog thread that
-    # interrupts DuckDB and cancels Spark jobs.
-    budget = float(os.environ.get("SPARK_GRAFT_PARITY_KEY_TIMEOUT", "0"))
-
-    import threading
-
-    def _with_budget(body):
-        if not budget:
-            return body()
-        done = threading.Event()
-
-        def watchdog():
-            if not done.wait(budget):
-                # ADVICE r11: re-check done before EACH cancel — if
-                # body() returned exactly as the budget elapsed, an
-                # unconditional interrupt would land on the NEXT key's
-                # query and record a spurious failure.
-                if not done.is_set():
-                    try:
-                        con.interrupt()
-                    except Exception:  # noqa: BLE001
-                        pass
-                if not done.is_set():
-                    try:
-                        spark.sparkContext.cancelAllJobs()
-                    except Exception:  # noqa: BLE001
-                        pass
-
-        t = threading.Thread(target=watchdog, daemon=True)
-        t.start()
-        try:
-            return body()
-        finally:
-            done.set()
-            # join WITHOUT timeout: the next key must not start while
-            # a cancel could still be in flight (same ADVICE race).
-            # After done.set() the watchdog exits promptly — either its
-            # wait() wakes immediately or the two is_set() gates skip
-            # the cancel calls, so this join is bounded in practice.
-            t.join()
-
-    # SPARK_GRAFT_PARITY_KEYS="k1,k2" restricts the run to a subset —
-    # used to re-grade budget-skipped keys with a per-key budget far
-    # above the full-sweep default (the r12 sf1 evidence-gap close);
-    # tools/merge_parity.py folds the subset artifact into the full one.
-    only = os.environ.get("SPARK_GRAFT_PARITY_KEYS", "")
-    keys = dict(QUERIES)
-    if only:
-        wanted = [s.strip() for s in only.split(",") if s.strip()]
-        missing = [w for w in wanted if w not in keys]
-        if missing:
-            raise SystemExit(f"unknown keys: {missing}")
-        keys = {w: QUERIES[w] for w in wanted}
-
-    out: dict[str, dict] = {}
-    t0 = time.time()
-    for n_done, (key, fn) in enumerate(keys.items()):
-        if n_done and n_done % 40 == 0:
-            # fresh connection every 40 keys — see _connect()
-            try:
-                con.close()
-            except Exception:  # noqa: BLE001
-                pass
-            con = _connect()
-        rec: dict = {}
-        t_key = time.time()
-
-        def _body():
-            sdf = fn(spark, sf)
-            scols = sdf.columns
-            if key not in ORACLE and sdf.count() > _BIG_ROWS:
-                fp1 = _fingerprint(fn(spark, sf))
-                fp2 = _fingerprint(fn(spark, sf))
-                return {
-                    "rows_match": None,
-                    "schema_match": None,
-                    "hash_match": None,
-                    "spark_rows": fp1[2],
-                    "oracle_rows": None,
-                    "deterministic": fp1 == fp2,
-                    "err": "no_oracle",
-                    "fingerprinted": True,
-                }
-            if key in ORACLE:
-                big_cut = int(
-                    _os.environ.get(
-                        "SPARK_GRAFT_PARITY_BIG_ORACLE_ROWS",
-                        str(_BIG_ORACLE_ROWS),
-                    )
-                )
-                n_oracle = con.execute(
-                    f"SELECT count(*) FROM ({ORACLE[key]})"
-                ).fetchone()[0]
-                if n_oracle > big_cut:
-                    return _pandas_compare(sdf, con, ORACLE[key])
-            srows = [tuple(r) for r in sdf.collect()]
-            if key in ORACLE:
-                res = con.execute(ORACLE[key])
-                dcols = [d[0] for d in res.description]
-                drows = res.fetchall()
-                return {
-                    "rows_match": len(srows) == len(drows),
-                    "schema_match": sorted(scols) == sorted(dcols),
-                    "hash_match": _comparable(scols, srows) == _comparable(dcols, drows),
-                    "spark_rows": len(srows),
-                    "oracle_rows": len(drows),
-                    "err": None,
-                }
-            again = [tuple(r) for r in fn(spark, sf).collect()]
-            return {
-                "rows_match": None,
-                "schema_match": None,
-                "hash_match": None,
-                "spark_rows": len(srows),
-                "oracle_rows": None,
-                "deterministic": sorted(map(str, srows)) == sorted(map(str, again)),
-                "err": "no_oracle",
-            }
-
-        try:
-            rec = _with_budget(_body)
-        except Exception as exc:  # noqa: BLE001 — artifact must record failures
-            err = f"{type(exc).__name__}: {exc}"[:500]
-            if budget and time.time() - t_key >= budget:
-                err = (
-                    f"key_budget_exceeded ({budget:.0f}s): "
-                    + err[:300]
-                )
-            rec = {
-                "rows_match": False,
-                "schema_match": False,
-                "hash_match": False,
-                "spark_rows": None,
-                "oracle_rows": None,
-                "err": err,
-            }
-            # a heavy key can kill the JVM (executor OOM / interrupted
-            # shutdown); every later key then fails in milliseconds and
-            # the artifact fills with spurious FAILs (two r14 sweep
-            # cascades). Probe the session; if it is dead, write the
-            # partial artifact and ABORT so a resume run (ok-keys
-            # parsed from the log) continues on a fresh JVM.
-            try:
-                spark.range(1).count()
-            except Exception:  # noqa: BLE001
-                out[key] = rec
-                print(f"{key}: FAIL (session dead — aborting sweep)",
-                      flush=True)
-                (REPO / f"PARITY_FULL_{tag}.json").write_text(json.dumps(
-                    {"summary": {"partial": True, "aborted": "dead JVM",
-                                 "keys_done": len(out)},
-                     "keys": out}, indent=1))
-                raise SystemExit(2)
-        out[key] = rec
-        if rec.get("fingerprinted"):
-            status = "ok (fingerprint)"
-        elif rec.get("hash_match") or rec.get("err") == "no_oracle":
-            status = "ok"
-        elif (rec.get("err") or "").startswith("key_budget_exceeded"):
-            status = "SKIP (budget)"
-        else:
-            status = "FAIL"
-        print(f"{key}: {status}", flush=True)
-        if len(out) % 20 == 0:  # crash/timeout-safe partial artifact
-            (REPO / f"PARITY_FULL_{tag}.json").write_text(json.dumps(
-                {"summary": {"partial": True, "keys_done": len(out)},
-                 "keys": out}, indent=1))
-
-    oracle_keys = [k for k in out if k in ORACLE]
-    summary = {
-        "sf_dir": sf,
-        "elapsed_sec": round(time.time() - t0, 1),
-        "total_keys": len(out),
-        "oracle_keys": len(oracle_keys),
-        "hash_pass": sum(1 for k in oracle_keys if out[k]["hash_match"]),
-        "rows_only": len(out) - len(oracle_keys),
-        "rows_only_deterministic": sum(
-            1 for k in out if out[k].get("err") == "no_oracle" and out[k].get("deterministic")
-        ),
-        "budget_skipped": sum(
-            1 for k in out
-            if (out[k].get("err") or "").startswith("key_budget_exceeded")
-        ),
-    }
-    path = REPO / f"PARITY_FULL_{tag}.json"
-    path.write_text(json.dumps({"summary": summary, "keys": out}, indent=1))
-    print(json.dumps(summary))
+    code = run(spark, keys, sfs, float(env("SPARK_GRAFT_PARITY_KEY_TIMEOUT", "0")), artifact)
     spark.stop()
+    return code
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

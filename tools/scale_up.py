@@ -105,7 +105,7 @@ def build(out_dir, k: int = 10, spark=None) -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from b2b_data_pipeline_indiamart_spark import catalog
+    from b2b_data_pipeline_indiamart_spark import catalog, session
 
     own_session = spark is None
     if own_session:
@@ -113,9 +113,9 @@ def build(out_dir, k: int = 10, spark=None) -> None:
             SparkSession.builder.master("local[8]")
             .config("spark.sql.shuffle.partitions", "8")
             .config("spark.ui.enabled", "false")
-            # sf10 (k=100) writes 60M-row lineitem partitions; the
-            # 1g local-mode default heap OOMs in the parquet writer
-            .config("spark.driver.memory", "20g")
+            # the 1g local-mode default heap OOMs in the parquet
+            # writer at k=100 (60M-row lineitem partitions)
+            .config("spark.driver.memory", session.default_driver_memory())
             .appName("scale-up")
             .getOrCreate()
         )
@@ -135,17 +135,7 @@ def build(out_dir, k: int = 10, spark=None) -> None:
 
     rep = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("__rep")
     for t, (pk, fks) in KEYMAP.items():
-        df = src = catalog.load(spark, SRC, t)
-        if k >= 1000 and (pk is not None or fks):
-            # k=1000 (sf100): the tiny sf0.1 source files coalesce into
-            # ONE input split under maxPartitionBytes, so the 1000x
-            # explode + shuffle-write of the biggest tables would run
-            # single-threaded. Spread the source across the session's
-            # cores first; row SET is unchanged (salts key on
-            # (__rep, position, word), never on partition). Gated at
-            # k>=1000 so sf1/sf10 rebuilds stay byte-identical to the
-            # committed bench provenance.
-            df = df.repartition(spark.sparkContext.defaultParallelism)
+        df = catalog.load(spark, SRC, t)
         if pk is None and not fks:  # fixed dims: copy once, no tiling
             out = df
         else:
@@ -188,10 +178,8 @@ def build(out_dir, k: int = 10, spark=None) -> None:
                 # range(1, k) loop would leave `rotated` None), and an
                 # empty / NULL-first-row embeddings table has no dim to
                 # read — skip rotation, the tile loop alone is correct.
-                # Probe the source, not the k>=1000 repartitioned frame:
-                # one row must not wait on a full round-robin shuffle.
                 first = (
-                    src.select("embedding")
+                    df.select("embedding")
                     .filter(F.col("embedding").isNotNull())
                     .first()
                 )
@@ -218,13 +206,7 @@ def build(out_dir, k: int = 10, spark=None) -> None:
                         "embedding", rotated.otherwise(F.col("embedding"))
                     )
             out = out.drop("__rep")
-        if k >= 1000 and (pk is not None or fks):
-            # exact by construction (every source row tiles k times);
-            # running count() on the exploded frame would evaluate the
-            # 1000x salt/rotation projection a second time per table
-            n = src.count() * k
-        else:
-            n = out.count()
+        n = out.count()
         # write partitions scale with the replica count so per-task
         # row volume stays ~sf1-sized at any k (k=10 keeps the
         # historical 8 files; k=100 writes 80)
