@@ -1,24 +1,22 @@
-"""Embedding similarity: cosine near-dup pairs and top-k ANN search.
+"""Embedding similarity: cosine near-dup pairs, top-k ANN search and
+the vector-QA operators around them.
 
 No reference parity (the reference has no vector ops); these are the
-LLM-data-pipeline extensions, designed Spark-first:
+LLM-data-pipeline extensions, designed Spark-first. Cosine is a pure
+Catalyst fold over ``array<double>`` — JVM-side, left to right, so the
+float semantics are deterministic and oracle-comparable — with the
+per-vector norms hoisted out of per-pair scores (:func:`cosine_pair`).
 
-- cosine is a pure Catalyst expression (``zip_with`` + ``aggregate``
-  fold over ``array<double>``) — JVM-side, no Python boundary. The
-  fold is sequential left-to-right, which keeps the float semantics
-  deterministic and oracle-comparable.
-- ``brute_force_topk`` broadcasts the (small) query set and cross-joins
-  it against the corpus: one pass over the corpus per batch of
-  queries, ranked with a per-query window — the exact baseline.
-- ``ann_lsh_topk`` uses random-hyperplane LSH:
-  each vector gets a ``n_planes``-bit signature (sign of dot product
-  with fixed pseudo-random planes); candidates come from an equi-join
-  on the bucket id, so shuffle is O(corpus), not O(corpus²). That is
-  the 100 TB path; brute force is the small-query-set fallback.
-
-The hyperplanes are generated driver-side from a fixed seed and
-embedded as literals — a few KB shipped inside the plan, no data
-shuffle.
+Every top-k operator has one shape: candidate pairs (broadcast cross
+join, LSH bucket, IVF cell or PQ code join) → :func:`_score` (drop
+self-matches, round to 4dp) → :func:`_topk_per_query` (per-query rank,
+ties to the lower neighbor id). The seeded, oracle-bearing twins also
+share :func:`_seeded_projection` (long id, vector, norm),
+:func:`_nearest_seeds` (cell assignment), :func:`_seeded_route` (IVF
+probe → cell equi-join → score) and :func:`_pq_encode_seeded`
+(subvector explode → L2 argmin → reconstruction). Trainers run on
+bounded driver-side samples; assignment, encode and search stay
+distributed.
 """
 
 from __future__ import annotations
@@ -126,6 +124,16 @@ def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
     )
 
 
+def _score(cand: DataFrame, score: Column, name: str) -> DataFrame:
+    """(query_id, neighbor_id, ``name``): ``score`` over the candidate
+    pairs, self-matches dropped, rounded to 4dp BEFORE any rank or
+    threshold so an engine ulp cannot reorder ties or cross the cut —
+    the ANN family's one scoring rule, as its oracles state it."""
+    return cand.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", round_half_up(score, 4).alias(name)
+    )
+
+
 def _pseudo_random_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic unit-free hyperplanes from a seeded generator.
 
@@ -170,9 +178,6 @@ def cosine_neardup_pairs(
     block-pair gemm). The self-join condition id_a < id_b halves the work
     and makes output deterministic.
     """
-    # per-VECTOR norm hoisted out of the per-PAIR cosine (r16): the
-    # pair stage then pays one fold instead of three — bit-identical
-    # (see cosine_pair)
     va = as_double_array(F.col(vec_col))
     v = emb.select(F.col(id_col).alias("id"), va.alias("v"), norm(va).alias("n"))
     a, b = v.alias("a"), v.alias("b")
@@ -425,25 +430,13 @@ def ann_ivf_topk(
     of recall when the corpus clusters).
     """
     cents = kmeans_centroids(emb, dim, n_cells=n_cells, vec_col=vec_col, seed=seed)
-    # per-vector norms hoisted out of the per-pair cosine (r16,
-    # bit-identical — see cosine_pair)
     corpus = ivf_assign(
         emb, cents, vec_col, id_col, n_probe=1, out_id="neighbor_id"
     ).withColumn("cn", norm(F.col("v")))
     probes = ivf_assign(queries, cents, vec_col, id_col, n_probe=n_probe, out_id="query_id")
     probes = probes.withColumnRenamed("v", "qv").withColumn("qn", norm(F.col("qv")))
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                cosine_pair(F.col("qv"), F.col("v"), F.col("qn"), F.col("cn")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
+    score = cosine_pair(F.col("qv"), F.col("v"), F.col("qn"), F.col("cn"))
+    scored = _score(corpus.join(F.broadcast(probes), "cell"), score, "cos_sim")
     return _topk_per_query(scored, "cos_sim", k)
 
 
@@ -458,9 +451,26 @@ def _lowest_ids(df: DataFrame, id_col: str, n: int) -> DataFrame:
     return df.select(id_col).orderBy(F.col(id_col).asc()).limit(n)
 
 
+def _seeded_projection(
+    emb: DataFrame, vec_col: str, id_col: str, keep: "tuple[str, ...]" = ()
+) -> DataFrame:
+    """(__vid long, __e, __n, *keep): the seeded twins' vector frame,
+    the norm hoisted next to the vector (see :func:`cosine_pair`). The
+    id is cast to long so an empty-input guard's declared
+    ``long`` schema matches the non-empty path for any integral id."""
+    ea = as_double_array(F.col(vec_col))
+    return emb.select(
+        F.col(id_col).cast("long").alias("__vid"),
+        ea.alias("__e"),
+        norm(ea).alias("__n"),
+        *keep,
+    )
+
+
 def _lowest_id_seeds(v: DataFrame, n: int) -> DataFrame:
     """(__cid, __se, __sn): the ``n`` lowest-id rows of a
-    (__vid, __e, __n) frame as the seed cells of :func:`_nearest_seeds`."""
+    :func:`_seeded_projection` frame as the seed cells of
+    :func:`_nearest_seeds`."""
     return v.join(F.broadcast(_lowest_ids(v, "__vid", n)), "__vid").select(
         F.col("__vid").alias("__cid"),
         F.col("__e").alias("__se"),
@@ -495,6 +505,34 @@ def _nearest_seeds(
     )
 
 
+def _seeded_route(
+    v: DataFrame, queries: DataFrame, id_col: str, cells: DataFrame, n_probe: int, k: int
+) -> DataFrame:
+    """The seeded IVF routing tail: every row of ``v`` (a
+    :func:`_seeded_projection` frame) goes to its nearest of ``cells``
+    (__cid, __se, __sn), each query to its ``n_probe`` nearest,
+    candidates equi-join on the cell (probes broadcast) and the
+    hoisted-norm cosine is scored and ranked."""
+
+    def vecs(out_id: str, e: str, n: str) -> DataFrame:
+        return v.select(
+            F.col("__vid").alias(out_id), F.col("__e").alias(e), F.col("__n").alias(n)
+        )
+
+    corpus = _nearest_seeds(v, cells, "neighbor_id", 1).join(
+        vecs("neighbor_id", "cv", "cn"), "neighbor_id"
+    )
+    probes = _nearest_seeds(
+        v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
+        cells,
+        "query_id",
+        n_probe,
+    ).join(vecs("query_id", "qv", "qn"), "query_id")
+    score = cosine_pair(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
+    scored = _score(corpus.join(F.broadcast(probes), "cell"), score, "cos_sim")
+    return _topk_per_query(scored, "cos_sim", k)
+
+
 def ann_ivf_seeded_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -519,51 +557,8 @@ def ann_ivf_seeded_topk(
     similarity rounds to 6dp BEFORE ranking (round-before-compare, cid
     tie-break) so the cell choice is engine-stable.
     """
-    # per-vector norm hoisted next to the vector (r16): every
-    # assignment/score pair below pays one dot fold instead of three —
-    # bit-identical (see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        F.col(id_col).alias("__vid"), ea.alias("__e"), norm(ea).alias("__n")
-    )
-    seeds = _lowest_id_seeds(v, n_seeds)
-    corpus = _nearest_seeds(v, seeds, "neighbor_id", 1).join(
-        v.select(
-            F.col("__vid").alias("neighbor_id"),
-            F.col("__e").alias("cv"),
-            F.col("__n").alias("cn"),
-        ),
-        "neighbor_id",
-    )
-    probes = (
-        _nearest_seeds(
-            v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
-            seeds,
-            "query_id",
-            n_probe,
-        )
-        .join(
-            v.select(
-                F.col("__vid").alias("query_id"),
-                F.col("__e").alias("qv"),
-                F.col("__n").alias("qn"),
-            ),
-            "query_id",
-        )
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                cosine_pair(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    return _topk_per_query(scored, "cos_sim", k)
+    v = _seeded_projection(emb, vec_col, id_col)
+    return _seeded_route(v, queries, id_col, _lowest_id_seeds(v, n_seeds), n_probe, k)
 
 
 def ann_ivf_lloyd_seeded_topk(
@@ -602,26 +597,20 @@ def ann_ivf_lloyd_seeded_topk(
     (corpus × n_seeds 6dp cosines, window partitioned by the
     high-cardinality vector id) plus a (cell, dim)-grain BIGINT
     aggregate of which only n_seeds × dim rows reach the driver
-    (metadata scale — the kmeans partial-sum pattern). Routing tail
-    (probe → candidate equi-join → 4dp re-rank) is identical to
-    :func:`ann_ivf_seeded_topk`.
+    (metadata scale — the kmeans partial-sum pattern). The routing tail
+    (probe → candidate equi-join → 4dp re-rank) is
+    :func:`_seeded_route`, shared with :func:`ann_ivf_seeded_topk`:
+    with ``n_iters=0`` the two return the same rows.
     """
     import math
 
+    from . import caching
+
     spark = emb.sparkSession
-    # per-vector norm hoisted next to the vector (r16): each of the 4
-    # assignment/score passes pays one dot fold per pair instead of
-    # three — bit-identical (see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        # id cast to long (ADVICE r16): the empty-corpus guard below
-        # declares `query_id long, neighbor_id long`; casting here makes
-        # the non-empty path's schema match it for any integral id type
-        # (same discipline as kcenter_coreset / semdedup_seeded).
-        F.col(id_col).cast("long").alias("__vid"),
-        ea.alias("__e"),
-        norm(ea).alias("__n"),
-    )
+    # persisted (tracked, released per key): the first() probe, the
+    # seed collect, the unit projection, every assignment pass and the
+    # routing tail all read v, and each re-scanned the parquet for it
+    v = caching.persist_tracked(_seeded_projection(emb, vec_col, id_col))
     first_row = v.select("__e").first()
     if first_row is None:
         # empty corpus → empty result frame, same schema (ADVICE r15 —
@@ -630,15 +619,11 @@ def ann_ivf_lloyd_seeded_topk(
             [], "query_id long, neighbor_id long, cos_sim double, rnk int"
         )
     dim = len(first_row["__e"])
-    seed_rows = (
-        v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid")
-        .orderBy("__vid")
-        .collect()
-    )
     # iteration-0 "centroids" are the raw seed vectors (cosine is
     # normalization-invariant, so assignment 1 matches the seeded twin)
     cents: "list[tuple[int, list[float]]]" = [
-        (int(r["__vid"]), [float(x) for x in r["__e"]]) for r in seed_rows
+        (int(r["__cid"]), [float(x) for x in r["__se"]])
+        for r in _lowest_id_seeds(v, n_seeds).orderBy("__cid").collect()
     ]
 
     uq = (
@@ -692,44 +677,7 @@ def ann_ivf_lloyd_seeded_topk(
     finally:
         uq.unpersist()
 
-    trained = cent_frame()
-    corpus = _nearest_seeds(v, trained, "neighbor_id", 1).join(
-        v.select(
-            F.col("__vid").alias("neighbor_id"),
-            F.col("__e").alias("cv"),
-            F.col("__n").alias("cn"),
-        ),
-        "neighbor_id",
-    )
-    probes = (
-        _nearest_seeds(
-            v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
-            trained,
-            "query_id",
-            n_probe,
-        )
-        .join(
-            v.select(
-                F.col("__vid").alias("query_id"),
-                F.col("__e").alias("qv"),
-                F.col("__n").alias("qn"),
-            ),
-            "query_id",
-        )
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                cosine_pair(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    return _topk_per_query(scored, "cos_sim", k)
+    return _seeded_route(v, queries, id_col, cent_frame(), n_probe, k)
 
 
 def pca_eigen_invariants(
@@ -842,15 +790,8 @@ def brute_force_topk(
     q = _normed_projection(queries, vec_col, id_col, "query_id")
     emb = fan_out(emb, id_col)
     c = _normed_projection(emb, vec_col, id_col, "neighbor_id")
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(dot(F.col("query_id_v"), F.col("neighbor_id_v")), 4).alias("cos_sim"),
-        )
-    )
+    score = dot(F.col("query_id_v"), F.col("neighbor_id_v"))
+    scored = _score(c.crossJoin(F.broadcast(q)), score, "cos_sim")
     return _topk_per_query(scored, "cos_sim", k)
 
 
@@ -899,9 +840,6 @@ def mmr_rerank(
         F.col(id_col).cast("long").alias("__mid"),
         as_double_array(F.col(vec_col)).alias("__mv"),
     )
-    # per-member norm hoisted into the persisted frame (r16): the
-    # shortlist² pair scan pays one fold per pair — bit-identical
-    # (see cosine_pair)
     members = rel.select("query_id", "neighbor_id").join(
         vecs, F.col("neighbor_id") == F.col("__mid")
     ).select("query_id", "neighbor_id", "__mv", norm(F.col("__mv")).alias("__mn"))
@@ -1048,9 +986,6 @@ def kcenter_coreset(
     """
     spark = emb.sparkSession
     schema = f"center_rank int, {id_col} long, min_dist double"
-    # per-vector norm hoisted into the carried frame, center norms
-    # computed driver-side (r16, bit-identical — see cosine_pair /
-    # py_norm): each round's distance pass pays one fold per row
     ea = as_double_array(F.col(vec_col))
     v = emb.select(
         F.col(id_col).cast("long").alias("__kid"),
@@ -1148,16 +1083,9 @@ def cosine_range_search(
 
     q = _normed_projection(queries, vec_col, id_col, "query_id")
     c = _normed_projection(emb, vec_col, id_col, "neighbor_id")
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(dot(F.col("query_id_v"), F.col("neighbor_id_v")), 4).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    score = dot(F.col("query_id_v"), F.col("neighbor_id_v"))
+    scored = _score(c.crossJoin(F.broadcast(q)), score, "cos_sim")
+    return scored.filter(F.col("cos_sim") >= threshold)
 
 
 def embedding_stats(
@@ -1211,15 +1139,8 @@ def ann_lsh_topk(
         as_double_array(F.col(vec_col)).alias("cv"),
         sig(F.col(vec_col)).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
-        )
-    )
+    score = cosine(F.col("qv"), F.col("cv"))
+    scored = _score(c.join(F.broadcast(q), "bucket"), score, "cos_sim")
     return _topk_per_query(scored, "cos_sim", k)
 
 
@@ -1594,17 +1515,73 @@ def ann_topk_pq(
         "query_id",
         F.expr(_pq_lut_expr(cb, m, n_centroids, dsub, qv="__unit")).alias("lut"),
     )
-    score = _adc_score(m, stride)
-    scored = (
-        codes.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = _score(codes.crossJoin(F.broadcast(q)), _adc_score(m, stride), "pq_score")
+    return _topk_per_query(scored, "pq_score", k)
+
+
+def _subvectors(
+    df: DataFrame, vec: str, out: str, m: int, dsub: int, *keep: "str | Column"
+) -> DataFrame:
+    """(*keep, s, out): ``vec`` cut into its ``m`` contiguous
+    ``dsub``-wide subvectors, one row per subspace ``s``."""
+    rows = df.select(*keep, F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"), vec)
+    return rows.select(
+        *rows.columns[:-1], F.slice(F.col(vec), F.col("s") * dsub + 1, dsub).alias(out)
+    )
+
+
+def _pq_encode_seeded(
+    src: DataFrame,
+    vec: str,
+    sub: str,
+    keep: "tuple[str, ...]",
+    book: DataFrame,
+    code: str,
+    m: int,
+    dsub: int,
+    out: str,
+) -> DataFrame:
+    """(*keep, out): the seeded twins' PQ encode. ``src``'s ``vec`` is
+    cut into subvectors ``sub``; per (vid, s) the codeword of ``book``
+    (s, ``code``, cw) at the least squared L2 distance, rounded to 9dp
+    BEFORE the rank with ties to the lower ``code``, is the code; the
+    chosen codewords flattened in subspace order are ``out``. The
+    column names are the caller's, so each twin keeps its own plan.
+
+    NOTE (r17): a min(struct(__d2, code)) aggregate was tried for the
+    argmin (VERDICT r16 #5) and REVERTED — Spark plans min over a
+    struct as a SortAggregate (the agg buffer is not
+    mutable-fixed-width), so it re-sorts by (vid, s) exactly like the
+    window while paying two aggregate passes: measured 0.94×
+    interleaved at sf0.1. The row_number window already runs under
+    WindowGroupLimit (partial top-1 per partition before the
+    exchange), which is the efficient shape for this argmin."""
+    w = Window.partitionBy("vid", "s").orderBy(F.col("__d2").asc(), F.col(code).asc())
+    codes = (
+        _subvectors(src, vec, sub, m, dsub, *keep)
+        .join(F.broadcast(book), "s")
         .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(score, 4).alias("pq_score"),
+            *keep,
+            "s",
+            code,
+            round_half_up(_d2_unrolled(F.col(sub), F.col("cw"), dsub), 9).alias("__d2"),
+        )
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(*keep, "s", code)
+    )
+    return (
+        codes.join(F.broadcast(book), ["s", code])
+        .groupBy(*keep)
+        .agg(
+            F.flatten(
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct("s", "cw"))),
+                    lambda p: p["cw"],
+                )
+            ).alias(out)
         )
     )
-    return _topk_per_query(scored, "pq_score", k)
 
 
 def ann_pq_seeded_topk(
@@ -1643,71 +1620,15 @@ def ann_pq_seeded_topk(
     # physical plan scanned the embeddings parquet 6× re-deriving the
     # norm projection each time. Released per key by the caller.
     u = caching.persist_tracked(_unit_projection(emb, vec_col, id_col, "vid"))
-    subs = u.select(
-        "vid",
-        "__unit",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
-    ).select(
-        "vid",
-        "s",
-        F.slice(F.col("__unit"), F.col("s") * dsub + 1, dsub).alias("sub"),
+    seeds = (
+        _subvectors(u, "__unit", "sub", m, dsub, "vid")
+        .join(F.broadcast(_lowest_ids(u, "vid", n_seeds)), "vid")
+        .select(F.col("s"), F.col("vid").alias("cid"), F.col("sub").alias("cw"))
     )
-    seeds = subs.join(F.broadcast(_lowest_ids(u, "vid", n_seeds)), "vid").select(
-        F.col("s"), F.col("vid").alias("cid"), F.col("sub").alias("cw")
-    )
-    # __d2 unrolled (r17): the corpus·m·n_seeds grain is the twin's
-    # hottest projection; _d2_unrolled is bit-identical to the old
-    # dot(diff, diff) fold but whole-stage-codegen'd (guide §4.2's
-    # point applied inside the JVM: HOFs evaluate interpreted).
-    dists = subs.join(F.broadcast(seeds), "s").select(
-        "vid",
-        "s",
-        "cid",
-        round_half_up(_d2_unrolled(F.col("sub"), F.col("cw"), dsub), 9).alias(
-            "__d2"
-        ),
-    )
-    # NOTE (r17): a min(struct(__d2, cid)) aggregate was tried here
-    # (VERDICT r16 #5) and REVERTED — Spark plans min over a struct as
-    # a SortAggregate (the agg buffer is not mutable-fixed-width), so
-    # it re-sorts by (vid, s) exactly like the window while paying two
-    # aggregate passes: measured 0.94× interleaved at sf0.1. The
-    # row_number window already runs under WindowGroupLimit (partial
-    # top-1 per partition before the exchange), which is the efficient
-    # shape for this argmin.
-    w_enc = Window.partitionBy("vid", "s").orderBy(
-        F.col("__d2").asc(), F.col("cid").asc()
-    )
-    codes = (
-        dists.withColumn("__rn", F.row_number().over(w_enc))
-        .filter(F.col("__rn") == 1)
-        .select("vid", "s", "cid")
-    )
-    recon = (
-        codes.join(F.broadcast(seeds), ["s", "cid"])
-        .groupBy("vid")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("s", "cw"))),
-                    lambda p: p["cw"],
-                )
-            ).alias("recon")
-        )
-    )
+    recon = _pq_encode_seeded(u, "__unit", "sub", ("vid",), seeds, "cid", m, dsub, "recon")
     q = _unit_projection(queries, vec_col, id_col, "query_id")
-    scored = (
-        recon.withColumnRenamed("vid", "neighbor_id")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(dot(F.col("__unit"), F.col("recon")), 4).alias(
-                "pq_score"
-            ),
-        )
-    )
+    cand = recon.withColumnRenamed("vid", "neighbor_id").crossJoin(F.broadcast(q))
+    scored = _score(cand, dot(F.col("__unit"), F.col("recon")), "pq_score")
     return _topk_per_query(scored, "pq_score", k)
 
 
@@ -1881,15 +1802,7 @@ def ann_topk_ivfpq(
     # 0.0-seeded left-to-right sum, and cdot is added to that finished
     # value — the identical grouping the old cdot + aggregate(...) had.
     score = F.col("cdot") + _adc_score(m, stride)
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(score, 4).alias("ivfpq_score"),
-        )
-    )
+    scored = _score(corpus.join(F.broadcast(probes), "cell"), score, "ivfpq_score")
     return _topk_per_query(scored, "ivfpq_score", k)
 
 
@@ -1972,61 +1885,10 @@ def ann_ivfpq_seeded_topk(
     cw_ids = _lowest_ids(u, "vid", 2 * n_seeds).join(
         F.broadcast(seed_ids), "vid", "left_anti"
     )
-    cw = (
-        resid.join(F.broadcast(cw_ids), "vid")
-        .select(
-            F.col("vid").cast("int").alias("ccode"),
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
-            F.col("res"),
-        )
-        .select(
-            "ccode",
-            "s",
-            F.slice(F.col("res"), F.col("s") * dsub + 1, dsub).alias("cw"),
-        )
-    )
-    rsubs = resid.select(
-        "vid",
-        "cell",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
-        F.col("res"),
-    ).select(
-        "vid",
-        "cell",
-        "s",
-        F.slice(F.col("res"), F.col("s") * dsub + 1, dsub).alias("rsub"),
-    )
-    # min(struct) argmin tried and reverted here too (r17) — plans as
-    # SortAggregate; see ann_pq_seeded_topk's note.
-    w_enc = Window.partitionBy("vid", "s").orderBy(
-        F.col("__d2").asc(), F.col("ccode").asc()
-    )
-    codes = (
-        rsubs.join(F.broadcast(cw), "s")
-        .select(
-            "vid",
-            "cell",
-            "s",
-            "ccode",
-            round_half_up(_d2_unrolled(F.col("rsub"), F.col("cw"), dsub), 9).alias(
-                "__d2"
-            ),
-        )
-        .withColumn("__rn", F.row_number().over(w_enc))
-        .filter(F.col("__rn") == 1)
-        .select("vid", "cell", "s", "ccode")
-    )
-    recon = (
-        codes.join(F.broadcast(cw), ["s", "ccode"])
-        .groupBy("vid", "cell")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("s", "cw"))),
-                    lambda p: p["cw"],
-                )
-            ).alias("rrecon")
-        )
+    ccode = F.col("vid").cast("int").alias("ccode")
+    cw = _subvectors(resid.join(F.broadcast(cw_ids), "vid"), "res", "cw", m, dsub, ccode)
+    recon = _pq_encode_seeded(
+        resid, "res", "rsub", ("vid", "cell"), cw, "ccode", m, dsub, "rrecon"
     )
     q = _unit_projection(queries, vec_col, id_col, "query_id")
     probes = cells(
@@ -2034,21 +1896,13 @@ def ann_ivfpq_seeded_topk(
         "query_id",
         n_probe,
     ).join(q, "query_id")
-    scored = (
+    cand = (
         recon.withColumnRenamed("vid", "neighbor_id")
         .join(F.broadcast(probes), "cell")
         .join(F.broadcast(seeds.withColumnRenamed("cid", "cell")), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                dot(F.col("__unit"), F.col("su"))
-                + dot(F.col("__unit"), F.col("rrecon")),
-                4,
-            ).alias("ivfpq_score"),
-        )
     )
+    score = dot(F.col("__unit"), F.col("su")) + dot(F.col("__unit"), F.col("rrecon"))
+    scored = _score(cand, score, "ivfpq_score")
     return _topk_per_query(scored, "ivfpq_score", k)
 
 
@@ -2616,15 +2470,7 @@ def cluster_label_purity_seeded(
     never wider than n_seeds × labels. Cluster ids are seed vec_ids
     (longs), not 0..k-1 cell indexes.
     """
-    # per-vector norm hoisted out of the per-(vector, seed) cosine
-    # (r16, bit-identical — see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        F.col(id_col).alias("__vid"),
-        ea.alias("__e"),
-        norm(ea).alias("__n"),
-        F.col(label_col),
-    )
+    v = _seeded_projection(emb, vec_col, id_col, keep=(label_col,))
     seeds = _lowest_id_seeds(v, n_seeds)
     cl = _nearest_seeds(v, seeds, "__vid", 1, keep=(label_col,)).select(
         F.col("cell").alias("cluster"), label_col
@@ -2660,14 +2506,7 @@ def semdedup_seeded(
 
     Output: (id_col, cluster, kept) — cluster is the seed vec_id.
     """
-    # per-vector norm hoisted out of the per-(vector, seed) cosine
-    # (r16, bit-identical — see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        F.col(id_col).cast("long").alias("__vid"),
-        ea.alias("__e"),
-        norm(ea).alias("__n"),
-    )
+    v = _seeded_projection(emb, vec_col, id_col)
     seeds = _lowest_id_seeds(v, n_seeds)
     cells = _nearest_seeds(v, seeds, "__vid", 1).select(
         "__vid", F.col("cell").alias("__cluster")
@@ -2731,8 +2570,6 @@ def ood_scores(
     assigned = ivf_assign(
         emb, centroids, vec_col=vec_col, id_col=id_col, out_id="__oid"
     )
-    # centroid norms computed driver-side (bit-identical — py_norm),
-    # vector norm hoisted: the distance pays one fold per vector
     cent_df = spark.createDataFrame(
         [
             (i, [float(x) for x in c], py_norm([float(x) for x in c]))

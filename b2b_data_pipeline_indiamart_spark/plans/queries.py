@@ -217,6 +217,42 @@ def _nearest_seeds_sql(seeds: str, vec: str, keep: "tuple[str, ...]" = ()) -> st
             FROM v CROSS JOIN {seeds} s)"""
 
 
+#: the embeddings as CTE ``v`` (vec_id, e) and their unit vectors as
+#: CTE ``u`` (vid, uu): similarity._unit_projection, zero-norm vectors
+#: passed through unchanged
+_UNIT_SQL = """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+    u AS (SELECT vec_id AS vid,
+                 CASE WHEN sqrt(list_dot_product(e, e)) > 0
+                      THEN list_transform(e, x -> x / sqrt(list_dot_product(e, e)))
+                      ELSE e END AS uu
+          FROM v)"""
+
+
+def _pq_encode_sql(subs: str, sub: str, keep: "tuple[str, ...]", book: str, code: str,
+                   out: str) -> str:
+    """DuckDB spelling of similarity._pq_encode_seeded as CTEs ``dists``,
+    ``codes`` and ``recon``: each 4-dim subvector ``sub`` of ``subs``
+    (*keep, s, sub) coded to the ``book`` (s, ``code``, cw) codeword at
+    the least 9dp-rounded squared L2 distance, ties to the lower
+    ``code``; ``recon`` is (*keep, ``out``), the codewords flattened in
+    subspace order."""
+    cols = ", ".join(f"k.{c}" for c in keep)
+    return f"""dists AS (
+      SELECT {", ".join(f"b.{c}" for c in keep)}, b.s, c.{code},
+             round(list_dot_product(
+               list_transform(range(1, 5), i -> b.{sub}[i] - c.cw[i]),
+               list_transform(range(1, 5), i -> b.{sub}[i] - c.cw[i])), 9) AS d2
+      FROM {subs} b JOIN {book} c USING (s)
+    ),
+    codes AS (SELECT {", ".join(keep)}, s, {code} FROM (
+      SELECT *, row_number() OVER (PARTITION BY vid, s
+                                   ORDER BY d2 ASC, {code} ASC) AS rn
+      FROM dists) WHERE rn = 1),
+    recon AS (SELECT {cols}, flatten(list(c.cw ORDER BY k.s)) AS {out}
+              FROM codes k JOIN {book} c ON c.s = k.s AND c.{code} = k.{code}
+              GROUP BY {cols})"""
+
+
 def _session_ids_sql(cols: str) -> str:
     """DuckDB spelling of temporal.session_ids as a CTE named ``ids``:
     events ``cols`` plus a BIGINT ``session_id`` (1-based per user),
@@ -3889,33 +3925,13 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "ann_pq_portable",
     f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    u AS (SELECT vec_id AS vid,
-                 CASE WHEN sqrt(list_dot_product(e, e)) > 0
-                      THEN list_transform(e, x -> x / sqrt(list_dot_product(e, e)))
-                      ELSE e END AS uu
-          FROM v),
+    WITH {_UNIT_SQL},
     subs AS (SELECT vid, sp.s AS s,
                     list_slice(uu, sp.s * 4 + 1, sp.s * 4 + 4) AS sub
              FROM u CROSS JOIN (SELECT unnest(range(0, 16)) AS s) sp),
     seeds AS (SELECT s, vid AS cid, sub AS cw FROM subs
               WHERE vid IN (SELECT vid FROM u ORDER BY vid LIMIT 16)),
-    dists AS (
-      SELECT b.vid, b.s, sd.cid,
-             round(list_dot_product(
-               list_transform(range(1, 5), i -> b.sub[i] - sd.cw[i]),
-               list_transform(range(1, 5), i -> b.sub[i] - sd.cw[i])), 9) AS d2
-      FROM subs b JOIN seeds sd USING (s)
-    ),
-    codes AS (SELECT vid, s, cid FROM (
-      SELECT *, row_number() OVER (PARTITION BY vid, s
-                                   ORDER BY d2 ASC, cid ASC) AS rn
-      FROM dists) WHERE rn = 1),
-    recon AS (
-      SELECT c.vid, flatten(list(sd.cw ORDER BY c.s)) AS recon
-      FROM codes c JOIN seeds sd ON sd.s = c.s AND sd.cid = c.cid
-      GROUP BY c.vid
-    ),
+    {_pq_encode_sql('subs', 'sub', ('vid',), 'seeds', 'cid', 'recon')},
     q AS (SELECT vid AS query_id, uu AS qu FROM u WHERE vid < 5),
     scored AS (
       SELECT q.query_id, r.vid AS neighbor_id,
@@ -3945,12 +3961,7 @@ def ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "ann_ivf_pq_portable",
     f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    u AS (SELECT vec_id AS vid,
-                 CASE WHEN sqrt(list_dot_product(e, e)) > 0
-                      THEN list_transform(e, x -> x / sqrt(list_dot_product(e, e)))
-                      ELSE e END AS uu
-          FROM v),
+    WITH {_UNIT_SQL},
     seeds AS (SELECT vid AS cid, uu AS su FROM u
               WHERE vid IN (SELECT vid FROM u ORDER BY vid LIMIT 16)),
     sims AS (SELECT u.vid, s.cid, u.uu,
@@ -3974,19 +3985,7 @@ def ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     rsubs AS (SELECT vid, cell, sp.s AS s,
                      list_slice(res, sp.s * 4 + 1, sp.s * 4 + 4) AS rsub
               FROM resid CROSS JOIN sp),
-    dists AS (SELECT r.vid, r.cell, r.s, c.ccode,
-                     round(list_dot_product(
-                       list_transform(range(1, 5), i -> r.rsub[i] - c.cw[i]),
-                       list_transform(range(1, 5), i -> r.rsub[i] - c.cw[i])),
-                       9) AS d2
-              FROM rsubs r JOIN cw c USING (s)),
-    codes AS (SELECT vid, cell, s, ccode FROM (
-      SELECT *, row_number() OVER (PARTITION BY vid, s
-                                   ORDER BY d2 ASC, ccode ASC) AS rn
-      FROM dists) WHERE rn = 1),
-    recon AS (SELECT k.vid, k.cell, flatten(list(c.cw ORDER BY k.s)) AS rrecon
-              FROM codes k JOIN cw c ON c.s = k.s AND c.ccode = k.ccode
-              GROUP BY k.vid, k.cell),
+    {_pq_encode_sql('rsubs', 'rsub', ('vid', 'cell'), 'cw', 'ccode', 'rrecon')},
     q AS (SELECT vid AS query_id, uu AS qu FROM u WHERE vid < 5),
     probes AS (SELECT vid AS query_id, cid AS cell FROM ranked
                WHERE rn <= 4 AND vid < 5),

@@ -218,7 +218,9 @@ def test_shared_plan_rules_are_spelled_once():
     """The scan fan-out is decided only in ``session.fan_out``; hinted
     region/nation loads go through ``_dim`` (catalog.load_dim); the
     oracle's gap-session boundary is ``_session_ids_sql`` plus the
-    native session_window key's own ``>=`` spelling."""
+    native session_window key's own ``>=`` spelling. The ANN family's
+    self-match drop is ``similarity._score``, the seeded PQ argmin is
+    ``similarity._pq_encode_seeded`` and its oracle ``_pq_encode_sql``."""
     pkg = REPO / "b2b_data_pipeline_indiamart_spark"
     fan_out_deciders = []
     for path in sorted(pkg.rglob("*.py")):
@@ -233,6 +235,11 @@ def test_shared_plan_rules_are_spelled_once():
     queries = (pkg / "plans" / "queries.py").read_text()
     assert "F.broadcast(_t(" not in queries
     assert queries.count("lag(epoch_ms(ts))") <= 2
+    assert queries.count("ORDER BY d2 ASC") == 1
+
+    similarity = (pkg / "operators" / "similarity.py").read_text()
+    assert similarity.count('F.col("neighbor_id") != F.col("query_id")') == 1
+    assert similarity.count('F.col("__d2").asc()') == 1
 
 
 def test_parity_canon_is_spelled_once():

@@ -171,3 +171,11 @@ def test_round9_additions_on_empty(spark, empty_docs, empty_emb):
     assert (
         similarity.ann_pq_seeded_topk(empty_emb, empty_emb, dim=64, m=16).count() == 0
     )
+    assert (
+        similarity.ann_ivfpq_seeded_topk(empty_emb, empty_emb, dim=64, m=16).count()
+        == 0
+    )
+    assert (
+        similarity.ann_ivf_lloyd_seeded_topk(empty_emb, empty_emb, n_seeds=16).count()
+        == 0
+    )

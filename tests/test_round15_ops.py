@@ -110,6 +110,24 @@ def test_ivf_lloyd_centroids_match_numpy_reference(spark, sf_small):
     caching.release_cached()
 
 
+def test_ivf_lloyd_zero_iterations_is_the_seeded_twin(spark, sf_small):
+    """With no Lloyd update the trained twin's centroids are the raw
+    seed vectors, so it must return exactly the rows of
+    ann_ivf_seeded_topk for the same seeds, probe count and k: both
+    route through the one seeded routing tail."""
+    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
+    queries = emb.filter("vec_id < 5")
+    lloyd = similarity.ann_ivf_lloyd_seeded_topk(
+        emb, queries, n_seeds=16, n_iters=0, n_probe=4, k=10
+    ).collect()
+    seeded = similarity.ann_ivf_seeded_topk(
+        emb, queries, n_seeds=16, n_probe=4, k=10
+    ).collect()
+    caching.release_cached()
+    assert len(seeded) == 50
+    assert sorted(map(tuple, lloyd)) == sorted(map(tuple, seeded))
+
+
 def test_pca_invariants_match_covariance(spark, sf_small):
     """Σλ must equal tr(C) and Σλ² must equal ‖C‖²_F of the quantized
     covariance to well within the 6dp grid — the identity the oracle
