@@ -217,6 +217,27 @@ def _nearest_seeds_sql(seeds: str, vec: str, keep: "tuple[str, ...]" = ()) -> st
             FROM v CROSS JOIN {seeds} s)"""
 
 
+def _seeded_route_sql(cells: str, vec: str, n_probe: int, k: int) -> str:
+    """DuckDB spelling of similarity._seeded_route as the CTEs
+    ``ranked``, ``fcells``, ``probes`` and ``scored`` plus the top-k
+    SELECT: every row of CTE ``v`` goes to its nearest of ``cells``
+    (cid, ``vec``), each query (vec_id < 5) to its ``n_probe`` nearest,
+    candidates join on the cell and the 4dp cosine is ranked."""
+    return f"""ranked AS ({_nearest_seeds_sql(cells, vec)}),
+    fcells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
+    probes AS (SELECT vec_id AS query_id, cid AS cell FROM ranked
+               WHERE rn <= {n_probe} AND vec_id < 5),
+    scored AS (
+      SELECT p.query_id, c.vec_id AS neighbor_id,
+             round({_cos_sql('q.e', 'n.e')}, 4) AS cos_sim
+      FROM fcells c
+      JOIN probes p USING (cell)
+      JOIN v n ON n.vec_id = c.vec_id
+      JOIN v q ON q.vec_id = p.query_id
+      WHERE c.vec_id <> p.query_id)
+    {_topk_sql('scored', 'cos_sim', k)}"""
+
+
 #: the embeddings as CTE ``v`` (vec_id, e) and their unit vectors as
 #: CTE ``u`` (vid, uu): similarity._unit_projection, zero-norm vectors
 #: passed through unchanged
@@ -2041,20 +2062,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     seeds AS (SELECT vec_id AS cid, e AS se FROM v
               WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 16)),
-    ranked AS ({_nearest_seeds_sql('seeds', 'se')}),
-    cells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, cid AS cell FROM ranked
-               WHERE rn <= 4 AND vec_id < 5),
-    scored AS (
-      SELECT p.query_id, c.vec_id AS neighbor_id,
-             round({_cos_sql('q.e', 'n.e')}, 4) AS cos_sim
-      FROM cells c
-      JOIN probes p USING (cell)
-      JOIN v n ON n.vec_id = c.vec_id
-      JOIN v q ON q.vec_id = p.query_id
-      WHERE c.vec_id <> p.query_id
-    )
-    {_topk_sql('scored', 'cos_sim', 10)}
+    {_seeded_route_sql('seeds', 'se', 4, 10)}
     """,
 )
 def ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11733,19 +11741,7 @@ def _ivf_lloyd_sql(n_iters: int = 2, n_probe: int = 4, k: int = 10) -> str:
                              ELSE e[dd.j] END * 1000000.0 + 0.5) AS BIGINT) AS q
       FROM v CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS j) dd),
     {",".join(steps)},
-    ranked AS ({_nearest_seeds_sql(prev_cent, 'ce')}),
-    fcells AS (SELECT vec_id, cid AS cell FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, cid AS cell FROM ranked
-               WHERE rn <= {n_probe} AND vec_id < 5),
-    scored AS (
-      SELECT p.query_id, c.vec_id AS neighbor_id,
-             round({_cos_sql('q.e', 'n.e')}, 4) AS cos_sim
-      FROM fcells c
-      JOIN probes p USING (cell)
-      JOIN v n ON n.vec_id = c.vec_id
-      JOIN v q ON q.vec_id = p.query_id
-      WHERE c.vec_id <> p.query_id)
-    {_topk_sql('scored', 'cos_sim', k)}
+    {_seeded_route_sql(prev_cent, 'ce', n_probe, k)}
     """
 
 

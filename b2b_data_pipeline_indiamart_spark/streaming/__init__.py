@@ -13,8 +13,7 @@ from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
     start_incremental_rollup,
     start_neardup_suppress_sink,
     start_embedding_neardup_suppress_sink,
-    read_embedding_neardup_store,
-    embedding_state_schema,
+    read_state_store,
     start_parquet_ingest,
     stateful_sessionize,
     streaming_decontaminate,
@@ -36,8 +35,7 @@ __all__ = [
     "start_incremental_rollup",
     "start_neardup_suppress_sink",
     "start_embedding_neardup_suppress_sink",
-    "read_embedding_neardup_store",
-    "embedding_state_schema",
+    "read_state_store",
     "start_parquet_ingest",
     "psi_reference",
     "start_drift_monitor_sink",

@@ -15,8 +15,10 @@ to ``applyInPandasWithState``: :func:`running_user_totals`,
 :func:`stateful_sessionize` (event-time timeout) and
 :func:`running_distinct_types`.
 
-The exactly-once ``foreachBatch`` sinks share one epoch ledger
-(:func:`_ledgered`) that makes a replayed epoch a no-op.
+The two exactly-once near-dup sinks share one epoch ledger
+(:func:`_ledgered`) that makes a replayed epoch a no-op, and one
+admitted-state layout (:data:`_STATE_STORES`, :func:`read_state_store`,
+:func:`_admit_and_extend`).
 """
 
 from __future__ import annotations
@@ -447,75 +449,130 @@ def _ledgered(ledger_dir: str, write_epoch):
     return run
 
 
-def neardup_state_schemas(id_field, k: int):
-    """Explicit schemas for the two near-dup state stores (sigs and
-    bands), INCLUDING the partition columns. Reading with an explicit
-    schema (instead of inference) makes a replay robust to the
-    crash-after-mkdir case: a state directory that exists but holds no
-    committed parquet yet reads as an empty frame instead of failing
-    schema inference and wedging the stream until manual cleanup.
-    """
-    from pyspark.sql import types as T
+def _start_ledgered(
+    stream: DataFrame, checkpoint_dir: str, ledger_dir: str, suppress
+) -> StreamingQuery:
+    """Start ``stream`` into a near-dup sink through the epoch ledger:
+    each epoch persists its batch inside one :func:`~...caching.scope`
+    and, when the batch is not empty, runs ``suppress(batch,
+    epoch_id)``."""
+    from ..operators import caching
 
-    sig_schema = T.StructType(
-        [id_field]
-        + [T.StructField(f"mh_{i}", T.LongType()) for i in range(k)]
-        + [T.StructField("epoch", T.LongType())]
+    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        with caching.scope():
+            batch = caching.persist_tracked(batch_df)
+            if batch.take(1):
+                suppress(batch, epoch_id)
+
+    return (
+        stream.writeStream.foreachBatch(_ledgered(ledger_dir, write_epoch))
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .start()
     )
-    band_schema = T.StructType([
-        id_field,
-        T.StructField("band_id", T.IntegerType()),
-        T.StructField("band_hash", T.LongType()),
-        T.StructField("epoch", T.LongType()),
-        T.StructField("band_bucket", T.IntegerType()),
-    ])
-    return sig_schema, band_schema
 
 
-def read_neardup_band_store(
+#: The near-dup sinks' admitted-state stores, each laid out
+#: ``state_dir/<store>/epoch=<e>[/<part>=<p>]`` with one row per
+#: ADMITTED id: store → (value fields for signature length k, the
+#: int sub-partition column the probe prunes on, or None).
+_STATE_STORES = {
+    "sigs": (lambda k: [(f"mh_{i}", T.LongType()) for i in range(k)], None),
+    "bands": (
+        lambda k: [("band_id", T.IntegerType()), ("band_hash", T.LongType())],
+        "band_bucket",
+    ),
+    "vecs": (lambda k: [("v", T.ArrayType(T.DoubleType()))], "cell"),
+}
+
+
+def read_state_store(
     spark,
     state_dir: str,
+    store: str,
     id_field,
     *,
     k: int = 64,
     exclude_epoch: int | None = None,
-    buckets: "list[int] | None" = None,
+    parts: "list[int] | None" = None,
 ) -> DataFrame:
-    """Band-index half of the near-dup state store, pruned to the
-    probe's band buckets.
+    """One near-dup state store of :data:`_STATE_STORES` as (id,
+    *values[, part]).
 
-    The store is laid out ``state_dir/bands/epoch=<e>/band_bucket=<b>``
-    so BOTH predicates here are partition filters: the in-flight-epoch
-    exclusion and — the 100 TB seam — the probe's band-bucket set. A
-    micro-batch touches only the buckets its own bands hash into, so
-    the state scan is ∝ matching buckets, not ∝ corpus; the e2e test
-    asserts the ``PartitionFilters`` entry is visible in the physical
-    plan. Explicit schema per :func:`neardup_state_schemas`.
+    The schema is explicit, partition columns included: a store
+    directory that exists but holds no committed parquet yet (a crash
+    after mkdir) reads as an empty frame instead of failing schema
+    inference and wedging the stream until manual cleanup. Both
+    predicates are partition filters: ``exclude_epoch`` drops the
+    in-flight epoch, so a replay never probes its own half-written
+    rows, and ``parts`` keeps only the probe's band buckets or IVF
+    cells — the 100 TB seam: a micro-batch scans the state ∝ its own
+    buckets or cells, never ∝ corpus.
     """
-    _, band_schema = neardup_state_schemas(id_field, k)
-    df = spark.read.schema(band_schema).parquet(f"{state_dir}/bands")
+    values, part = _STATE_STORES[store]
+    schema = T.StructType(
+        [id_field]
+        + [T.StructField(name, typ) for name, typ in values(k)]
+        + [T.StructField("epoch", T.LongType())]
+        + ([T.StructField(part, T.IntegerType())] if part else [])
+    )
+    df = spark.read.schema(schema).parquet(f"{state_dir}/{store}")
     if exclude_epoch is not None:
         df = df.filter(F.col("epoch") != exclude_epoch)
-    if buckets is not None:
-        df = df.filter(F.col("band_bucket").isin(buckets))
-    return df.drop("band_bucket", "epoch")
-
-
-def read_neardup_sig_store(
-    spark,
-    state_dir: str,
-    id_field,
-    *,
-    k: int = 64,
-    exclude_epoch: int | None = None,
-) -> DataFrame:
-    """Signature half of the near-dup state store (one row of k minima
-    per admitted doc), epoch-partitioned, explicit schema."""
-    sig_schema, _ = neardup_state_schemas(id_field, k)
-    df = spark.read.schema(sig_schema).parquet(f"{state_dir}/sigs")
-    if exclude_epoch is not None:
-        df = df.filter(F.col("epoch") != exclude_epoch)
+    if parts is not None:
+        df = df.filter(F.col(part).isin(parts))
     return df.drop("epoch")
+
+
+def _probe_state(
+    probe: DataFrame, id_col: str, state_dir: str, store: str, epoch_id: int
+) -> "DataFrame | None":
+    """The admitted rows of ``store`` in the sub-partitions ``probe``
+    hits (its column named after the store's part column), the
+    in-flight epoch excluded; None before the store's first epoch. The
+    probe's partition set is one small collect (≤ buckets or cells)."""
+    spark = probe.sparkSession
+    fs, path = hadoop_path(spark, f"{state_dir}/{store}")
+    if not fs.exists(path):
+        return None
+    part = _STATE_STORES[store][1]
+    parts = [r[0] for r in probe.select(part).distinct().collect()]
+    return read_state_store(
+        spark, state_dir, store, probe.schema[id_col],
+        exclude_epoch=epoch_id, parts=parts,
+    )
+
+
+def _admit_and_extend(
+    batch: DataFrame,
+    sup: DataFrame,
+    id_col: str,
+    output_dir: str,
+    state_dir: str,
+    epoch_id: int,
+    extend: "dict[str, DataFrame]",
+) -> None:
+    """Write the ``batch`` rows whose id is not in ``sup`` to
+    ``output_dir/epoch=<id>``, then append each ``extend`` store's
+    rows (keyed by ``id_col``) of the admitted ids to
+    ``state_dir/<store>/epoch=<id>``, partitioned by the store's part
+    column. The ids are read back from the WRITTEN output, so output
+    and state cannot diverge under a lazy recomputation; a retried
+    epoch overwrites its own directories."""
+    out = f"{output_dir}/epoch={epoch_id}"
+    batch.join(sup.distinct(), id_col, "left_anti").write.mode(
+        "overwrite"
+    ).parquet(out)
+    admitted = batch.sparkSession.read.parquet(out)
+    for store, rows in extend.items():
+        ids = admitted.select(
+            F.col(id_col).cast(rows.schema[id_col].dataType).alias(id_col)
+        )
+        writer = rows.join(ids, id_col).write.mode("overwrite")
+        part = _STATE_STORES[store][1]
+        if part:
+            writer = writer.partitionBy(part)
+        writer.parquet(f"{state_dir}/{store}/epoch={epoch_id}")
 
 
 def _assert_no_legacy_neardup_store(spark, state_dir: str) -> None:
@@ -616,179 +673,96 @@ def start_neardup_suppress_sink(
     # be migrated (or a fresh state_dir used) explicitly.
     _assert_no_legacy_neardup_store(docs.sparkSession, state_dir)
 
-    def suppress_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        with caching.scope():
-            batch = caching.persist_tracked(batch_df)
-            if not batch.take(1):
-                return
-            # (1b) collapse exact duplicates BEFORE signatures (ADVICE
-            # r12; the ngram_jaccard_verified discipline). Without
-            # this, a batch of >max_bucket_size identical/boilerplate
-            # docs lands in ONE oversized bucket in EVERY band; the cap
-            # would drop them all and the "other, more selective bands"
-            # recovery argument does not apply to exact copies — every
-            # copy would be silently admitted. Collapsing first
-            # suppresses the copies exactly as the uncapped greedy pass
-            # would (identical normalized text → identical signatures →
-            # est_jaccard 1.0 → higher ids suppressed) and makes the
-            # bucket cap safe for the near-dup stage, which now only
-            # ever sees distinct normalized texts.
-            members = caching.persist_tracked(
-                dedup.exact_collapse(batch, text_col, id_col)
+    def suppress_epoch(batch: DataFrame, epoch_id: int) -> None:
+        # (1b) collapse exact duplicates BEFORE signatures (ADVICE
+        # r12; the ngram_jaccard_verified discipline). Without this, a
+        # batch of >max_bucket_size identical/boilerplate docs lands
+        # in ONE oversized bucket in EVERY band; the cap would drop
+        # them all and the "other, more selective bands" recovery
+        # argument does not apply to exact copies — every copy would
+        # be silently admitted. Collapsing first suppresses the copies
+        # exactly as the uncapped greedy pass would (identical
+        # normalized text → identical signatures → est_jaccard 1.0 →
+        # higher ids suppressed) and makes the bucket cap safe for the
+        # near-dup stage, which now only ever sees distinct normalized
+        # texts.
+        members = caching.persist_tracked(
+            dedup.exact_collapse(batch, text_col, id_col)
+        )
+        exact_sup = members.filter(
+            F.col(id_col) != F.col("rep_id")
+        ).select(id_col)
+        reps = batch.join(
+            members.filter(F.col(id_col) == F.col("rep_id")).select(id_col),
+            id_col,
+            "left_semi",
+        )
+        sigs = caching.persist_tracked(
+            dedup.minhash_signatures(reps, text_col, id_col, k=k)
+        )
+        # (2) within-batch greedy suppression (representatives only;
+        # the cap is explicit at this call site — sink param)
+        pairs = dedup.lsh_candidate_pairs(
+            sigs, id_col=id_col, k=k, bands=bands,
+            max_bucket_size=max_bucket_size,
+        )
+        sup = (
+            dedup.minhash_estimate(pairs, sigs, id_col=id_col, k=k)
+            .filter(F.col("est_jaccard") >= threshold)
+            .select(F.col("id_b").alias(id_col))
+            .unionByName(exact_sup)
+        )
+        # (3) cross-batch suppression vs the admitted store
+        batch_bands = caching.persist_tracked(
+            dedup.band_table(sigs, id_col=id_col, k=k, bands=bands)
+            .withColumn(
+                "band_bucket",
+                F.pmod(F.col("band_hash"), F.lit(state_buckets)).cast("int"),
             )
-            exact_sup = members.filter(
-                F.col(id_col) != F.col("rep_id")
-            ).select(id_col)
-            reps = batch.join(
-                members.filter(F.col(id_col) == F.col("rep_id"))
-                .select(id_col),
+        )
+        state_bands = _probe_state(
+            batch_bands, id_col, state_dir, "bands", epoch_id
+        )
+        if state_bands is not None:
+            cand = caching.persist_tracked(
+                batch_bands.join(
+                    state_bands.withColumnRenamed(id_col, "__state_id"),
+                    ["band_id", "band_hash"],
+                )
+                .select(
+                    F.col(id_col).alias("id_a"),
+                    F.col("__state_id").alias("id_b"),
+                )
+                .distinct()
+            )
+            # fetch ONLY the candidate ids' signatures: broadcast
+            # semi-join of the (small) candidate set against the sig
+            # store — no state-wide shuffle
+            state_sigs = read_state_store(
+                batch.sparkSession, state_dir, "sigs", sigs.schema[id_col],
+                k=k, exclude_epoch=epoch_id,
+            ).join(
+                F.broadcast(
+                    cand.select(F.col("id_b").alias(id_col)).distinct()
+                ),
                 id_col,
                 "left_semi",
             )
-            sigs = caching.persist_tracked(
-                dedup.minhash_signatures(reps, text_col, id_col, k=k)
-            )
-            # (2) within-batch greedy suppression (representatives
-            # only; the cap is explicit at this call site — sink param)
-            pairs = dedup.lsh_candidate_pairs(
-                sigs, id_col=id_col, k=k, bands=bands,
-                max_bucket_size=max_bucket_size,
-            )
-            sup = (
-                dedup.minhash_estimate(pairs, sigs, id_col=id_col, k=k)
+            sup_state = (
+                dedup.minhash_estimate(
+                    cand, sigs, id_col=id_col, k=k, signatures_b=state_sigs,
+                )
                 .filter(F.col("est_jaccard") >= threshold)
-                .select(F.col("id_b").alias(id_col))
-                .unionByName(exact_sup)
+                .select(F.col("id_a").alias(id_col))
             )
-            # (3) cross-batch suppression vs the admitted store
-            id_field = batch.schema[id_col]
-            batch_bands = caching.persist_tracked(
-                dedup.band_table(sigs, id_col=id_col, k=k, bands=bands)
-                .withColumn(
-                    "band_bucket",
-                    F.pmod(F.col("band_hash"), F.lit(state_buckets))
-                    .cast("int"),
-                )
-            )
-            state_fs, state_path = hadoop_path(spark, f"{state_dir}/bands")
-            if state_fs.exists(state_path):
-                # the probe's bucket set (≤ state_buckets ints) prunes
-                # the band-index scan to matching partitions
-                probe_buckets = [
-                    r["band_bucket"]
-                    for r in batch_bands.select("band_bucket")
-                    .distinct().collect()
-                ]
-                state_bands = read_neardup_band_store(
-                    spark, state_dir, id_field, k=k,
-                    exclude_epoch=epoch_id,  # in-flight replay
-                    buckets=probe_buckets,
-                ).withColumnRenamed(id_col, "__state_id")
-                cand = (
-                    batch_bands
-                    .join(state_bands, ["band_id", "band_hash"])
-                    .select(
-                        F.col(id_col).alias("id_a"),
-                        F.col("__state_id").alias("id_b"),
-                    )
-                    .distinct()
-                )
-                cand = caching.persist_tracked(cand)
-                # fetch ONLY the candidate ids' signatures: broadcast
-                # semi-join of the (small) candidate set against the
-                # sig store — no state-wide shuffle
-                state_sigs = read_neardup_sig_store(
-                    spark, state_dir, id_field, k=k,
-                    exclude_epoch=epoch_id,
-                ).join(
-                    F.broadcast(
-                        cand.select(F.col("id_b").alias(id_col)).distinct()
-                    ),
-                    id_col,
-                    "left_semi",
-                )
-                sup_state = (
-                    dedup.minhash_estimate(
-                        cand, sigs, id_col=id_col, k=k,
-                        signatures_b=state_sigs,
-                    )
-                    .filter(F.col("est_jaccard") >= threshold)
-                    .select(F.col("id_a").alias(id_col))
-                )
-                sup = sup.unionByName(sup_state)
-            admitted = batch.join(sup.distinct(), id_col, "left_anti")
-            admitted.write.mode("overwrite").parquet(
-                f"{output_dir}/epoch={epoch_id}"
-            )
-            # signatures of the admitted docs extend the store; read
-            # back the WRITTEN output so the two writes can't diverge
-            # under a lazy recomputation
-            admitted_ids = spark.read.parquet(
-                f"{output_dir}/epoch={epoch_id}"
-            ).select(id_col)
-            admitted_sigs = caching.persist_tracked(
-                sigs.join(admitted_ids, id_col)
-            )
-            admitted_sigs.write.mode("overwrite").parquet(
-                f"{state_dir}/sigs/epoch={epoch_id}"
-            )
-            (
-                batch_bands.join(admitted_ids, id_col)
-                .write.mode("overwrite")
-                .partitionBy("band_bucket")
-                .parquet(f"{state_dir}/bands/epoch={epoch_id}")
-            )
+            sup = sup.unionByName(sup_state)
+        # (4) the admitted docs' signatures and band index extend the store
+        _admit_and_extend(
+            batch, sup, id_col, output_dir, state_dir, epoch_id,
+            {"sigs": sigs, "bands": batch_bands},
+        )
 
-    return (
-        docs.writeStream.foreachBatch(_ledgered(ledger_dir, suppress_epoch))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
-
-
-def embedding_state_schema(id_field) -> "T.StructType":
-    """Explicit schema for the embedding near-dup state store
-    (``state_dir/vecs/epoch=<e>/cell=<c>``): one (id, v) row per
-    ADMITTED vector plus the two directory-encoded partition columns.
-    Explicit for the same reason as :func:`neardup_state_schemas` —
-    an empty store directory must not wedge the stream on schema
-    inference."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            id_field,
-            T.StructField("v", T.ArrayType(T.DoubleType())),
-            T.StructField("epoch", T.LongType()),
-            T.StructField("cell", T.IntegerType()),
-        ]
-    )
-
-
-def read_embedding_neardup_store(
-    spark,
-    state_dir: str,
-    id_field,
-    *,
-    exclude_epoch: int | None = None,
-    cells: "list[int] | None" = None,
-) -> DataFrame:
-    """Admitted-vector state store, pruned to the probe's cells.
-
-    Layout ``state_dir/vecs/epoch=<e>/cell=<c>`` makes BOTH predicates
-    partition filters: the in-flight-epoch exclusion and — the 100 TB
-    seam — the batch's cell set (the IVF probe discipline: a
-    micro-batch compares only against vectors routed to its own
-    cells, ∝ matching cells, never ∝ corpus)."""
-    schema = embedding_state_schema(id_field)
-    df = spark.read.schema(schema).parquet(f"{state_dir}/vecs")
-    if exclude_epoch is not None:
-        df = df.filter(F.col("epoch") != exclude_epoch)
-    if cells is not None:
-        df = df.filter(F.col("cell").isin(cells))
-    return df.drop("epoch")
+    return _start_ledgered(docs, checkpoint_dir, ledger_dir, suppress_epoch)
 
 
 def start_embedding_neardup_suppress_sink(
@@ -853,99 +827,56 @@ def start_embedding_neardup_suppress_sink(
     """
     from ..operators import caching, similarity
 
-    def suppress_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        with caching.scope():
-            batch = caching.persist_tracked(batch_df)
-            if not batch.take(1):
-                return
-            # (1) route to cells with the batch keys' assignment gemm
-            assigned = similarity.ivf_assign(
-                batch, centroids, vec_col=vec_col, id_col=id_col,
-                out_id="__aid",
+    def suppress_epoch(batch: DataFrame, epoch_id: int) -> None:
+        # (1) route to cells with the batch keys' assignment gemm
+        assigned = similarity.ivf_assign(
+            batch, centroids, vec_col=vec_col, id_col=id_col, out_id="__aid",
+        )
+        clustered = caching.persist_tracked(
+            batch.select(F.col(id_col).cast("long").alias(id_col), F.col(vec_col))
+            .join(
+                assigned.select("__aid", "cell"),
+                F.col(id_col) == F.col("__aid"),
             )
-            clustered = caching.persist_tracked(
-                batch.select(
-                    F.col(id_col).cast("long").alias(id_col),
-                    F.col(vec_col),
-                )
-                .join(
-                    assigned.select("__aid", "cell"),
-                    F.col(id_col) == F.col("__aid"),
-                )
-                .select(id_col, vec_col, F.col("cell").alias("__cell"))
+            .select(id_col, vec_col, F.col("cell").alias("__cell"))
+        )
+        # (2) within-batch: the batch semdedup keep rule verbatim
+        batch_sup = (
+            similarity.semdedup(
+                clustered, "__cell", vec_col=vec_col, id_col=id_col,
+                threshold=threshold,
             )
-            # (2) within-batch: the batch semdedup keep rule verbatim
-            batch_sup = (
-                similarity.semdedup(
-                    clustered, "__cell", vec_col=vec_col, id_col=id_col,
-                    threshold=threshold,
+            .filter(~F.col("kept"))
+            .select(id_col)
+        )
+        # the survivors are already in the vecs store's (id, v, cell) shape
+        survivors = caching.persist_tracked(
+            clustered.join(batch_sup, id_col, "left_anti").select(
+                id_col,
+                similarity.as_double_array(F.col(vec_col)).alias("v"),
+                F.col("__cell").alias("cell"),
+            )
+        )
+        # (3) cross-batch probe, pruned to the batch's own cells
+        sup = batch_sup
+        state = _probe_state(survivors, id_col, state_dir, "vecs", epoch_id)
+        if state is not None:
+            sup_state = (
+                survivors.join(state.select(F.col("v").alias("__sv"), "cell"), "cell")
+                .filter(
+                    round_half_up(similarity.cosine(F.col("v"), F.col("__sv")), 4)
+                    >= threshold
                 )
-                .filter(~F.col("kept"))
                 .select(id_col)
             )
-            survivors = caching.persist_tracked(
-                clustered.join(batch_sup, id_col, "left_anti").select(
-                    id_col,
-                    similarity.as_double_array(F.col(vec_col)).alias("__v"),
-                    "__cell",
-                )
-            )
-            # (3) cross-batch probe, pruned to the batch's own cells
-            sup = batch_sup
-            id_field = clustered.schema[id_col]
-            state_fs, state_path = hadoop_path(spark, f"{state_dir}/vecs")
-            if state_fs.exists(state_path):
-                probe_cells = [
-                    r["__cell"]
-                    for r in survivors.select("__cell").distinct().collect()
-                ]
-                state = read_embedding_neardup_store(
-                    spark, state_dir, id_field,
-                    exclude_epoch=epoch_id, cells=probe_cells,
-                ).select(
-                    F.col("v").alias("__sv"),
-                    F.col("cell").alias("__cell"),
-                )
-                sup_state = (
-                    survivors.join(state, "__cell")
-                    .filter(
-                        round_half_up(
-                            similarity.cosine(F.col("__v"), F.col("__sv")),
-                            4,
-                        )
-                        >= threshold
-                    )
-                    .select(id_col)
-                )
-                sup = sup.unionByName(sup_state)
-            admitted = batch.join(sup.distinct(), id_col, "left_anti")
-            admitted.write.mode("overwrite").parquet(
-                f"{output_dir}/epoch={epoch_id}"
-            )
-            # extend the state from the WRITTEN output so the two
-            # writes cannot diverge under a lazy recomputation
-            admitted_ids = spark.read.parquet(
-                f"{output_dir}/epoch={epoch_id}"
-            ).select(F.col(id_col).cast("long").alias(id_col))
-            (
-                survivors.join(admitted_ids, id_col)
-                .select(
-                    id_col,
-                    F.col("__v").alias("v"),
-                    F.col("__cell").alias("cell"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(f"{state_dir}/vecs/epoch={epoch_id}")
-            )
+            sup = sup.unionByName(sup_state)
+        # (4) the admitted vectors extend the store
+        _admit_and_extend(
+            batch, sup, id_col, output_dir, state_dir, epoch_id,
+            {"vecs": survivors},
+        )
 
-    return (
-        vecs.writeStream.foreachBatch(_ledgered(ledger_dir, suppress_epoch))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return _start_ledgered(vecs, checkpoint_dir, ledger_dir, suppress_epoch)
 
 
 _TYPES_STATE = T.StructType([T.StructField("types", T.ArrayType(T.StringType()))])
@@ -1033,21 +964,13 @@ def start_incremental_rollup(
     (day=.../hour=.../event_type=...) with columns (window_start,
     n_events, sum_value) — no streaming awareness needed.
     """
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-            F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
-            F.date_format(F.col("w.start"), "HH").alias("hour"),
-        )
+    agg = windowed_event_counts(events, watermark=watermark).select(
+        "window_start",
+        "event_type",
+        "n_events",
+        "sum_value",
+        F.date_format("window_start", "yyyy-MM-dd").alias("day"),
+        F.date_format("window_start", "HH").alias("hour"),
     )
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:

@@ -220,7 +220,8 @@ def test_shared_plan_rules_are_spelled_once():
     oracle's gap-session boundary is ``_session_ids_sql`` plus the
     native session_window key's own ``>=`` spelling. The ANN family's
     self-match drop is ``similarity._score``, the seeded PQ argmin is
-    ``similarity._pq_encode_seeded`` and its oracle ``_pq_encode_sql``."""
+    ``similarity._pq_encode_seeded`` and its oracle ``_pq_encode_sql``;
+    the oracle's seeded IVF routing tail is ``_seeded_route_sql``."""
     pkg = REPO / "b2b_data_pipeline_indiamart_spark"
     fan_out_deciders = []
     for path in sorted(pkg.rglob("*.py")):
@@ -236,10 +237,23 @@ def test_shared_plan_rules_are_spelled_once():
     assert "F.broadcast(_t(" not in queries
     assert queries.count("lag(epoch_ms(ts))") <= 2
     assert queries.count("ORDER BY d2 ASC") == 1
+    assert queries.count("JOIN probes p USING (cell)") == 1
 
     similarity = (pkg / "operators" / "similarity.py").read_text()
     assert similarity.count('F.col("neighbor_id") != F.col("query_id")') == 1
     assert similarity.count('F.col("__d2").asc()') == 1
+
+
+def test_neardup_state_store_is_spelled_once():
+    """Both near-dup sinks read their admitted state through
+    ``read_state_store`` (the one explicit-schema read) and extend it
+    through ``_admit_and_extend`` (the one ``state_dir/<store>/epoch=E``
+    write)."""
+    import re
+
+    jobs = (REPO / "b2b_data_pipeline_indiamart_spark" / "streaming" / "jobs.py").read_text()
+    assert jobs.count("spark.read.schema(") == 1
+    assert len(re.findall(r'f"\{state_dir\}/[^"]*epoch=\{epoch_id\}"', jobs)) == 1
 
 
 def test_parity_canon_is_spelled_once():

@@ -233,49 +233,36 @@ def test_customer_rfm_has_no_global_window(spark, sf_small):
 def test_no_empty_partition_spec_window_anywhere(spark, sf_small):
     # registry-wide guard: any windowed operator must partition its
     # window (per-group sort), never sort the whole input on one
-    # reducer. The optimized plan prints window specs as
-    # windowspecdefinition(<partition cols...>, <order>, <frame>) —
-    # an empty partition spec starts with the order spec directly,
-    # i.e. the first argument is an ASC/DESC sort order expression.
-    import re
-
-    # Windows whose input is BOUNDED BY CONSTRUCTION (a LIMIT k or an
-    # aggregate over ≤ k labels feeds them): a single-partition window
-    # over ≤ 10 rows is the cheapest correct plan, not a scale hazard.
-    bounded_input = {
-        "topk_cumulative",
-        "docs_zipf_slope",
-        # cumulative share over the 10-row decile grain (aggregate of
-        # a global_ntile output — bounded by construction)
-        "customer_pareto_curve",
-        # reverse-cumsum / product-limit windows run over the tenure
-        # bucket grid (≤ ~50 rows at any SF — the grid is fixed by the
-        # bucket width, not the customer count)
-        "customer_survival_km",
-        # rank window runs AFTER orderBy(...).limit(20): its input is
-        # the 20-row TakeOrderedAndProject result, never the corpus
-        "docs_bm25_topk",
-        # page_row window runs AFTER orderBy(key).limit(offset+size):
-        # its input is the 60-row TakeOrderedAndProject result
-        "table_page",
-    }
+    # reducer. The window-spec scan and the allowlist of windows whose
+    # input is bounded by construction (each with its reason) are
+    # tools/plan_audit's, so the guard and the audit artifact agree.
+    from tools.plan_audit import BOUNDED_WINDOW_KEYS, _empty_window_specs
 
     offenders = []
     for key in QUERIES:
-        if key in bounded_input:
+        if key in BOUNDED_WINDOW_KEYS:
             continue
         df = QUERIES[key](spark, sf_small)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
-            first = spec.split(",")[0].strip()
-            if first.endswith(("ASC NULLS FIRST", "DESC NULLS LAST")) or re.match(
-                r"^\S+ (ASC|DESC)\b", first
-            ):
-                offenders.append((key, spec))
+        n = _empty_window_specs(df._jdf.queryExecution().optimizedPlan().toString())
+        if n:
+            offenders.append((key, n))
     from b2b_data_pipeline_indiamart_spark.operators import caching
 
     caching.release_cached()
     assert not offenders, offenders
+
+
+def test_dump_plans_masks_lambda_variable_ids():
+    """A lambda variable is named after a session-wide counter, so the
+    same plan line dumped alone or after other keys must mask alike."""
+    from tools.dump_plans import mask_ids
+
+    alone = "transform(e#12, lambdafunction((lambda x_1#40 + 1), lambda x_1#40, false)) AS a#3"
+    batch = "transform(e#97, lambdafunction((lambda x_63#410 + 1), lambda x_63#410, false)) AS a#98"
+    masked = "transform(e#N, lambdafunction((lambda x_N#N + 1), lambda x_N#N, false)) AS a#N"
+    assert mask_ids(alone) == mask_ids(batch) == masked
+    # a column name with a numeric suffix is not a lambda variable
+    assert mask_ids("[doc_id#7L, mh_12#8L]") == "[doc_id#NL, mh_12#NL]"
 
 
 # ------------------------------------------------------------------ round 6

@@ -885,15 +885,12 @@ def test_streaming_neardup_suppression_across_batches(spark, tmp_path):
     # filters on both band_bucket (the probe's bucket set) and epoch
     # (in-flight replay exclusion) — assert they reach the scan, via
     # the same helper the sink's probe uses
-    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
-        read_neardup_band_store,
-        read_neardup_sig_store,
-    )
+    from b2b_data_pipeline_indiamart_spark.streaming import read_state_store
 
     id_field = T.StructField("doc_id", T.LongType())
-    pruned = read_neardup_band_store(
-        spark, str(tmp_path / "state"), id_field,
-        exclude_epoch=2, buckets=[3, 7],
+    pruned = read_state_store(
+        spark, str(tmp_path / "state"), "bands", id_field,
+        exclude_epoch=2, parts=[3, 7],
     )
     phys = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in phys
@@ -908,11 +905,11 @@ def test_streaming_neardup_suppression_across_batches(spark, tmp_path):
     empty_state = tmp_path / "state_empty"
     (empty_state / "bands").mkdir(parents=True)
     (empty_state / "sigs").mkdir(parents=True)
-    assert read_neardup_band_store(
-        spark, str(empty_state), id_field, buckets=[0]
+    assert read_state_store(
+        spark, str(empty_state), "bands", id_field, parts=[0]
     ).count() == 0
-    assert read_neardup_sig_store(
-        spark, str(empty_state), id_field
+    assert read_state_store(
+        spark, str(empty_state), "sigs", id_field
     ).count() == 0
     # epoch-grain layout + ledger markers exist for every epoch
     import glob
@@ -1376,7 +1373,7 @@ def test_streaming_embedding_neardup_probe_prunes_cells(spark, tmp_path):
     from pyspark.sql import types as T
 
     from b2b_data_pipeline_indiamart_spark.streaming import (
-        read_embedding_neardup_store,
+        read_state_store,
         start_embedding_neardup_suppress_sink,
     )
 
@@ -1401,8 +1398,8 @@ def test_streaming_embedding_neardup_probe_prunes_cells(spark, tmp_path):
     finally:
         q.stop()
     id_field = T.StructField("vec_id", T.LongType())
-    pruned = read_embedding_neardup_store(
-        spark, state, id_field, cells=[0]
+    pruned = read_state_store(
+        spark, state, "vecs", id_field, parts=[0]
     )
     assert [r["vec_id"] for r in pruned.collect()] == [1]
     plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -1419,7 +1416,7 @@ def test_streaming_embedding_neardup_ledger_exclusion_seam(spark, tmp_path):
     from pyspark.sql import types as T
 
     from b2b_data_pipeline_indiamart_spark.streaming import (
-        read_embedding_neardup_store,
+        read_state_store,
         start_embedding_neardup_suppress_sink,
     )
 
@@ -1443,7 +1440,7 @@ def test_streaming_embedding_neardup_ledger_exclusion_seam(spark, tmp_path):
     finally:
         q.stop()
     id_field = T.StructField("vec_id", T.LongType())
-    full = read_embedding_neardup_store(spark, state, id_field)
+    full = read_state_store(spark, state, "vecs", id_field)
     assert {r["vec_id"] for r in full.collect()} == {1, 2}
     # epoch ids are the foreachBatch batch ids: vec 2 landed in the
     # later epoch — excluding it must remove vec 2 only
@@ -1453,8 +1450,8 @@ def test_streaming_embedding_neardup_ledger_exclusion_seam(spark, tmp_path):
             "vec_id", "epoch"
         ).collect()
     }
-    excl = read_embedding_neardup_store(
-        spark, state, id_field, exclude_epoch=epochs[2]
+    excl = read_state_store(
+        spark, state, "vecs", id_field, exclude_epoch=epochs[2]
     )
     assert {r["vec_id"] for r in excl.collect()} == {1}
     plan = excl._jdf.queryExecution().executedPlan().toString()

@@ -33,14 +33,25 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-#: windows whose input is bounded by construction (mirrors the pytest
-#: guard's allowlist — keep in sync with test_plan_assertions.py)
+#: keys whose global windows run over an input bounded by construction
+#: (a LIMIT k or an aggregate over ≤ k labels feeds them): a
+#: single-partition window over a few rows is the cheapest correct
+#: plan, not a scale hazard. The registry-wide pytest guard
+#: (test_plan_assertions) imports this set.
 BOUNDED_WINDOW_KEYS = {
     "topk_cumulative",
     "docs_zipf_slope",
+    # cumulative share over the 10-row decile grain (aggregate of a
+    # global_ntile output)
     "customer_pareto_curve",
+    # reverse-cumsum / product-limit windows over the tenure bucket
+    # grid (≤ ~50 rows at any SF: the bucket width fixes the grid)
     "customer_survival_km",
+    # rank window over the 20-row TakeOrderedAndProject of
+    # orderBy(...).limit(20), never the corpus
     "docs_bm25_topk",
+    # page_row window over the 60-row TakeOrderedAndProject of
+    # orderBy(key).limit(offset+size)
     "table_page",
 }
 

@@ -20,6 +20,9 @@ time (maxFilesPerTrigger=1) and latency measured around
 processAllAvailable — the foreachBatch epoch is the unit of work, so
 this is the sink's real per-batch cost, not a trigger artifact.
 
+The session is ``session.get_spark``'s: one task slot per cpu this
+process may run on and a driver heap of min(16g, half of RAM).
+
 Usage: python tools/stream_soak.py [--epochs 20] [--docs 1000]
 Prints one JSON line per epoch and a final summary line for NOTES.md.
 """
@@ -171,9 +174,9 @@ def main() -> None:
     if args.mode == "embedding":
         return main_embedding(args)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import types as T
 
+    from b2b_data_pipeline_indiamart_spark.session import get_spark
     from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
         read_event_stream,
         start_neardup_suppress_sink,
@@ -182,14 +185,7 @@ def main() -> None:
     work = Path(tempfile.mkdtemp(prefix="soak_"))
     src = work / "docs"
     src.mkdir()
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .appName("neardup-soak")
-        .getOrCreate()
-    )
+    spark = get_spark("neardup-soak")
     spark.sparkContext.setLogLevel("ERROR")
     schema = T.StructType(
         [
@@ -265,9 +261,9 @@ def main_embedding(args) -> None:
     latency, sustained vectors/sec, and state growth (must stay one
     row per ADMITTED vector — linear in uniques, flat under the
     duplicate storm)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import types as T
 
+    from b2b_data_pipeline_indiamart_spark.session import get_spark
     from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
         read_event_stream,
         start_embedding_neardup_suppress_sink,
@@ -276,14 +272,7 @@ def main_embedding(args) -> None:
     work = Path(tempfile.mkdtemp(prefix="soak_emb_"))
     src = work / "vecs"
     src.mkdir()
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .appName("embedding-neardup-soak")
-        .getOrCreate()
-    )
+    spark = get_spark("embedding-neardup-soak")
     spark.sparkContext.setLogLevel("ERROR")
     schema = T.StructType(
         [
