@@ -10,13 +10,14 @@ per-vector norms hoisted out of per-pair scores (:func:`cosine_pair`).
 Every top-k operator has one shape: candidate pairs (broadcast cross
 join, LSH bucket, IVF cell or PQ code join) → :func:`_score` (drop
 self-matches, round to 4dp) → :func:`_topk_per_query` (per-query rank,
-ties to the lower neighbor id). The seeded, oracle-bearing twins also
-share :func:`_seeded_projection` (long id, vector, norm),
-:func:`_nearest_seeds` (cell assignment), :func:`_seeded_route` (IVF
-probe → cell equi-join → score) and :func:`_pq_encode_seeded`
-(subvector explode → L2 argmin → reconstruction). Trainers run on
-bounded driver-side samples; assignment, encode and search stay
-distributed.
+ties to the lower neighbor id). Nearest-cell assignment is one Arrow
+kernel, :func:`ivf_assign`, and nearest-codeword encoding another,
+:func:`pq_encode`; both reproduce the Catalyst folds bit for bit. So a
+trained key and its seeded, oracle-bearing twin run the same code
+(:func:`_ivf_route`, :func:`_ivfpq_index`, :func:`_cluster_purity`)
+and differ only in the codebook: trained centroids, or the lowest-id
+vectors (:func:`_lowest_id_book`). Trainers run on bounded driver-side
+samples; assignment, encode and search stay distributed.
 """
 
 from __future__ import annotations
@@ -51,28 +52,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def _d2_unrolled(a: Column, b: Column, n: int) -> Column:
-    """Squared L2 distance of two KNOWN-LENGTH-``n`` array<double>
-    columns, unrolled to explicit element_at arithmetic.
-
-    Bit-identical to ``dot(zip_with(a,b,-), zip_with(a,b,-))``: the
-    fold computes ``((0.0 + d₁²) + d₂²) + …`` left to right, and the
-    unrolled chain of binary ``+`` is left-associative, so the IEEE
-    addition order is the same sum. Unlike the interpreted
-    ``aggregate``/``zip_with`` HOFs (no codegen, one closure call per
-    element), element_at + multiply + add compile into whole-stage
-    codegen. Only for SMALL n — the PQ subspace width (dsub = dim/m,
-    4 at the defaults): r16 measured that a 64-term unroll generates a
-    >8 KB method HotSpot refuses to JIT; a ≤16-term chain is far
-    under that limit.
-    """
-    d2: Column = F.lit(0.0)
-    for i in range(1, n + 1):
-        di = F.element_at(a, i) - F.element_at(b, i)
-        d2 = d2 + di * di
-    return d2
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -361,50 +340,140 @@ def kmeans_centroids(
     return cents.tolist()
 
 
+def _fold_dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
+    """Σ a·b over the last axis, summed left to right from 0.0: the
+    IEEE sum :func:`dot`'s fold makes, bit for bit (a gemm would
+    reorder it). Vectorized across the leading (broadcast) axes,
+    sequential along the vector."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        acc = acc + a[..., j] * b[..., j]
+    return acc
+
+
+def _nearest_cells(
+    x: "np.ndarray", cells: "np.ndarray", norms: "np.ndarray | None", n: int
+) -> "np.ndarray":
+    """(rows, n) indices of the ``n`` nearest ``cells`` per row of
+    ``x`` — the one assignment rule: ``round_half_up(cosine_pair(x, c,
+    |x|, norms), 6)`` ranked descending, NULL (a zero norm) last, ties
+    to the lower index. ``norms`` None is the unit rule: both norms are
+    1.0, so the similarity is the plain dot (``x / 1.0`` is exact)."""
+    import numpy as np
+
+    if x.shape[1] != cells.shape[1]:
+        raise ValueError(f"vector dim {x.shape[1]} != codebook dim {cells.shape[1]}")
+    sim = _fold_dot(x[:, None, :], cells[None, :, :])
+    if norms is not None:
+        denom = np.sqrt(_fold_dot(x, x))[:, None] * norms[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sim = np.where(denom > 0, sim / denom, np.nan)
+    sim = np.floor(sim * 1e6 + 0.5) / 1e6
+    key = np.where(np.isnan(sim), np.inf, -sim)
+    return np.argsort(key, axis=1, kind="stable")[:, :n]
+
+
+def _codebook(centroids) -> tuple:
+    """(ids, vectors, norms, cell type) of an assignment codebook. A
+    plain list of vectors is trained state: cells 0..n-1 (int), norms
+    :func:`py_norm`. Otherwise it is a list of (id, vector, norm)
+    tuples — e.g. a seeded twin's collected seeds — ranked in id order
+    (cells long); norm None is :func:`_nearest_cells`' unit rule."""
+    import numpy as np
+
+    trained = bool(centroids) and not isinstance(centroids[0], tuple)
+    if trained:
+        centroids = [(i, c, py_norm(c)) for i, c in enumerate(centroids)]
+    book = sorted(centroids, key=lambda t: t[0])
+    ids = np.array([t[0] for t in book], dtype=np.int32 if trained else np.int64)
+    vecs = np.array([t[1] for t in book], dtype=np.float64)
+    norms = None if not book or book[0][2] is None else np.array([t[2] for t in book])
+    return ids, vecs, norms, "int" if trained else "long"
+
+
+def _matrix(col: "pa.ListArray") -> "np.ndarray":
+    """A list<double> Arrow column as an (n, dim) matrix over its child
+    buffer. Every vector must be non-NULL and of one length: ragged
+    offsets raise instead of being reshaped into wrong rows."""
+    import numpy as np
+
+    offs = np.asarray(col.offsets)
+    lens = np.diff(offs)
+    if col.null_count or (lens != lens[:1]).any():
+        raise ValueError(f"vectors must be non-NULL and of one length: {sorted(set(lens))}")
+    vals = col.values.slice(offs[0], offs[-1] - offs[0])
+    return vals.to_numpy(zero_copy_only=False).reshape(len(col), int(lens[0]) if len(col) else 0)
+
+
 def ivf_assign(
     emb: DataFrame,
-    centroids: "list[list[float]]",
+    centroids: "list",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_probe: int = 1,
     out_id: str = "id",
 ) -> DataFrame:
-    """(id, cell, v) — nearest-centroid cell(s) per vector.
+    """(out_id long, cell, v) — the ``n_probe`` nearest cells per
+    vector (query sides probe several), by :func:`_nearest_cells`.
 
-    ``n_probe`` > 1 emits that many nearest cells per vector (used on
-    the query side). Assignment is mapInPandas: one (batch × n_cells)
-    gemm per Arrow batch — O(corpus · n_cells · dim) total, narrow, no
-    shuffle; the centroid matrix travels as a task-broadcast literal.
+    The one assignment kernel: every trained key, every seeded twin and
+    the embedding sink route through it, and only the codebook differs
+    (see :func:`_codebook`: trained centroids, or a twin's lowest-id
+    seeds). One ``mapInArrow`` pass reads each batch's list column as a
+    matrix and reproduces the Catalyst fold bit for bit, so the DuckDB
+    hash gate on a twin checks the code its trained key runs. Map-only,
+    no shuffle; the codebook rides in the task closure.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    cents = np.array(centroids, dtype=np.float64)
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast(cents)
-    src = fan_out(emb.select(F.col(id_col), F.col(vec_col)), id_col)
+    ids, cells, norms, cell_type = _codebook(centroids)
+    n = min(n_probe, len(ids))
 
     def assign(batches):
-        c = bc.value
-        for pdf in batches:
-            vecs = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            if len(vecs) == 0:
-                continue
-            norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (vecs / norms) @ c.T
-            k = min(n_probe, sims.shape[1])
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :k]
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    out_id: np.repeat(ids, k),
-                    "cell": top.ravel().astype("int32"),
-                    "v": [list(row) for row in np.repeat(vecs, k, axis=0)],
-                }
-            )
+        for b in batches:
+            x = _matrix(b.column(1))
+            if len(x) and n:
+                rows = pa.array(np.repeat(np.arange(len(x)), n))
+                near = ids[_nearest_cells(x, cells, norms, n)].ravel()
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        b.column(0).take(rows).cast(pa.int64()),
+                        pa.array(near),
+                        b.column(1).take(rows),
+                    ],
+                    [out_id, "cell", "v"],
+                )
 
-    return src.mapInPandas(assign, schema=f"{out_id} long, cell int, v array<double>")
+    src = emb.select(F.col(id_col), as_double_array(F.col(vec_col)))
+    return src.mapInArrow(assign, f"{out_id} long, cell {cell_type}, v array<double>")
+
+
+def _ivf_route(
+    emb: DataFrame,
+    queries: DataFrame,
+    centroids: "list",
+    vec_col: str,
+    id_col: str,
+    n_probe: int,
+    k: int,
+) -> DataFrame:
+    """IVF search over a codebook: every corpus vector goes to its
+    nearest cell, each query to its ``n_probe`` nearest (both
+    :func:`ivf_assign`), candidates equi-join on the cell (probes
+    broadcast) and the hoisted-norm cosine is scored and ranked.
+    :func:`ann_ivf_topk` passes trained centroids, its twins their
+    seeds."""
+    corpus = ivf_assign(
+        emb, centroids, vec_col, id_col, n_probe=1, out_id="neighbor_id"
+    ).withColumn("cn", norm(F.col("v")))
+    probes = ivf_assign(queries, centroids, vec_col, id_col, n_probe, "query_id")
+    probes = probes.withColumnRenamed("v", "qv").withColumn("qn", norm(F.col("qv")))
+    score = cosine_pair(F.col("qv"), F.col("v"), F.col("qn"), F.col("cn"))
+    scored = _score(corpus.join(F.broadcast(probes), "cell"), score, "cos_sim")
+    return _topk_per_query(scored, "cos_sim", k)
 
 
 def ann_ivf_topk(
@@ -430,107 +499,28 @@ def ann_ivf_topk(
     of recall when the corpus clusters).
     """
     cents = kmeans_centroids(emb, dim, n_cells=n_cells, vec_col=vec_col, seed=seed)
-    corpus = ivf_assign(
-        emb, cents, vec_col, id_col, n_probe=1, out_id="neighbor_id"
-    ).withColumn("cn", norm(F.col("v")))
-    probes = ivf_assign(queries, cents, vec_col, id_col, n_probe=n_probe, out_id="query_id")
-    probes = probes.withColumnRenamed("v", "qv").withColumn("qn", norm(F.col("qv")))
-    score = cosine_pair(F.col("qv"), F.col("v"), F.col("qn"), F.col("cn"))
-    scored = _score(corpus.join(F.broadcast(probes), "cell"), score, "cos_sim")
-    return _topk_per_query(scored, "cos_sim", k)
+    return _ivf_route(emb, queries, cents, vec_col, id_col, n_probe, k)
 
 
-def _lowest_ids(df: DataFrame, id_col: str, n: int) -> DataFrame:
-    """The ``n`` lowest ids in ``df`` (one column, named ``id_col``) —
-    a bounded TakeOrderedAndProject, broadcast by every caller. The
-    seeded twins derive their deterministic seed state from this
-    ("the n lowest-id vectors") instead of ``id < n`` so a corpus
-    whose ids are not dense/0-based still yields exactly ``n`` seeds
-    rather than silently degenerating (ADVICE r9). On dense 0-based
-    ids the two formulations select identical rows."""
-    return df.select(id_col).orderBy(F.col(id_col).asc()).limit(n)
+def _lowest_ids(df: DataFrame, id_col: str, n: int) -> "list":
+    """The ``n`` lowest-id rows of ``df``, collected — a bounded
+    TakeOrderedAndProject. The seeded twins derive their deterministic
+    codebooks from this ("the n lowest-id vectors") instead of
+    ``id < n`` so a corpus whose ids are not dense/0-based still yields
+    exactly ``n`` seeds rather than silently degenerating (ADVICE r9).
+    On dense 0-based ids the two formulations select identical rows."""
+    return df.orderBy(F.col(id_col).asc()).limit(n).collect()
 
 
-def _seeded_projection(
-    emb: DataFrame, vec_col: str, id_col: str, keep: "tuple[str, ...]" = ()
-) -> DataFrame:
-    """(__vid long, __e, __n, *keep): the seeded twins' vector frame,
-    the norm hoisted next to the vector (see :func:`cosine_pair`). The
-    id is cast to long so an empty-input guard's declared
-    ``long`` schema matches the non-empty path for any integral id."""
-    ea = as_double_array(F.col(vec_col))
-    return emb.select(
-        F.col(id_col).cast("long").alias("__vid"),
-        ea.alias("__e"),
-        norm(ea).alias("__n"),
-        *keep,
+def _lowest_id_book(emb: DataFrame, vec_col: str, id_col: str, n: int) -> "list":
+    """The seeded twins' codebook: the ``n`` lowest-id vectors as
+    (id, vector, norm) — the SQL-restatable stand-in for trained
+    centroids. An empty corpus gives an empty codebook, so the twin
+    returns no rows."""
+    src = emb.select(
+        F.col(id_col).cast("long").alias("i"), as_double_array(F.col(vec_col)).alias("e")
     )
-
-
-def _lowest_id_seeds(v: DataFrame, n: int) -> DataFrame:
-    """(__cid, __se, __sn): the ``n`` lowest-id rows of a
-    :func:`_seeded_projection` frame as the seed cells of
-    :func:`_nearest_seeds`."""
-    return v.join(F.broadcast(_lowest_ids(v, "__vid", n)), "__vid").select(
-        F.col("__vid").alias("__cid"),
-        F.col("__e").alias("__se"),
-        F.col("__n").alias("__sn"),
-    )
-
-
-def _nearest_seeds(
-    side: DataFrame, seeds: DataFrame, out_id: str, n: int, keep: "tuple[str, ...]" = ()
-) -> DataFrame:
-    """(out_id, *keep, cell): the ``n`` nearest seed cells per vector —
-    the seeded twins' one assignment rule. ``side`` carries
-    (__vid, __e, __n, *keep), ``seeds`` (__cid, __se, __sn) and is
-    broadcast; similarity is the hoisted-norm cosine rounded to 6dp
-    BEFORE ranking, ties to the lower cell id (round-before-compare,
-    so the cell choice is engine-stable and SQL-restatable). The rank
-    window is partitioned by the high-cardinality vector id."""
-    sims = side.crossJoin(F.broadcast(seeds)).select(
-        F.col("__vid").alias(out_id),
-        *keep,
-        F.col("__cid"),
-        round_half_up(
-            cosine_pair(F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")),
-            6,
-        ).alias("__sim"),
-    )
-    w = Window.partitionBy(out_id).orderBy(F.col("__sim").desc(), F.col("__cid").asc())
-    return (
-        sims.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
-        .select(out_id, *keep, F.col("__cid").alias("cell"))
-    )
-
-
-def _seeded_route(
-    v: DataFrame, queries: DataFrame, id_col: str, cells: DataFrame, n_probe: int, k: int
-) -> DataFrame:
-    """The seeded IVF routing tail: every row of ``v`` (a
-    :func:`_seeded_projection` frame) goes to its nearest of ``cells``
-    (__cid, __se, __sn), each query to its ``n_probe`` nearest,
-    candidates equi-join on the cell (probes broadcast) and the
-    hoisted-norm cosine is scored and ranked."""
-
-    def vecs(out_id: str, e: str, n: str) -> DataFrame:
-        return v.select(
-            F.col("__vid").alias(out_id), F.col("__e").alias(e), F.col("__n").alias(n)
-        )
-
-    corpus = _nearest_seeds(v, cells, "neighbor_id", 1).join(
-        vecs("neighbor_id", "cv", "cn"), "neighbor_id"
-    )
-    probes = _nearest_seeds(
-        v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
-        cells,
-        "query_id",
-        n_probe,
-    ).join(vecs("query_id", "qv", "qn"), "query_id")
-    score = cosine_pair(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
-    scored = _score(corpus.join(F.broadcast(probes), "cell"), score, "cos_sim")
-    return _topk_per_query(scored, "cos_sim", k)
+    return [(r["i"], r["e"], py_norm(r["e"])) for r in _lowest_ids(src, "i", n)]
 
 
 def ann_ivf_seeded_topk(
@@ -544,21 +534,15 @@ def ann_ivf_seeded_topk(
 ) -> DataFrame:
     """IVF routing with DETERMINISTIC seed centroids (the ``n_seeds``
     lowest-id vectors, no Lloyd iterations) — the oracle-bearing twin
-    of :func:`ann_ivf_topk`: assignment, probing, candidate join and
-    re-ranking are the IDENTICAL routing pipeline, but the "codebook"
-    is SQL-expressible, so a DuckDB oracle can replay every step and
-    hash-check cell membership AND final scores. The production key
-    keeps trained k-means centroids (better recall per candidate);
-    this twin value-gates the routing math those centroids feed.
-
-    Pure Catalyst: seeds broadcast, per-vector cell rank is a window
-    partitioned by the vector id (high-cardinality key — no global
-    window), candidates equi-join on the cell id. Assignment
-    similarity rounds to 6dp BEFORE ranking (round-before-compare, cid
-    tie-break) so the cell choice is engine-stable.
+    of :func:`ann_ivf_topk`: the same :func:`_ivf_route` code with the
+    codebook swapped for one SQL can state, so a DuckDB oracle replays
+    every step and hash-checks cell membership AND final scores. The
+    production key keeps trained k-means centroids (better recall per
+    candidate); this twin value-gates the routing math those centroids
+    feed.
     """
-    v = _seeded_projection(emb, vec_col, id_col)
-    return _seeded_route(v, queries, id_col, _lowest_id_seeds(v, n_seeds), n_probe, k)
+    book = _lowest_id_book(emb, vec_col, id_col, n_seeds)
+    return _ivf_route(emb, queries, book, vec_col, id_col, n_probe, k)
 
 
 def ann_ivf_lloyd_seeded_topk(
@@ -578,53 +562,45 @@ def ann_ivf_lloyd_seeded_topk(
     training-free twin could not reach (VERDICT r14 #3a).
 
     Every Lloyd step is engine-portable by the exact-integer
-    discipline: (1) assignment ranks 6dp-ROUNDED cosines (cid
-    tie-break) against the current centroid literals; (2) the centroid
-    update averages UNIT vectors whose coordinates are quantized to
-    BIGINT first (``floor(u·1e6 + 0.5)``), so the per-(cell, dim) sums
-    are exact in any addition order; (3) the new centroid component is
-    ONE float composition of those exact integers —
-    ``round6(S_j / sqrt(Σ_j S_j²))`` (the Σ S_j² runs in arbitrary-
-    precision ints on the driver / HUGEINT in the oracle) — so both
-    engines materialize bit-identical centroid lists for the next
-    step. A cell that captures no members simply drops (with real
+    discipline: (1) assignment is :func:`ivf_assign` (6dp-ROUNDED
+    cosines, cid tie-break) against the current codebook; (2) the
+    centroid update averages UNIT vectors whose coordinates are
+    quantized to BIGINT first (``floor(u·1e6 + 0.5)``), so the
+    per-(cell, dim) sums are exact in any addition order; (3) the new
+    centroid component is ONE float composition of those exact
+    integers — ``round6(S_j / sqrt(Σ_j S_j²))`` (the Σ S_j² runs in
+    arbitrary-precision ints on the driver / HUGEINT in the oracle) —
+    so both engines materialize bit-identical centroid lists for the
+    next step. A cell that captures no members simply drops (with real
     embeddings every seed captures at least itself; the drop rule is
     stated so both engines agree even in the degenerate case); an
     all-zero cell sum yields a zero centroid.
 
     Scale shape: the quantized unit projection is computed once and
-    persisted; each iteration is one broadcast-literal assignment pass
-    (corpus × n_seeds 6dp cosines, window partitioned by the
-    high-cardinality vector id) plus a (cell, dim)-grain BIGINT
-    aggregate of which only n_seeds × dim rows reach the driver
-    (metadata scale — the kmeans partial-sum pattern). The routing tail
-    (probe → candidate equi-join → 4dp re-rank) is
-    :func:`_seeded_route`, shared with :func:`ann_ivf_seeded_topk`:
-    with ``n_iters=0`` the two return the same rows.
+    persisted; each iteration is one map-only assignment pass plus a
+    (cell, dim)-grain BIGINT aggregate of which only n_seeds × dim
+    rows reach the driver (metadata scale — the kmeans partial-sum
+    pattern). The routing tail is :func:`_ivf_route`, shared with
+    :func:`ann_ivf_seeded_topk`: with ``n_iters=0`` the two return the
+    same rows.
     """
     import math
 
     from . import caching
 
-    spark = emb.sparkSession
-    # persisted (tracked, released per key): the first() probe, the
-    # seed collect, the unit projection, every assignment pass and the
-    # routing tail all read v, and each re-scanned the parquet for it
-    v = caching.persist_tracked(_seeded_projection(emb, vec_col, id_col))
-    first_row = v.select("__e").first()
-    if first_row is None:
-        # empty corpus → empty result frame, same schema (ADVICE r15 —
-        # mirrors kcenter_coreset's guard instead of a TypeError)
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rnk int"
+    # persisted (tracked, released per key): the seed collect, the unit
+    # projection, every assignment pass and the routing tail all read
+    # v, and each re-scanned the parquet for it
+    v = caching.persist_tracked(
+        emb.select(
+            F.col(id_col).cast("long").alias("__vid"),
+            as_double_array(F.col(vec_col)).alias("__e"),
         )
-    dim = len(first_row["__e"])
+    )
     # iteration-0 "centroids" are the raw seed vectors (cosine is
     # normalization-invariant, so assignment 1 matches the seeded twin)
-    cents: "list[tuple[int, list[float]]]" = [
-        (int(r["__cid"]), [float(x) for x in r["__se"]])
-        for r in _lowest_id_seeds(v, n_seeds).orderBy("__cid").collect()
-    ]
+    book = _lowest_id_book(v, "__e", "__vid", n_seeds)
+    dim = len(book[0][1]) if book else 0
 
     uq = (
         _unit_projection(v, "__e", "__vid", "__uid")
@@ -642,17 +618,11 @@ def ann_ivf_lloyd_seeded_topk(
         .persist()
     )
 
-    def cent_frame() -> DataFrame:
-        return spark.createDataFrame(
-            [(c, vec, py_norm(vec)) for c, vec in cents],
-            "__cid long, __se array<double>, __sn double",
-        )
-
     try:
-        for _ in range(n_iters):
-            cells = _nearest_seeds(v, cent_frame(), "__uid", 1)
+        for _ in range(n_iters if book else 0):
+            cells = ivf_assign(v, book, "__e", "__vid", out_id="__uid")
             sums = (
-                uq.join(cells, "__uid")
+                uq.join(cells.select("__uid", "cell"), "__uid")
                 .groupBy("cell", "__j")
                 .agg(F.sum("__q").alias("__s"))
                 .collect()
@@ -660,7 +630,7 @@ def ann_ivf_lloyd_seeded_topk(
             by_cell: "dict[int, dict[int, int]]" = {}
             for r in sums:
                 by_cell.setdefault(int(r["cell"]), {})[int(r["__j"])] = int(r["__s"])
-            new_cents = []
+            book = []
             for cell in sorted(by_cell):
                 s = [by_cell[cell].get(j, 0) for j in range(dim)]
                 ss = sum(x * x for x in s)  # exact python int (HUGEINT twin)
@@ -672,12 +642,12 @@ def ann_ivf_lloyd_seeded_topk(
                     ]
                 else:
                     vec = [0.0] * dim
-                new_cents.append((cell, vec))
-            cents = new_cents
+                book.append((cell, vec, py_norm(vec)))
     finally:
         uq.unpersist()
 
-    return _seeded_route(v, queries, id_col, cent_frame(), n_probe, k)
+    probes = v.join(queries.select(F.col(id_col).cast("long").alias("__vid")), "__vid")
+    return _ivf_route(v, probes, book, "__e", "__vid", n_probe, k)
 
 
 def pca_eigen_invariants(
@@ -1283,10 +1253,9 @@ def pq_codebooks(
 
     Training is a bounded-sample driver problem exactly like
     :func:`kmeans_centroids` (codebooks are m×k×(dim/m) floats — a few
-    KB shipped back as plan literals); encoding and search — the
-    O(corpus) parts — stay fully distributed AND fully JVM-side (see
-    :func:`pq_encode`: the codebooks become nested array literals, so
-    neither pass crosses the Python boundary per row).
+    KB); encoding and search — the O(corpus) parts — stay distributed:
+    :func:`pq_encode` is one Arrow batch pass with the codebooks in its
+    closure, and the ADC search reads them as nested array literals.
 
     Seeds per subspace are drawn by the same LCG-permutation scheme as
     the IVF trainer (reproducible across numpy versions); empty
@@ -1358,64 +1327,73 @@ def pq_encode(
     books: "list[list[list[float]]]",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    centroids: "list[list[float]] | None" = None,
+    centroids: "list | None" = None,
     out_id: str | None = None,
 ) -> DataFrame:
-    """Encode each vector as its per-subspace nearest-centroid codes;
-    with ``centroids`` given, also assigns the IVF coarse cell and
-    encodes the RESIDUAL to that cell's centroid (the IVFPQ layout).
+    """Encode each unit-normalized vector as its per-subspace
+    nearest-codeword codes; with ``centroids`` given (an
+    :func:`ivf_assign` codebook), also assigns the IVF coarse cell by
+    :func:`_nearest_cells` and encodes the RESIDUAL to that cell's
+    centroid (the IVFPQ layout).
 
-    Arrow-batched numpy: one gemm per (batch × subspace) computes all
-    centroid distances at once — measured ~10× faster than the
-    first-cut pure-Catalyst formulation (nested higher-order
-    functions evaluate INTERPRETED per element in Spark, ~2.5 ms/row
-    at m=16; the vectorized batch is the same boundary-crossing
-    pattern as ivf_assign/multimodal). Map-only, zero shuffle — at
-    100 TB the encode parallelizes with the scan and writes ``m``
-    small ints (+ a cell id) per vector.
-
-    Argmin ties break to the lowest centroid index (numpy first-min),
-    matching the ntile/struct-sort convention elsewhere.
+    The one encode kernel, for the trained PQ keys and their seeded
+    twins alike: one ``mapInArrow`` pass reads each batch's list
+    column as a matrix and reproduces the Catalyst rule bit for bit —
+    the unit vector is ``v / norm(v)`` (zero norm passes through), and
+    per subspace the code is the argmin of the squared L2 distance
+    summed left to right from 0.0 and rounded to 9dp, ties to the
+    lower code. Map-only, zero shuffle — at 100 TB the encode
+    parallelizes with the scan and writes ``m`` small ints (+ a cell
+    id) per vector.
 
     Output: (id, [cell,] codes array<int> length m, codes_csv).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     B = np.array(books, dtype=np.float64)  # m × k × dsub
-    C = np.array(centroids, dtype=np.float64) if centroids is not None else None
-    m, _kk, dsub = B.shape
+    m, _k, dsub = B.shape
     out = out_id or id_col
-    with_cell = C is not None
-    fields = f"{out} long, " + ("cell int, " if with_cell else "") + "codes array<int>"
+    coarse = _codebook(centroids) if centroids is not None else None
+    names = [out] + (["cell"] if coarse else []) + ["codes"]
+    fields = f"{out} long, " + (f"cell {coarse[3]}, " if coarse else "") + "codes array<int>"
 
     def enc(batches):
-        # squared-distance argmin via the expanded form: ||r||² is
-        # constant per row, so argmin(-2 r·c + ||c||²) suffices
-        cnorm = (B ** 2).sum(axis=2)  # m × k
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            x = _matrix(b.column(1))
+            if not len(x):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            mat = mat / norms
-            res = mat
-            data = {out: pdf[id_col].to_numpy()}
-            if with_cell:
-                cells = (mat @ C.T).argmax(axis=1)
-                res = mat - C[cells]
-                data["cell"] = cells.astype("int32")
-            codes = np.empty((len(mat), m), dtype=np.int32)
+            if x.shape[1] != m * dsub:
+                raise ValueError(f"vector dim {x.shape[1]} != codebook dim {m * dsub}")
+            n = np.sqrt(_fold_dot(x, x))[:, None]
+            res = np.where(n > 0, x / np.where(n > 0, n, 1.0), x)
+            cols = [b.column(0).cast(pa.int64())]
+            if coarse:
+                ids, cents, norms, _ = coarse
+                near = _nearest_cells(res, cents, norms, 1)[:, 0]
+                res = res - cents[near]
+                cols.append(pa.array(ids[near]))
+            codes = np.empty((len(x), m), dtype=np.int32)
             for s in range(m):
-                sub = res[:, s * dsub : (s + 1) * dsub]
-                codes[:, s] = (-2.0 * (sub @ B[s].T) + cnorm[s][None, :]).argmin(axis=1)
-            data["codes"] = list(codes.tolist())
-            yield pd.DataFrame(data)
+                d = res[:, None, s * dsub : (s + 1) * dsub] - B[s][None, :, :]
+                codes[:, s] = (np.floor(_fold_dot(d, d) * 1e9 + 0.5) / 1e9).argmin(axis=1)
+            offsets = pa.array(np.arange(0, (len(x) + 1) * m, m, dtype=np.int32))
+            cols.append(pa.ListArray.from_arrays(offsets, pa.array(codes.ravel())))
+            yield pa.RecordBatch.from_arrays(cols, names)
 
-    src = emb.select(F.col(id_col), F.col(vec_col))
-    return src.mapInPandas(enc, schema=fields).select(
+    src = emb.select(F.col(id_col), as_double_array(F.col(vec_col)))
+    return src.mapInArrow(enc, fields).select(
         "*", F.array_join(F.col("codes"), ",").alias("codes_csv")
+    )
+
+
+def _decode(books: "list[list[list[float]]]") -> Column:
+    """The codewords the ``codes`` column picks, flattened in subspace
+    order: the reconstruction the seeded twins score with one ordered
+    fold."""
+    return F.expr(
+        "flatten(transform(codes, (c, s) -> "
+        f"element_at(element_at({_pq_literal(books)}, s + 1), c + 1)))"
     )
 
 
@@ -1519,68 +1497,11 @@ def ann_topk_pq(
     return _topk_per_query(scored, "pq_score", k)
 
 
-def _subvectors(
-    df: DataFrame, vec: str, out: str, m: int, dsub: int, *keep: "str | Column"
-) -> DataFrame:
-    """(*keep, s, out): ``vec`` cut into its ``m`` contiguous
-    ``dsub``-wide subvectors, one row per subspace ``s``."""
-    rows = df.select(*keep, F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"), vec)
-    return rows.select(
-        *rows.columns[:-1], F.slice(F.col(vec), F.col("s") * dsub + 1, dsub).alias(out)
-    )
-
-
-def _pq_encode_seeded(
-    src: DataFrame,
-    vec: str,
-    sub: str,
-    keep: "tuple[str, ...]",
-    book: DataFrame,
-    code: str,
-    m: int,
-    dsub: int,
-    out: str,
-) -> DataFrame:
-    """(*keep, out): the seeded twins' PQ encode. ``src``'s ``vec`` is
-    cut into subvectors ``sub``; per (vid, s) the codeword of ``book``
-    (s, ``code``, cw) at the least squared L2 distance, rounded to 9dp
-    BEFORE the rank with ties to the lower ``code``, is the code; the
-    chosen codewords flattened in subspace order are ``out``. The
-    column names are the caller's, so each twin keeps its own plan.
-
-    NOTE (r17): a min(struct(__d2, code)) aggregate was tried for the
-    argmin (VERDICT r16 #5) and REVERTED — Spark plans min over a
-    struct as a SortAggregate (the agg buffer is not
-    mutable-fixed-width), so it re-sorts by (vid, s) exactly like the
-    window while paying two aggregate passes: measured 0.94×
-    interleaved at sf0.1. The row_number window already runs under
-    WindowGroupLimit (partial top-1 per partition before the
-    exchange), which is the efficient shape for this argmin."""
-    w = Window.partitionBy("vid", "s").orderBy(F.col("__d2").asc(), F.col(code).asc())
-    codes = (
-        _subvectors(src, vec, sub, m, dsub, *keep)
-        .join(F.broadcast(book), "s")
-        .select(
-            *keep,
-            "s",
-            code,
-            round_half_up(_d2_unrolled(F.col(sub), F.col("cw"), dsub), 9).alias("__d2"),
-        )
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*keep, "s", code)
-    )
-    return (
-        codes.join(F.broadcast(book), ["s", code])
-        .groupBy(*keep)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("s", "cw"))),
-                    lambda p: p["cw"],
-                )
-            ).alias(out)
-        )
+def _no_rows(spark, score: str) -> DataFrame:
+    """The empty top-k frame, for a twin whose corpus yields no
+    codebook."""
+    return spark.createDataFrame(
+        [], f"query_id long, neighbor_id long, {score} double, rnk int"
     )
 
 
@@ -1598,37 +1519,24 @@ def ann_pq_seeded_topk(
     oracle-bearing twin of :func:`ann_topk_pq`: per subspace, the
     ``n_seeds`` codewords are the ``n_seeds`` lowest-id vectors' unit
     subvectors (no Lloyd), so encode (per-subspace L2 argmin), the code
-    table, and the ADC score all restate in SQL. Both engines compute
-    the subspace distance as the SAME ordered fold (diff array → dot
-    with itself) and the ADC score as ONE ordered 64-dim fold over the
-    flattened reconstruction (Σ_s dot(q_s, cw_s) = dot(q, concat(cw))
-    exactly), so scores hash-match at 4dp; distances round to 9dp
-    before the argmin rank with codeword-id tie-break
-    (round-before-compare). Production PQ keys keep trained codebooks
-    and the LUT fast path; this twin value-gates the encode/ADC math.
-
-    Pure Catalyst long form: vectors explode to ``m`` subvector rows,
-    codewords broadcast (m · n_seeds rows), the argmin is a window
-    over the (vector, subspace) grain — high-cardinality keys, no
-    global window, shuffle ∝ corpus · m.
+    table, and the ADC score all restate in SQL. The encode is the
+    same :func:`pq_encode` kernel the trained key runs; the ADC score
+    is ONE ordered 64-dim fold over the flattened reconstruction
+    (Σ_s dot(q_s, cw_s) = dot(q, concat(cw)) exactly), so scores
+    hash-match at 4dp. Production PQ keys keep trained codebooks and
+    the LUT fast path; this twin value-gates the encode/ADC math.
     """
-    from . import caching
-
     dsub = dim // m
-    # persisted (r17, guide §5): u feeds the subspace explode, the
-    # seed lookup, and the recon score join; un-persisted, the twin's
-    # physical plan scanned the embeddings parquet 6× re-deriving the
-    # norm projection each time. Released per key by the caller.
-    u = caching.persist_tracked(_unit_projection(emb, vec_col, id_col, "vid"))
-    seeds = (
-        _subvectors(u, "__unit", "sub", m, dsub, "vid")
-        .join(F.broadcast(_lowest_ids(u, "vid", n_seeds)), "vid")
-        .select(F.col("s"), F.col("vid").alias("cid"), F.col("sub").alias("cw"))
+    seeds = _lowest_ids(_unit_projection(emb, vec_col, id_col, "vid"), "vid", n_seeds)
+    if not seeds:
+        return _no_rows(emb.sparkSession, "pq_score")
+    books = [[r["__unit"][s * dsub : (s + 1) * dsub] for r in seeds] for s in range(m)]
+    recon = pq_encode(emb, books, vec_col, id_col, out_id="neighbor_id").select(
+        "neighbor_id", _decode(books).alias("recon")
     )
-    recon = _pq_encode_seeded(u, "__unit", "sub", ("vid",), seeds, "cid", m, dsub, "recon")
     q = _unit_projection(queries, vec_col, id_col, "query_id")
-    cand = recon.withColumnRenamed("vid", "neighbor_id").crossJoin(F.broadcast(q))
-    scored = _score(cand, dot(F.col("__unit"), F.col("recon")), "pq_score")
+    score = dot(F.col("__unit"), F.col("recon"))
+    scored = _score(recon.crossJoin(F.broadcast(q)), score, "pq_score")
     return _topk_per_query(scored, "pq_score", k)
 
 
@@ -1717,6 +1625,34 @@ def ivfpq_residual_codebooks(
     return _lloyd_subspaces(residuals, m, k, iters, seed)
 
 
+def _ivfpq_index(
+    emb: DataFrame,
+    queries: DataFrame,
+    cents: "list[list[float]]",
+    books: "list[list[list[float]]]",
+    n_probe: int,
+    vec_col: str,
+    id_col: str,
+) -> "tuple[DataFrame, DataFrame]":
+    """The IVF-PQ index and its probes, for the trained key and its
+    twin alike: the corpus as (neighbor_id, cell, codes) from one
+    :func:`pq_encode` pass (coarse cell + residual codes), and each
+    query's unit vector routed to its ``n_probe`` nearest cells as
+    (query_id, cell, qv, cdot), ``cdot = dot(q, centroid[cell])`` once
+    per probe row, not per candidate. Both sides rank cells by the unit
+    rule of :func:`_nearest_cells` over unit vectors."""
+    cells = [(i, c, None) for i, c in enumerate(cents)]
+    corpus = pq_encode(
+        emb, books, vec_col, id_col, centroids=cells, out_id="neighbor_id"
+    ).select("neighbor_id", "cell", "codes")
+    q = _unit_projection(queries, vec_col, id_col, "query_id")
+    centroid = F.expr(f"element_at({_pq_literal(cents)}, CAST(cell AS INT) + 1)")
+    probes = ivf_assign(q, cells, "__unit", "query_id", n_probe, "query_id").select(
+        "query_id", "cell", F.col("v").alias("qv"), dot(F.col("v"), centroid).alias("cdot")
+    )
+    return corpus, probes
+
+
 def ann_topk_ivfpq(
     emb: DataFrame,
     queries: DataFrame,
@@ -1738,15 +1674,11 @@ def ann_topk_ivfpq(
     residual codes.
 
     Index build = ONE Arrow-batched :func:`pq_encode` pass (cell
-    assignment + residual codes in the same gemm batch), persisted
-    (tracked) as the index artifact. Search is JVM-only: probe cells
-    come from an argmax over the centroid literal, each probe row
-    precomputes its residual LUT plus dot(q, centroid[cell]) once,
-    and every candidate then costs m element_at lookups. A first-cut
-    all-Catalyst encode was measured ~5× slower end-to-end (nested
-    higher-order functions evaluate interpreted per element and the
-    unpersisted encode re-ran across join/window stages) — the
-    build/search split IS the production shape anyway.
+    assignment + residual codes in the same batch), persisted
+    (tracked) as the index artifact (:func:`_ivfpq_index`, shared with
+    the seeded twin). Each probe row precomputes its residual LUT plus
+    dot(q, centroid[cell]) once, and every candidate then costs m
+    element_at lookups.
 
     Scale shape: candidate generation is the IVF equi-join on cell id
     (shuffle ∝ corpus, tunable by n_probe/n_cells) and the per-vector
@@ -1763,47 +1695,15 @@ def ann_topk_ivfpq(
         emb, cents, m=m, k=n_centroids, vec_col=vec_col, seed=seed + 1
     )
     stride = len(books[0])  # actual trained length (see ann_topk_pq)
-    cent_lit = _pq_literal(cents)
-    cb = _pq_literal(books)
-    dsub = dim // m
-    corpus = caching.persist_tracked(
-        pq_encode(
-            emb, books, vec_col, id_col, centroids=cents, out_id="neighbor_id"
-        ).select("neighbor_id", "cell", "codes")
-    )
-    cell_rank = f"""
-        array_sort(transform({cent_lit}, (c, ci) ->
-          named_struct(
-            'd', -aggregate(zip_with(__unit, c, (a, b) -> a * b),
-                            0D, (acc, x) -> acc + x),
-            'ci', ci)))
-    """
-    probes = (
-        _unit_projection(queries, vec_col, id_col, "query_id")
-        .select(
-            "query_id",
-            "__unit",
-            F.explode(
-                F.expr(f"transform(slice({cell_rank}, 1, {n_probe}), p -> p.ci)")
-            ).alias("cell"),
-        )
-        .select(
-            "query_id",
-            "cell",
-            # dot(q, centroid[cell]) once per probe row, not per candidate
-            F.expr(
-                f"""aggregate(zip_with(__unit, element_at({cent_lit}, cell + 1),
-                              (a, b) -> a * b), 0D, (acc, x) -> acc + x)"""
-            ).alias("cdot"),
-            F.expr(_pq_lut_expr(cb, m, n_centroids, dsub, qv="__unit")).alias("lut"),
-        )
-    )
+    corpus, probes = _ivfpq_index(emb, queries, cents, books, n_probe, vec_col, id_col)
+    lut = F.expr(_pq_lut_expr(_pq_literal(books), m, n_centroids, dim // m))
+    probes = probes.withColumn("lut", lut)
     # cdot + unrolled ADC chain (r17): _adc_score returns the complete
     # 0.0-seeded left-to-right sum, and cdot is added to that finished
     # value — the identical grouping the old cdot + aggregate(...) had.
     score = F.col("cdot") + _adc_score(m, stride)
-    scored = _score(corpus.join(F.broadcast(probes), "cell"), score, "ivfpq_score")
-    return _topk_per_query(scored, "ivfpq_score", k)
+    cand = caching.persist_tracked(corpus).join(F.broadcast(probes), "cell")
+    return _topk_per_query(_score(cand, score, "ivfpq_score"), "ivfpq_score", k)
 
 
 def ann_ivfpq_seeded_topk(
@@ -1823,87 +1723,29 @@ def ann_ivfpq_seeded_topk(
     ``n_seeds`` lowest-id unit vectors, and the RESIDUAL codewords per
     subspace are the residuals of the NEXT ``n_seeds`` lowest-id
     vectors (the seeds' own residuals are zero by construction, so
-    they can't serve as a codebook). Everything —
-    cell assignment (6dp round-before-rank), residual computation,
-    per-subspace L2-argmin encode (9dp), and the two-term ADC score
-    dot(q, centroid) + dot(q, concat(residual codewords)) — restates
-    in SQL with the same ordered folds, so scores hash-match at 4dp.
-    Production ann_ivf_pq keeps trained residual codebooks + the LUT
-    fast path; this twin value-gates the residual-quantization math.
+    they can't serve as a codebook). The index and probes are the
+    trained key's :func:`_ivfpq_index`; cell assignment (6dp
+    round-before-rank), residual computation, per-subspace L2-argmin
+    encode (9dp), and the two-term ADC score dot(q, centroid) +
+    dot(q, concat(residual codewords)) all restate in SQL with the same
+    ordered folds, so scores hash-match at 4dp. Production ann_ivf_pq
+    keeps trained residual codebooks + the LUT fast path; this twin
+    value-gates the residual-quantization math.
     """
-    from . import caching
+    import numpy as np
 
     dsub = dim // m
-    # r17 (guide §5): the unit projection and the residual frame feed
-    # MANY consumers each (seeds, both cell-assignment passes, the
-    # codeword slice, the encode slice, the probe side) and Spark
-    # reuses none of the identical subtrees — the un-persisted twin's
-    # physical plan scanned the embeddings parquet 29 TIMES, each scan
-    # re-deriving the norm projection (and for ``resid`` consumers the
-    # whole assignment window chain). Two tracked persists collapse
-    # that to one scan + one window pass; released per key via
-    # caching.release_cached().
-    u = caching.persist_tracked(_unit_projection(emb, vec_col, id_col, "vid"))
-    seed_ids = _lowest_ids(u, "vid", n_seeds)
-    seeds = u.join(F.broadcast(seed_ids), "vid").select(
-        F.col("vid").alias("cid"), F.col("__unit").alias("su")
-    )
-
-    def cells(side: DataFrame, out_id: str, n: int) -> DataFrame:
-        sims = side.crossJoin(F.broadcast(seeds)).select(
-            F.col("vid").alias(out_id),
-            "cid",
-            round_half_up(dot(F.col("__unit"), F.col("su")), 6).alias("__sim"),
-        )
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("__sim").desc(), F.col("cid").asc()
-        )
-        return (
-            sims.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(out_id, F.col("cid").alias("cell"))
-        )
-
-    # residual of every vector to its own cell centroid (persisted —
-    # see the note above: 3 downstream consumers, each of which would
-    # otherwise re-run the corpus-grain assignment window)
-    resid = caching.persist_tracked(
-        cells(u, "vid", 1)
-        .join(u, "vid")
-        .join(F.broadcast(seeds.withColumnRenamed("cid", "cell")), "cell")
-        .select(
-            "vid",
-            "cell",
-            F.zip_with(F.col("__unit"), F.col("su"), lambda a, b: a - b).alias(
-                "res"
-            ),
-        )
-    )
-    # residual codewords: subvectors of the NEXT n_seeds lowest-id
-    # vectors (lowest 2n minus the seed set; raw id as the codeword
-    # id — never exposed in the output, only argmin tie-break + join)
-    cw_ids = _lowest_ids(u, "vid", 2 * n_seeds).join(
-        F.broadcast(seed_ids), "vid", "left_anti"
-    )
-    ccode = F.col("vid").cast("int").alias("ccode")
-    cw = _subvectors(resid.join(F.broadcast(cw_ids), "vid"), "res", "cw", m, dsub, ccode)
-    recon = _pq_encode_seeded(
-        resid, "res", "rsub", ("vid", "cell"), cw, "ccode", m, dsub, "rrecon"
-    )
-    q = _unit_projection(queries, vec_col, id_col, "query_id")
-    probes = cells(
-        u.join(queries.select(F.col(id_col).alias("vid")), "vid"),
-        "query_id",
-        n_probe,
-    ).join(q, "query_id")
-    cand = (
-        recon.withColumnRenamed("vid", "neighbor_id")
-        .join(F.broadcast(probes), "cell")
-        .join(F.broadcast(seeds.withColumnRenamed("cid", "cell")), "cell")
-    )
-    score = dot(F.col("__unit"), F.col("su")) + dot(F.col("__unit"), F.col("rrecon"))
-    scored = _score(cand, score, "ivfpq_score")
-    return _topk_per_query(scored, "ivfpq_score", k)
+    rows = _lowest_ids(_unit_projection(emb, vec_col, id_col, "vid"), "vid", 2 * n_seeds)
+    if len(rows) <= n_seeds:
+        return _no_rows(emb.sparkSession, "ivfpq_score")
+    units = np.array([r["__unit"] for r in rows], dtype=np.float64)
+    cents, nxt = units[:n_seeds], units[n_seeds:]
+    res = nxt - cents[_nearest_cells(nxt, cents, None, 1)[:, 0]]
+    books = [[list(r[s * dsub : (s + 1) * dsub]) for r in res] for s in range(m)]
+    corpus, probes = _ivfpq_index(emb, queries, cents.tolist(), books, n_probe, vec_col, id_col)
+    cand = corpus.withColumn("rrecon", _decode(books)).join(F.broadcast(probes), "cell")
+    score = F.col("cdot") + dot(F.col("qv"), F.col("rrecon"))
+    return _topk_per_query(_score(cand, score, "ivfpq_score"), "ivfpq_score", k)
 
 
 def _mean_cov(
@@ -2079,34 +1921,21 @@ def semdedup_kmeans(
 ) -> DataFrame:
     """End-to-end SemDeDup: k-means cluster the embeddings
     (:func:`kmeans_centroids` — deterministic seeded init, driver
-    Lloyd over a bounded sample), assign every vector to its nearest centroid
-    (:func:`ivf_assign`, map-only against the broadcast centroid
-    table), then apply the within-cluster keep rule of
-    :func:`semdedup`. Rows-only (k-means isn't SQL-expressible);
-    the oracle-checkable twin is ``semdedup_by_label`` which runs the
-    identical keep rule on a given assignment.
+    Lloyd over a bounded sample), assign every vector to its nearest
+    centroid (:func:`ivf_assign`, the map-only assignment kernel), then
+    apply the within-cluster keep rule of :func:`semdedup`. Rows-only
+    (k-means isn't SQL-expressible); :func:`semdedup_seeded` runs this
+    same code with the lowest-id seeds as the codebook under a DuckDB
+    oracle, and ``semdedup_by_label`` the keep rule on a given
+    assignment.
 
     Output: (id_col, cluster, kept).
     """
     centroids = kmeans_centroids(
         emb, dim, n_cells=n_clusters, vec_col=vec_col, seed=seed
     )
-    assigned = ivf_assign(
-        emb, centroids, vec_col=vec_col, id_col=id_col, out_id="__aid"
-    )
-    src = emb.select(F.col(id_col).cast("long").alias(id_col), F.col(vec_col))
-    clustered = src.join(
-        assigned.select("__aid", "cell"),
-        src[id_col] == F.col("__aid"),
-    ).select(id_col, vec_col, F.col("cell").alias("__cluster"))
-    return semdedup(
-        clustered,
-        "__cluster",
-        vec_col=vec_col,
-        id_col=id_col,
-        threshold=threshold,
-        n_blocks=n_blocks,
-    )
+    clustered = ivf_assign(emb, centroids, vec_col, id_col, out_id=id_col)
+    return semdedup(clustered, "cell", "v", id_col, threshold, n_blocks)
 
 
 def _exact_rerank(
@@ -2406,25 +2235,22 @@ def cluster_label_purity(
     centroids = kmeans_centroids(
         emb, dim, n_cells=n_clusters, vec_col=vec_col, seed=seed
     )
-    assigned = ivf_assign(
-        emb, centroids, vec_col=vec_col, id_col=id_col, out_id="__aid"
-    )
-    lab = emb.select(
-        F.col(id_col).cast("long").alias("__lid"), F.col(label_col)
-    )
+    return _cluster_purity(emb, centroids, vec_col, id_col, label_col)
+
+
+def _cluster_purity(
+    emb: DataFrame, centroids: "list", vec_col: str, id_col: str, label_col: str
+) -> DataFrame:
+    """Per-cluster size / majority label / purity of ``emb`` assigned
+    to ``centroids`` by :func:`ivf_assign`: :func:`cluster_label_purity`
+    with trained centroids, :func:`cluster_label_purity_seeded` with
+    its seeds, so the twin's hash gate covers this exact code. Majority
+    ties break toward the SMALLER label (max on (count, -label))."""
+    assigned = ivf_assign(emb, centroids, vec_col, id_col, out_id="__aid")
+    lab = emb.select(F.col(id_col).cast("long").alias("__lid"), F.col(label_col))
     cl = assigned.select("__aid", F.col("cell").alias("cluster")).join(
         lab, F.col("__aid") == F.col("__lid")
     )
-    return _purity_readout(cl, label_col)
-
-
-def _purity_readout(cl: DataFrame, label_col: str) -> DataFrame:
-    """Per-cluster size / majority label / purity over a
-    (cluster, label)-per-vector frame. Shared by
-    :func:`cluster_label_purity` (trained k-means, rows-only) and
-    :func:`cluster_label_purity_seeded` (oracle-bearing twin), so the
-    twin's hash gate covers this exact readout code. Majority ties
-    break toward the SMALLER label (max on (count, -label))."""
     per_label = cl.groupBy("cluster", label_col).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -2456,26 +2282,19 @@ def cluster_label_purity_seeded(
 ) -> DataFrame:
     """Oracle-bearing twin of :func:`cluster_label_purity` (VERDICT
     r12 #3, the ann_ivf_portable discipline): the "centroids" are the
-    ``n_seeds`` lowest-id vectors (no Lloyd training), assignment is
-    argmax cosine rounded to 6dp BEFORE ranking with seed-id
-    tie-break — every step SQL-expressible, so a DuckDB oracle
-    replays assignment AND the purity readout and hash-checks the
-    output. The readout is the SAME code path the trained production
-    key uses (:func:`_purity_readout`), so its math is value-gated
-    here; only Lloyd iteration itself stays rows-only.
+    ``n_seeds`` lowest-id vectors (no Lloyd training), and assignment
+    plus readout are the trained key's own :func:`_cluster_purity` —
+    every step SQL-expressible, so a DuckDB oracle replays assignment
+    AND the purity readout and hash-checks the output; only Lloyd
+    iteration itself stays rows-only.
 
-    Scale shape: seeds broadcast (n_seeds × dim floats), assignment
-    is a map-side crossJoin + per-vector window on the
-    high-cardinality vector id, readout two combining aggregates —
-    never wider than n_seeds × labels. Cluster ids are seed vec_ids
-    (longs), not 0..k-1 cell indexes.
+    Scale shape: one map-only assignment pass against the n_seeds × dim
+    codebook, readout two combining aggregates — never wider than
+    n_seeds × labels. Cluster ids are seed vec_ids (longs), not 0..k-1
+    cell indexes.
     """
-    v = _seeded_projection(emb, vec_col, id_col, keep=(label_col,))
-    seeds = _lowest_id_seeds(v, n_seeds)
-    cl = _nearest_seeds(v, seeds, "__vid", 1, keep=(label_col,)).select(
-        F.col("cell").alias("cluster"), label_col
-    )
-    return _purity_readout(cl, label_col)
+    book = _lowest_id_book(emb, vec_col, id_col, n_seeds)
+    return _cluster_purity(emb, book, vec_col, id_col, label_col)
 
 
 def semdedup_seeded(
@@ -2488,44 +2307,25 @@ def semdedup_seeded(
 ) -> DataFrame:
     """Oracle-bearing twin of :func:`semdedup_kmeans` — the FULL
     SemDeDup composition (cluster assignment → within-cluster keep
-    rule) with every step SQL-statable: "centroids" are the
-    ``n_seeds`` lowest-id vectors (no Lloyd training), assignment is
-    argmax 6dp-rounded cosine with seed-id tie-break (the
-    :func:`cluster_label_purity_seeded` discipline), and the keep
-    rule is the IDENTICAL :func:`semdedup` code path the trained
-    production key runs (blocked gemm pairs, drop iff a lower-id
+    rule) with every step SQL-statable: the trained key's code with
+    the ``n_seeds`` lowest-id vectors as the codebook (no Lloyd
+    training). Assignment is :func:`ivf_assign` (argmax 6dp-rounded
+    cosine, seed-id tie-break) and the keep rule the IDENTICAL
+    :func:`semdedup` code path (blocked gemm pairs, drop iff a lower-id
     same-cluster vector has 4dp cosine ≥ threshold). Only Lloyd
     iteration itself remains rows-only — the assignment math, the
     pair scan, and the exists-based keep decision are all value-gated
     here end to end.
 
-    Scale shape: seeds broadcast (n_seeds × dim floats), assignment
-    is a map-side crossJoin + per-vector window keyed on the vector
-    id, the pair scan is the blocked gemm (shuffle O(N · n_blocks),
-    per-task memory bounded by the largest cluster's block pair).
+    Scale shape: one map-only assignment pass, then the blocked gemm
+    pair scan (shuffle O(N · n_blocks), per-task memory bounded by the
+    largest cluster's block pair).
 
     Output: (id_col, cluster, kept) — cluster is the seed vec_id.
     """
-    v = _seeded_projection(emb, vec_col, id_col)
-    seeds = _lowest_id_seeds(v, n_seeds)
-    cells = _nearest_seeds(v, seeds, "__vid", 1).select(
-        "__vid", F.col("cell").alias("__cluster")
-    )
-    clustered = (
-        emb.select(
-            F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
-        )
-        .join(cells, F.col(id_col) == F.col("__vid"))
-        .select(id_col, vec_col, "__cluster")
-    )
-    return semdedup(
-        clustered,
-        "__cluster",
-        vec_col=vec_col,
-        id_col=id_col,
-        threshold=threshold,
-        n_blocks=n_blocks,
-    )
+    book = _lowest_id_book(emb, vec_col, id_col, n_seeds)
+    clustered = ivf_assign(emb, book, vec_col, id_col, out_id=id_col)
+    return semdedup(clustered, "cell", "v", id_col, threshold, n_blocks)
 
 
 def ood_scores(
@@ -2544,8 +2344,8 @@ def ood_scores(
 
     Scale shape: training/assignment are the shared IVF machinery
     (driver-sample-capped seeded k-means + map-only broadcast-centroid
-    assignment); the assigned centroid joins back from a
-    ``n_clusters``-row broadcast table, the distance is a pure
+    assignment); the assigned centroid is read from the centroid
+    literal, the distance is a pure
     Catalyst expression, and the z normalization folds the corpus
     mean/stddev in as a one-row broadcast. Distances rounded 4dp
     BEFORE the moment aggregates so the z is engine-stable across
@@ -2563,33 +2363,14 @@ def ood_scores(
     """
     from . import caching
 
-    spark = emb.sparkSession
     centroids = kmeans_centroids(
         emb, dim, n_cells=n_clusters, vec_col=vec_col, seed=seed
     )
-    assigned = ivf_assign(
-        emb, centroids, vec_col=vec_col, id_col=id_col, out_id="__oid"
-    )
-    cent_df = spark.createDataFrame(
-        [
-            (i, [float(x) for x in c], py_norm([float(x) for x in c]))
-            for i, c in enumerate(centroids)
-        ],
-        "cell int, __c array<double>, __cn double",
-    )
+    c = F.expr(f"element_at({_pq_literal(centroids)}, cell + 1)")
+    cos = cosine_pair(F.col("v"), c, norm(F.col("v")), norm(c))
     d = caching.persist_tracked(
-        assigned.withColumn("__vn", norm(F.col("v")))
-        .join(F.broadcast(cent_df), "cell")
-        .select(
-            F.col("__oid").alias(id_col),
-            "cell",
-            round_half_up(
-                F.lit(1.0)
-                - cosine_pair(
-                    F.col("v"), F.col("__c"), F.col("__vn"), F.col("__cn")
-                ),
-                4,
-            ).alias("dist"),
+        ivf_assign(emb, centroids, vec_col, id_col, out_id=id_col).select(
+            id_col, "cell", round_half_up(F.lit(1.0) - cos, 4).alias("dist")
         )
     )
     mom = d.agg(

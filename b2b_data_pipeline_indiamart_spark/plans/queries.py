@@ -205,7 +205,7 @@ def _topk_sql(src: str, score: str, k: int) -> str:
 
 
 def _nearest_seeds_sql(seeds: str, vec: str, keep: "tuple[str, ...]" = ()) -> str:
-    """DuckDB spelling of similarity._nearest_seeds: every row of CTE
+    """DuckDB spelling of similarity.ivf_assign's rule: every row of CTE
     ``v`` (vec_id, e, *keep) against every row of ``seeds`` (cid,
     ``vec``), cosine rounded to 6dp BEFORE ranking, ties to the lower
     cid, as (vec_id, *keep, cid, rn); ``rn = 1`` is the cell."""
@@ -218,7 +218,7 @@ def _nearest_seeds_sql(seeds: str, vec: str, keep: "tuple[str, ...]" = ()) -> st
 
 
 def _seeded_route_sql(cells: str, vec: str, n_probe: int, k: int) -> str:
-    """DuckDB spelling of similarity._seeded_route as the CTEs
+    """DuckDB spelling of similarity._ivf_route as the CTEs
     ``ranked``, ``fcells``, ``probes`` and ``scored`` plus the top-k
     SELECT: every row of CTE ``v`` goes to its nearest of ``cells``
     (cid, ``vec``), each query (vec_id < 5) to its ``n_probe`` nearest,
@@ -251,7 +251,7 @@ _UNIT_SQL = """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embedd
 
 def _pq_encode_sql(subs: str, sub: str, keep: "tuple[str, ...]", book: str, code: str,
                    out: str) -> str:
-    """DuckDB spelling of similarity._pq_encode_seeded as CTEs ``dists``,
+    """DuckDB spelling of similarity.pq_encode's rule as CTEs ``dists``,
     ``codes`` and ``recon``: each 4-dim subvector ``sub`` of ``subs``
     (*keep, s, sub) coded to the ``book`` (s, ``code``, cw) codeword at
     the least 9dp-rounded squared L2 distance, ties to the lower
@@ -8069,7 +8069,7 @@ def embedding_cluster_purity_portable(
     lowest-id vectors (no Lloyd training), assignment is argmax
     6dp-rounded cosine with seed-id tie-break, and the purity readout
     is the SAME Spark code path the trained production key runs
-    (similarity._purity_readout) — so per-cluster size, majority label
+    (similarity._cluster_purity) — so per-cluster size, majority label
     (smaller-label tie-break) and 4dp purity all hash-check against
     DuckDB. Only Lloyd iteration itself remains rows-only, and it is
     separately pinned by numpy-reference tests."""

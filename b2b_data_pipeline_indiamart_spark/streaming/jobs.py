@@ -787,13 +787,14 @@ def start_embedding_neardup_suppress_sink(
     PQ/IVF codebook pattern): k-means cells trained OFFLINE on a
     backfill (operators/similarity.kmeans_centroids) and passed in as
     plain lists, so the streaming plan carries no training step and
-    every epoch routes with the identical broadcast gemm the batch
-    keys use (operators/similarity.ivf_assign).
+    every epoch routes with the one assignment kernel the batch keys
+    and their seeded twins use (operators/similarity.ivf_assign).
 
     Per epoch (foreachBatch):
 
-    1. nearest-centroid cell assignment (map-only Arrow gemm,
-       centroid matrix task-broadcast — no shuffle);
+    1. nearest-centroid cell assignment (``ivf_assign``: map-only
+       Arrow pass, 6dp-rounded cosine, ties to the lower cell — no
+       shuffle);
     2. within-batch suppression: the IDENTICAL
        operators/similarity.semdedup keep rule the batch
        `semdedup_kmeans` / `semdedup_seeded_portable` keys run —
@@ -828,34 +829,19 @@ def start_embedding_neardup_suppress_sink(
     from ..operators import caching, similarity
 
     def suppress_epoch(batch: DataFrame, epoch_id: int) -> None:
-        # (1) route to cells with the batch keys' assignment gemm
-        assigned = similarity.ivf_assign(
-            batch, centroids, vec_col=vec_col, id_col=id_col, out_id="__aid",
-        )
+        # (1) route to cells with the batch keys' assignment kernel:
+        # (id, cell, v), already the vecs store's columns
         clustered = caching.persist_tracked(
-            batch.select(F.col(id_col).cast("long").alias(id_col), F.col(vec_col))
-            .join(
-                assigned.select("__aid", "cell"),
-                F.col(id_col) == F.col("__aid"),
-            )
-            .select(id_col, vec_col, F.col("cell").alias("__cell"))
+            similarity.ivf_assign(batch, centroids, vec_col, id_col, out_id=id_col)
         )
         # (2) within-batch: the batch semdedup keep rule verbatim
         batch_sup = (
-            similarity.semdedup(
-                clustered, "__cell", vec_col=vec_col, id_col=id_col,
-                threshold=threshold,
-            )
+            similarity.semdedup(clustered, "cell", "v", id_col, threshold)
             .filter(~F.col("kept"))
             .select(id_col)
         )
-        # the survivors are already in the vecs store's (id, v, cell) shape
         survivors = caching.persist_tracked(
-            clustered.join(batch_sup, id_col, "left_anti").select(
-                id_col,
-                similarity.as_double_array(F.col(vec_col)).alias("v"),
-                F.col("__cell").alias("cell"),
-            )
+            clustered.join(batch_sup, id_col, "left_anti").select(id_col, "v", "cell")
         )
         # (3) cross-batch probe, pruned to the batch's own cells
         sup = batch_sup

@@ -219,9 +219,13 @@ def test_shared_plan_rules_are_spelled_once():
     region/nation loads go through ``_dim`` (catalog.load_dim); the
     oracle's gap-session boundary is ``_session_ids_sql`` plus the
     native session_window key's own ``>=`` spelling. The ANN family's
-    self-match drop is ``similarity._score``, the seeded PQ argmin is
-    ``similarity._pq_encode_seeded`` and its oracle ``_pq_encode_sql``;
-    the oracle's seeded IVF routing tail is ``_seeded_route_sql``."""
+    self-match drop is ``similarity._score``; its nearest-cell rank is
+    the Arrow kernel ``similarity.ivf_assign`` and its nearest-codeword
+    argmin the kernel ``similarity.pq_encode`` (no Catalyst rank on
+    ``__sim`` or ``__d2`` is left), the oracle's PQ argmin is
+    ``_pq_encode_sql`` and its seeded IVF routing tail
+    ``_seeded_route_sql``. Python-boundary call sites (Arrow/pandas
+    maps, grouped and stateful applies, pandas UDFs) stay at most 12."""
     pkg = REPO / "b2b_data_pipeline_indiamart_spark"
     fan_out_deciders = []
     for path in sorted(pkg.rglob("*.py")):
@@ -241,7 +245,22 @@ def test_shared_plan_rules_are_spelled_once():
 
     similarity = (pkg / "operators" / "similarity.py").read_text()
     assert similarity.count('F.col("neighbor_id") != F.col("query_id")') == 1
-    assert similarity.count('F.col("__d2").asc()') == 1
+    assert 'F.col("__sim").desc()' not in similarity
+    assert 'F.col("__d2").asc()' not in similarity
+    assert similarity.count("mapInPandas(") <= 2
+
+    import re
+
+    boundary = re.compile(
+        r"\.(?:mapInPandas|mapInArrow|applyInPandas|applyInPandasWithState|applyInArrow)\("
+        r"|\bpandas_udf\(|\budf\("
+    )
+    sites = [
+        f"{path.relative_to(pkg)}:{m.group(0)}"
+        for path in sorted(pkg.rglob("*.py"))
+        for m in boundary.finditer(path.read_text())
+    ]
+    assert len(sites) <= 12, sites
 
 
 def test_neardup_state_store_is_spelled_once():

@@ -156,6 +156,25 @@ def test_pq_encode_code_range_and_map_only(spark, sf_small):
     assert "Exchange" not in plan
 
 
+def test_ivf_assign_cell_range_and_map_only(spark, sf_small):
+    from b2b_data_pipeline_indiamart_spark import catalog
+
+    emb = catalog.load(spark, sf_small, "embeddings")
+    cents = similarity.kmeans_centroids(emb, dim=64, n_cells=8)
+    out = similarity.ivf_assign(emb, cents, n_probe=2)
+    rows = out.collect()
+    assert len(rows) == 2 * emb.count()
+    assert all(0 <= r["cell"] < 8 and len(r["v"]) == 64 for r in rows)
+    # each vector's two probes are distinct cells
+    cells = {}
+    for r in rows:
+        cells.setdefault(r["id"], set()).add(r["cell"])
+    assert all(len(c) == 2 for c in cells.values())
+    # assignment is map-only: no exchange in the plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
 def test_pq_codebooks_deterministic(spark, sf_small):
     from b2b_data_pipeline_indiamart_spark import catalog
 

@@ -262,7 +262,7 @@ def test_ann_matryoshka_recall_and_exact_order(spark, sf_medium):
 def test_cluster_label_purity_seeded_hand_corpus(spark):
     """VERDICT r12 #3: the oracle-bearing purity twin — seeds are the
     n_seeds lowest-id vectors, assignment is argmax 6dp cosine with
-    seed-id tie-break, readout is the shared _purity_readout path.
+    seed-id tie-break, readout is the shared _cluster_purity path.
     Hand-checkable corpus: vec 0/1 are orthogonal seeds; 10,11 hug
     seed 0; 12 hugs seed 1; labels make cluster 0 purity 2/3."""
     emb = spark.createDataFrame(

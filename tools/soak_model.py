@@ -26,7 +26,10 @@ and is admitted (the standard IVF false-negative; observed rate
 ~1 per 15k dup rows in the r15 run). The checker reports per-epoch
 diffs so those show up individually instead of hiding in totals.
 
-Usage: python tools/soak_model.py SOAK_LOG.jsonl [docs] [drift_at] [drift_len]
+Usage: python tools/soak_model.py SOAK_LOG.jsonl
+The workload's shape (vectors per epoch, drift start and length) is
+read from the soak's summary line. Prints one JSON line and exits 1
+if any epoch differs from the model (or the log has no summary).
 """
 
 from __future__ import annotations
@@ -49,10 +52,17 @@ def epoch_base_ids(e: int, docs: int, drift: bool, drift_at: int):
             yield vid, vid
 
 
-def check(log_path: str, docs: int = 100, drift_at: int = 500,
-          drift_len: int = 25) -> dict:
-    rows = [json.loads(l) for l in open(log_path)
-            if l.strip().startswith("{") and '"epoch"' in l]
+def check(log_path: str, docs: "int | None" = None, drift_at: "int | None" = None,
+          drift_len: "int | None" = None) -> dict:
+    """Per-epoch model vs observed admissions. The workload's shape
+    comes from the soak's summary line unless given (a soak cut before
+    its summary, like SOAK_r15_drift.jsonl, has to name it)."""
+    lines = [json.loads(l) for l in open(log_path) if l.strip().startswith("{")]
+    if docs is None:
+        summary = next(r for r in lines if r.get("metric") == "embedding_neardup_soak")
+        docs, drift_at = summary["vecs_per_epoch"], summary["drift_at"]
+        drift_len = summary["drift_len"]
+    rows = [r for r in lines if "epoch" in r]
     admitted: set = set()
     mismatches = []
     prev_cum = 0
@@ -70,6 +80,8 @@ def check(log_path: str, docs: int = 100, drift_at: int = 500,
             mismatches.append({"epoch": e, "model": n, "observed": obs})
     return {
         "epochs": len(rows),
+        "vecs_per_epoch": docs,
+        "drift_at": drift_at,
         "exact_match": len(rows) - len(mismatches),
         "mismatches": mismatches,
         "model_total": len(admitted),
@@ -81,6 +93,9 @@ def check(log_path: str, docs: int = 100, drift_at: int = 500,
 
 
 if __name__ == "__main__":
-    path = sys.argv[1]
-    args = [int(a) for a in sys.argv[2:]]
-    print(json.dumps(check(path, *args)))
+    try:
+        result = check(sys.argv[1])
+    except StopIteration:
+        sys.exit(f"{sys.argv[1]}: no embedding_neardup_soak summary line")
+    print(json.dumps(result))
+    sys.exit(1 if result["mismatches"] else 0)
