@@ -12,8 +12,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import fan_out
+from .sources.sinks import hadoop_path
 
 TABLES = (
     "region",
@@ -48,6 +50,8 @@ FIXED_DIM_TABLES = frozenset({"region", "nation"})
 BROADCAST_CAP_BYTES = 64 << 20
 
 _disk_bytes_cache: dict[str, int] = {}
+#: inferred schema per (path, length, modification time); see _read_parquet
+_schema_cache: dict[tuple[str, int, int], StructType] = {}
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -66,7 +70,29 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{table}.parquet")
     if table == "events":
         return _load_events(spark, path)
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    version of the file: each inference is a one-task Spark job
+    (~110 ms median on 4 vCPU, against ~23 ms for a read given its
+    schema), and one registry_stream pass loads 10 tables 21 times.
+    The cache key holds the path's length and modification time (one
+    Hadoop metadata call each, no job), so a table rewritten in place is
+    inferred afresh."""
+    fs, jpath = hadoop_path(spark, path)
+    key = (
+        path,
+        int(fs.getContentSummary(jpath).getLength()),
+        int(fs.getFileStatus(jpath).getModificationTime()),
+    )
+    schema = _schema_cache.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _schema_cache[key] = df.schema
+    return df
 
 
 def table_disk_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
@@ -80,10 +106,7 @@ def table_disk_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
     cached = _disk_bytes_cache.get(path)
     if cached is not None:
         return cached
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
+    fs, jpath = hadoop_path(spark, path)
     size = int(fs.getContentSummary(jpath).getLength())
     _disk_bytes_cache[path] = size
     return size
@@ -165,7 +188,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

@@ -556,23 +556,31 @@ def _admit_and_extend(
     ``output_dir/epoch=<id>``, then append each ``extend`` store's
     rows (keyed by ``id_col``) of the admitted ids to
     ``state_dir/<store>/epoch=<id>``, partitioned by the store's part
-    column. The ids are read back from the WRITTEN output, so output
-    and state cannot diverge under a lazy recomputation; a retried
-    epoch overwrites its own directories."""
+    column and hash-repartitioned on it first, so each part directory
+    gets ONE file per epoch (not one per input partition). The
+    partition count is explicit (defaultParallelism): AQE would
+    coalesce a few KB of rows into one task that writes every part
+    file in turn. The ids are read back from the WRITTEN output, so
+    output and state cannot diverge under a lazy recomputation; a
+    retried epoch overwrites its own directories."""
+    spark = batch.sparkSession
     out = f"{output_dir}/epoch={epoch_id}"
     batch.join(sup.distinct(), id_col, "left_anti").write.mode(
         "overwrite"
     ).parquet(out)
-    admitted = batch.sparkSession.read.parquet(out)
+    admitted = spark.read.parquet(out)
     for store, rows in extend.items():
         ids = admitted.select(
             F.col(id_col).cast(rows.schema[id_col].dataType).alias(id_col)
         )
-        writer = rows.join(ids, id_col).write.mode("overwrite")
+        kept = rows.join(ids, id_col)
         part = _STATE_STORES[store][1]
-        if part:
-            writer = writer.partitionBy(part)
-        writer.parquet(f"{state_dir}/{store}/epoch={epoch_id}")
+        writer = (
+            kept.repartition(spark.sparkContext.defaultParallelism, part).write.partitionBy(part)
+            if part
+            else kept.write
+        )
+        writer.mode("overwrite").parquet(f"{state_dir}/{store}/epoch={epoch_id}")
 
 
 def _assert_no_legacy_neardup_store(spark, state_dir: str) -> None:
@@ -642,9 +650,10 @@ def start_neardup_suppress_sink(
        matches ≥ ``threshold`` suppress the batch doc;
     4. admitted docs append to ``output_dir/epoch=<id>`` and their
        signatures to ``state_dir/sigs/epoch=<id>`` (and their band
-       index to ``state_dir/bands/epoch=<id>/band_bucket=<b>``); the
-       epoch ledger (:func:`_ledgered`) makes replays idempotent —
-       retried epochs overwrite their own directories, and the state
+       index to ``state_dir/bands/epoch=<id>/band_bucket=<b>``, one
+       parquet file per bucket per epoch); the epoch ledger
+       (:func:`_ledgered`) makes replays idempotent — retried epochs
+       overwrite their own directories, and the state
        read excludes the in-flight epoch so a replay can't suppress a
        doc against its own half-written signatures.
 

@@ -1140,6 +1140,52 @@ def test_streaming_neardup_exact_dup_storm_survives_bucket_cap(
     ) == ["epoch=0", "epoch=1"]
 
 
+def test_streaming_neardup_band_store_one_file_per_bucket(spark, tmp_path):
+    """The band index is hash-repartitioned on ``band_bucket`` before
+    its partitioned write, so every ``bands/epoch=E/band_bucket=B``
+    directory holds ONE parquet file, however many partitions the
+    epoch's band rows arrive in."""
+    import glob
+    import json as _json
+    import os
+    import random
+
+    from b2b_data_pipeline_indiamart_spark.streaming.jobs import (
+        start_neardup_suppress_sink,
+    )
+    from pyspark.sql import types as T
+
+    rng = random.Random(11)
+    words = ["w%03d" % i for i in range(400)]
+    src = tmp_path / "docs"
+    src.mkdir()
+    for e in range(2):
+        p = src / f"b{e}.json"
+        with open(p, "w") as f:
+            for i in range(40):
+                text = " ".join(rng.choice(words) for _ in range(30))
+                f.write(_json.dumps({"doc_id": e * 100 + i, "text": text}) + "\n")
+        os.utime(p, (1_000_000_000 + 100 * e,) * 2)
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ])
+    sdf = read_event_stream(spark, str(src), schema=schema, max_files_per_trigger=1)
+    state = tmp_path / "state"
+    q = start_neardup_suppress_sink(
+        sdf,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        str(state),
+        str(tmp_path / "ledger"),
+    )
+    _drain(q)
+    buckets = sorted(glob.glob(str(state / "bands" / "epoch=*" / "band_bucket=*")))
+    assert {b.split(os.sep)[-2] for b in buckets} == {"epoch=0", "epoch=1"}
+    files = {b: len(glob.glob(os.path.join(b, "*.parquet"))) for b in buckets}
+    assert set(files.values()) == {1}, files
+
+
 def test_streaming_drift_monitor_psi(spark, tmp_path):
     """The PSI drift monitor: an epoch drawn from the reference
     distribution scores near zero; a shifted epoch crosses the 0.25

@@ -9,7 +9,10 @@ under a sustained run:
 - sustained throughput (docs/sec over the whole soak),
 - signature-store growth curve (rows + bytes per epoch — must stay
   bounded by ADMITTED docs, i.e. linear in uniques, flat under a
-  duplicate storm).
+  duplicate storm),
+- each state store's parquet file count per epoch and at the end (the
+  directory and file count, not the row count, drives probe latency
+  growth).
 
 Workload: deterministic generator (hashlib-derived words, no RNG) —
 each epoch is one JSONL file of ``--docs`` documents: ~70% unique,
@@ -85,6 +88,15 @@ def epoch_rows(epoch: int, docs_per_epoch: int) -> list:
 
 def du_bytes(path: Path) -> int:
     return sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
+
+
+def store_files(state_dir: Path) -> dict:
+    """Parquet file count of each state store under ``state_dir``."""
+    return {
+        store.name: sum(1 for _ in store.rglob("*.parquet"))
+        for store in sorted(state_dir.iterdir())
+        if store.is_dir()
+    }
 
 
 # ---------------------------------------------------------------- embedding
@@ -224,9 +236,11 @@ def main() -> None:
                 "epoch": e,
                 "latency_sec": lat,
                 "docs_per_sec": round(args.docs / lat, 1),
+                "admitted_so_far": spark.read.parquet(str(out_dir)).count(),
                 "sig_store_rows": sig_rows,
                 "sig_store_bytes": du_bytes(state_dir / "sigs"),
                 "band_store_bytes": du_bytes(state_dir / "bands"),
+                "store_files": store_files(state_dir),
             }
             print(json.dumps(rec), flush=True)
     finally:
@@ -248,6 +262,7 @@ def main() -> None:
             str(state_dir / "sigs")
         ).count(),
         "final_state_bytes": du_bytes(state_dir),
+        "final_store_files": store_files(state_dir),
     }
     print(json.dumps(summary), flush=True)
     spark.stop()
@@ -372,6 +387,7 @@ def main_embedding(args) -> None:
                 "admitted_so_far": admitted_so_far,
                 "state_rows": state_rows,
                 "state_bytes": du_bytes(state_dir),
+                "store_files": store_files(state_dir),
             }
             print(json.dumps(rec), flush=True)
     finally:
@@ -397,6 +413,7 @@ def main_embedding(args) -> None:
             str(state_dir / "vecs")
         ).count(),
         "final_state_bytes": du_bytes(state_dir),
+        "final_store_files": store_files(state_dir),
         "state_rows_equal_admitted_every_epoch": not linear_violations,
         "linearity_violations": linear_violations[:10],
     }
