@@ -18,16 +18,17 @@ def parse_price_number(col: Column) -> Column:
     """Currency string → double; "Ask Price"/"Get Quote" → NULL.
 
     Parity: etl.py:109-118. Strips the rupee sign and thousands
-    separators, then extracts the first decimal number.
+    separators, then extracts the first decimal number. Each non-cheap
+    step is named once: the quote test is one ``rlike`` (the literal
+    alternation finds what the two ``contains`` tests found), and the
+    top-level ``nullif`` binds its argument, which Spark computes once
+    in a projection of its own (a ``when(num == "")`` test named the
+    extract twice and doubled the chain under it).
     """
     s = clean_text(col)
-    no_quote = F.when(
-        F.lower(s).contains("ask price") | F.lower(s).contains("get quote"),
-        F.lit(None).cast("string"),
-    ).otherwise(s)
-    stripped = F.regexp_replace(no_quote, r"[₹,]", "")
-    num = F.regexp_extract(stripped, r"(\d+(\.\d+)?)", 1)
-    return F.when(num == "", F.lit(None).cast("double")).otherwise(num.cast("double"))
+    num = F.regexp_extract(F.regexp_replace(s, r"[₹,]", ""), r"(\d+(\.\d+)?)", 1)
+    priced = F.when(~F.lower(s).rlike("ask price|get quote"), num)
+    return F.nullif(priced, F.lit("")).cast("double")
 
 
 def parse_price_unit(col: Column) -> Column:

@@ -57,14 +57,19 @@ _KEYWORD_FIXES = {
 def normalize_keyword(col: Column) -> Column:
     """Lower-cased, whitespace-collapsed keyword with alias fixes.
 
-    Parity: etl.py:155-166 (``normalize_keyword``). The alias map is a
-    chain of ``when`` branches — constant-folded by Catalyst.
+    Parity: etl.py:155-166 (``normalize_keyword``). The alias map is one
+    flat ``CASE WHEN s = bad THEN good … ELSE s END``, so the expression
+    grows linearly with the map. A chain of
+    ``when(out == bad, good).otherwise(out)`` names the previous step
+    twice and doubles per alias (Catalyst does not fold it): with four
+    aliases it held 16 copies of the cleaned keyword. Flat is exact
+    because no fixed value equals a later alias key.
     """
     s = F.lower(clean_text(col))
-    out = s
+    out = F  # F.when opens the CASE, Column.when extends it
     for bad, good in _KEYWORD_FIXES.items():
-        out = F.when(out == bad, F.lit(good)).otherwise(out)
-    return out
+        out = out.when(s == bad, F.lit(good))
+    return out.otherwise(s)
 
 
 def tokens(col: Column, min_len: int = 3) -> Column:

@@ -37,17 +37,31 @@ def apply_filters(df: DataFrame, filters: dict[str, str | None]) -> DataFrame:
     return df
 
 
+def group_counts(df: DataFrame, group_col: str) -> DataFrame:
+    """(group_value, cnt): rows per value of ``group_col``, NULL included."""
+    return df.groupBy(F.col(group_col).alias("group_value")).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+
+def top_counts(counts: DataFrame, n: int) -> DataFrame:
+    """The ``n`` rows of a per-group frame with the largest ``cnt``,
+    ties broken by the group value."""
+    return counts.orderBy(F.col("cnt").desc(), F.col("group_value").asc()).limit(n)
+
+
+def top_means(means: DataFrame, n: int) -> DataFrame:
+    """The ``n`` rows of a per-group frame with the largest
+    ``avg_value``, ties broken by the group value."""
+    return means.orderBy(F.col("avg_value").desc(), F.col("group_value").asc()).limit(n)
+
+
 def top_groups(df: DataFrame, group_col: str, n: int = 10) -> DataFrame:
     """Frequency top-N (analysis.py:277-296 bar chart, :433-456 treemap).
 
     Deterministic under ties via the group value as tiebreak.
     """
-    return (
-        df.groupBy(F.col(group_col).alias("group_value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("group_value").asc())
-        .limit(n)
-    )
+    return top_counts(group_counts(df, group_col), n)
 
 
 def avg_by_group(df: DataFrame, group_col: str, value_col: str, n: int = 10) -> DataFrame:
@@ -56,17 +70,21 @@ def avg_by_group(df: DataFrame, group_col: str, value_col: str, n: int = 10) -> 
     columns are 2dp-exact, and a float ``avg`` there is summation-
     order sensitive exactly at the rounding boundaries small groups
     hit (the r10 session_stats flake class)."""
-    return (
+    return top_means(
         df.filter(F.col(value_col).isNotNull() & F.col(group_col).isNotNull())
         .groupBy(F.col(group_col).alias("group_value"))
-        .agg(exact_avg(value_col, 2).alias("avg_value"))
-        .orderBy(F.col("avg_value").desc(), F.col("group_value").asc())
-        .limit(n)
+        .agg(exact_avg(value_col, 2).alias("avg_value")),
+        n,
     )
 
 
 def share_top_n_others(df: DataFrame, group_col: str, n: int = 5) -> DataFrame:
-    """Top-N share + "Others" residual (analysis.py:298-331 donut).
+    """Top-N share + "Others" residual (analysis.py:298-331 donut)."""
+    return share_of_counts(group_counts(df, group_col), n)
+
+
+def share_of_counts(counts: DataFrame, n: int) -> DataFrame:
+    """:func:`share_top_n_others` over a (group_value, cnt) frame.
 
     The N winners are picked with sort+limit — Spark executes that as
     TakeOrderedAndProject (per-partition top-N, merge N·P rows), never
@@ -81,15 +99,8 @@ def share_top_n_others(df: DataFrame, group_col: str, n: int = 5) -> DataFrame:
     the relabelled aggregate — bounded at n+1 rows by construction, so
     a single-partition window is the cheapest correct plan there.
     """
-    counts = df.groupBy(F.col(group_col).alias("group_value")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    top = (
-        counts.orderBy(F.col("cnt").desc(), F.col("group_value").asc())
-        .limit(n)
-        .select(
-            F.col("group_value").alias("__tg"), F.lit(True).alias("__top")
-        )
+    top = top_counts(counts, n).select(
+        F.col("group_value").alias("__tg"), F.lit(True).alias("__top")
     )
     # null-safe membership join: a NULL group that ranks in the top N
     # must keep its (NULL) label exactly like the window form and the
@@ -138,14 +149,12 @@ def fixed_histogram(df: DataFrame, col: str, bin_width: float, max_bin: int) -> 
 
 def count_avg_combo(df: DataFrame, group_col: str, value_col: str, n: int = 8) -> DataFrame:
     """Per-group count + avg, top-N by count (analysis.py:390-431 combo)."""
-    return (
-        df.groupBy(F.col(group_col).alias("group_value"))
-        .agg(
+    return top_counts(
+        df.groupBy(F.col(group_col).alias("group_value")).agg(
             F.count(F.lit(1)).alias("cnt"),
             exact_avg(value_col, 2).alias("avg_value"),
-        )
-        .orderBy(F.col("cnt").desc(), F.col("group_value").asc())
-        .limit(n)
+        ),
+        n,
     )
 
 

@@ -25,13 +25,17 @@ def standardize_strings(df: DataFrame) -> DataFrame:
     """Apply ``clean_text`` to every string column.
 
     Parity: etl.py:257-262 — the reference maps ``clean_text`` over all
-    object columns; here it is a single projection, fully codegen'd.
+    object columns; here it is a single ``select`` in column order,
+    fully codegen'd.
     """
-    cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
-    out = df
-    for c in cols:
-        out = out.withColumn(c, clean_text(F.col(c)))
-    return out
+    return df.select(
+        *[
+            clean_text(F.col(f.name)).alias(f.name)
+            if f.dataType.simpleString() == "string"
+            else F.col(f.name)
+            for f in df.schema.fields
+        ]
+    )
 
 
 def fill_unknown(df: DataFrame, columns: Sequence[str], value: str = "Unknown") -> DataFrame:

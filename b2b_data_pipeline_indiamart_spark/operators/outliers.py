@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,6 +31,24 @@ def quantiles(df: DataFrame, col: str, probs: Sequence[float], exact: bool = Tru
     return df.agg(*aggs)
 
 
+def iqr_bounds(q1: Column, q3: Column) -> tuple[Column, Column]:
+    """The Tukey fences [q1 - 1.5*IQR, q3 + 1.5*IQR] (etl.py:210-216)."""
+    return q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)
+
+
+def clip(col: str, lo: Column, hi: Column) -> Column:
+    """``col`` clipped to [lo, hi], NULL and NaN passed through.
+
+    pandas clip propagates both NULL and NaN; Spark's greatest/least
+    skip NULLs and order NaN as the LARGEST double (it would clip to
+    ``hi``), so both are guarded.
+    """
+    return F.when(
+        F.col(col).isNotNull() & ~F.isnan(F.col(col).cast("double")),
+        F.least(F.greatest(F.col(col), lo), hi),
+    ).otherwise(F.col(col))
+
+
 def winsorize(df: DataFrame, col: str, out_col: str | None = None, exact: bool = True) -> DataFrame:
     """Clip ``col`` to [q1 - 1.5*IQR, q3 + 1.5*IQR] (etl.py:210-222).
 
@@ -38,19 +56,11 @@ def winsorize(df: DataFrame, col: str, out_col: str | None = None, exact: bool =
     fact side, the clip is a map-side projection.
     """
     out_col = out_col or f"{col}_winsor"
-    bounds = (
-        quantiles(df, col, (0.25, 0.75), exact=exact)
-        .select(
-            (F.col("q_0") - 1.5 * (F.col("q_1") - F.col("q_0"))).alias("__lo"),
-            (F.col("q_1") + 1.5 * (F.col("q_1") - F.col("q_0"))).alias("__hi"),
-        )
+    lo, hi = iqr_bounds(F.col("q_0"), F.col("q_1"))
+    bounds = quantiles(df, col, (0.25, 0.75), exact=exact).select(
+        lo.alias("__lo"), hi.alias("__hi")
     )
     joined = df.crossJoin(F.broadcast(bounds))
-    # pandas clip propagates both NULL and NaN; Spark's greatest/least
-    # skip NULLs and order NaN as the LARGEST double (it would clip to
-    # __hi) — guard both so they pass through unchanged.
-    clipped = F.when(
-        F.col(col).isNotNull() & ~F.isnan(F.col(col).cast("double")),
-        F.least(F.greatest(F.col(col), F.col("__lo")), F.col("__hi")),
-    ).otherwise(F.col(col))
-    return joined.withColumn(out_col, clipped).drop("__lo", "__hi")
+    return joined.withColumn(out_col, clip(col, F.col("__lo"), F.col("__hi"))).drop(
+        "__lo", "__hi"
+    )

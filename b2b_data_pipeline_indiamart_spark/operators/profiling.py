@@ -18,31 +18,28 @@ from ..functions.rounding import round_half_up
 
 def profile_report(df: DataFrame) -> DataFrame:
     """n_rows/non_null/nulls/null_pct/distinct per column, one scan;
-    the distinct counts are exact."""
-    cols = df.columns
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in cols:
-        aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))
-        aggs.append(F.countDistinct(F.col(c)).alias(f"__uq_{c}"))
-    wide = df.agg(*aggs)
+    the distinct counts are exact.
 
-    # Unpivot the single wide row into (column, rows, non_null, ...) rows.
+    Both wide projections are SQL text, one call each, as
+    ``dedup.minhash_signatures`` does: PySpark records a call site per
+    Column-API call, and this builder made ~10 per column. The text
+    plans as the Column form did: ``100.0D`` keeps the percentage a
+    DOUBLE (a bare ``100.0`` is a DECIMAL literal), and the last
+    division is ``round_half_up`` spelled out."""
+    aggs = ["count(1) AS __rows"]
     stacks = []
-    for c in cols:
+    for c in df.columns:
+        nn, uq = f"`__nn_{c}`", f"`__uq_{c}`"
+        aggs += [f"count(`{c}`) AS {nn}", f"count(DISTINCT `{c}`) AS {uq}"]
+        nulls = f"(__rows - {nn})"
         stacks.append(
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col("__rows").alias("n_rows"),
-                F.col(f"__nn_{c}").alias("non_null"),
-                (F.col("__rows") - F.col(f"__nn_{c}")).alias("nulls"),
-                round_half_up(
-                    (F.col("__rows") - F.col(f"__nn_{c}")) * 100.0 / F.col("__rows"), 2
-                ).alias("null_pct"),
-                F.col(f"__uq_{c}").alias("distinct_values"),
-            )
+            f"struct('{c}' AS column, __rows AS n_rows, {nn} AS non_null, {nulls} AS nulls, "
+            f"FLOOR({nulls} * 100.0D / __rows * 100.0D + 0.5D) / 100.0D AS null_pct, "
+            f"{uq} AS distinct_values)"
         )
     return (
-        wide.select(F.explode(F.array(*stacks)).alias("p"))
+        df.agg(*[F.expr(a) for a in aggs])
+        .selectExpr(f"explode(array({', '.join(stacks)})) AS p")
         .select("p.column", "p.n_rows", "p.non_null", "p.nulls", "p.null_pct", "p.distinct_values")
     )
 

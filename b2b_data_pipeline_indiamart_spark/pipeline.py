@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from .functions.geo import state_to_region
 from .functions.hashing import digits_only, salted_sha256
 from .functions.prices import parse_price_number, parse_price_unit, price_bucket
+from .functions.rounding import money_ints, round_half_up
 from .functions.text import is_valid_url, normalize_keyword, normalize_place
 from .operators import cleaning, outliers, profiling
 from .sources.csv_source import read_csv_normalized
@@ -70,7 +71,7 @@ class ETLConfig:
 def standardize_fields(df: DataFrame) -> DataFrame:
     """etl.py:257-274: clean every string column, then the targeted
     normalizations (keyword aliases, city/state fixes, supplier title
-    case) — one projection, no per-column passes."""
+    case) — one ``select`` and one ``withColumns``, column order kept."""
     df = cleaning.standardize_strings(df)
     specials = {
         "search_keyword": normalize_keyword,
@@ -78,50 +79,48 @@ def standardize_fields(df: DataFrame) -> DataFrame:
         "state": normalize_place,
         "supplier_name": lambda c: F.initcap(c),
     }
-    for col, fn in specials.items():
-        if col in df.columns:
-            df = df.withColumn(col, fn(F.col(col)))
-    return df
+    return df.withColumns({c: fn(F.col(c)) for c, fn in specials.items() if c in df.columns})
 
 
 def fix_types_and_features(df: DataFrame, config: ETLConfig) -> DataFrame:
     """etl.py:277-313: price parse, numeric coercions, phone→hash,
-    winsorize, bucket, region — all Catalyst projections except the
-    winsorize quantiles (one tiny broadcast of the bounds row)."""
-    if "price" in df.columns:
-        df = df.withColumn("price_numeric", parse_price_number(F.col("price")))
-        df = df.withColumn("price_unit", parse_price_unit(F.col("price")))
-    else:
-        df = df.withColumn("price_numeric", F.lit(None).cast("double"))
-        df = df.withColumn("price_unit", F.lit(None).cast("string"))
+    winsorize, bucket, region.
 
-    for col in ["rating", "catid", "mcatid", "itemid", "dispid"]:
-        if col in df.columns:
-            df = df.withColumn(col, F.col(col).cast("double"))
+    The typed columns are one ``withColumns``, materialized by an eager
+    ``localCheckpoint`` before winsorize, so the regex chains run once.
+    etl.py:303-306 winsorizes only when ≥10 non-null prices exist: that
+    count and both IQR bounds are one aggregate over the checkpoint,
+    collected as one row, and the clip takes the bounds as literals.
+    The bounds are t-digest ``approx_percentile``, the single-pass
+    mergeable path; the oracle-gated ``winsorize_price`` registry key
+    requests the exact percentile itself. Returns a cheap projection
+    over the checkpoint."""
+    # an absent price column parses as NULL (Catalyst folds the chain)
+    price = F.col("price") if "price" in df.columns else F.lit(None).cast("string")
+    typed = {"price_numeric": parse_price_number(price), "price_unit": parse_price_unit(price)}
+    for c in ("rating", "catid", "mcatid", "itemid", "dispid"):
+        if c in df.columns:
+            typed[c] = F.col(c).cast("double")
+    if "phone" in df.columns and config.keep_phone_hash:
+        typed["phone_hash"] = salted_sha256(digits_only(F.col("phone")))
+    df = df.withColumns(typed).drop("phone").localCheckpoint()
 
-    if "phone" in df.columns:
-        if config.keep_phone_hash:
-            df = df.withColumn("phone_hash", salted_sha256(digits_only(F.col("phone"))))
-        df = df.drop("phone")
-
-    # etl.py:303-306: winsorize only when ≥10 non-null prices exist —
-    # the count is a single cheap action, same gate as the reference.
-    # The bounds are t-digest approx_percentile, the single-pass
-    # mergeable path; the oracle-gated ``winsorize_price`` registry key
-    # requests the exact percentile itself.
-    if config.winsorize_price and df.filter(F.col("price_numeric").isNotNull()).limit(10).count() >= 10:
-        df = outliers.winsorize(
-            df,
-            "price_numeric",
-            out_col="price_numeric_winsor",
-            exact=False,
+    winsor = F.col("price_numeric")
+    if config.winsorize_price:
+        lo, hi = outliers.iqr_bounds(
+            *(F.expr(f"approx_percentile(price_numeric, {p})") for p in (0.25, 0.75))
         )
-    else:
-        df = df.withColumn("price_numeric_winsor", F.col("price_numeric"))
-
-    df = df.withColumn("price_bucket", price_bucket(F.col("price_numeric_winsor")))
+        gate = df.agg(F.count("price_numeric").alias("n"), lo.alias("lo"), hi.alias("hi")).first()
+        if gate["n"] >= 10:
+            winsor = outliers.clip("price_numeric", F.lit(gate["lo"]), F.lit(gate["hi"]))
+    df = df.withColumn("price_numeric_winsor", winsor)
     state_col = F.col("state") if "state" in df.columns else F.lit(None).cast("string")
-    return df.withColumn("supplier_region", state_to_region(state_col))
+    return df.withColumns(
+        {
+            "price_bucket": price_bucket(F.col("price_numeric_winsor")),
+            "supplier_region": state_to_region(state_col),
+        }
+    )
 
 
 def validate_and_collect_issues(df: DataFrame, key_col: str) -> DataFrame:
@@ -171,15 +170,17 @@ def run_pipeline(spark: SparkSession, config: ETLConfig) -> dict[str, DataFrame]
     """etl.py:453-473, step for step. Returns the three result frames
     (curated / profile / issues) after writing the configured outputs.
 
-    Two eager ``localCheckpoint`` calls materialize the lineage once: the
-    typed frame (where issues and dedup split) and ``final`` (read by the
-    profile, the sinks and every ``analyze`` chart). Unlike ``persist``,
-    it truncates the plan and leaves no cache entry: the blocks live as
-    long as the returned frames, are freed by Spark's ContextCleaner, and
-    ``caching.release_cached`` never drops them."""
+    Two eager ``localCheckpoint`` calls materialize the lineage once:
+    the typed frame inside ``fix_types_and_features``, before winsorize
+    (the gate and the bounds read it, and issues and dedup split from a
+    cheap projection over it), and ``final`` (read by the profile, the
+    sinks and every ``analyze`` chart). Unlike ``persist``, a checkpoint
+    truncates the plan and leaves no cache entry: the blocks live as
+    long as the returned frames, are freed by Spark's ContextCleaner,
+    and ``caching.release_cached`` never drops them."""
     df = read_csv_normalized(spark, config.input_file)
     df = standardize_fields(df)
-    df = fix_types_and_features(df, config).localCheckpoint()
+    df = fix_types_and_features(df, config)
 
     key_col = next((k for k in ("dispid", "itemid") if k in df.columns), None)
     issues = (
@@ -207,8 +208,14 @@ def run_pipeline(spark: SparkSession, config: ETLConfig) -> dict[str, DataFrame]
 
 def analyze(final: DataFrame) -> dict[str, DataFrame]:
     """The reference's full chart set (analysis.py:205-520) over a
-    curated listing table — one lazy DataFrame per chart, all built
-    from the generic ``operators.analytics`` plans.
+    curated listing table, one small DataFrame per chart.
+
+    Eager: the charts share two aggregates of ``final``, checkpointed
+    here — per keyword (rows, priced rows, integer cents) and per city
+    (rows) — and the p99 price, collected once. Six charts derive from
+    the two aggregates with the tie-breaks and the :func:`exact_avg`
+    arithmetic of the ``operators.analytics`` chart forms over
+    ``final``; the two price charts filter at the p99 literal.
 
     The scatter uses the same deterministic key-hash predicate as the
     ``scatter_sample`` registry query (a seeded random sample is not a
@@ -222,7 +229,20 @@ def analyze(final: DataFrame) -> dict[str, DataFrame]:
     """
     from .operators import analytics
 
+    by_keyword = final.groupBy(F.col("search_keyword").alias("group_value")).agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.count("price_numeric").alias("n_priced"),
+        F.sum(money_ints("price_numeric")).alias("cents"),
+    ).localCheckpoint()
+    by_city = analytics.group_counts(final, "city").localCheckpoint()
+    keyword_counts = by_keyword.select("group_value", "cnt")
+    # exact_avg's division, from its two sums
+    avg_value = round_half_up(
+        F.col("cents") / (F.col("n_priced") * F.lit(100.0)), 2
+    ).alias("avg_value")
     priced = final.filter(F.col("price_numeric").isNotNull())
+    p99 = priced.agg(F.expr("approx_percentile(price_numeric, 0.99)")).first()[0]
+    clipped = priced.filter(F.col("price_numeric") <= F.lit(p99))
     charts: dict[str, DataFrame] = {
         "kpi_cards": analytics.kpi_summary(
             final,
@@ -230,25 +250,25 @@ def analyze(final: DataFrame) -> dict[str, DataFrame]:
             "price_numeric",
             exact=False,
         ),
-        "avg_price_by_keyword": analytics.avg_by_group(
-            final, "search_keyword", "price_numeric", n=10
+        "avg_price_by_keyword": analytics.top_means(
+            by_keyword.filter((F.col("n_priced") > 0) & F.col("group_value").isNotNull())
+            .select("group_value", avg_value),
+            10,
         ),
-        "top_cities": analytics.top_groups(final, "city", n=10),
-        "keyword_share": analytics.share_top_n_others(final, "search_keyword", n=5),
-        "city_index": analytics.top_groups(final, "city", n=1000),
-        "count_avg_combo": analytics.count_avg_combo(
-            final, "search_keyword", "price_numeric", n=8
+        "top_cities": analytics.top_counts(by_city, 10),
+        "keyword_share": analytics.share_of_counts(keyword_counts, 5),
+        "city_index": analytics.top_counts(by_city, 1000),
+        "count_avg_combo": analytics.top_counts(
+            by_keyword.select("group_value", "cnt", avg_value), 8
         ),
-        "treemap_top8": analytics.top_groups(final, "search_keyword", n=8),
+        "treemap_top8": analytics.top_counts(keyword_counts, 8),
         "top10_price_cumulative": analytics.topk_cumulative(
             priced, "price_numeric", "product_name", k=10
         ),
+        "price_histogram": analytics.fixed_histogram(
+            clipped, "price_numeric", bin_width=5000.0, max_bin=40
+        ),
     }
-    thr = priced.agg(F.expr("approx_percentile(price_numeric, 0.99)").alias("p99"))
-    clipped = priced.crossJoin(F.broadcast(thr)).filter(F.col("price_numeric") <= F.col("p99"))
-    charts["price_histogram"] = analytics.fixed_histogram(
-        clipped, "price_numeric", bin_width=5000.0, max_bin=40
-    )
     if "dispid" in final.columns:
         charts["rating_price_scatter"] = clipped.filter(F.col("dispid") % 7 == 0).select(
             "dispid", "rating", "price_numeric"

@@ -79,6 +79,35 @@ def test_parse_price_number_edges(spark):
     assert got == [78000.0, 123456.5, None, None, None, None, 12.0]
 
 
+def _regex_calls(spark, expr):
+    """(regexp_replace, regexp_extract) calls in the optimized plan of
+    ``expr`` over one string column."""
+    df = spark.createDataFrame([("x",)], "x string")
+    plan = str(df.select(expr(F.col("x")).alias("y"))._jdf.queryExecution().optimizedPlan())
+    return plan.count("regexp_replace("), plan.count("regexp_extract(")
+
+
+def test_keyword_and_price_expressions_are_linear_size(spark, monkeypatch):
+    """A ``when(out == bad, good).otherwise(out)`` alias chain names the
+    previous step twice, so the keyword expression doubles per alias:
+    32 regexp_replace calls for the 4 real aliases, 512 for 8. Its
+    generated method outgrew HotSpot's 8 KB JIT limit and ran
+    interpreted. The flat CASE holds one cleaned copy (two calls) per
+    alias plus the ELSE. The price parse held 14 regexp_replace and 2
+    regexp_extract calls before each step was named once."""
+    from b2b_data_pipeline_indiamart_spark.functions import text
+
+    assert _regex_calls(spark, normalize_keyword)[0] <= 2 * (len(text._KEYWORD_FIXES) + 1)
+    aliases = {f"bad {i}": f"good {i}" for i in range(8)}
+    monkeypatch.setattr(text, "_KEYWORD_FIXES", aliases)
+    replaces, _ = _regex_calls(spark, normalize_keyword)
+    assert replaces <= 2 * (len(aliases) + 1), replaces
+    got = _eval(spark, normalize_keyword, "Bad 3", " bad  7 ", "bad 9", None)
+    assert got == ["good 3", "good 7", "bad 9", None]
+    replaces, extracts = _regex_calls(spark, parse_price_number)
+    assert replaces <= 5 and extracts <= 1, (replaces, extracts)
+
+
 def test_parse_price_unit_edges(spark):
     got = _eval(
         spark, parse_price_unit,

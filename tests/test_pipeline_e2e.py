@@ -195,3 +195,175 @@ def test_observe_quality_metrics_ride_the_action(spark):
     assert got["n_null_v"] == 1
     assert got["sum_v"] == 40.0
     assert got["min_v"] == 10.0 and got["max_v"] == 30.0
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` with its Spark jobs in ``group``; return how many ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_job_budget(spark, tmp_path):
+    """``run_pipeline`` and ``analyze`` (every chart collected) run no
+    more Spark jobs than when the typed frame was first evaluated once
+    and the charts first shared two aggregates. The budget only
+    tightens: on this fixture the earlier forms ran 15 and 25. Ten
+    more priced rows than the e2e fixture take the winsorize branch."""
+    import uuid
+
+    from b2b_data_pipeline_indiamart_spark.pipeline import analyze
+
+    raw = tmp_path / "raw.csv"
+    priced = [
+        f"led tv,TV {i},globex,pune,maharashtra,4.0,₹ {900 * (i + 1)}/Piece,"
+        f",https://x.in/p/{10 + i},https://x.in/s/9,1,2,{200 + i},{2000 + i},2026-01-02T00:00:00"
+        for i in range(10)
+    ]
+    raw.write_text(RAW_HEADER + "\n" + "\n".join(RAW_ROWS + priced) + "\n", encoding="utf-8-sig")
+    cfg = ETLConfig(
+        input_file=str(raw),
+        output_csv=str(tmp_path / "clean.csv"),
+        profile_report=str(tmp_path / "profile.csv"),
+        quality_issues=str(tmp_path / "issues.csv"),
+        output_db=str(tmp_path / "products.db"),
+    )
+    tag = uuid.uuid4().hex
+    out = {}
+    n_pipeline = _jobs_in_group(
+        spark, f"run_pipeline-{tag}", lambda: out.update(run_pipeline(spark, cfg))
+    )
+    n_analyze = _jobs_in_group(
+        spark, f"analyze-{tag}",
+        lambda: [df.collect() for df in analyze(out["final"]).values()],
+    )
+    assert n_pipeline <= 13, n_pipeline
+    assert n_analyze <= 21, n_analyze
+
+
+FINAL_SCHEMA = (
+    "search_keyword string, city string, price_numeric double, "
+    "product_name string, dispid double, rating double"
+)
+
+
+def _hostile_final():
+    """Rows for ``analyze``: a NULL keyword tied for the most rows, a
+    keyword whose prices are all NULL, count ties at every level,
+    zero, negative and NaN prices, tied prices, NULL cities."""
+    rows = []
+    prices = {
+        "k1": [100.5, 200.25, None, 0.0],
+        None: [50.0, None, -10.0, 70.0],
+        "all null": [None, None, None],
+        "k2": [float("nan"), 5.0, 1e6],
+        "k3": [7.0, 7.0],
+        "k4": [-0.01, 3.33],
+        "k5": [100.5],
+        "k6": [None],
+        "k7": [250000.0],
+        "k8": [12.34],
+    }
+    cities = ["c1", None, "c2", "c3"]
+    for kw, ps in prices.items():
+        for p in ps:
+            i = len(rows)
+            rows.append((kw, cities[i % 4], p, f"p{i % 5}", float(i * 7 // 2), float(i % 6)))
+    return rows
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        _hostile_final(),
+        [("k1", "c1", 42.0, "p", 7.0, 1.0), ("k1", None, None, "q", 14.0, 2.0)],
+        [("k1", "c1", None, "p", 7.0, 1.0), (None, None, None, "q", 14.0, 2.0)],
+    ],
+    ids=["hostile", "one_priced", "none_priced"],
+)
+def test_analyze_matches_reference_chart_forms(spark, rows):
+    """``analyze`` derives six charts from two shared aggregates and
+    clips at a collected p99. The reference is the chart set it
+    replaced: one ``operators.analytics`` chart form per chart over
+    ``final``, and a broadcast p99 crossJoin. Every chart must return
+    the same rows in the same order."""
+    from pyspark.sql import functions as F
+
+    from b2b_data_pipeline_indiamart_spark.operators import analytics
+    from b2b_data_pipeline_indiamart_spark.pipeline import analyze
+
+    final = spark.createDataFrame(rows, FINAL_SCHEMA).repartition(3, "dispid").localCheckpoint()
+    priced = final.filter(F.col("price_numeric").isNotNull())
+    thr = priced.agg(F.expr("approx_percentile(price_numeric, 0.99)").alias("p99"))
+    clipped = priced.crossJoin(F.broadcast(thr)).filter(F.col("price_numeric") <= F.col("p99"))
+    reference = {
+        "kpi_cards": analytics.kpi_summary(
+            final, {"n_keywords": "search_keyword", "n_cities": "city"}, "price_numeric",
+            exact=False,
+        ),
+        "avg_price_by_keyword": analytics.avg_by_group(
+            final, "search_keyword", "price_numeric", n=10
+        ),
+        "top_cities": analytics.top_groups(final, "city", n=10),
+        "keyword_share": analytics.share_top_n_others(final, "search_keyword", n=5),
+        "city_index": analytics.top_groups(final, "city", n=1000),
+        "count_avg_combo": analytics.count_avg_combo(
+            final, "search_keyword", "price_numeric", n=8
+        ),
+        "treemap_top8": analytics.top_groups(final, "search_keyword", n=8),
+        "top10_price_cumulative": analytics.topk_cumulative(
+            priced, "price_numeric", "product_name", k=10
+        ),
+        "price_histogram": analytics.fixed_histogram(
+            clipped, "price_numeric", bin_width=5000.0, max_bin=40
+        ),
+        "rating_price_scatter": clipped.filter(F.col("dispid") % 7 == 0).select(
+            "dispid", "rating", "price_numeric"
+        ),
+    }
+    charts = analyze(final)
+    assert list(charts) == list(reference)
+    for name, want in reference.items():
+        # repr: NaN equals itself, and field names are compared too
+        assert [repr(r) for r in charts[name].collect()] == [
+            repr(r) for r in want.collect()
+        ], name
+
+
+@pytest.mark.parametrize("n_priced", [9, 10])
+def test_winsorize_gate_counts_non_null_prices(spark, n_priced):
+    """etl.py:303-306 winsorizes only when at least 10 prices are
+    non-null. At 9 the far outlier passes through; at 10 the clip
+    equals ``outliers.winsorize`` over the same typed frame."""
+    from dataclasses import replace
+
+    from b2b_data_pipeline_indiamart_spark import pipeline as pl
+    from b2b_data_pipeline_indiamart_spark.operators import outliers
+
+    rows = [(f"₹ {1000 * (i + 1)}/Piece", str(i)) for i in range(n_priced - 1)]
+    rows += [("₹ 10,000,000/Piece", "98"), ("Ask Price", "99"), (None, "100")]
+    df = spark.createDataFrame(rows, "price string, dispid string")
+    cfg = pl.ETLConfig(input_file="unused.csv")
+    got = {
+        r["dispid"]: r["price_numeric_winsor"]
+        for r in pl.fix_types_and_features(df, cfg).collect()
+    }
+    typed = pl.fix_types_and_features(df, replace(cfg, winsorize_price=False))
+    if n_priced < 10:
+        want = {r["dispid"]: r["price_numeric"] for r in typed.collect()}
+    else:
+        want = {
+            r["dispid"]: r["price_numeric_winsor"]
+            for r in outliers.winsorize(
+                typed.drop("price_numeric_winsor"), "price_numeric",
+                out_col="price_numeric_winsor", exact=False,
+            ).collect()
+        }
+        assert want[98.0] < 10_000_000.0  # the outlier is clipped
+    assert got == want
+    assert got[99.0] is None and got[100.0] is None

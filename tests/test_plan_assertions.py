@@ -543,13 +543,29 @@ def test_pipeline_surface_plans_no_exact_percentile(spark, tmp_path):
     the single-pass mergeable t-digest ``approx_percentile``, never
     the sort-based exact ``percentile`` whose aggregation buffer holds
     all values. Exactness belongs to the oracle-parity registry keys,
-    which request it explicitly themselves."""
+    which request it explicitly themselves.
+
+    The winsorize bounds and the p99 clip run as collected aggregates
+    inside those two calls, so the queries they executed are read back
+    from the SQL status store and checked with the returned frames;
+    both must be found there, so the check cannot pass on plans that
+    hold no percentile at all."""
     import re
 
     from b2b_data_pipeline_indiamart_spark import pipeline as pl
     from b2b_data_pipeline_indiamart_spark.sources.csv_source import (
         read_csv_normalized,
     )
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executed() -> dict:
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
 
     raw = tmp_path / "raw.csv"
     rows = [
@@ -565,17 +581,21 @@ def test_pipeline_surface_plans_no_exact_percentile(spark, tmp_path):
     cfg = pl.ETLConfig(input_file=str(raw), export_sqlite=False)
     df = read_csv_normalized(spark, str(raw))
     df = pl.standardize_fields(df)
+    before = set(executed())
     featured = pl.fix_types_and_features(df, cfg)
     frames = {"etl_features": featured, **pl.analyze(featured)}
+    plans = {
+        f"query {i}": plan for i, plan in executed().items() if i not in before
+    }
+    plans.update(
+        {name: frame._jdf.queryExecution().toString() for name, frame in frames.items()}
+    )
 
+    for q in ("0.25", "0.75", "0.99"):
+        pat = re.compile(rf"approx_percentile\(price_numeric#\d+, {q}")
+        assert any(pat.search(p) for p in plans.values()), q
     exact_pct = re.compile(r"(?<!approx_)percentile\(")
-    offenders = []
-    for name, frame in frames.items():
-        plan = frame._jdf.queryExecution().toString()
-        if exact_pct.search(plan):
-            offenders.append(name)
-        if "approx_percentile" in plan:
-            pass  # the sanctioned form — presence is fine anywhere
+    offenders = [name for name, plan in plans.items() if exact_pct.search(plan)]
     assert not offenders, offenders
 
 
